@@ -7149,7 +7149,7 @@ def _mk_lang3_analyzer(lang):
         {Lang}Analyzer default chain — StandardTokenizer + (Turkish:
         Apostrophe + TurkishLowerCase | else LowerCase) + Stop +
         (Dutch: StemmerOverride) + the published Snowball stemmer
-        (analysis/lang3.py + analysis/snowball.py, token-for-token vs
+        (analysis/chains.py + analysis/snowball.py, token-for-token vs
         the COMPILED reference analyzer over the full fixture corpus)
         — through the Arrow pandas-UDF path.  The oracle's literals
         are the reference analyzer's own token stream."""

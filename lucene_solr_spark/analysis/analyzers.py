@@ -1,9 +1,9 @@
 """Analyzers: text -> token stream (terms + positions).
 
-Two pipelines, mirroring the reference's Analyzer abstraction
-(lucene/core/src/java/org/apache/lucene/analysis/Analyzer.java:85,
-StandardAnalyzer = StandardTokenizer + LowerCaseFilter with an EMPTY
-stop set — lucene/core/.../analysis/standard/StandardAnalyzer.java:52-54):
+Each analyzer mirrors the reference's Analyzer abstraction
+(lucene/core/src/java/org/apache/lucene/analysis/Analyzer.java:85: a
+tokenizer plus a chain of token filters).  ``build_index(analyzer=)``
+picks one of:
 
 ``simple``  — ASCII-alnum runs, lowercased. Expressed with Spark
    built-ins (regexp_extract_all + transform/lower) so the whole invert
@@ -11,26 +11,36 @@ stop set — lucene/core/.../analysis/standard/StandardAnalyzer.java:52-54):
    DuckDB for oracle checks. This is the default for corpora whose
    vocabulary is ASCII (the synthetic test corpora are).
 
-``standard`` — the EXACT StandardTokenizer (lucene/core/.../standard/
-   StandardTokenizer.java:29-69; JFlex grammar
-   StandardTokenizerImpl.jflex) as a vectorized pandas UDF over
-   analysis/uax29.py: full UAX#29 word break + TR51 emoji sequences
-   with JFlex longest-match semantics, CJK/Hiragana per-char tokens,
-   Katakana/Hangul/Thai runs, and maxTokenLength=255 CHOPPING (the
-   reference's %buffer behavior — over-long runs split, nothing
-   dropped). Zero divergences against the reference DFA across the
-   committed multilingual fixture corpus and 10k+ differential fuzz
-   cases (tools/fuzz_uax29.py); lowercasing is per-codepoint
-   Character.toLowerCase parity (uax29.simple_lower).
+``standard`` — StandardAnalyzer = the EXACT StandardTokenizer
+   (lucene/core/.../standard/StandardTokenizer.java:29-69; JFlex
+   grammar StandardTokenizerImpl.jflex) + LowerCaseFilter with an
+   EMPTY stop set (StandardAnalyzer.java:52-54): full UAX#29 word
+   break + TR51 emoji sequences with JFlex longest-match semantics,
+   CJK/Hiragana per-char tokens, Katakana/Hangul/Thai runs, and
+   maxTokenLength=255 CHOPPING (the reference's %buffer behavior —
+   over-long runs split, nothing dropped). Zero divergences against
+   the reference DFA across the committed multilingual fixture corpus
+   and 10k+ differential fuzz cases (tools/fuzz_uax29.py); lowercasing
+   is per-codepoint Character.toLowerCase parity (uax29.simple_lower).
 
-Positions are 0-based token indexes (posIncr always 1; the default
-chain has no stopwords so there are no gaps).
+``english`` — the simple tokenizer + English stop set + Porter stem.
+
+a language code — the per-language analyzers: the 30 token-local
+   chains of analysis/chains.CHAINS run through its one batch runner
+   (``analyze_batch``); ``cjk`` (cross-token bigrams) and ``ja``
+   (Viterbi lattice) keep their own batch functions.
+
+Every non-SQL analyzer runs as the same vectorized pandas UDF
+(``_struct_udf``) over a whole Arrow batch and returns
+struct(terms, positions).  Positions are 0-based token indexes; a
+token dropped by a stop filter leaves a position gap.
 """
 
 from __future__ import annotations
 
+import functools
 import re
-from typing import Iterator
+from typing import Callable, Iterator, List
 
 import pandas as pd
 from pyspark.sql import Column
@@ -128,32 +138,39 @@ def standard_tokenize(text: str) -> tuple[list[str], list[int]]:
     return terms, positions
 
 
-def standard_tokenize_udf():
-    """mapInPandas-style iterator UDF schema helper is in index.builder;
-    here: a pandas_udf returning struct(terms, positions)."""
-    from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
+def _struct_udf(analyze_batch: Callable[[List[str]], list]):
+    """pandas UDF text -> struct(terms, positions), the shape every
+    non-SQL analyzer returns: ``analyze_batch`` maps a whole Arrow
+    batch of texts (None read as "") to [(terms, positions)]."""
+    from pyspark.sql.types import (
+        ArrayType, IntegerType, StringType, StructField, StructType,
+    )
 
     ret = StructType([
         StructField("terms", ArrayType(StringType())),
         StructField("positions", ArrayType(IntegerType())),
     ])
 
-    from .uax29_vec import standard_tokenize_batch
-
     @F.pandas_udf(ret)
     def _tok(s: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         for chunk in s:
-            # whole-batch C/dense DFA kernel (uax29_vec) — same
-            # automaton, differentially verified vs standard_tokenize
-            res = standard_tokenize_batch(
-                ["" if t is None else t for t in chunk.tolist()],
-                MAX_TOKEN_LENGTH)
+            res = analyze_batch(
+                ["" if t is None else t for t in chunk.tolist()])
             yield pd.DataFrame({
                 "terms": [r[0] for r in res],
                 "positions": [r[1] for r in res],
             })
 
     return _tok
+
+
+def standard_tokenize_udf():
+    """StandardAnalyzer UDF over the whole-batch C/dense DFA kernel
+    (uax29_vec — same automaton, differentially verified vs
+    standard_tokenize)."""
+    from .uax29_vec import standard_tokenize_batch
+    return _struct_udf(functools.partial(
+        standard_tokenize_batch, max_token_length=MAX_TOKEN_LENGTH))
 
 
 # --------------------------------------------------------------------------
@@ -172,116 +189,28 @@ def english_analyze(text: str) -> tuple:
     return [porter_stem(t) for t in toks], pos
 
 
+def _english_batch(texts: List[str]) -> list:
+    return [english_analyze(t) for t in texts]
+
+
 def english_analyze_udf():
     """Vectorized pandas UDF of the english pipeline, same struct shape
     as the standard analyzer (terms + positions with stop-word gaps)."""
-    from pyspark.sql.types import (
-        ArrayType, IntegerType, StringType, StructField, StructType,
-    )
-
-    ret = StructType([
-        StructField("terms", ArrayType(StringType())),
-        StructField("positions", ArrayType(IntegerType())),
-    ])
-
-    @F.pandas_udf(ret)
-    def _tok(s: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for chunk in s:
-            out = chunk.map(english_analyze)
-            yield pd.DataFrame({
-                "terms": out.map(lambda t: t[0]),
-                "positions": out.map(lambda t: t[1]),
-            })
-
-    return _tok
+    return _struct_udf(_english_batch)
 
 
 def lang_analyze_udf(lang: str):
-    """Vectorized pandas UDF of a per-language analyzer chain
-    (analysis/lang.lang_analyze: exact UAX#29 tokenizer + elision for
-    fr/it + lowercase + snowball stop with position gaps + the
-    reference light stemmer), same struct shape as the standard
-    analyzer."""
-    from pyspark.sql.types import (
-        ArrayType, IntegerType, StringType, StructField, StructType,
-    )
+    """Vectorized pandas UDF of a per-language analyzer: the
+    token-local chains of analysis/chains.CHAINS through its one batch
+    runner, or the cross-token cjk (bigram) and ja (Viterbi lattice)
+    batch functions; same struct shape as the standard analyzer."""
+    from .chains import CHAINS, analyze_batch
+    from .cjk import cjk_analyze_batch
+    from .ja import ja_analyze_batch
 
-    if lang == "cjk":
-        from .cjk import cjk_analyze_batch
-
-        def _analyze_batch(texts):
-            return cjk_analyze_batch(texts)
-    elif lang == "ja":
-        from .ja import ja_analyze_batch
-
-        def _analyze_batch(texts):
-            return ja_analyze_batch(texts)
-    elif lang in ("ar", "fa", "bg", "cz", "hi", "id", "lv"):
-        from .lang2 import lang2_analyze_batch
-
-        def _analyze_batch(texts):
-            return lang2_analyze_batch(lang, texts)
-    elif lang in ("da", "nl", "ro", "tr", "sv_sb", "no_sb"):
-        from .lang3 import lang3_analyze_batch
-
-        def _analyze_batch(texts):
-            return lang3_analyze_batch(lang, texts)
-    elif lang == "el":
-        from .el import el_analyze_batch
-
-        def _analyze_batch(texts):
-            return el_analyze_batch(texts)
-    elif lang == "gl":
-        from .gl import gl_analyze_batch
-
-        def _analyze_batch(texts):
-            return gl_analyze_batch(texts)
-    elif lang == "hy":
-        from .hy import hy_analyze_batch
-
-        def _analyze_batch(texts):
-            return hy_analyze_batch(texts)
-    elif lang == "lt":
-        from .lt import lt_analyze_batch
-
-        def _analyze_batch(texts):
-            return lt_analyze_batch(texts)
-    elif lang == "ga":
-        from .ga import ga_analyze_batch
-
-        def _analyze_batch(texts):
-            return ga_analyze_batch(texts)
-    elif lang == "eu":
-        from .eu import eu_analyze_batch
-
-        def _analyze_batch(texts):
-            return eu_analyze_batch(texts)
-    elif lang == "ca":
-        from .ca import ca_analyze_batch
-
-        def _analyze_batch(texts):
-            return ca_analyze_batch(texts)
-    else:
-        from .lang import STEMMERS, lang_analyze_batch
-        if lang not in STEMMERS:
+    batch = {"cjk": cjk_analyze_batch, "ja": ja_analyze_batch}.get(lang)
+    if batch is None:
+        if lang not in CHAINS:
             raise ValueError(f"unknown analyzer language {lang!r}")
-
-        def _analyze_batch(texts):
-            return lang_analyze_batch(lang, texts)
-
-    ret = StructType([
-        StructField("terms", ArrayType(StringType())),
-        StructField("positions", ArrayType(IntegerType())),
-    ])
-
-    @F.pandas_udf(ret)
-    def _tok(s: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for chunk in s:
-            res = _analyze_batch(
-                ["" if t is None else t for t in chunk.tolist()])
-            yield pd.DataFrame({
-                "terms": [r[0] for r in res],
-                "positions": [r[1] for r in res],
-            })
-
-    return _tok
+        batch = functools.partial(analyze_batch, lang)
+    return _struct_udf(batch)

@@ -10,12 +10,10 @@ period, as the program does).
 
 Verified token-for-token against the COMPILED reference
 CatalanAnalyzer (tools/gen_snowball_fixtures.py goldens,
-tests/test_r7g_eu_ca.py).
+tests/test_analysis_chains.py).
 """
 
 from __future__ import annotations
-
-from typing import List
 
 _CA_VOWELS = frozenset("aeiouàáèéíïòóúü")
 
@@ -98,40 +96,3 @@ def stem_ca(word: str) -> str:
         if base >= p1:
             word = word[:base] + ("" if case == 1 else "ic")
     return "".join(_CA_CLEAN.get(c, c) for c in word)
-
-
-_CA_ARTICLES = frozenset(("d", "l", "m", "n", "s", "t"))
-
-
-def _elide(token: str) -> str:
-    for i, ch in enumerate(token):
-        if ch in ("'", "\u2019"):
-            if token[:i].lower() in _CA_ARTICLES:
-                return token[i + 1:]
-            return token
-    return token
-
-
-def ca_analyze_batch(texts: List[str]):
-    """CatalanAnalyzer chain over a batch (UAX#29 C/dense kernel +
-    Elision + LowerCase + Stop + stem), stop removal leaving position
-    gaps."""
-    from .analyzers import MAX_TOKEN_LENGTH
-    from .snowball_stop import STOP_SETS
-    from .uax29 import simple_lower
-    from .uax29_vec import segment_batch
-    stops = STOP_SETS["ca"]
-    segs = segment_batch(texts, MAX_TOKEN_LENGTH)
-    out = []
-    for text, spans in zip(texts, segs):
-        terms, positions = [], []
-        pos = -1
-        for a, b, _typ in spans:
-            pos += 1
-            t = simple_lower(_elide(text[a:b]))
-            if t in stops:
-                continue
-            terms.append(stem_ca(t))
-            positions.append(pos)
-        out.append((terms, positions))
-    return out

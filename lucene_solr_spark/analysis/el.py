@@ -13,12 +13,10 @@ the first alternative (e.g. rule 8's 7-char branches), and the
 transliteration keeps that exactly.
 
 Verified token-for-token against the COMPILED reference GreekAnalyzer
-(tools/gen_snowball_fixtures.py corpus -> tests/test_r7d_el_gl.py).
+(tools/gen_snowball_fixtures.py corpus -> tests/test_analysis_chains.py).
 """
 
 from __future__ import annotations
-
-from typing import List
 
 _GREEK_FOLD = {
     "ς": "σ",
@@ -521,27 +519,3 @@ def _r22(s):
             or s.endswith("ωτατ")):
         return s[:-4]
     return s
-
-
-def el_analyze_batch(texts: List[str]):
-    """GreekAnalyzer chain over a batch: UAX#29 scan (C/dense
-    kernel) + GreekLowerCase + Stop + GreekStem, stop removal leaving
-    position gaps."""
-    from .analyzers import MAX_TOKEN_LENGTH
-    from .snowball_stop import STOP_SETS
-    from .uax29_vec import segment_batch
-    stops = STOP_SETS["el"]
-    segs = segment_batch(texts, MAX_TOKEN_LENGTH)
-    out = []
-    for text, spans in zip(texts, segs):
-        terms, positions = [], []
-        pos = -1
-        for a, b, _typ in spans:
-            pos += 1
-            t = greek_lower(text[a:b])
-            if t in stops:
-                continue
-            terms.append(stem_el(t))
-            positions.append(pos)
-        out.append((terms, positions))
-    return out

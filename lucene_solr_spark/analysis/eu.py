@@ -9,12 +9,10 @@ with a per-entry RV/R1/R2 condition or replacement.
 
 Verified token-for-token against the COMPILED reference
 BasqueAnalyzer (tools/gen_snowball_fixtures.py goldens,
-tests/test_r7g_eu_ca.py).
+tests/test_analysis_chains.py).
 """
 
 from __future__ import annotations
-
-from typing import List
 
 _EU_VOWELS = frozenset("aeiou")
 
@@ -119,27 +117,3 @@ def stem_eu(word: str) -> str:
             break
     word, c, _ok = _apply_at(word, c, pV, p1, p2, _EU_ADJ, {3: "z"})
     return word
-
-
-def eu_analyze_batch(texts: List[str]):
-    """BasqueAnalyzer chain over a batch (UAX#29 C/dense kernel +
-    LowerCase + Stop + stem), stop removal leaving position gaps."""
-    from .analyzers import MAX_TOKEN_LENGTH
-    from .snowball_stop import STOP_SETS
-    from .uax29 import simple_lower
-    from .uax29_vec import segment_batch
-    stops = STOP_SETS["eu"]
-    segs = segment_batch(texts, MAX_TOKEN_LENGTH)
-    out = []
-    for text, spans in zip(texts, segs):
-        terms, positions = [], []
-        pos = -1
-        for a, b, _typ in spans:
-            pos += 1
-            t = simple_lower(text[a:b])
-            if t in stops:
-                continue
-            terms.append(stem_eu(t))
-            positions.append(pos)
-        out.append((terms, positions))
-    return out

@@ -11,12 +11,10 @@ the mutated word, then noun, derivational and verb suffix tables.
 
 Verified token-for-token against the COMPILED reference
 IrishAnalyzer (tools/gen_snowball_fixtures.py goldens,
-tests/test_r7f_lt_ga.py).
+tests/test_analysis_chains.py).
 """
 
 from __future__ import annotations
-
-from typing import List
 
 _GA_VOWELS = frozenset("aeiou\u00e1\u00e9\u00ed\u00f3\u00fa")
 _GA_UPPER_V = frozenset("AEIOU\u00c1\u00c9\u00cd\u00d3\u00da")
@@ -111,46 +109,3 @@ def irish_lower(term: str) -> str:
         return term[0] + "-" + "".join(
             simple_lower(c) for c in term[1:])
     return "".join(simple_lower(c) for c in term)
-
-
-_GA_ARTICLES = frozenset(("d", "m", "b"))
-_GA_HYPH = frozenset(("h", "n", "t"))
-
-
-def _elide(token: str) -> str:
-    """ElisionFilter with the Irish article set (case-insensitive),
-    splitting at the FIRST apostrophe."""
-    for i, ch in enumerate(token):
-        if ch in ("'", "\u2019"):
-            if token[:i].lower() in _GA_ARTICLES:
-                return token[i + 1:]
-            return token
-    return token
-
-
-def ga_analyze_batch(texts: List[str]):
-    """IrishAnalyzer chain over a batch; BOTH stop filters leave
-    position gaps (hyphenation particles pre-lowercase,
-    case-insensitive; stop set post-lowercase)."""
-    from .analyzers import MAX_TOKEN_LENGTH
-    from .snowball_stop import STOP_SETS
-    from .uax29_vec import segment_batch
-    stops = STOP_SETS["ga"]
-    segs = segment_batch(texts, MAX_TOKEN_LENGTH)
-    out = []
-    for text, spans in zip(texts, segs):
-        terms, positions = [], []
-        pos = -1
-        for a, b, _typ in spans:
-            pos += 1
-            tok = text[a:b]
-            if tok.lower() in _GA_HYPH:
-                continue
-            tok = _elide(tok)
-            tok = irish_lower(tok)
-            if tok in stops:
-                continue
-            terms.append(stem_ga(tok))
-            positions.append(pos)
-        out.append((terms, positions))
-    return out

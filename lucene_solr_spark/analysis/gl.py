@@ -20,14 +20,14 @@ not code — same adjudication as analysis/ja_dict); the parser here
 mirrors RSLPStemmerBase.parse's grammar.
 
 Verified token-for-token against the COMPILED reference
-GalicianAnalyzer (tests/test_r7d_el_gl.py).
+GalicianAnalyzer (tests/test_analysis_chains.py).
 """
 
 from __future__ import annotations
 
 import os
 import re
-from typing import List, Optional, Tuple
+from typing import Optional, Tuple
 
 _DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                      "gl_data", "galician.rslp")
@@ -177,28 +177,3 @@ def stem_gl(word: str) -> str:
         w = st["Verb"].apply(w)
     w = st["Vowel"].apply(w)
     return w.translate(_GL_DEACCENT)
-
-
-def gl_analyze_batch(texts: List[str]):
-    """GalicianAnalyzer chain over a batch: UAX#29 scan (C/dense
-    kernel) + LowerCase + Stop + RSLP stem, stop removal leaving
-    position gaps."""
-    from .analyzers import MAX_TOKEN_LENGTH
-    from .snowball_stop import STOP_SETS
-    from .uax29 import simple_lower
-    from .uax29_vec import segment_batch
-    stops = STOP_SETS["gl"]
-    segs = segment_batch(texts, MAX_TOKEN_LENGTH)
-    out = []
-    for text, spans in zip(texts, segs):
-        terms, positions = [], []
-        pos = -1
-        for a, b, _typ in spans:
-            pos += 1
-            t = simple_lower(text[a:b])
-            if t in stops:
-                continue
-            terms.append(stem_gl(t))
-            positions.append(pos)
-        out.append((terms, positions))
-    return out

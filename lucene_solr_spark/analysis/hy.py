@@ -10,12 +10,10 @@ entirely inside RV.  Armenian vowels: \u0561 \u0565 \u0567 \u0568
 
 Verified token-for-token against the COMPILED reference
 ArmenianAnalyzer (tools/gen_snowball_fixtures.py goldens,
-tests/test_r7e_hy.py).
+tests/test_analysis_chains.py).
 """
 
 from __future__ import annotations
-
-from typing import List
 
 _HY_VOWELS = frozenset("աեէըիուօ")
 
@@ -107,27 +105,3 @@ def stem_hy(word: str) -> str:
     word = _del_longest(word, pV, _HY_A_0)          # adjective
     word = _del_longest(word, pV, _HY_A_2)          # noun
     return word
-
-
-def hy_analyze_batch(texts: List[str]):
-    """ArmenianAnalyzer chain over a batch (UAX#29 C/dense kernel +
-    LowerCase + Stop + stem), stop removal leaving position gaps."""
-    from .analyzers import MAX_TOKEN_LENGTH
-    from .snowball_stop import STOP_SETS
-    from .uax29 import simple_lower
-    from .uax29_vec import segment_batch
-    stops = STOP_SETS["hy"]
-    segs = segment_batch(texts, MAX_TOKEN_LENGTH)
-    out = []
-    for text, spans in zip(texts, segs):
-        terms, positions = [], []
-        pos = -1
-        for a, b, _typ in spans:
-            pos += 1
-            t = simple_lower(text[a:b])
-            if t in stops:
-                continue
-            terms.append(stem_hy(t))
-            positions.append(pos)
-        out.append((terms, positions))
-    return out

@@ -632,14 +632,18 @@ STEMMERS = {
 # ---------------------------------------------------------------------
 
 #: ElisionFilter article sets (FrenchAnalyzer.java:61,
-#: ItalianAnalyzer.java:50) — matched case-insensitively against the
-#: prefix before the first apostrophe, which is then stripped.
+#: ItalianAnalyzer.java:50, IrishAnalyzer DEFAULT_ARTICLES,
+#: CatalanAnalyzer DEFAULT_ARTICLES) — matched case-insensitively
+#: against the prefix before the first apostrophe, which is then
+#: stripped.
 ELISION_ARTICLES = {
     "fr": frozenset(("l", "m", "t", "qu", "n", "s", "j", "d", "c",
                      "jusqu", "quoiqu", "lorsqu", "puisqu")),
     "it": frozenset(("c", "l", "all", "dall", "dell", "nell", "sull",
                      "coll", "pell", "gl", "agl", "dagl", "degl",
                      "negl", "sugl", "un", "m", "t", "s", "v", "d")),
+    "ga": frozenset(("d", "m", "b")),
+    "ca": frozenset(("d", "l", "m", "n", "s", "t")),
 }
 
 
@@ -682,30 +686,3 @@ def lang_analyze(lang: str, text: str) -> tuple:
         terms.append(stem(t))
         positions.append(pos)
     return terms, positions
-
-
-def lang_analyze_batch(lang: str, texts: list) -> list:
-    """lang_analyze over a whole Arrow batch: the UAX#29 scan runs
-    through the C/dense kernel (analysis/uax29_vec, differentially
-    verified vs the scalar scanner); elision/stop/stem stay per-token
-    (they are per-token work regardless)."""
-    from .analyzers import MAX_TOKEN_LENGTH
-    from .lang_stop import STOP_SETS
-    from .uax29 import simple_lower
-    from .uax29_vec import segment_batch
-    stops = STOP_SETS[lang]
-    stem = STEMMERS[lang]
-    segs = segment_batch(texts, MAX_TOKEN_LENGTH)
-    out = []
-    for text, spans in zip(texts, segs):
-        terms, positions = [], []
-        pos = -1
-        for a, b, _typ in spans:
-            pos += 1
-            t = simple_lower(elide(lang, text[a:b]))
-            if t in stops:
-                continue
-            terms.append(stem(t))
-            positions.append(pos)
-        out.append((terms, positions))
-    return out

@@ -29,7 +29,7 @@ stop sets are generated verbatim from the reference resources
 from __future__ import annotations
 
 import unicodedata
-from typing import List, Optional, Tuple
+from typing import List, Tuple
 
 # ------------------------------------------------------ DecimalDigit
 
@@ -654,67 +654,14 @@ def _lv_unpalatalize(s: str, removed_first: str) -> str:
 
 # -------------------------------------------------------- the chains
 
-def _std_tokens(text: str) -> List[str]:
-    from .uax29_vec import segment_batch
-    spans = segment_batch([text])[0]
-    return [text[a:b] for a, b, _ in spans]
-
-
-def lang2_analyze(lang: str, text: str) -> Tuple[List[str], List[int]]:
-    """(terms, positions) for the second-wave analyzer chains; removed
-    stopwords leave position gaps (StopFilter semantics)."""
-    from .lang2_stop import STOP_SETS2
-    from .uax29 import simple_lower
-    stops = STOP_SETS2[lang]
-    text = text or ""
-    if lang == "fa":
-        text = persian_char_filter(text)
-    terms: List[str] = []
-    positions: List[int] = []
-    pos = -1
-    for tok in _std_tokens(text):
-        pos += 1
-        t = simple_lower(tok)
-        if lang == "ar":
-            t = decimal_digit(t)
-            if t in stops:
-                continue
-            t = arabic_stem(arabic_normalize(t))
-        elif lang == "fa":
-            t = persian_normalize(arabic_normalize(decimal_digit(t)))
-            if t in stops:
-                continue
-        elif lang == "bg":
-            if t in stops:
-                continue
-            t = bulgarian_stem(t)
-        elif lang == "cz":
-            if t in stops:
-                continue
-            t = czech_stem(t)
-        elif lang == "hi":
-            t = hindi_normalize(indic_normalize(decimal_digit(t)))
-            if t in stops:
-                continue
-            t = hindi_stem(t)
-        elif lang == "id":
-            if t in stops:
-                continue
-            t = indonesian_stem(t)
-        elif lang == "lv":
-            if t in stops:
-                continue
-            t = latvian_stem(t)
-        else:
-            raise ValueError(f"unknown lang2 {lang!r}")
-        terms.append(t)
-        positions.append(pos)
-    return terms, positions
-
-
 LANGS2 = ("ar", "fa", "bg", "cz", "hi", "id", "lv")
 
 
-def lang2_analyze_batch(lang: str, texts: List[str]
-                        ) -> List[Tuple[List[str], List[int]]]:
-    return [lang2_analyze(lang, t) for t in texts]
+def lang2_analyze(lang: str, text: str) -> Tuple[List[str], List[int]]:
+    """(terms, positions) for one text under a second-wave chain
+    (analysis/chains.CHAINS); removed stopwords leave position gaps
+    (StopFilter semantics)."""
+    if lang not in LANGS2:
+        raise ValueError(f"unknown lang2 {lang!r}")
+    from .chains import analyze_batch
+    return analyze_batch(lang, [text or ""])[0]

@@ -10,12 +10,10 @@ fix_chdz -> fix_gd.
 
 Verified token-for-token against the COMPILED reference
 LithuanianAnalyzer (tools/gen_snowball_fixtures.py goldens,
-tests/test_r7f_lt_ga.py).
+tests/test_analysis_chains.py).
 """
 
 from __future__ import annotations
-
-from typing import List
 
 _LT_VOWELS = frozenset("aąeęėiįyouųū")
 
@@ -127,27 +125,3 @@ def stem_lt(word: str) -> str:
     if word.endswith("gd"):
         word = word[:-2] + "g"
     return word
-
-
-def lt_analyze_batch(texts: List[str]):
-    """LithuanianAnalyzer chain over a batch (UAX#29 C/dense kernel +
-    LowerCase + Stop + stem), stop removal leaving position gaps."""
-    from .analyzers import MAX_TOKEN_LENGTH
-    from .snowball_stop import STOP_SETS
-    from .uax29 import simple_lower
-    from .uax29_vec import segment_batch
-    stops = STOP_SETS["lt"]
-    segs = segment_batch(texts, MAX_TOKEN_LENGTH)
-    out = []
-    for text, spans in zip(texts, segs):
-        terms, positions = [], []
-        pos = -1
-        for a, b, _typ in spans:
-            pos += 1
-            tk = simple_lower(text[a:b])
-            if tk in stops:
-                continue
-            terms.append(stem_lt(tk))
-            positions.append(pos)
-        out.append((terms, positions))
-    return out

@@ -35,6 +35,7 @@ import hashlib
 import os
 import subprocess
 import tempfile
+import zipfile
 from typing import List, Optional, Tuple
 
 import numpy as np
@@ -170,8 +171,9 @@ def _tab() -> _Tables:
             t.rules_list = t.rules.tolist()
             _tables = t
             return _tables
-        except (OSError, KeyError, ValueError):
-            pass
+        except (OSError, KeyError, ValueError, EOFError,
+                zipfile.BadZipFile):
+            pass  # missing, truncated or foreign cache: rebuild
         _tables = _build_tables()
         try:
             fd, tmp = tempfile.mkstemp(suffix=".npz")

@@ -34,16 +34,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..analysis.analyzers import (lang_analyze_udf, simple_tokens_col,
-                                  standard_tokenize_udf)
+from ..analysis.analyzers import (english_analyze_udf, lang_analyze_udf,
+                                  simple_tokens_col, standard_tokenize_udf)
 from ..codecs.smallfloat import norm_byte_sql, qdl_sql
-
-
-def _is_lang(analyzer: str) -> bool:
-    from ..analysis.lang import STEMMERS
-    from ..analysis.lang2 import LANGS2
-    return analyzer in ("cjk", "ja") or analyzer in LANGS2 \
-        or analyzer in STEMMERS
 
 
 @dataclass
@@ -93,24 +86,20 @@ def build_index(
             F.col(docid_col).cast("long").alias("docid"),
             simple_tokens_col(text_col).alias("tokens"),
         )
-    elif analyzer in ("standard", "english") or _is_lang(analyzer):
+    else:
         if analyzer == "standard":
             tok = standard_tokenize_udf()
         elif analyzer == "english":
-            from ..analysis.analyzers import english_analyze_udf
             tok = english_analyze_udf()
         else:
-            # per-language chain (GermanAnalyzer etc. core):
-            # exact UAX#29 tokenizer + elision (fr/it) + lowercase +
-            # snowball stop (position gaps) + reference light stemmer
+            # a language analyzer (analysis/chains.CHAINS, cjk or ja);
+            # an unknown name raises ValueError
             tok = lang_analyze_udf(analyzer)
         tokens = df.select(
             F.col(docid_col).cast("long").alias("docid"),
             tok(F.col(text_col)).alias("ts"),
         ).select("docid", F.col("ts.terms").alias("tokens"),
                  F.col("ts.positions").alias("positions"))
-    else:
-        raise ValueError(f"unknown analyzer {analyzer!r}")
 
     docs = tokens.select(
         "docid",

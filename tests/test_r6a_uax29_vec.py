@@ -4,15 +4,17 @@ which is itself fuzz-verified against the reference DFA
 (tools/fuzz_uax29.py, zero divergences).  Pools mirror the fuzz
 harness's class-representative construction."""
 
+import os
 import random
 
+import numpy as np
 import pytest
 
 from lucene_solr_spark.analysis import uax29_vec as V
 from lucene_solr_spark.analysis.analyzers import standard_tokenize
+from lucene_solr_spark.analysis.chains import analyze_batch
 from lucene_solr_spark.analysis.cjk import cjk_analyze, cjk_analyze_batch
-from lucene_solr_spark.analysis.lang import (STEMMERS, lang_analyze,
-                                             lang_analyze_batch)
+from lucene_solr_spark.analysis.lang import STEMMERS, lang_analyze
 from lucene_solr_spark.analysis.uax29 import segment
 from lucene_solr_spark.analysis.uax29_tables import RANGES
 
@@ -73,14 +75,43 @@ def test_standard_tokenize_batch_parity():
 
 
 def test_lang_and_cjk_batch_parity():
-    docs = _docs(300)
-    for lang in list(STEMMERS)[:3]:
-        got = lang_analyze_batch(lang, docs)
+    # the chain runner vs the scalar NFA-scanner chain, all ten
+    # light-stemmer languages; the memo sees one surface in several
+    # case/elision forms within a batch
+    docs = _docs(300) + ["L'Avion l'avion LAVION", "l'avion L’AVION"]
+    for lang in STEMMERS:
+        got = analyze_batch(lang, docs)
         for d, g in zip(docs, got):
             assert g == lang_analyze(lang, d), (lang, repr(d))
+    assert analyze_batch("fr", ["L'Avion l'avion LAVION"]) == [
+        (["avion", "avion", "lavion"], [0, 1, 2])]
+    # fa: PersianCharFilter turns ZWNJ into a space before tokenizing
+    # ("ها" is then a stopword: position gap); a shared batch (and
+    # memo) gives each line what it gets alone
+    fa = ["کتاب", "کتاب\u200cها را می\u200cخواهم ١٢٣ کتاب", "کتاب ها"]
+    got = analyze_batch("fa", fa)
+    assert got[1] == (["كتاب", "خواهم", "123", "كتاب"], [0, 4, 5, 6])
+    assert got == [analyze_batch("fa", [d])[0] for d in fa]
     got = cjk_analyze_batch(docs)
     for d, g in zip(docs, got):
         assert g == cjk_analyze(d), repr(d)
+
+
+def test_truncated_table_cache_rebuilds(tmp_path, monkeypatch):
+    docs = _docs(200)
+    want = V.segment_batch(docs)
+    t = V._tab()
+    path = str(tmp_path / "uax29_tables.npz")
+    np.savez(path, lut=t.lut, T1C=t.T1C, A2=t.A2, rules=t.rules,
+             C=t.C, startC=t.startC, sep=t.sep, lowlut=t.lowlut)
+    with open(path, "r+b") as f:
+        f.truncate(os.path.getsize(path) // 2)
+    monkeypatch.setattr(V, "_tables_cache_path", lambda: path)
+    monkeypatch.setattr(V, "_tables", None)
+    rebuilt = V._tab()
+    assert rebuilt is not t
+    assert V.segment_batch(docs) == want
+    assert int(np.load(path)["C"]) == rebuilt.C   # cache rewritten
 
 
 def test_c_kernel_builds_here():

@@ -1,51 +1,15 @@
 """Round-4: second-wave language analyzers (ar/fa/bg/cz/hi/id/lv) —
-token-for-token parity against the COMPILED reference analyzers over
-the full fixture corpora (tools/gen_lang2_fixtures.py; stop lists,
-affix combos, random script-alphabet words, digits, normalization-
-sensitive sequences)."""
+unit behaviors of the filters and stemmers.  Token-for-token parity
+against the COMPILED reference analyzers over the full fixture
+corpora (tools/gen_lang2_fixtures.py) is in
+tests/test_analysis_chains.py."""
 
-import json
-import pathlib
-
-import pytest
-
-from lucene_solr_spark.analysis.lang2 import (LANGS2, arabic_stem,
+from lucene_solr_spark.analysis.lang2 import (arabic_stem,
                                               decimal_digit,
                                               hindi_stem,
                                               indonesian_stem,
                                               lang2_analyze,
                                               latvian_stem)
-
-FIX = pathlib.Path(__file__).parent / "fixtures"
-
-
-def _unesc(s):
-    if "\\" not in s:
-        return s
-    return (s.replace("\\t", "\t").replace("\\n", "\n")
-            .replace("\\r", "\r").replace("\\\\", "\\"))
-
-
-@pytest.fixture(scope="module")
-def golden():
-    return json.loads((FIX / "lang2_golden.json")
-                      .read_text(encoding="utf-8"))
-
-
-@pytest.mark.parametrize("lang", LANGS2)
-def test_full_corpus_parity(golden, lang):
-    data = golden[lang]
-    assert len(data["lines"]) > 100
-    for line, doc in zip(data["lines"], data["docs"]):
-        gterms = [_unesc(t[0]) for t in doc]
-        gpos = []
-        p = -1
-        for t in doc:
-            p += int(t[1])
-            gpos.append(p)
-        terms, positions = lang2_analyze(lang, line)
-        assert terms == gterms, (lang, repr(line))
-        assert positions == gpos, (lang, repr(line))
 
 
 def test_unit_behaviors():

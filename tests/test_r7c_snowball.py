@@ -1,45 +1,13 @@
-"""Round-5: Snowball-default analyzer chains (analysis/lang3 +
-analysis/snowball) verified token-for-token against the COMPILED
-reference analyzers (DanishAnalyzer, DutchAnalyzer, SwedishAnalyzer,
-NorwegianAnalyzer, RomanianAnalyzer, TurkishAnalyzer) on corpora
-covering the full stop lists, stem+suffix-table crosses, seeded
-random words and normalization material — goldens generated by
-tools/gen_snowball_fixtures.py."""
+"""Round-5: Snowball-default analyzer chains (analysis/chains +
+analysis/snowball) for DanishAnalyzer, DutchAnalyzer, SwedishAnalyzer,
+NorwegianAnalyzer, RomanianAnalyzer and TurkishAnalyzer: spot checks
+of the stemmers and chain filters.  The full chains are verified
+token-for-token against the COMPILED reference analyzers' goldens in
+tests/test_analysis_chains.py."""
 
-import json
-import pathlib
-
-import pytest
-
-from lucene_solr_spark.analysis.lang3 import (apostrophe,
-                                              lang3_analyze_batch,
-                                              turkish_lower)
+from lucene_solr_spark.analysis.chains import (analyze_batch, apostrophe,
+                                               turkish_lower)
 from lucene_solr_spark.analysis.snowball import STEMMERS
-
-FIX = pathlib.Path(__file__).parent / "fixtures"
-LANGS = ["da", "nl", "sv_sb", "no_sb", "ro", "tr"]
-
-
-def _golden():
-    return json.loads(
-        (FIX / "snowball_golden.json").read_text(encoding="utf-8"))
-
-
-@pytest.mark.parametrize("lang", LANGS)
-def test_chain_matches_reference(lang):
-    d = _golden()[lang]
-    lines, docs = d["lines"], d["docs"]
-    assert sum(len(doc) for doc in docs) > 2000
-    got = lang3_analyze_batch(lang, lines)
-    for line, doc, (terms, positions) in zip(lines, docs, got):
-        gterms = [t[0] for t in doc]
-        gpos = []
-        p = -1
-        for t in doc:
-            p += int(t[1])
-            gpos.append(p)
-        assert terms == gterms, repr(line[:80])
-        assert positions == gpos, repr(line[:80])
 
 
 def test_stemmer_spot_checks():
@@ -65,5 +33,5 @@ def test_turkish_filters():
 
 
 def test_dutch_stem_override_is_keyword():
-    (terms, _), = lang3_analyze_batch("nl", ["ei kind fiets"])
+    (terms, _), = analyze_batch("nl", ["ei kind fiets"])
     assert terms == ["eier", "kinder", "fiets"]

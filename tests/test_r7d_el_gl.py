@@ -1,41 +1,11 @@
 """Round-5b: Greek (22-rule cascade, analysis/el.py) and Galician
-(RSLP rules engine, analysis/gl.py) analyzer chains, verified
-token-for-token against the COMPILED reference GreekAnalyzer /
-GalicianAnalyzer (goldens from tools/gen_snowball_fixtures.py)."""
+(RSLP rules engine, analysis/gl.py) filters and stemmers; the full
+chains are verified token-for-token against the COMPILED reference
+GreekAnalyzer / GalicianAnalyzer goldens in
+tests/test_analysis_chains.py."""
 
-import json
-import pathlib
-
-import pytest
-
-from lucene_solr_spark.analysis.el import (el_analyze_batch,
-                                           greek_lower, stem_el)
-from lucene_solr_spark.analysis.gl import (gl_analyze_batch, stem_gl)
-
-FIX = pathlib.Path(__file__).parent / "fixtures"
-
-
-def _golden(lang):
-    return json.loads((FIX / "snowball_golden.json")
-                      .read_text(encoding="utf-8"))[lang]
-
-
-@pytest.mark.parametrize("lang,batch", [
-    ("el", el_analyze_batch), ("gl", gl_analyze_batch)])
-def test_chain_matches_reference(lang, batch):
-    d = _golden(lang)
-    lines, docs = d["lines"], d["docs"]
-    assert sum(len(doc) for doc in docs) > 2000
-    got = batch(lines)
-    for line, doc, (terms, positions) in zip(lines, docs, got):
-        gterms = [t[0] for t in doc]
-        gpos = []
-        p = -1
-        for t in doc:
-            p += int(t[1])
-            gpos.append(p)
-        assert terms == gterms, repr(line[:80])
-        assert positions == gpos, repr(line[:80])
+from lucene_solr_spark.analysis.el import greek_lower, stem_el
+from lucene_solr_spark.analysis.gl import stem_gl
 
 
 def test_greek_lower():
@@ -53,7 +23,8 @@ def test_greek_stem_spots():
 
 def test_galician_rslp_spots():
     # values pinned from the REFERENCE GalicianStemmer (the full
-    # chain is golden-verified above; these are readable anchors)
+    # chain is golden-verified in test_analysis_chains; these are
+    # readable anchors)
     assert stem_gl("cancións") == "cant"     # plural + noun steps
     assert stem_gl("felizmente") == "feliz"  # adverb step
     assert stem_gl("mulleres") == "mull"     # plural + noun steps

@@ -1,31 +1,9 @@
-"""Round-5b: Armenian analyzer chain (analysis/hy.py — Snowball
-"armenian" via ArmenianStemmer.java semantics), verified
+"""Round-5b: Armenian stemmer (analysis/hy.py — Snowball "armenian"
+via ArmenianStemmer.java semantics); the full chain is verified
 token-for-token against the COMPILED reference ArmenianAnalyzer
-(goldens from tools/gen_snowball_fixtures.py)."""
+goldens in tests/test_analysis_chains.py."""
 
-import json
-import pathlib
-
-from lucene_solr_spark.analysis.hy import hy_analyze_batch, stem_hy
-
-FIX = pathlib.Path(__file__).parent / "fixtures"
-
-
-def test_chain_matches_reference():
-    d = json.loads((FIX / "snowball_golden.json")
-                   .read_text(encoding="utf-8"))["hy"]
-    lines, docs = d["lines"], d["docs"]
-    assert sum(len(doc) for doc in docs) > 2000
-    got = hy_analyze_batch(lines)
-    for line, doc, (terms, positions) in zip(lines, docs, got):
-        gterms = [t[0] for t in doc]
-        gpos = []
-        p = -1
-        for t in doc:
-            p += int(t[1])
-            gpos.append(p)
-        assert terms == gterms, repr(line[:80])
-        assert positions == gpos, repr(line[:80])
+from lucene_solr_spark.analysis.hy import stem_hy
 
 
 def test_stem_spots():

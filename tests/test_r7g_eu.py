@@ -1,32 +1,10 @@
-"""Round-5b: Basque analyzer chain (analysis/eu.py — Snowball
-"basque": cursor-anchored repeated verb/noun ending removal with
-identity-replacement protections), verified token-for-token against
-the COMPILED reference BasqueAnalyzer (goldens from
-tools/gen_snowball_fixtures.py)."""
+"""Round-5b: Basque stemmer (analysis/eu.py — Snowball "basque":
+cursor-anchored repeated verb/noun ending removal with
+identity-replacement protections); the full chain is verified
+token-for-token against the COMPILED reference BasqueAnalyzer goldens
+in tests/test_analysis_chains.py."""
 
-import json
-import pathlib
-
-from lucene_solr_spark.analysis.eu import eu_analyze_batch, stem_eu
-
-FIX = pathlib.Path(__file__).parent / "fixtures"
-
-
-def test_chain_matches_reference():
-    d = json.loads((FIX / "snowball_golden.json")
-                   .read_text(encoding="utf-8"))["eu"]
-    lines, docs = d["lines"], d["docs"]
-    assert sum(len(doc) for doc in docs) > 2000
-    got = eu_analyze_batch(lines)
-    for line, doc, (terms, positions) in zip(lines, docs, got):
-        gterms = [t[0] for t in doc]
-        gpos = []
-        p = -1
-        for t in doc:
-            p += int(t[1])
-            gpos.append(p)
-        assert terms == gterms, repr(line[:80])
-        assert positions == gpos, repr(line[:80])
+from lucene_solr_spark.analysis.eu import stem_eu
 
 
 def test_stem_spots():

@@ -1,36 +1,14 @@
-"""Round-5b: Catalan analyzer chain (analysis/ca.py — Snowball
-"catalan" + elision), verified token-for-token against the COMPILED
-reference CatalanAnalyzer (goldens from
-tools/gen_snowball_fixtures.py)."""
+"""Round-5b: Catalan stemmer (analysis/ca.py — Snowball "catalan")
+and elision; the full chain is verified token-for-token against the
+COMPILED reference CatalanAnalyzer goldens in
+tests/test_analysis_chains.py."""
 
-import json
-import pathlib
-
-from lucene_solr_spark.analysis.ca import (_elide, ca_analyze_batch,
-                                           stem_ca)
-
-FIX = pathlib.Path(__file__).parent / "fixtures"
-
-
-def test_chain_matches_reference():
-    d = json.loads((FIX / "snowball_golden.json")
-                   .read_text(encoding="utf-8"))["ca"]
-    lines, docs = d["lines"], d["docs"]
-    assert sum(len(doc) for doc in docs) > 2000
-    got = ca_analyze_batch(lines)
-    for line, doc, (terms, positions) in zip(lines, docs, got):
-        gterms = [t[0] for t in doc]
-        gpos = []
-        p = -1
-        for t in doc:
-            p += int(t[1])
-            gpos.append(p)
-        assert terms == gterms, repr(line[:80])
-        assert positions == gpos, repr(line[:80])
+from lucene_solr_spark.analysis.ca import stem_ca
+from lucene_solr_spark.analysis.lang import elide
 
 
 def test_spots():
     assert stem_ca("cançons") == "cançon"
     assert stem_ca("psicològic") == "psicologic"
-    assert _elide("l'home") == "home"
-    assert _elide("x'home") == "x'home"
+    assert elide("ca", "l'home") == "home"
+    assert elide("ca", "x'home") == "x'home"

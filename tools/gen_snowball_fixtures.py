@@ -13,7 +13,7 @@
    tables, seeded random alphabet words, and language-specific
    normalization material (Dutch accents/ij, Turkish dotted/dotless I
    and apostrophes, Romanian cedilla vs comma forms).  The python
-   chain twins (analysis/lang3.py + analysis/snowball.py) must match
+   chain twins (analysis/chains.py + analysis/snowball.py) must match
    token-for-token.
 
 Reuses the /tmp/kuromoji scratch compile (core + analysis-common).

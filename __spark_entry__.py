@@ -25,7 +25,6 @@ from pyspark.sql.window import Window
 
 from lucene_solr_spark import B, K1
 from lucene_solr_spark.index.builder import InvertedIndex, build_index
-from lucene_solr_spark.index.segments import SegmentIndex, write_segments
 from lucene_solr_spark.search.engine import Searcher
 from lucene_solr_spark.search.oracle import OracleBuilder
 from lucene_solr_spark.search.segment_searcher import SegmentSearcher
@@ -76,17 +75,27 @@ _SEG: dict[str, SegmentSearcher] = {}
 
 def _seg_searcher(spark: SparkSession, sf_dir: str) -> SegmentSearcher:
     """Packed-segment WAND path over the same corpus (block-max pruned;
-    results must be identical to the naive path and the oracle)."""
+    results must be identical to the naive path and the oracle). The
+    on-disk store is keyed on the corpus path plus each input file's
+    name, size and mtime, so a rewritten documents.parquet gets a fresh
+    store, never the stale one."""
     if sf_dir not in _SEG:
         import hashlib
-        import os
+        import tempfile
 
         from lucene_solr_spark.index.segments import FORMAT_VERSION
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        out = f"/tmp/lucene_solr_spark_segs/v{FORMAT_VERSION}/{tag}"
+        src = f"{sf_dir}/documents.parquet"
+        files = [src] if os.path.isfile(src) else sorted(
+            os.path.join(src, f) for f in os.listdir(src))
+        key = [sf_dir] + [
+            f"{os.path.basename(f)}:{st.st_size}:{st.st_mtime_ns}"
+            for f, st in ((f, os.stat(f)) for f in files)]
+        tag = hashlib.md5("\n".join(key).encode()).hexdigest()[:10]
+        out = os.path.join(tempfile.gettempdir(), "lucene_solr_spark_segs",
+                           f"v{FORMAT_VERSION}", tag)
         if not os.path.exists(f"{out}/commit.json"):
-            # hot build path (append_raw): byte-identical to the
-            # exploded path, so the oracle gate checks it too
+            # append_raw is the one segment build path; the WAND rows
+            # (_mk_wand) check its store against the oracle
             from lucene_solr_spark.index.writer import IndexWriter
             w = IndexWriter.create(spark, out, docs_per_segment=1024)
             w.append_raw(_documents(spark, sf_dir),

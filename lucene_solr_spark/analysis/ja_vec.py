@@ -3,8 +3,8 @@ analysis/ja.ja_tokenize (kuromoji-class SEARCH-mode lattice,
 reimplemented from JapaneseTokenizer.java semantics — see ja.py's
 module docstring for the reference map), with the per-UTF-16-unit
 inner loop run by a C kernel compiled on first use (content-hashed
-.so under /tmp, same pattern as uax29_vec) instead of the per-unit
-python loop.
+.so in the per-user cache of analysis/native.py, like uax29_vec)
+instead of the per-unit python loop.
 
 Table materialization (once per process, from the loaded _JaDict):
 
@@ -37,15 +37,12 @@ tests/test_r7a_ja_vec.py.
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
-import subprocess
-import tempfile
 from typing import List, Optional, Tuple
 
 import numpy as np
 
 from . import ja as _ja
+from . import native
 
 _tables = None
 
@@ -462,42 +459,11 @@ _clib_tried = False
 
 
 def _compile_kernel() -> Optional[ctypes.CDLL]:
-    """Compile (once per host, content-hashed cache) and dlopen the
-    lattice kernel; None if no working C compiler."""
-    h = hashlib.sha256(_C_SRC.encode()).hexdigest()[:16]
-    so = os.path.join(tempfile.gettempdir(), f"ja_kernel_{h}.so")
-    if not os.path.exists(so):
-        tmp = None
-        try:
-            fd, csrc = tempfile.mkstemp(suffix=".c")
-            with os.fdopen(fd, "w") as f:
-                f.write(_C_SRC)
-            fd2, tmp = tempfile.mkstemp(suffix=".so")
-            os.close(fd2)
-            for cc in ("cc", "gcc", "clang"):
-                r = subprocess.run(
-                    [cc, "-O3", "-shared", "-fPIC", "-o", tmp, csrc],
-                    capture_output=True)
-                if r.returncode == 0:
-                    os.replace(tmp, so)  # atomic: racing procs agree
-                    break
-            else:
-                return None
-        except (OSError, subprocess.SubprocessError):
-            return None
-        finally:
-            try:
-                os.unlink(csrc)
-            except OSError:
-                pass
-            if tmp and os.path.exists(tmp):
-                try:
-                    os.unlink(tmp)
-                except OSError:
-                    pass
-    try:
-        lib = ctypes.CDLL(so)
-    except OSError:
+    """Compile (once per host and user, see analysis/native.py) and
+    dlopen the lattice kernel; None if no working C compiler or no safe
+    cache directory."""
+    lib = native.load_kernel("ja_kernel", _C_SRC)
+    if lib is None:
         return None
     lib.ja_lattice.restype = ctypes.c_int64
     lib.ja_lattice.argtypes = (

@@ -5,8 +5,9 @@ JFlex scanner's semantics, StandardTokenizerImpl.jflex), materialized
 ONCE into dense transition tables and driven by either:
 
 - a ~40-line C kernel compiled on first use with the system compiler
-  (cached as a content-hashed .so under /tmp, one compile per host;
-  every python worker process just dlopens it) — the scan is then
+  (cached as a content-hashed .so in the per-user cache directory of
+  analysis/native.py, one compile per host; every python worker
+  process just dlopens it) — the scan is then
   memory-bound (~2 table loads per codepoint), two orders of magnitude
   over the per-codepoint python scanner; or
 - a dense-table tight python loop (list indexing, ~4x the
@@ -33,12 +34,13 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
-import subprocess
 import tempfile
 import zipfile
 from typing import List, Optional, Tuple
 
 import numpy as np
+
+from . import native
 
 # NOTE: uax29 / uax29_tables are imported LAZILY (only when the
 # dense tables must actually be BUILT): parsing the uax29_tables
@@ -135,56 +137,64 @@ def _build_tables() -> _Tables:
     return t
 
 
-def _tables_cache_path() -> str:
+def _tables_cache_path() -> Optional[str]:
     """Content-hashed on-disk cache of the dense tables: keyed on the
     bytes of the modules the build depends on, so any change to the
     scalar scanner, the probed ranges or this builder invalidates it.
     ~0.5s build per python worker process otherwise — across a reused
     32-worker pool that is ~16s of first-query latency (measured as
-    the round-4 q_uax29_multilingual cold-vs-warm residual)."""
+    the round-4 q_uax29_multilingual cold-vs-warm residual). Lives in
+    the per-user cache directory; None (no cache) if that is unsafe."""
+    d = native.cache_dir()
+    if d is None:
+        return None
     base = os.path.dirname(os.path.abspath(__file__))
     h = hashlib.sha256()
     for name in ("uax29.py", "uax29_tables.py", "uax29_vec.py"):
         with open(os.path.join(base, name), "rb") as f:
             h.update(f.read())
-    return os.path.join(tempfile.gettempdir(),
-                        f"uax29_tables_{h.hexdigest()[:16]}.npz")
+    return os.path.join(d, f"uax29_tables_{h.hexdigest()[:16]}.npz")
+
+
+def _load_tables(path: str) -> Optional[_Tables]:
+    try:
+        z = np.load(path)
+        t = _Tables()
+        t.lut = z["lut"]
+        t.T1C = np.ascontiguousarray(z["T1C"])
+        t.A2 = np.ascontiguousarray(z["A2"])
+        t.rules = z["rules"]
+        t.C = int(z["C"])
+        t.startC = int(z["startC"])
+        t.sep = int(z["sep"])
+        t.lowlut = np.ascontiguousarray(z["lowlut"])
+    except (OSError, KeyError, ValueError, EOFError, zipfile.BadZipFile):
+        return None  # missing, truncated or foreign cache: rebuild
+    t.T1C_list = t.T1C.tolist()
+    t.A2_list = t.A2.tolist()
+    t.rules_list = t.rules.tolist()
+    return t
 
 
 def _tab() -> _Tables:
     global _tables
     if _tables is None:
         path = _tables_cache_path()
-        try:
-            z = np.load(path)
-            t = _Tables()
-            t.lut = z["lut"]
-            t.T1C = np.ascontiguousarray(z["T1C"])
-            t.A2 = np.ascontiguousarray(z["A2"])
-            t.rules = z["rules"]
-            t.C = int(z["C"])
-            t.startC = int(z["startC"])
-            t.sep = int(z["sep"])
-            t.lowlut = np.ascontiguousarray(z["lowlut"])
-            t.T1C_list = t.T1C.tolist()
-            t.A2_list = t.A2.tolist()
-            t.rules_list = t.rules.tolist()
-            _tables = t
-            return _tables
-        except (OSError, KeyError, ValueError, EOFError,
-                zipfile.BadZipFile):
-            pass  # missing, truncated or foreign cache: rebuild
-        _tables = _build_tables()
-        try:
-            fd, tmp = tempfile.mkstemp(suffix=".npz")
-            os.close(fd)
-            np.savez(tmp, lut=_tables.lut, T1C=_tables.T1C,
-                     A2=_tables.A2, rules=_tables.rules,
-                     C=_tables.C, startC=_tables.startC,
-                     sep=_tables.sep, lowlut=_tables.lowlut)
-            os.replace(tmp, path)  # atomic: racing workers agree
-        except OSError:
-            pass
+        _tables = _load_tables(path) if path else None
+        if _tables is None:
+            _tables = _build_tables()
+            if path:
+                try:
+                    fd, tmp = tempfile.mkstemp(
+                        suffix=".npz", dir=os.path.dirname(path))
+                    os.close(fd)
+                    np.savez(tmp, lut=_tables.lut, T1C=_tables.T1C,
+                             A2=_tables.A2, rules=_tables.rules,
+                             C=_tables.C, startC=_tables.startC,
+                             sep=_tables.sep, lowlut=_tables.lowlut)
+                    os.replace(tmp, path)  # atomic: racing workers agree
+                except OSError:
+                    pass
     return _tables
 
 
@@ -247,42 +257,11 @@ _clib_tried = False
 
 
 def _compile_kernel() -> Optional[ctypes.CDLL]:
-    """Compile (once per host, content-hashed cache) and dlopen the
-    scan kernel; None if no working C compiler."""
-    h = hashlib.sha256(_C_SRC.encode()).hexdigest()[:16]
-    so = os.path.join(tempfile.gettempdir(), f"uax29_kernel_{h}.so")
-    if not os.path.exists(so):
-        tmp = None
-        try:
-            fd, csrc = tempfile.mkstemp(suffix=".c")
-            with os.fdopen(fd, "w") as f:
-                f.write(_C_SRC)
-            fd2, tmp = tempfile.mkstemp(suffix=".so")
-            os.close(fd2)
-            for cc in ("cc", "gcc", "clang"):
-                r = subprocess.run(
-                    [cc, "-O3", "-shared", "-fPIC", "-o", tmp, csrc],
-                    capture_output=True)
-                if r.returncode == 0:
-                    os.replace(tmp, so)  # atomic: racing procs agree
-                    break
-            else:
-                return None
-        except (OSError, subprocess.SubprocessError):
-            return None
-        finally:
-            try:
-                os.unlink(csrc)
-            except OSError:
-                pass
-            if tmp and os.path.exists(tmp):
-                try:
-                    os.unlink(tmp)
-                except OSError:
-                    pass
-    try:
-        lib = ctypes.CDLL(so)
-    except OSError:
+    """Compile (once per host and user, see analysis/native.py) and
+    dlopen the scan kernel; None if no working C compiler or no safe
+    cache directory."""
+    lib = native.load_kernel("uax29_kernel", _C_SRC)
+    if lib is None:
         return None
     lib.uax29_scan.restype = ctypes.c_int64
     lib.uax29_scan.argtypes = [

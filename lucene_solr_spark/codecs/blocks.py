@@ -242,6 +242,9 @@ def encode_postings(docids: np.ndarray, tfs: np.ndarray,
     lists: doc_blocks, tf_blocks, pos_blocks (or None), skip_last_docid,
     skip_n_docs, skip_max_tf, skip_min_qdl (qdl = quantized doc length,
     the impact norm component; 0 if qdls not given).
+
+    The per-term reference encoder: segments are written by
+    ``encode_postings_batch``, which tests hold to this output.
     """
     d = np.asarray(docids, dtype=np.int64)
     t = np.asarray(tfs, dtype=np.int64)

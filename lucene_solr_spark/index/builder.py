@@ -14,6 +14,11 @@ FreqProxTermsWriterPerField.java:110-180):
     stats    = postings.groupBy(term).agg(df,ttf) # TermStats
                docs.agg(count, sum(dl))           # CollectionStatistics
 
+This exploded index is what ``search/engine.Searcher`` queries in
+memory and the reference the segment kernel is tested against
+(tests/test_segment_inversion.py). It never writes a segment store:
+those are built only by ``IndexWriter.append_raw`` (index/segments.py).
+
 Scale notes (100 TB / 10^12 docs):
 - the invert is one wide shuffle keyed by (term, docid) with map-side
   partial aggregation — the same work Lucene's DWPT does per thread;

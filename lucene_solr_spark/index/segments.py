@@ -22,10 +22,13 @@ codecs/lucene84/Lucene84PostingsWriter.java:218-375):
   (SegmentInfos analogue; the north rule's "checkpointed per-partition
   segment state with lineage + metrics").
 
-Build = two shuffles: groupBy(seg_id, term) for packing (map-side
-partial agg), groupBy(seg_id) for norms. Both scale linearly; no
-global sort anywhere (docids were already assigned by the 2-pass
-offset pattern in index/docids.py).
+Build = one shuffle: groupBy(seg_id) ships each segment's raw text to
+one Arrow kernel (``build_segments_direct``) that tokenizes, inverts
+and packs all of the segment's posting rows plus its norms row. Every
+posting row is encoded by ``blocks.encode_postings_batch`` — at build
+and when an expunging merge re-encodes (the one codec writer of the
+reference's flush and merge). No global sort anywhere (docids were
+already assigned by the 2-pass offset pattern in index/docids.py).
 """
 
 from __future__ import annotations
@@ -38,13 +41,13 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType, BinaryType, IntegerType, LongType, StringType, StructField,
     StructType,
 )
 
 from ..codecs import blocks as blk
-from .builder import InvertedIndex
 
 # bump when the on-disk layout changes (readers must not open older stores)
 # v3: unified per-generation ``segments/gen=N`` dir — posting rows and the
@@ -80,63 +83,11 @@ SEGDATA_SCHEMA = StructType(
     ])
 
 
-def _pack_rows(it):
-    """mapInPandas kernel: one input row = one (seg_id, term) posting list
-    with parallel docid/tf/qdl/pos arrays (docid-ascending), output = one
-    packed row."""
-    import pandas as pd
-
-    for pdf in it:
-        out = {c.name: [] for c in PACKED_SCHEMA.fields}
-        for row in pdf.itertuples(index=False):
-            d = np.asarray(row.docids, dtype=np.int64)
-            t = np.asarray(row.tfs, dtype=np.int64)
-            q = np.asarray(row.qdls, dtype=np.int64)
-            p = np.asarray(row.pos_concat, dtype=np.int64)
-            enc = blk.encode_postings(d, t, p, q)
-            out["seg_id"].append(row.seg_id)
-            out["term"].append(row.term)
-            out["df"].append(int(d.size))
-            out["ttf"].append(int(t.sum()))
-            out["doc_blocks"].append(enc["doc_blocks"])
-            out["tf_blocks"].append(enc["tf_blocks"])
-            out["pos_blocks"].append(enc["pos_blocks"])
-            out["skip_last_docid"].append(enc["skip_last_docid"].tolist())
-            out["skip_n_docs"].append(enc["skip_n_docs"].tolist())
-            out["skip_max_tf"].append(enc["skip_max_tf"].tolist())
-            out["skip_min_qdl"].append(enc["skip_min_qdl"].tolist())
-            out["packed_bytes"].append(
-                sum(len(x) for x in enc["doc_blocks"])
-                + sum(len(x) for x in enc["tf_blocks"])
-                + sum(len(x) for x in (enc["pos_blocks"] or ())))
-        yield pd.DataFrame(out)
-
-
 def _seg_expr(docs_per_segment: int, base_docid: int = 0,
               seg_id_base: int = 0):
     return (F.lit(seg_id_base)
             + ((F.col("docid") - base_docid) / docs_per_segment)
             .cast("int")).cast("int")
-
-
-def build_packed_postings(postings: DataFrame, docs: DataFrame,
-                          docs_per_segment: int, base_docid: int = 0,
-                          seg_id_base: int = 0) -> DataFrame:
-    """(term, docid, tf, positions) + (docid, qdl) -> packed posting rows."""
-    p = (postings
-         .join(docs.select("docid", "qdl"), "docid")
-         .withColumn("seg_id", _seg_expr(docs_per_segment, base_docid,
-                                         seg_id_base)))
-    agg = (p.groupBy("seg_id", "term")
-           .agg(F.sort_array(F.collect_list(F.struct(
-               "docid", "tf", "qdl", "positions"))).alias("pl"))
-           .select(
-               "seg_id", "term",
-               F.col("pl.docid").alias("docids"),
-               F.col("pl.tf").alias("tfs"),
-               F.col("pl.qdl").alias("qdls"),
-               F.flatten("pl.positions").alias("pos_concat")))
-    return agg.mapInPandas(_pack_rows, PACKED_SCHEMA)
 
 
 # byte tables for the `simple` analyzer: [A-Za-z0-9]+ runs, ASCII
@@ -287,6 +238,45 @@ def _byte_tokenize(text_col):
     return raw, toffs, tok_starts, tok_ends, tok_doc
 
 
+def _posting_table(seg_id, terms, df, ttf, enc):
+    """Packed posting rows (PACKED_SCHEMA columns) as one Arrow table
+    from an ``encode_postings_batch`` result: no per-term python loop —
+    the encoder emits the block byte streams and skip arrays flat, and
+    the binary/list arrays wrap their buffers directly. ``seg_id`` is
+    one id or one per term; ``terms`` is an Arrow string array in
+    encoder term order."""
+    import pyarrow as pa
+
+    nterm = len(terms)
+    loff = pa.array(enc["blk_term_starts"].astype(np.int32), pa.int32())
+
+    def _bin(stream, offs):
+        return pa.Array.from_buffers(
+            pa.binary(), offs.size - 1,
+            [None, pa.py_buffer(offs.astype(np.int32).tobytes()),
+             pa.py_buffer(stream.tobytes())])
+
+    def _list(values):
+        return pa.ListArray.from_arrays(loff, values)
+
+    def _i64(a):
+        return pa.array(np.asarray(a).astype(np.int64), pa.int64())
+
+    seg = np.broadcast_to(np.asarray(seg_id, dtype=np.int32), nterm)
+    return pa.Table.from_arrays([
+        pa.array(np.ascontiguousarray(seg), pa.int32()),
+        terms.cast(pa.string()), _i64(df), _i64(ttf),
+        _list(_bin(enc["doc_stream"], enc["doc_offsets"])),
+        _list(_bin(enc["tf_stream"], enc["tf_offsets"])),
+        _list(_bin(enc["pos_stream"], enc["pos_offsets"])),
+        _list(_i64(enc["skip_last_docid"])),
+        _list(pa.array(enc["skip_n_docs"], pa.int32())),
+        _list(_i64(enc["skip_max_tf"])),
+        _list(_i64(enc["skip_min_qdl"])),
+        _i64(enc["packed_bytes"]),
+    ], schema=to_arrow_schema(PACKED_SCHEMA))
+
+
 def _invert_kernel_arrow():
     """Arrow-native kernel for the direct (DWPT-style) segment build:
     one group = one segment's (docid, tokens) rows, tokens already
@@ -377,7 +367,6 @@ def _invert_kernel_arrow():
             uniq = uniq_unsorted.take(pa.array(term_order))
             nuniq = len(uniq)
 
-            n_docs = dl.size
             doc_ix = _segment_ids(offsets, n_tok, "seg_docix")
             pos = _arena("seg_pos", n_tok, np.int64)
             np.take(offsets, doc_ix, out=pos)
@@ -406,73 +395,15 @@ def _invert_kernel_arrow():
             ttf_per_term = np.bincount(scodes, minlength=nuniq)
             enc = blk.encode_postings_batch(
                 docids[p_doc_l], p_tf, qdl[p_doc_l], spos, term_counts)
-            n_posting_rows = nuniq
-        else:
-            enc = None
-            n_posting_rows = 0
-        schema = pa.schema([
-            ("seg_id", pa.int32()), ("term", pa.string()),
-            ("df", pa.int64()), ("ttf", pa.int64()),
-            ("doc_blocks", pa.list_(pa.binary())),
-            ("tf_blocks", pa.list_(pa.binary())),
-            ("pos_blocks", pa.list_(pa.binary())),
-            ("skip_last_docid", pa.list_(pa.int64())),
-            ("skip_n_docs", pa.list_(pa.int32())),
-            ("skip_max_tf", pa.list_(pa.int64())),
-            ("skip_min_qdl", pa.list_(pa.int64())),
-            ("packed_bytes", pa.int64()),
-            ("docid_min", pa.int64()), ("n_docs", pa.int64()),
-            ("norm_blob", pa.binary()), ("qdl_blob", pa.binary()),
-        ])
+        schema = to_arrow_schema(SEGDATA_SCHEMA)
         tables = []
-        if n_posting_rows:
-            # ---- posting rows assembled as ARROW ARRAYS (no per-term
-            # python loop: the block byte streams and skip arrays come
-            # out of the encoder flat; binary/list arrays wrap their
-            # buffers directly)
-            nterm = n_posting_rows
-            loff = pa.array(enc["blk_term_starts"].astype(np.int32),
-                            pa.int32())
-
-            def _bin(stream, offs):
-                return pa.Array.from_buffers(
-                    pa.binary(), offs.size - 1,
-                    [None,
-                     pa.py_buffer(offs.astype(np.int32).tobytes()),
-                     pa.py_buffer(stream.tobytes())])
-
-            def _list(values):
-                return pa.ListArray.from_arrays(loff, values)
-
-            doc_blocks = _list(_bin(enc["doc_stream"],
-                                    enc["doc_offsets"]))
-            tf_blocks = _list(_bin(enc["tf_stream"],
-                                   enc["tf_offsets"]))
-            pos_blocks = _list(_bin(enc["pos_stream"],
-                                    enc["pos_offsets"]))
-            term_arr = uniq.cast(pa.string()) \
-                if uniq.type != pa.string() else uniq
-            tables.append(pa.Table.from_arrays([
-                pa.array(np.full(nterm, seg_id, dtype=np.int32),
-                         pa.int32()),
-                term_arr,
-                pa.array(term_counts.astype(np.int64), pa.int64()),
-                pa.array(ttf_per_term.astype(np.int64), pa.int64()),
-                doc_blocks, tf_blocks, pos_blocks,
-                _list(pa.array(enc["skip_last_docid"]
-                               .astype(np.int64), pa.int64())),
-                _list(pa.array(enc["skip_n_docs"], pa.int32())),
-                _list(pa.array(enc["skip_max_tf"].astype(np.int64),
-                               pa.int64())),
-                _list(pa.array(enc["skip_min_qdl"].astype(np.int64),
-                               pa.int64())),
-                pa.array(enc["packed_bytes"].astype(np.int64),
-                         pa.int64()),
-                pa.nulls(nterm, pa.int64()),
-                pa.nulls(nterm, pa.int64()),
-                pa.nulls(nterm, pa.binary()),
-                pa.nulls(nterm, pa.binary()),
-            ], schema=schema))
+        if n_tok:
+            pt = _posting_table(seg_id, uniq, term_counts, ttf_per_term,
+                                enc)
+            tables.append(pa.Table.from_arrays(
+                pt.columns + [pa.nulls(pt.num_rows, f.type)
+                              for f in list(schema)[pt.num_columns:]],
+                schema=schema))
         # the per-segment norms row (term IS NULL): forward norm/qdl
         # blobs from the SAME tokenization pass — one shuffle + one
         # write produces the whole segment (was a second full pass)
@@ -484,11 +415,8 @@ def _invert_kernel_arrow():
             nb_arr[docids - lo] = int_to_byte4_np(dl).astype(np.uint8)
             qb_arr[docids - lo] = qdl.astype(np.int32)
         tables.append(pa.Table.from_pydict({
-            "seg_id": [seg_id], "term": [None], "df": [None],
-            "ttf": [None], "doc_blocks": [None], "tf_blocks": [None],
-            "pos_blocks": [None], "skip_last_docid": [None],
-            "skip_n_docs": [None], "skip_max_tf": [None],
-            "skip_min_qdl": [None], "packed_bytes": [None],
+            **{f.name: [None] for f in schema},
+            "seg_id": [seg_id],
             "docid_min": [lo], "n_docs": [int(docids.size)],
             "norm_blob": [nb_arr.tobytes()],
             "qdl_blob": [qb_arr.tobytes()],
@@ -516,7 +444,7 @@ def build_segments_direct(docs_raw: DataFrame, docs_per_segment: int,
 
 def unify_segment_frames(pk: DataFrame, norms: DataFrame) -> DataFrame:
     """Union separately-built packed and norms frames into the unified
-    SEGDATA layout (exploded-build and merge paths)."""
+    SEGDATA layout (merge path)."""
     pk_u = pk
     for name, typ in (("docid_min", "long"), ("n_docs", "long"),
                       ("norm_blob", "binary"), ("qdl_blob", "binary")):
@@ -535,52 +463,6 @@ def unify_segment_frames(pk: DataFrame, norms: DataFrame) -> DataFrame:
         F.lit(None).cast("long").alias("packed_bytes"),
         "docid_min", "n_docs", "norm_blob", "qdl_blob")
     return pk_u.unionByName(nm_u)
-
-
-NORMS_SCHEMA = StructType([
-    StructField("seg_id", IntegerType()),
-    StructField("docid_min", LongType()),
-    StructField("n_docs", LongType()),
-    StructField("norm_blob", BinaryType()),   # uint8 norm byte per doc
-    StructField("qdl_blob", BinaryType()),    # int32 LE quantized dl per doc
-])
-
-
-def build_norms(docs: DataFrame, docs_per_segment: int,
-                base_docid: int = 0, seg_id_base: int = 0) -> DataFrame:
-    """Per-segment forward norms: blob[docid - docid_min] = norm info."""
-    def _blob(it):
-        import pandas as pd
-        for pdf in it:
-            rows = {c.name: [] for c in NORMS_SCHEMA.fields}
-            for row in pdf.itertuples(index=False):
-                d = np.asarray(row.docids, dtype=np.int64)
-                nb = np.asarray(row.norm_bytes, dtype=np.int64)
-                qd = np.asarray(row.qdls, dtype=np.int64)
-                lo = int(d.min())
-                n = int(d.max()) - lo + 1
-                blob = np.zeros(n, dtype=np.uint8)
-                blob[d - lo] = nb.astype(np.uint8)
-                qblob = np.zeros(n, dtype=np.int32)
-                qblob[d - lo] = qd.astype(np.int32)
-                rows["seg_id"].append(row.seg_id)
-                rows["docid_min"].append(lo)
-                rows["n_docs"].append(int(d.size))
-                rows["norm_blob"].append(blob.tobytes())
-                rows["qdl_blob"].append(qblob.tobytes())
-            yield pd.DataFrame(rows)
-
-    agg = (docs
-           .withColumn("seg_id", _seg_expr(docs_per_segment, base_docid,
-                                           seg_id_base))
-           .groupBy("seg_id")
-           .agg(F.sort_array(F.collect_list(F.struct(
-               "docid", "norm_byte", "qdl"))).alias("dl"))
-           .select("seg_id",
-                   F.col("dl.docid").alias("docids"),
-                   F.col("dl.norm_byte").alias("norm_bytes"),
-                   F.col("dl.qdl").alias("qdls")))
-    return agg.mapInPandas(_blob, NORMS_SCHEMA)
 
 
 @dataclass
@@ -775,17 +657,6 @@ def write_commit(path: str, generation: int, doc_count: int, sum_ttf: int,
 def read_commit(path: str) -> dict:
     with open(os.path.join(path, "commit.json")) as f:
         return json.load(f)
-
-
-def write_segments(ix: InvertedIndex, out_dir: str,
-                   docs_per_segment: int = 65536,
-                   lineage: str = "") -> SegmentIndex:
-    """Materialize an InvertedIndex as generation-1 of a segment store."""
-    from .writer import IndexWriter
-    w = IndexWriter.create(ix.docs.sparkSession, out_dir,
-                           docs_per_segment=docs_per_segment)
-    w.append_index(ix, lineage=lineage)
-    return w.reader()
 
 
 def open_segments(spark: SparkSession, path: str) -> SegmentIndex:

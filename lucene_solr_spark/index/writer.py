@@ -4,9 +4,10 @@ The Spark re-expression of Lucene's write path
 (INDEX/IndexWriter.java:1212 addDocument -> DWPT flush -> publish ->
 TieredMergePolicy -> commit; INDEX/SegmentInfos.java generations):
 
-- ``append_raw(batch)`` = one "flush": assign docids continuing from
-  the commit's doc_count (insertion-ordered like Lucene docIDs), build
-  packed segments + norms for the batch with ONE data shuffle, and
+- ``append_raw(batch)`` = one "flush" and the only way a segment is
+  built: assign docids continuing from the commit's doc_count
+  (insertion-ordered like Lucene docIDs), build packed segments +
+  norms for the batch with ONE data shuffle, and
   write them into fresh per-generation directories
   (``segments/gen=N`` — unified posting rows + the per-segment norms
   row from ONE kernel pass) — plain parquet appends, no
@@ -25,6 +26,10 @@ TieredMergePolicy -> commit; INDEX/SegmentInfos.java generations):
   posting row is the docid-ordered concatenation of the source rows'
   block arrays — pure JVM (sort_array+flatten, no decode), exactly
   Lucene's bulk-merge fast path (codecs/FieldsConsumer.merge:86).
+  An expunging merge re-encodes only the rows that hold deleted docs,
+  with the flush's batch encoder
+  (``blocks.encode_postings_batch``), so a flush and a merge write
+  postings through one codec writer, as in the reference.
 - ``vacuum()`` deletes generation directories whose segments are all
   dead (merge inputs), like Lucene deleting merged-away segment files.
 """
@@ -38,11 +43,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .builder import InvertedIndex, build_index
 from .docids import assign_docids
 from .segments import (
-    SegmentIndex, build_norms, build_packed_postings,
-    build_segments_direct, catalog_from_packed, read_commit,
+    SegmentIndex, build_segments_direct, catalog_from_packed, read_commit,
     unify_segment_frames, write_commit,
 )
 
@@ -166,47 +169,25 @@ class IndexWriter:
 
     # -- append -------------------------------------------------------------
 
-    def append(self, batch: DataFrame, text_col: str = "text",
-               order_cols: list | None = None, analyzer: str = "simple",
-               lineage: str = "",
-               extra_commit: dict | None = None) -> SegmentIndex:
-        """Index a new document batch (docids continue from doc_count).
+    def append_raw(self, batch: DataFrame, text_col: str = "text",
+                   order_cols: list | None = None,
+                   lineage: str = "",
+                   extra_commit: dict | None = None) -> SegmentIndex:
+        """Index a new document batch (docids continue from doc_count):
+        raw docs -> segments with ONE data shuffle.
+
+        Raw text ships straight to per-segment builder tasks that
+        tokenize + invert + pack in vectorized numpy/Arrow (the DWPT
+        shape), so shuffled bytes = corpus size, not token-explosion
+        size. The kernel implements the ``simple`` analyzer's tokenizer
+        spec and the SmallFloat norms of ``builder.build_index``;
+        tests/test_segment_inversion.py asserts that every decoded
+        posting, position and norm equals that Catalyst inversion.
 
         ``extra_commit`` keys land in the SAME atomic commit.json swap
         as the generation bump — streaming callers stamp their batch id
         here so replay-dedup survives a crash between append and stamp
         (exactly-once; cf. Solr UpdateLog replay, UpdateLog.java:96)."""
-        st = self.commit_state()
-        order_cols = order_cols or ["conv_id", "turn_idx"]
-        with_ids = assign_docids(batch, order_cols)
-        # capture the persisted staging handle BEFORE any withColumn —
-        # derived DataFrames don't carry the attribute forward
-        staging = getattr(with_ids, "_docids_staging", None)
-        if st["doc_count"]:
-            with_ids = with_ids.withColumn(
-                "docid", F.col("docid") + st["doc_count"])
-        ix = build_index(with_ids, text_col=text_col, docid_col="docid",
-                         analyzer=analyzer, cache=False)
-        out = self.append_index(ix, lineage=lineage,
-                                extra_commit=extra_commit)
-        if staging is not None:
-            staging.unpersist()
-        return out
-
-    def append_raw(self, batch: DataFrame, text_col: str = "text",
-                   order_cols: list | None = None,
-                   lineage: str = "",
-                   extra_commit: dict | None = None) -> SegmentIndex:
-        """The hot build path: raw docs -> segments with ONE data shuffle.
-
-        Unlike append()/append_index() (which materialize the exploded
-        (term, docid) postings DataFrame — the oracle-checkable layout),
-        this ships raw text straight to per-segment builder tasks that
-        tokenize + invert + pack in vectorized numpy/Arrow (the DWPT
-        shape). Shuffled bytes = corpus size, not token-explosion size.
-        Results are bit-identical: the kernel implements the same
-        tokenizer spec and shares the SmallFloat/packing code paths
-        (tests assert store equality against the exploded path)."""
         st = self.commit_state()
         dps = st["docs_per_segment"]
         base = st["doc_count"]
@@ -234,36 +215,6 @@ class IndexWriter:
                             extra_commit=extra_commit)
         if staging is not None:
             staging.unpersist()
-        return out
-
-    def append_index(self, ix: InvertedIndex, lineage: str = "",
-                     extra_commit: dict | None = None) -> SegmentIndex:
-        """Publish an already-built InvertedIndex whose docids start at
-        the current commit's doc_count (segment-publish step)."""
-        st = self.commit_state()
-        dps = st["docs_per_segment"]
-        base = st["doc_count"]
-        seg_base = st["next_seg_id"]
-        gen = st["generation"] + 1
-
-        # postings/docs feed three consumers (pack, norms, term_stats)
-        # — persist so the invert pipeline runs once, not 3x
-        own_cache = not ix._cached
-        if own_cache:
-            ix.postings.persist()
-            ix.docs.persist()
-        pk = build_packed_postings(ix.postings, ix.docs, dps,
-                                   base_docid=base, seg_id_base=seg_base) \
-            .sortWithinPartitions("seg_id", "term")
-        nm = build_norms(ix.docs, dps, base_docid=base,
-                         seg_id_base=seg_base)
-        unify_segment_frames(pk, nm) \
-            .write.mode("overwrite").option("compression", "zstd") \
-            .parquet(self._gen_dir("segments", gen))
-        out = self._publish(st, gen, lineage, extra_commit=extra_commit)
-        if own_cache:
-            ix.postings.unpersist()
-            ix.docs.unpersist()
         return out
 
     def _publish(self, st: dict, gen: int, lineage: str,
@@ -744,76 +695,64 @@ def _expunge_packed(pk_with_norms: DataFrame, deleted_arr) -> DataFrame:
     """Decode-filter-reencode packed posting rows, dropping deleted
     docids (the live-docs filter of SegmentMerger's mergeTerms). Input
     rows carry their segment's ``nlo`` (docid_min) and ``qblob``
-    (qdl forward blob) so surviving docs keep exact impact metadata."""
+    (qdl forward blob) so surviving docs keep exact impact metadata.
+    Untouched rows pass through byte-identical and fully deleted rows
+    are dropped; the touched rows of each Arrow batch are re-encoded
+    together by ONE ``encode_postings_batch`` call — the encoder the
+    segment build uses."""
     import numpy as np
 
-    from .segments import PACKED_SCHEMA
+    from .segments import PACKED_SCHEMA, _posting_table
+
+    names = [f.name for f in PACKED_SCHEMA.fields]
 
     def fn(it):
-        import pandas as pd
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         from ..codecs import blocks as blk
-        for pdf in it:
-            out = {c.name: [] for c in PACKED_SCHEMA.fields}
-            for row in pdf.itertuples(index=False):
-                d, t = blk.decode_all(row.doc_blocks, row.tf_blocks,
-                                      row.skip_n_docs)
+        schema = to_arrow_schema(PACKED_SCHEMA)
+        for batch in it:
+            col = {c: batch.column(c).to_pylist() for c in (
+                "seg_id", "term", "doc_blocks", "tf_blocks", "pos_blocks",
+                "skip_n_docs", "nlo", "qblob")}
+            touched = np.zeros(batch.num_rows, dtype=bool)
+            segs, terms, docs, tfs, qdls, poss = [], [], [], [], [], []
+            for i, nd in enumerate(col["skip_n_docs"]):
+                d, t = blk.decode_all(col["doc_blocks"][i],
+                                      col["tf_blocks"][i], nd)
                 keep = ~np.isin(d, deleted_arr)
+                if keep.all():
+                    continue
+                touched[i] = True
                 if not keep.any():
                     continue
-                if keep.all():
-                    # untouched row passes through byte-identical
-                    # (list-typed cells arrive as numpy arrays from
-                    # pandas — Arrow can't convert ndarray-of-binary
-                    # back, so materialize plain lists)
-                    for c in PACKED_SCHEMA.fields:
-                        v = getattr(row, c.name)
-                        if isinstance(v, np.ndarray):
-                            v = v.tolist()
-                        out[c.name].append(v)
-                    continue
+                ends = np.cumsum(nd)
                 pos = np.concatenate([
-                    blk.decode_pos_block(
-                        row.pos_blocks[i],
-                        t[sum(row.skip_n_docs[:i]):
-                          sum(row.skip_n_docs[:i + 1])])
-                    for i in range(len(row.pos_blocks))]) \
-                    if len(row.pos_blocks) else np.empty(0, dtype=np.int64)
-                bounds = np.concatenate(([0], np.cumsum(t)))
-                d2, t2 = d[keep], t[keep]
-                pos2 = np.concatenate([
-                    pos[bounds[i]:bounds[i + 1]]
-                    for i in np.flatnonzero(keep)]) \
-                    if pos.size else np.empty(0, dtype=np.int64)
-                qblob = np.frombuffer(row.qblob, dtype=np.int32)
-                qdl2 = qblob[d2 - int(row.nlo)].astype(np.int64)
-                enc = blk.encode_postings(d2, t2, pos2, qdl2)
-                out["seg_id"].append(row.seg_id)
-                out["term"].append(row.term)
-                out["df"].append(int(d2.size))
-                out["ttf"].append(int(t2.sum()))
-                out["doc_blocks"].append(enc["doc_blocks"])
-                out["tf_blocks"].append(enc["tf_blocks"])
-                out["pos_blocks"].append(enc["pos_blocks"])
-                out["skip_last_docid"].append(
-                    enc["skip_last_docid"].tolist())
-                out["skip_n_docs"].append(enc["skip_n_docs"].tolist())
-                out["skip_max_tf"].append(enc["skip_max_tf"].tolist())
-                out["skip_min_qdl"].append(enc["skip_min_qdl"].tolist())
-                out["packed_bytes"].append(
-                    sum(len(x) for x in enc["doc_blocks"])
-                    + sum(len(x) for x in enc["tf_blocks"])
-                    + sum(len(x) for x in enc["pos_blocks"]))
-            if out["seg_id"]:
-                yield pd.DataFrame(out)
-            else:
-                # all rows fully deleted: emit a typed-empty frame
-                # (pandas defaults empty columns to float64, which
-                # Arrow cannot convert to the list<binary> fields)
-                yield pd.DataFrame({k: pd.Series([], dtype=object)
-                                    for k in out})
+                    blk.decode_pos_block(b, t[e - n:e])
+                    for b, n, e in zip(col["pos_blocks"][i], nd, ends)])
+                qblob = np.frombuffer(col["qblob"][i], dtype=np.int32)
+                segs.append(col["seg_id"][i])
+                terms.append(col["term"][i])
+                docs.append(d[keep])
+                tfs.append(t[keep])
+                qdls.append(qblob[d[keep] - col["nlo"][i]])
+                poss.append(pos[np.repeat(keep, t)])
+            out = [pa.Table.from_batches(
+                [batch.filter(pa.array(~touched)).select(names)])
+                .cast(schema)]
+            if docs:
+                df = np.array([x.size for x in docs], dtype=np.int64)
+                enc = blk.encode_postings_batch(
+                    np.concatenate(docs), np.concatenate(tfs),
+                    np.concatenate(qdls).astype(np.int64),
+                    np.concatenate(poss), df)
+                out.append(_posting_table(
+                    segs, pa.array(terms, pa.string()), df,
+                    [int(x.sum()) for x in tfs], enc))
+            yield from pa.concat_tables(out).to_batches()
 
-    return pk_with_norms.mapInPandas(fn, PACKED_SCHEMA)
+    return pk_with_norms.mapInArrow(fn, PACKED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -63,9 +63,10 @@ class StreamingIndexer:
         # the generation bump (IndexWriter._publish extra_commit), so a
         # crash can never commit the docs without the stamp — a replayed
         # batch is either fully absent or fully committed+stamped
-        self.writer.append(batch_df, order_cols=self.order_cols,
-                           lineage=f"stream batch {batch_id}",
-                           extra_commit={"last_stream_batch": int(batch_id)})
+        self.writer.append_raw(
+            batch_df, order_cols=self.order_cols,
+            lineage=f"stream batch {batch_id}",
+            extra_commit={"last_stream_batch": int(batch_id)})
         self._batches_since_merge += 1
         if self.merge_every and self._batches_since_merge >= self.merge_every:
             self.writer.maybe_merge(**self.merge_kwargs)

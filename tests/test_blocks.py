@@ -35,16 +35,55 @@ def test_for_pack_all_widths(width):
         blk.for_unpack(blk.for_pack(v, width), v.size, width), v)
 
 
-@pytest.mark.parametrize("n", [1, 2, 127, 128, 129, 255, 256, 257, 1000])
-def test_postings_roundtrip(n):
-    """Block-boundary cases from the reference's randomized tester."""
-    rng = np.random.default_rng(n)
-    d = np.sort(rng.choice(10**9, n, replace=False)).astype(np.int64)
-    t = rng.integers(1, 50, n).astype(np.int64)
+def _random_term(rng, n, dense=False, tf1=False):
+    """(docids, tfs, positions, qdls) of one random term with n docs."""
+    if dense:
+        d = np.arange(n, dtype=np.int64) + int(rng.integers(0, 10**6))
+    else:
+        d = np.sort(rng.choice(10**9, n, replace=False)).astype(np.int64)
+    t = (np.ones(n, dtype=np.int64) if tf1
+         else rng.integers(1, 50, n).astype(np.int64))
     pos = np.concatenate([
         np.sort(rng.choice(500, k, replace=False)) for k in t
     ]).astype(np.int64)
     qdl = rng.integers(1, 200, n).astype(np.int64)
+    return d, t, pos, qdl
+
+
+def _assert_batch_matches_per_term(terms):
+    """encode_postings_batch over all terms at once == encode_postings
+    per term: block bytes, skip arrays and packed_bytes."""
+    cat = [np.concatenate([x[i] for x in terms]) for i in range(4)]
+    counts = np.array([x[0].size for x in terms], dtype=np.int64)
+    enc = blk.encode_postings_batch(cat[0], cat[1], cat[3], cat[2], counts)
+    bts = enc["blk_term_starts"]
+    assert bts[-1] == len(enc["skip_n_docs"])
+
+    def blocks(stream, offs, lo, hi):
+        return [stream[offs[j]:offs[j + 1]].tobytes() for j in range(lo, hi)]
+
+    for k, (d, t, pos, qdl) in enumerate(terms):
+        ref = blk.encode_postings(d, t, pos, qdl)
+        lo, hi = int(bts[k]), int(bts[k + 1])
+        assert blocks(enc["doc_stream"], enc["doc_offsets"], lo, hi) \
+            == ref["doc_blocks"], k
+        assert blocks(enc["tf_stream"], enc["tf_offsets"], lo, hi) \
+            == ref["tf_blocks"], k
+        assert blocks(enc["pos_stream"], enc["pos_offsets"], lo, hi) \
+            == ref["pos_blocks"], k
+        for f in ("skip_last_docid", "skip_n_docs", "skip_max_tf",
+                  "skip_min_qdl"):
+            assert np.array_equal(enc[f][lo:hi], ref[f]), (k, f)
+        assert enc["packed_bytes"][k] == sum(
+            len(b) for b in ref["doc_blocks"] + ref["tf_blocks"]
+            + ref["pos_blocks"]), k
+
+
+@pytest.mark.parametrize("n", [1, 2, 127, 128, 129, 255, 256, 257, 1000])
+def test_postings_roundtrip(n):
+    """Block-boundary cases from the reference's randomized tester."""
+    rng = np.random.default_rng(n)
+    d, t, pos, qdl = _random_term(rng, n)
     enc = blk.encode_postings(d, t, pos, qdl)
     dd, tt = blk.decode_all(enc["doc_blocks"], enc["tf_blocks"],
                             enc["skip_n_docs"])
@@ -64,6 +103,17 @@ def test_postings_roundtrip(n):
         assert enc["skip_max_tf"][i] == t[off:off + nn].max()
         assert enc["skip_min_qdl"][i] == qdl[off:off + nn].min()
         off += nn
+    # the batch encoder over several terms at once: this term among
+    # single-doc terms, all-tf-1 runs, dense docid runs and >128-doc
+    # terms must give each term exactly its per-term encoding
+    _assert_batch_matches_per_term([
+        _random_term(rng, 1), (d, t, pos, qdl),
+        _random_term(rng, 1, tf1=True), _random_term(rng, n, tf1=True),
+        _random_term(rng, n, dense=True),
+        _random_term(rng, 128, dense=True, tf1=True),
+        _random_term(rng, 300), _random_term(rng, 129, dense=True),
+        _random_term(rng, 1),
+    ])
 
 
 def test_dense_run_special_case():

@@ -6,7 +6,7 @@ statistics keep deleted docs until merge (Lucene stats semantics)."""
 import pytest
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.index.segments import check_index, write_segments
+from lucene_solr_spark.index.segments import check_index
 from lucene_solr_spark.index.writer import IndexWriter
 from lucene_solr_spark.search.query import Bool, Phrase, Term
 from lucene_solr_spark.search.segment_searcher import SegmentSearcher
@@ -18,6 +18,30 @@ def store(spark, xs_transcripts, tmp_path):
                            docs_per_segment=128)
     w.append_raw(xs_transcripts.drop("docid"))
     return w
+
+
+def test_expunge_drops_fully_deleted_rows(spark, tmp_path):
+    """An expunging merge drops a posting row whose every doc is
+    deleted (also when a whole input batch holds only such rows),
+    re-encodes a touched row and passes untouched rows through."""
+    import numpy as np
+
+    from lucene_solr_spark.index.writer import _expunge_packed
+    docs = spark.createDataFrame(
+        [("c0", 0, "a b"), ("c1", 0, "c d a"), ("c2", 0, "e a")],
+        "conv_id STRING, turn_idx INT, text STRING")
+    w = IndexWriter.create(spark, str(tmp_path / "ix"), docs_per_segment=2)
+    six = w.append_raw(docs)
+    nm = six.norms.select("seg_id", F.col("docid_min").alias("nlo"),
+                          F.col("qdl_blob").alias("qblob"))
+    only_doc1 = six.packed.filter(F.col("term").isin("c", "d")) \
+        .join(nm, "seg_id").coalesce(1)
+    assert _expunge_packed(only_doc1, np.array([1])).count() == 0
+    w.delete_docids([1])
+    six2 = w.merge_segments([0, 1], expunge=True)
+    assert sorted((r.term, r.df, r.ttf) for r in six2.packed.collect()) \
+        == [("a", 2, 2), ("b", 1, 1), ("e", 1, 1)]
+    assert six2.doc_count == 2 and check_index(six2).count() == 0
 
 
 def test_delete_docids_excluded_everywhere(store):

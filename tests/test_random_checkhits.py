@@ -10,7 +10,7 @@ import pytest
 
 from lucene_solr_spark.index.builder import build_index
 from lucene_solr_spark.index.docids import assign_docids
-from lucene_solr_spark.index.segments import write_segments
+from lucene_solr_spark.index.writer import IndexWriter
 from lucene_solr_spark.search.engine import Searcher
 from lucene_solr_spark.search.query import (
     Bool, DisMax, MultiPhrase, Phrase, PhraseWildcard, Prefix, SpanNear,
@@ -74,7 +74,8 @@ def test_random_corpus_checkhits(spark, tmp_path_factory, seed):
     tr.count()
     ix = build_index(tr, docid_col="docid")
     out = str(tmp_path_factory.mktemp(f"rnd{seed}") / "ix")
-    six = write_segments(ix, out, docs_per_segment=100)
+    six = IndexWriter.create(spark, out, docs_per_segment=100) \
+        .append_raw(tr.drop("docid"))
     se, ss = Searcher(ix), SegmentSearcher(six)
 
     # vocabulary drawn from the corpus itself (mid + hot terms)

@@ -6,20 +6,19 @@ CheckIndex-style invariants (INDEX/CheckIndex.java:496-508)."""
 import pytest
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.index.segments import (
-    check_index, open_segments, write_segments,
-)
+from lucene_solr_spark.index.segments import check_index, open_segments
+from lucene_solr_spark.index.writer import IndexWriter
 from lucene_solr_spark.search.engine import Searcher
 from lucene_solr_spark.search.query import Bool, Boost, Phrase, Synonym, Term
 from lucene_solr_spark.search.segment_searcher import SegmentSearcher
 
 
 @pytest.fixture(scope="module")
-def seg_index(spark, xs_index, tmp_path_factory):
+def seg_index(spark, xs_transcripts, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("segs") / "ix")
     # small segments so the fixture exercises multi-segment merge paths
-    return write_segments(xs_index, out, docs_per_segment=128,
-                          lineage="xs_transcripts")
+    return IndexWriter.create(spark, out, docs_per_segment=128) \
+        .append_raw(xs_transcripts.drop("docid"), lineage="xs_transcripts")
 
 
 QUERIES = [
@@ -133,7 +132,6 @@ def test_topk_by_docid_early_termination(seg_index, xs_index):
 
 
 def test_topk_by_docid_respects_deletes(spark, tmp_path):
-    from lucene_solr_spark.index.writer import IndexWriter
     from lucene_solr_spark.datagen.transcripts import gen_transcripts
     w = IndexWriter.create(spark, str(tmp_path / "ix"),
                            docs_per_segment=64)

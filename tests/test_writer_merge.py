@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.builder import build_index
 from lucene_solr_spark.index.docids import assign_docids
-from lucene_solr_spark.index.segments import check_index, write_segments
+from lucene_solr_spark.index.segments import check_index
 from lucene_solr_spark.index.writer import IndexWriter, pick_merge
 from lucene_solr_spark.search.query import Bool, Phrase, Term
 from lucene_solr_spark.search.segment_searcher import SegmentSearcher
@@ -30,17 +30,18 @@ def _topk(six, q, k=10):
 
 
 @pytest.fixture(scope="module")
-def stores(spark, xs_transcripts, xs_index, tmp_path_factory):
+def stores(spark, xs_transcripts, tmp_path_factory):
     root = tmp_path_factory.mktemp("wm")
-    oneshot = write_segments(xs_index, str(root / "oneshot"),
-                             docs_per_segment=128, lineage="oneshot")
+    oneshot = IndexWriter.create(
+        spark, str(root / "oneshot"), docs_per_segment=128) \
+        .append_raw(xs_transcripts.drop("docid"), lineage="oneshot")
     w = IndexWriter.create(spark, str(root / "incr"), docs_per_segment=128)
     bounds = [(0, 15), (15, 35), (35, 50)]
     for lo, hi in bounds:
         b = xs_transcripts.filter(
             (F.col("conv_id") >= f"conv{lo:08d}")
             & (F.col("conv_id") < f"conv{hi:08d}")).drop("docid")
-        w.append(b, lineage=f"batch {lo}-{hi}")
+        w.append_raw(b, lineage=f"batch {lo}-{hi}")
     return oneshot, w
 
 

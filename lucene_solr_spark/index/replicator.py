@@ -15,7 +15,11 @@ new ``gen=N`` dirs; merges publish new segments and only ``vacuum``
 removes dead dirs).  Immutability gives the same safety the reference
 gets from write-once segment files:
 
-- a revision = commit.json content + the gen-dirs it references;
+- a revision = commit.json content + the gen-dirs it references: its
+  segment data, delete and docvalue generations, and the
+  catalog/term_stats snapshots at its ``stats_gen`` (a delete or
+  docvalue update commits no new snapshot, so a re-sync after one
+  copies only the new delete/patch dir);
 - replication copies MISSING gen dirs only (incremental by
   construction), then atomically swaps the replica's commit.json last
   — a reader of the replica sees either the old commit or the new
@@ -34,24 +38,24 @@ import json
 import os
 import shutil
 
-from .segments import read_commit
+from .segments import read_commit, stats_gen
 
 __all__ = ["revision", "replicate", "snapshot_index"]
 
 
 def _gen_dirs(state: dict) -> list[str]:
     """Relative gen-dir paths referenced by a commit state — the
-    IndexRevision file list."""
+    IndexRevision file list (snapshots resolved through ``stats_gen``)."""
     out = []
-    gen = state["generation"]
     for g in sorted({int(k) for k in (state.get("data_gens") or {})}):
         out.append(f"segments/gen={g}")
     for g in state.get("del_gens", ()):
         out.append(f"deletes/gen={int(g)}")
     for g in state.get("dv_gens", ()):
         out.append(f"dv_updates/gen={int(g)}")
-    out.append(f"catalog/gen={gen}")
-    out.append(f"term_stats/gen={gen}")
+    sg = stats_gen(state)
+    out.append(f"catalog/gen={sg}")
+    out.append(f"term_stats/gen={sg}")
     return out
 
 

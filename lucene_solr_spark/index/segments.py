@@ -470,11 +470,12 @@ class SegmentIndex:
     """On-disk segment index handle (IndexReader-over-commit analogue).
 
     A commit = ``commit.json`` (generation, collection stats, live
-    segment ids) + per-generation catalog/term_stats snapshots +
-    cumulative seg_id-partitioned postings/norms stores. Readers see
-    only the commit's live segments, so appends and merges are atomic
-    at the commit.json swap — the segments_N model
-    (INDEX/SegmentInfos.java)."""
+    segment ids, delete/docvalue generations) + the catalog/term_stats
+    snapshots at its ``stats_gen`` (the last append or merge; deletes
+    and docvalue updates keep them) + the per-generation segment data
+    dirs. Readers see only the commit's live segments, so every
+    mutation is atomic at the one commit.json swap — the segments_N
+    model (INDEX/SegmentInfos.java)."""
 
     path: str
     spark: SparkSession
@@ -482,6 +483,7 @@ class SegmentIndex:
     sum_ttf: int
     docs_per_segment: int
     generation: int = 1
+    stats_gen: int = 1      # generation holding catalog/term_stats
     live_segs: tuple = ()
     data_gens: dict = None  # gen -> [seg_ids] written under that gen dir
     del_gens: tuple = ()    # generations holding delete sets
@@ -581,12 +583,12 @@ class SegmentIndex:
     @property
     def term_stats(self) -> DataFrame:
         return self.spark.read.parquet(
-            f"{self.path}/term_stats/gen={self.generation}")
+            f"{self.path}/term_stats/gen={self.stats_gen}")
 
     @property
     def catalog(self) -> DataFrame:
         return self.spark.read.parquet(
-            f"{self.path}/catalog/gen={self.generation}")
+            f"{self.path}/catalog/gen={self.stats_gen}")
 
     @property
     def avgdl(self) -> float:
@@ -630,33 +632,29 @@ def catalog_from_packed(pk: DataFrame, norms: DataFrame,
             .withColumn("build_ts", F.lit(int(time.time()))))
 
 
-def write_commit(path: str, generation: int, doc_count: int, sum_ttf: int,
-                 docs_per_segment: int, next_seg_id: int,
-                 live_segs: list, lineage: str = "",
-                 data_gens: dict | None = None,
-                 extra: dict | None = None,
+def write_commit(path: str, state: dict,
                  filename: str = "commit.json") -> None:
-    commit = dict(extra or {})
-    commit.update({
-        "generation": generation,
-        "doc_count": doc_count,
-        "sum_ttf": sum_ttf,
-        "docs_per_segment": docs_per_segment,
-        "next_seg_id": next_seg_id,
-        "live_segs": sorted(int(s) for s in live_segs),
-        "lineage": lineage,
-        "data_gens": {str(g): sorted(int(s) for s in segs)
-                      for g, segs in (data_gens or {}).items()},
-    })
+    """Atomically publish the complete commit record ``state`` (one
+    tmp-file write + rename)."""
+    commit = {**state,
+              "live_segs": sorted(int(s) for s in state["live_segs"]),
+              "data_gens": {str(g): sorted(int(s) for s in segs)
+                            for g, segs in state["data_gens"].items()}}
     tmp = os.path.join(path, filename + ".tmp")
     with open(tmp, "w") as f:
         json.dump(commit, f)
     os.replace(tmp, os.path.join(path, filename))
 
 
-def read_commit(path: str) -> dict:
-    with open(os.path.join(path, "commit.json")) as f:
+def read_commit(path: str, filename: str = "commit.json") -> dict:
+    with open(os.path.join(path, filename)) as f:
         return json.load(f)
+
+
+def stats_gen(commit: dict) -> int:
+    """Generation whose catalog/term_stats snapshots ``commit`` reads;
+    a commit without the field keeps them at its own generation."""
+    return commit.get("stats_gen", commit["generation"])
 
 
 def open_segments(spark: SparkSession, path: str) -> SegmentIndex:
@@ -666,6 +664,7 @@ def open_segments(spark: SparkSession, path: str) -> SegmentIndex:
                         sum_ttf=commit["sum_ttf"],
                         docs_per_segment=commit["docs_per_segment"],
                         generation=commit["generation"],
+                        stats_gen=stats_gen(commit),
                         live_segs=tuple(commit.get("live_segs", ())),
                         data_gens={int(g): segs for g, segs in
                                    commit.get("data_gens", {}).items()},

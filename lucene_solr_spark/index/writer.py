@@ -4,6 +4,16 @@ The Spark re-expression of Lucene's write path
 (INDEX/IndexWriter.java:1212 addDocument -> DWPT flush -> publish ->
 TieredMergePolicy -> commit; INDEX/SegmentInfos.java generations):
 
+- **one commit step**: every mutation ends in ``_commit``, which
+  writes the complete next commit record — ``{**state, **updates}`` —
+  in ONE atomic swap of ``commit.json`` (or ``pending_commit.json``
+  while a ``prepare_commit`` runs), the segments_N write of
+  SegmentInfos.commit. Delete sets, docvalue patches and stream stamps
+  ride that same swap, so no crash point publishes half a commit.
+  ``stats_gen`` names the generation holding the commit's
+  catalog/term_stats snapshots: appends and merges write new snapshots
+  at their own generation, deletes and docvalue updates change no
+  statistics and keep the previous ``stats_gen``.
 - ``append_raw(batch)`` = one "flush" and the only way a segment is
   built: assign docids continuing from the commit's doc_count
   (insertion-ordered like Lucene docIDs), build packed segments +
@@ -13,11 +23,10 @@ TieredMergePolicy -> commit; INDEX/SegmentInfos.java generations):
   row from ONE kernel pass) — plain parquet appends, no
   dynamic-partition write, no sort (the build kernel already emits
   rows segment-grouped and term-sorted, so parquet row-group min/max
-  stats prune term lookups for free). The commit.json swap is atomic;
-  a crashed append leaves a gen directory no commit references, and
-  the retry simply overwrites it — that is the checkpoint/resume story
-  (the north rule's "resumable from checkpoint with per-partition
-  lineage + metrics").
+  stats prune term lookups for free). A crashed append leaves a gen
+  directory no commit references, and the retry simply overwrites it
+  — that is the checkpoint/resume story (the north rule's "resumable
+  from checkpoint with per-partition lineage + metrics").
 - ``maybe_merge()`` = TieredMergePolicy
   (INDEX/TieredMergePolicy.java:312-401,565-625): size-tiered
   selection over the catalog, restricted to docid-adjacent runs so
@@ -30,13 +39,14 @@ TieredMergePolicy -> commit; INDEX/SegmentInfos.java generations):
   with the flush's batch encoder
   (``blocks.encode_postings_batch``), so a flush and a merge write
   postings through one codec writer, as in the reference.
+- every delete (docid list, docid frame, term, query, expiry sweep)
+  resolves to a docid frame and ends in ``_commit_delete_set``.
 - ``vacuum()`` deletes generation directories whose segments are all
   dead (merge inputs), like Lucene deleting merged-away segment files.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
 
@@ -46,11 +56,9 @@ from pyspark.sql import functions as F
 from .docids import assign_docids
 from .segments import (
     SegmentIndex, build_segments_direct, catalog_from_packed, read_commit,
-    unify_segment_frames, write_commit,
+    stats_gen, unify_segment_frames, write_commit,
 )
 
-_COMMIT_KEYS = {"generation", "doc_count", "sum_ttf", "docs_per_segment",
-                "next_seg_id", "live_segs", "lineage", "data_gens"}
 _PENDING_COMMIT = "pending_commit.json"
 
 
@@ -58,6 +66,7 @@ class IndexWriter:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self._pending_mode = False
 
     # -- lifecycle ----------------------------------------------------------
 
@@ -65,9 +74,10 @@ class IndexWriter:
     def create(cls, spark: SparkSession, path: str,
                docs_per_segment: int = 65536) -> "IndexWriter":
         os.makedirs(path, exist_ok=True)
-        write_commit(path, generation=0, doc_count=0, sum_ttf=0,
-                     docs_per_segment=docs_per_segment, next_seg_id=0,
-                     live_segs=[], data_gens={})
+        write_commit(path, dict(generation=0, doc_count=0, sum_ttf=0,
+                                docs_per_segment=docs_per_segment,
+                                next_seg_id=0, live_segs=[], lineage="",
+                                data_gens={}))
         return cls(spark, path)
 
     @classmethod
@@ -85,34 +95,15 @@ class IndexWriter:
     def _gen_dir(self, sub: str, gen: int) -> str:
         return f"{self.path}/{sub}/gen={gen}"
 
-    def _extras(self, st: dict) -> dict:
-        return {k: v for k, v in st.items() if k not in _COMMIT_KEYS}
-
-    def _write_commit(self, st: dict, **updates) -> None:
-        fname = (_PENDING_COMMIT if getattr(self, "_pending_mode", False)
-                 else "commit.json")
-        merged = {**st, **updates}
+    def _commit(self, st: dict, **updates) -> SegmentIndex:
+        """The one commit step: publish ``{**st, **updates}`` as the
+        complete next commit record in ONE atomic swap. ``stats_gen``
+        defaults to the previous commit's snapshot generation."""
         write_commit(self.path,
-                     generation=merged["generation"],
-                     doc_count=merged["doc_count"],
-                     sum_ttf=merged["sum_ttf"],
-                     docs_per_segment=merged["docs_per_segment"],
-                     next_seg_id=merged["next_seg_id"],
-                     live_segs=merged["live_segs"],
-                     lineage=merged.get("lineage", ""),
-                     data_gens=merged.get("data_gens", {}),
-                     filename=fname)
-        extras = self._extras(st)
-        if extras:
-            import json
-            p = os.path.join(self.path, fname)
-            with open(p) as f:
-                c = json.load(f)
-            c.update(extras)
-            tmp = p + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(c, f)
-            os.replace(tmp, p)
+                     {**st, "stats_gen": stats_gen(st), **updates},
+                     _PENDING_COMMIT if self._pending_mode
+                     else "commit.json")
+        return self.reader()
 
     # -- two-phase commit -----------------------------------------------
 
@@ -142,9 +133,7 @@ class IndexWriter:
                             lineage=lineage or "prepared append")
         finally:
             self._pending_mode = False
-        import json
-        with open(os.path.join(self.path, _PENDING_COMMIT)) as f:
-            return json.load(f)
+        return read_commit(self.path, _PENDING_COMMIT)
 
     def commit(self) -> SegmentIndex:
         """Second phase: atomically promote the prepared commit
@@ -211,20 +200,44 @@ class IndexWriter:
                               seg_id_base=seg_base) \
             .write.mode("overwrite").option("compression", "zstd") \
             .parquet(self._gen_dir("segments", gen))
-        out = self._publish(st, gen, lineage,
-                            extra_commit=extra_commit)
+        out = self._publish({**st, **(extra_commit or {})}, gen, lineage)
         if staging is not None:
             staging.unpersist()
         return out
 
-    def _publish(self, st: dict, gen: int, lineage: str,
-                 extra_commit: dict | None = None) -> SegmentIndex:
-        """Catalog/term_stats snapshots + atomic commit swap for the
-        segments just written under gen's data dirs (scalar-column jobs
-        only — blob columns never leave disk). ``extra_commit`` keys
-        ride the same atomic swap (exactly-once stream stamps)."""
-        if extra_commit:
-            st = {**st, **extra_commit}
+    def _publish(self, st: dict, gen: int, lineage: str) -> SegmentIndex:
+        """Catalog/term_stats snapshots + the commit for the segments
+        just written under gen's data dir (scalar-column jobs only —
+        blob columns never leave disk)."""
+        cat_rows, pk_new, _ = self._catalog_new_segments(st, gen, lineage)
+        ts_new = _term_totals(pk_new)
+        if stats_gen(st):
+            ts_new = _term_totals(
+                self._snapshot("term_stats", st).unionByName(ts_new))
+        ts_new.write.mode("overwrite").parquet(
+            self._gen_dir("term_stats", gen))
+
+        new_segs = [r["seg_id"] for r in cat_rows]
+        live = sorted(set(st.get("live_segs", [])) | set(new_segs))
+        return self._commit(
+            st, generation=gen, stats_gen=gen,
+            doc_count=st["doc_count"] + sum(r["n_docs"] for r in cat_rows),
+            sum_ttf=st["sum_ttf"] + sum(r["n_tokens"] for r in cat_rows),
+            next_seg_id=(max(live) + 1) if live else 0,
+            live_segs=live, lineage=lineage,
+            data_gens={**st.get("data_gens", {}), gen: sorted(new_segs)})
+
+    def _snapshot(self, sub: str, st: dict) -> DataFrame:
+        """The ``catalog`` or ``term_stats`` snapshot of commit ``st``."""
+        return self.spark.read.parquet(self._gen_dir(sub, stats_gen(st)))
+
+    def _catalog_new_segments(self, st: dict, gen: int, lineage: str,
+                              replaced: list = ()) -> tuple:
+        """Catalog the segments just written to ``segments/gen=gen``
+        and write the cumulative catalog snapshot at ``gen``: commit
+        ``st``'s catalog without the ``replaced`` segments, plus the
+        new rows. Returns (new catalog rows, new posting rows, new
+        norms rows)."""
         seg_new = self.spark.read.parquet(self._gen_dir("segments", gen))
         pk_new = seg_new.filter(F.col("term").isNotNull())
         nm_new = seg_new.filter(F.col("term").isNull()) \
@@ -232,41 +245,15 @@ class IndexWriter:
                     "qdl_blob")
         cat_add = catalog_from_packed(pk_new, nm_new, lineage).persist()
         cat_rows = cat_add.collect()
-        new_segs = [r["seg_id"] for r in cat_rows]
-        live = sorted(set(st.get("live_segs", [])) | set(new_segs))
-
-        cat_new = cat_add
-        if st["generation"] > 0:
-            cat_new = self.spark.read.parquet(
-                f"{self.path}/catalog/gen={st['generation']}") \
-                .unionByName(cat_add)
-        cat_new.write.mode("overwrite").parquet(
-            f"{self.path}/catalog/gen={gen}")
+        cat = cat_add
+        if stats_gen(st):
+            cat = self._snapshot("catalog", st)
+            if replaced:
+                cat = cat.filter(~F.col("seg_id").isin(list(replaced)))
+            cat = cat.unionByName(cat_add)
+        cat.write.mode("overwrite").parquet(self._gen_dir("catalog", gen))
         cat_add.unpersist()
-
-        ts_new = (pk_new.select("term", "df", "ttf")
-                  .groupBy("term")
-                  .agg(F.sum("df").cast("long").alias("df"),
-                       F.sum("ttf").cast("long").alias("ttf")))
-        if st["generation"] > 0:
-            ts_prev = self.spark.read.parquet(
-                f"{self.path}/term_stats/gen={st['generation']}")
-            ts_new = (ts_prev.unionByName(ts_new)
-                      .groupBy("term")
-                      .agg(F.sum("df").cast("long").alias("df"),
-                           F.sum("ttf").cast("long").alias("ttf")))
-        ts_new.write.mode("overwrite").parquet(
-            f"{self.path}/term_stats/gen={gen}")
-
-        data_gens = dict(st.get("data_gens", {}))
-        data_gens[gen] = sorted(new_segs)
-        self._write_commit(
-            st, generation=gen,
-            doc_count=st["doc_count"] + sum(r["n_docs"] for r in cat_rows),
-            sum_ttf=st["sum_ttf"] + sum(r["n_tokens"] for r in cat_rows),
-            next_seg_id=(max(live) + 1) if live else 0,
-            live_segs=live, lineage=lineage, data_gens=data_gens)
-        return self.reader()
+        return cat_rows, pk_new, nm_new
 
     # -- tiered merge -------------------------------------------------------
 
@@ -324,12 +311,12 @@ class IndexWriter:
         # concatenation order must be docid order; seg_id order diverges
         # from it once merged segments (fresh, higher ids) re-merge, so
         # sort by the catalog's docid_min
-        rng = {r["seg_id"]: int(r["docid_min"])
-               for r in (six.catalog
-                         .filter(F.col("seg_id").isin(seg_ids))
-                         .select("seg_id", "docid_min").collect())}
+        src = (six.catalog.filter(F.col("seg_id").isin(seg_ids))
+               .select("seg_id", "docid_min", "n_docs", "n_tokens")
+               .collect())
         rng_df = self.spark.createDataFrame(
-            [(k, v) for k, v in rng.items()], "seg_id INT, docid_min LONG")
+            [(r["seg_id"], int(r["docid_min"])) for r in src],
+            "seg_id INT, docid_min LONG")
         pk = pk.join(F.broadcast(rng_df), "seg_id")
         merged = (pk.groupBy("term")
                   .agg(F.sort_array(F.collect_list(F.struct(
@@ -395,29 +382,13 @@ class IndexWriter:
             .write.mode("overwrite").option("compression", "zstd") \
             .parquet(self._gen_dir("segments", gen))
 
-        live = sorted((set(st["live_segs"]) - set(seg_ids)) | {new_id})
         lineage = f"merge({','.join(map(str, seg_ids))})" + \
             (" expunge" if deleted_arr is not None else "")
-        seg_new = self.spark.read.parquet(self._gen_dir("segments", gen))
-        pk_new = seg_new.filter(F.col("term").isNotNull())
-        nm_new = seg_new.filter(F.col("term").isNull()) \
-            .select("seg_id", "docid_min", "n_docs", "norm_blob",
-                    "qdl_blob")
-        cat_old = self.spark.read.parquet(
-            f"{self.path}/catalog/gen={st['generation']}")
-        cat_new_rows = catalog_from_packed(pk_new, nm_new, lineage)
-        cat = (cat_old.filter(~F.col("seg_id").isin(seg_ids))
-               .unionByName(cat_new_rows))
-        cat.write.mode("overwrite").parquet(f"{self.path}/catalog/gen={gen}")
-
-        ts_prev = self.spark.read.parquet(
-            f"{self.path}/term_stats/gen={st['generation']}")
-        doc_count, sum_ttf = st["doc_count"], st["sum_ttf"]
-        if deleted_arr is None:
-            # bulk merge changes no statistics — snapshot carries forward
-            ts_prev.write.mode("overwrite").parquet(
-                f"{self.path}/term_stats/gen={gen}")
-        else:
+        cat_rows, pk_new, nm_new = self._catalog_new_segments(
+            st, gen, lineage, replaced=seg_ids)
+        ts = self._snapshot("term_stats", st)
+        updates = {}
+        if deleted_arr is not None:
             # surviving-corpus stats: subtract the merged range's old
             # per-term contributions, add the expunged ones back
             old_range = (six.packed.filter(F.col("seg_id").isin(seg_ids))
@@ -429,7 +400,7 @@ class IndexWriter:
                          .groupBy("term")
                          .agg(F.sum("df").alias("ndf"),
                               F.sum("ttf").alias("nttf")))
-            ts = (ts_prev.join(delta, "term", "left")
+            ts = (ts.join(delta, "term", "left")
                   .join(new_range, "term", "left")
                   .select("term",
                           (F.col("df") - F.coalesce("odf", F.lit(0))
@@ -439,41 +410,30 @@ class IndexWriter:
                            + F.coalesce("nttf", F.lit(0)))
                           .cast("long").alias("ttf"))
                   .filter(F.col("df") > 0))
-            ts.write.mode("overwrite").parquet(
-                f"{self.path}/term_stats/gen={gen}")
-            olds = cat_old.filter(F.col("seg_id").isin(seg_ids)).agg(
-                F.sum("n_docs"), F.sum("n_tokens")).first()
-            news = cat_new_rows.agg(
-                F.sum("n_docs"), F.sum("n_tokens")).first()
-            doc_count -= int(olds[0]) - int(news[0])
-            sum_ttf -= int(olds[1]) - int(news[1])
-
-        data_gens = dict(st.get("data_gens", {}))
-        data_gens[gen] = [new_id]
-        updates = dict(generation=gen, next_seg_id=new_id + 1,
-                       live_segs=live, lineage=lineage,
-                       data_gens=data_gens, doc_count=doc_count,
-                       sum_ttf=sum_ttf)
-        st2 = dict(st)
-        if deleted_arr is not None:
             # expunged ids leave the delete set (they are gone from the
             # postings); ids outside the merged range stay deleted —
             # computed as a distributed filter, never a driver pass over
             # the global delete set
-            rng_rows = nm_new.select("docid_min", "n_docs").first()
-            lo = int(rng_rows["docid_min"])
-            blob = nm_new.select("norm_blob").first()["norm_blob"]
-            hi = lo + len(blob)
+            lo = int(cat_rows[0]["docid_min"])
+            hi = lo + nm_new.select(F.length("norm_blob")).first()[0]
             remaining = six.deleted.filter(
                 (F.col("docid") < lo) | (F.col("docid") >= hi))
-            if remaining.limit(1).count():
-                remaining.coalesce(1).write.mode("overwrite").parquet(
-                    self._gen_dir("deletes", gen))
-                st2["del_gens"] = [gen]
-            else:
-                st2["del_gens"] = []
-        self._write_commit(st2, **updates)
-        return self.reader()
+            updates["del_gens"] = \
+                [gen] if self._write_delete_set(remaining, gen) else []
+        # a bulk merge changes no statistics — the snapshot carries forward
+        ts.write.mode("overwrite").parquet(self._gen_dir("term_stats", gen))
+
+        def gone(k):
+            # docs/tokens the merge expunged (0 for a bulk merge)
+            return sum(r[k] for r in src) - sum(r[k] for r in cat_rows)
+        return self._commit(
+            st, generation=gen, stats_gen=gen, next_seg_id=new_id + 1,
+            live_segs=sorted((set(st["live_segs"]) - set(seg_ids))
+                             | {new_id}),
+            lineage=lineage, doc_count=st["doc_count"] - gone("n_docs"),
+            sum_ttf=st["sum_ttf"] - gone("n_tokens"),
+            data_gens={**st.get("data_gens", {}), gen: [new_id]},
+            **updates)
 
     # -- deletes (live docs) ------------------------------------------------
 
@@ -485,26 +445,11 @@ class IndexWriter:
         liveDocs. Collection statistics (docCount/avgdl/idf) keep the
         deleted docs until merge, matching Lucene's stats-ignore-deletes
         semantics (IndexSearcher.collectionStatistics over
-        Terms.getDocCount)."""
-        st = self.commit_state()
-        gen = st["generation"] + 1
+        Terms.getDocCount). An empty list commits nothing."""
         ids = sorted({int(d) for d in docids})
-        df = self.spark.createDataFrame(
-            [(d,) for d in ids], "docid LONG")
-        df.coalesce(1).write.mode("overwrite").parquet(
-            self._gen_dir("deletes", gen))
-        # carry catalog/term_stats snapshots forward
-        for sub in ("catalog", "term_stats"):
-            self.spark.read.parquet(
-                f"{self.path}/{sub}/gen={st['generation']}") \
-                .write.mode("overwrite").parquet(
-                    f"{self.path}/{sub}/gen={gen}")
-        del_gens = list(st.get("del_gens", [])) + [gen]
-        st2 = dict(st)
-        st2["del_gens"] = del_gens
-        self._write_commit(st2, generation=gen,
-                           lineage=lineage or f"delete {len(ids)} docs")
-        return self.reader()
+        return self._commit_delete_set(
+            self.spark.createDataFrame([(d,) for d in ids], "docid LONG"),
+            lineage or f"delete {len(ids)} docs")
 
     def update_by_term(self, term: str, batch, text_col: str = "text",
                        order_cols: list | None = None,
@@ -516,20 +461,16 @@ class IndexWriter:
         indexed, both riding ONE commit.json swap — no reader
         generation can observe the delete without the add or vice
         versa. The old-doc resolution and the delete-set write are
-        fully distributed (no driver materialization of hit lists,
-        unlike the convenience delete_by_term)."""
+        fully distributed (no driver materialization of hit lists)."""
         from ..search.query import Term as _Term
         from ..search.segment_searcher import SegmentSearcher
         st = self.commit_state()
         gen = st["generation"] + 1
         del_gens = list(st.get("del_gens", []))
-        if st["doc_count"]:
-            hits = (SegmentSearcher(self.reader())
-                    .scored(_Term(term)).select("docid"))
-            if hits.limit(1).count():
-                hits.coalesce(1).write.mode("overwrite").parquet(
-                    self._gen_dir("deletes", gen))
-                del_gens = del_gens + [gen]
+        if st["doc_count"] and self._write_delete_set(
+                SegmentSearcher(self.reader()).scored(_Term(term))
+                .select("docid"), gen):
+            del_gens.append(gen)
         return self.append_raw(
             batch, text_col=text_col, order_cols=order_cols,
             lineage=lineage or f"update term={term!r}",
@@ -559,30 +500,17 @@ class IndexWriter:
                      F.lit(gen).cast("int").alias("upd_gen"))
          .write.mode("overwrite")
          .parquet(self._gen_dir("dv_updates", gen)))
-        for sub in ("catalog", "term_stats"):
-            self.spark.read.parquet(
-                f"{self.path}/{sub}/gen={st['generation']}") \
-                .write.mode("overwrite").parquet(
-                    f"{self.path}/{sub}/gen={gen}")
-        st2 = dict(st)
-        st2["dv_gens"] = list(st.get("dv_gens", [])) + [gen]
-        self._write_commit(
-            st2, generation=gen,
+        return self._commit(
+            st, generation=gen,
+            dv_gens=list(st.get("dv_gens", [])) + [gen],
             lineage=lineage or f"dv update {field}={value} term={term!r}")
-        return self.reader()
 
     def delete_by_term(self, term: str) -> SegmentIndex:
         """Delete every document containing ``term`` (delete-by-term,
         INDEX/DocumentsWriterDeleteQueue.java)."""
         from ..search.query import Term
-        from ..search.segment_searcher import SegmentSearcher
-        six = self.reader()
-        hits = [r["docid"] for r in
-                SegmentSearcher(six).scored(Term(term))
-                .select("docid").collect()]
-        if not hits:
-            return six
-        return self.delete_docids(hits, lineage=f"delete term={term!r}")
+        return self.delete_by_query(Term(term),
+                                    lineage=f"delete term={term!r}")
 
     def delete_by_query(self, query, lineage: str = "") -> SegmentIndex:
         """IndexWriter.deleteDocuments(Query..) analogue
@@ -592,19 +520,16 @@ class IndexWriter:
         AST is marked deleted.  Hit resolution runs through the same
         pruned SegmentSearcher the readers use and the delete set is
         written straight from the executors — no driver
-        materialization of the hit list (unlike the convenience
-        delete_by_term), so a delete-by-query matching 10^9 docs
-        streams 10^9 ids through a one-file parquet write, never the
-        driver heap."""
+        materialization of the hit list, so a delete-by-query matching
+        10^9 docs streams 10^9 ids through a one-file parquet write,
+        never the driver heap."""
         from ..search.segment_searcher import SegmentSearcher
-        st = self.commit_state()
-        if not st["doc_count"]:
+        if not self.commit_state()["doc_count"]:
             return self.reader()
-        gen = st["generation"] + 1
         hits = (SegmentSearcher(self.reader())
                 .scored(query).select("docid"))
         return self._commit_delete_set(
-            st, gen, hits, lineage or f"deleteByQuery {query!r}")
+            hits, lineage or f"deleteByQuery {query!r}")
 
     def expire_docs(self, docvalues: DataFrame, field: str,
                     now, docid_col: str = "docid") -> SegmentIndex:
@@ -617,48 +542,44 @@ class IndexWriter:
         (docid, field) table — the role Solr's stored expiration
         field plays.  The filter + delete-set write are one pushed
         parquet scan; nothing crosses the driver."""
-        st = self.commit_state()
-        if not st["doc_count"]:
+        if not self.commit_state()["doc_count"]:
             return self.reader()
-        gen = st["generation"] + 1
         hits = (docvalues
                 .filter(F.col(field) <= F.lit(now))
                 .select(F.col(docid_col).cast("long").alias("docid")))
-        return self._commit_delete_set(st, gen, hits,
-                                       f"expire {field} <= {now}")
+        return self._commit_delete_set(hits, f"expire {field} <= {now}")
 
     def delete_docids_df(self, hits: DataFrame,
                          lineage: str = "") -> SegmentIndex:
         """DataFrame-native delete set (the DeleteStream shape,
         solrj/io/stream/DeleteStream.java:40 — deleteById per incoming
         tuple): mark every docid in ``hits`` deleted in ONE commit,
-        with the set written executor-side (never the driver heap,
-        unlike the convenience list-based delete_docids)."""
-        st = self.commit_state()
+        with the set written executor-side (never the driver heap)."""
         ids = hits.select(F.col(hits.columns[0]).cast("long")
                           .alias("docid")).distinct()
-        return self._commit_delete_set(
-            st, st["generation"] + 1, ids,
-            lineage or "delete docids (df)")
+        return self._commit_delete_set(ids, lineage or "delete docids (df)")
 
-    def _commit_delete_set(self, st: dict, gen: int, hits: DataFrame,
+    def _commit_delete_set(self, hits: DataFrame,
                            lineage: str) -> SegmentIndex:
-        """Write a distributed delete set as generation ``gen`` and
-        commit it (shared tail of delete_by_query / expire_docs); a
-        no-op commit is skipped when nothing matches."""
-        if not hits.limit(1).count():
+        """The one delete commit every delete ends in: write the docid
+        frame ``hits`` as the next generation's delete set and commit
+        it; nothing is committed when it is empty. Deletes change no
+        statistics, so the commit keeps the previous ``stats_gen``."""
+        st = self.commit_state()
+        gen = st["generation"] + 1
+        if not self._write_delete_set(hits, gen):
             return self.reader()
+        return self._commit(st, generation=gen, lineage=lineage,
+                            del_gens=list(st.get("del_gens", [])) + [gen])
+
+    def _write_delete_set(self, hits: DataFrame, gen: int) -> bool:
+        """Write ``hits`` as ``deletes/gen=gen``; False (nothing
+        written) when it is empty."""
+        if not hits.limit(1).count():
+            return False
         hits.coalesce(1).write.mode("overwrite").parquet(
             self._gen_dir("deletes", gen))
-        for sub in ("catalog", "term_stats"):
-            self.spark.read.parquet(
-                f"{self.path}/{sub}/gen={st['generation']}") \
-                .write.mode("overwrite").parquet(
-                    f"{self.path}/{sub}/gen={gen}")
-        st2 = dict(st)
-        st2["del_gens"] = list(st.get("del_gens", [])) + [gen]
-        self._write_commit(st2, generation=gen, lineage=lineage)
-        return self.reader()
+        return True
 
     def vacuum(self) -> list:
         """Delete generation data dirs whose segments are all dead."""
@@ -669,26 +590,33 @@ class IndexWriter:
         removed = []
         for g in sorted(data_gens):
             if not set(data_gens[g]) & live:
-                for sub in ("segments",):
-                    d = self._gen_dir(sub, g)
-                    if os.path.isdir(d):
-                        shutil.rmtree(d)
-                        removed.append(f"{sub}/gen={g}")
+                d = self._gen_dir("segments", g)
+                if os.path.isdir(d):
+                    shutil.rmtree(d)
+                    removed.append(f"segments/gen={g}")
                 del data_gens[g]
-        # also drop stale uncommitted gen dirs (crashed attempts)
-        committed = set(data_gens)
-        for sub in ("segments",):
-            root = os.path.join(self.path, sub)
-            if not os.path.isdir(root):
-                continue
-            for d in os.listdir(root):
-                if d.startswith("gen=") and int(d.split("=")[1]) \
-                        not in committed:
-                    shutil.rmtree(os.path.join(root, d))
-                    removed.append(f"{sub}/{d}")
+        # also drop stale uncommitted gen dirs (crashed attempts); a
+        # prepared commit's generations count as referenced, like a
+        # pending segments_N in Lucene's IndexFileDeleter
+        keep = set(data_gens)
+        if os.path.exists(os.path.join(self.path, _PENDING_COMMIT)):
+            keep |= {int(g) for g in
+                     read_commit(self.path, _PENDING_COMMIT)["data_gens"]}
+        root = os.path.join(self.path, "segments")
+        for d in os.listdir(root) if os.path.isdir(root) else ():
+            if d.startswith("gen=") and int(d.split("=")[1]) not in keep:
+                shutil.rmtree(os.path.join(root, d))
+                removed.append(f"segments/{d}")
         if removed:
-            self._write_commit(st, data_gens=data_gens)
+            self._commit(st, data_gens=data_gens)
         return removed
+
+
+def _term_totals(rows: DataFrame) -> DataFrame:
+    """Per-term (df, ttf) totals of posting or term-stats rows."""
+    return (rows.select("term", "df", "ttf").groupBy("term")
+            .agg(F.sum("df").cast("long").alias("df"),
+                 F.sum("ttf").cast("long").alias("ttf")))
 
 
 def _expunge_packed(pk_with_norms: DataFrame, deleted_arr) -> DataFrame:
@@ -802,7 +730,7 @@ def pick_merge(catalog: list, segs_per_tier: int = 10,
                 continue
             floored_sizes = [max(r["packed_bytes"], 1) for r in run]
             skew = max(floored_sizes) / float(sum(floored_sizes))
-            score = skew * math.pow(sum(floored_sizes), 0.05)
+            score = skew * sum(floored_sizes) ** 0.05
             if best_score is None or score < best_score:
                 best_score = score
                 best = [r["seg_id"] for r in run]

@@ -15,10 +15,12 @@ the soft-commit, and Spark's checkpoint + our ``last_stream_batch``
 watermark make replays exactly-once: a restarted query re-offers the
 last in-flight batch (at-least-once), the writer skips batch ids whose
 stamp is in the commit — the stamp travels in the SAME atomic
-commit.json swap as the generation bump (``extra_commit``), so no
-crash point can commit docs without the stamp. Orphan gen directories
-from a crashed append are overwritten by the retry (mode=overwrite)
-and reaped by ``IndexWriter.vacuum``.
+commit.json swap as the generation bump (``extra_commit``; every
+IndexWriter commit is one complete swap), so no crash point can
+commit docs without the stamp, and later merges carry it forward in
+their own commits. Orphan gen directories from a crashed append are
+overwritten by the retry (mode=overwrite) and reaped by
+``IndexWriter.vacuum``.
 
 After each append, an optional tiered-merge pass keeps the segment
 count bounded (ConcurrentMergeScheduler analogue — here it runs
@@ -60,9 +62,10 @@ class StreamingIndexer:
         if batch_df.isEmpty():
             return
         # the batch-id stamp rides the SAME atomic commit.json swap as
-        # the generation bump (IndexWriter._publish extra_commit), so a
-        # crash can never commit the docs without the stamp — a replayed
-        # batch is either fully absent or fully committed+stamped
+        # the generation bump (append_raw's extra_commit), so a crash can
+        # never commit the docs without the stamp — a replayed batch is
+        # either fully absent or fully committed+stamped; each merge
+        # commit carries the stamp forward with the rest of the state
         self.writer.append_raw(
             batch_df, order_cols=self.order_cols,
             lineage=f"stream batch {batch_id}",
@@ -70,20 +73,7 @@ class StreamingIndexer:
         self._batches_since_merge += 1
         if self.merge_every and self._batches_since_merge >= self.merge_every:
             self.writer.maybe_merge(**self.merge_kwargs)
-            self._patch_commit_extra({"last_stream_batch": int(batch_id)})
             self._batches_since_merge = 0
-
-    def _patch_commit_extra(self, extra: dict) -> None:
-        import json
-        import os
-        p = os.path.join(self.writer.path, "commit.json")
-        with open(p) as f:
-            c = json.load(f)
-        c.update(extra)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(c, f)
-        os.replace(tmp, p)
 
     def start(self, stream_df: DataFrame, checkpoint_dir: str,
               trigger_available_now: bool = True):

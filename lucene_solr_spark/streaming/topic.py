@@ -19,7 +19,9 @@ Scale shape: a pull reads ONLY the catalog rows of new generations
 (docid ranges — tiny) and explodes them into ids; no segment data is
 touched.  The usual composition is ``fetch()`` over the pulled ids
 (exactly Solr's topic + fetch pattern), which is one equi-join.
-Deletes are excluded by an anti-join against the delete generations.
+The catalog and the delete set are the reader's (``open_segments``),
+so the pull resolves them exactly as a searcher of that commit does;
+deletes are excluded by one anti-join.
 """
 
 from __future__ import annotations
@@ -66,25 +68,17 @@ class Topic:
         checkpoint to the store's current generation (checkpointEvery
         batching collapses to per-pull persistence here — each pull is
         one micro-batch)."""
-        from ..index.segments import read_commit
-        st = read_commit(self.writer_path)
+        from ..index.segments import open_segments
+        six = open_segments(self.spark, self.writer_path)
         ckpt = self._read_ckpt()
-        cur = int(st["generation"])
-        new_segs = [s for g, segs in st.get("data_gens", {}).items()
-                    if ckpt < int(g) <= cur for s in segs]
-        spark = self.spark
-        if not new_segs:
-            self._write_ckpt(cur)
-            return spark.createDataFrame([], "docid long")
-        cat = (spark.read.parquet(
-            f"{self.writer_path}/catalog/gen={cur}")
-            .filter(F.col("seg_id").isin(new_segs)))
-        ids = cat.select(F.explode(F.expr(
-            "sequence(docid_min, docid_min + n_docs - 1)"))
-            .alias("docid"))
-        for g in st.get("del_gens", []):
-            dels = spark.read.parquet(
-                f"{self.writer_path}/deletes/gen={g}")
-            ids = ids.join(dels, "docid", "left_anti")
+        cur = six.generation
+        new_segs = [s for g, segs in six.data_gens.items()
+                    if ckpt < g <= cur for s in segs]
         self._write_ckpt(cur)
-        return ids
+        if not new_segs:
+            return self.spark.createDataFrame([], "docid long")
+        ids = (six.catalog.filter(F.col("seg_id").isin(new_segs))
+               .select(F.explode(F.expr(
+                   "sequence(docid_min, docid_min + n_docs - 1)"))
+                   .alias("docid")))
+        return ids.join(six.deleted, "docid", "left_anti")

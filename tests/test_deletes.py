@@ -234,3 +234,45 @@ def test_update_numeric_docvalue_newest_generation_wins(store, spark):
                      base.withColumnRenamed("prio", "other"),
                      "other").collect()}
     assert all(v == 0 for v in untouched.values())
+
+
+def _snapshot_dirs(path):
+    import os
+    return {(sub, d) for sub in ("catalog", "term_stats")
+            for d in os.listdir(os.path.join(path, sub))}
+
+
+@pytest.mark.parametrize("how", ["docids", "docids_df", "term", "query"])
+def test_delete_family_is_one_path(store, spark, how):
+    """Every delete entry point removing the 'error' docs yields the
+    same delete set and results, commits exactly one generation and
+    writes no catalog/term_stats snapshot."""
+    w = store
+    ss = SegmentSearcher(w.reader())
+    victims = {r.docid for r in ss.scored(Term("error"))
+               .select("docid").collect()}
+    assert victims
+    before = [(r.doc_id, r.score)
+              for r in ss.topk(Term("ok"), 1000, prune=False).collect()]
+    gen0 = w.commit_state()["generation"]
+    dirs0 = _snapshot_dirs(w.path)
+    six = {"docids": lambda: w.delete_docids(sorted(victims)),
+           "docids_df": lambda: w.delete_docids_df(spark.createDataFrame(
+               [(d,) for d in sorted(victims)], "docid LONG")),
+           "term": lambda: w.delete_by_term("error"),
+           "query": lambda: w.delete_by_query(Term("error"))}[how]()
+    assert {r.docid for r in six.deleted.collect()} == victims
+    assert w.commit_state()["generation"] == gen0 + 1
+    assert _snapshot_dirs(w.path) == dirs0
+    ss2 = SegmentSearcher(six)
+    assert ss2.count(Term("error")).first()["n_hits"] == 0
+    # stats are frozen until merge, so the survivors keep their scores
+    assert [(r.doc_id, r.score) for r in ss2.topk(Term("ok"), 10)
+            .collect()] == [x for x in before if x[0] not in victims][:10]
+
+
+def test_delete_docids_empty_commits_nothing(store):
+    w = store
+    gen0 = w.commit_state()["generation"]
+    w.delete_docids([])
+    assert w.commit_state()["generation"] == gen0

@@ -82,3 +82,27 @@ def test_double_prepare_raises(spark, tmpdirs):
     w.commit()
     with pytest.raises(RuntimeError, match="no prepared commit"):
         w.commit()
+
+
+def test_vacuum_keeps_prepared_commit_data(spark, tmpdirs):
+    """vacuum() between prepare_commit and commit must not reap the
+    prepared generation's segment data (a pending segments_N is
+    referenced, as in Lucene's IndexFileDeleter)."""
+    from lucene_solr_spark.index.segments import check_index
+    from lucene_solr_spark.index.writer import IndexWriter
+    d1, d2 = tmpdirs
+    a, b = _batches(spark)
+
+    w1 = IndexWriter.create(spark, d1, docs_per_segment=512)
+    w1.append_raw(a, lineage="base")
+    w1.prepare_commit(b)
+    w1.vacuum()
+    six1 = w1.commit()
+
+    w2 = IndexWriter.create(spark, d2, docs_per_segment=512)
+    w2.append_raw(a, lineage="base")
+    six2 = w2.append_raw(b, lineage="direct")
+
+    assert six1.doc_count == six2.doc_count
+    assert _store_fingerprint(spark, d1) == _store_fingerprint(spark, d2)
+    assert check_index(six1).count() == 0

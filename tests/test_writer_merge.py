@@ -156,3 +156,87 @@ def test_streaming_replay_is_exactly_once(spark, xs_transcripts, tmp_path):
     batch_df = spark.read.parquet(src)
     sink.process_batch(batch_df, 0)
     assert sink.writer.reader().doc_count == n1
+
+
+@pytest.fixture()
+def commit_swaps(monkeypatch):
+    """Record every swap onto commit.json: the record swapped in (read
+    from the source file before the rename) and ``commit_state()``
+    read right after it."""
+    import json
+    import os
+
+    from lucene_solr_spark.index.segments import read_commit
+    swaps = []
+    real = os.replace
+
+    def replace(src, dst, *a, **kw):
+        rec = None
+        if os.path.basename(str(dst)) == "commit.json":
+            with open(src) as f:
+                rec = json.load(f)
+        real(src, dst, *a, **kw)
+        if rec is not None:
+            swaps.append((rec, read_commit(os.path.dirname(str(dst)))))
+
+    monkeypatch.setattr(os, "replace", replace)
+    return swaps
+
+
+def _assert_one_complete_swap_per_commit(swaps, gen0, keys):
+    """Consecutive generations, one swap each, every record complete
+    and equal to the state read back after its swap."""
+    assert [rec["generation"] for rec, _ in swaps] == \
+        list(range(gen0 + 1, gen0 + 1 + len(swaps)))
+    for rec, after in swaps:
+        assert all(k in rec for k in keys), rec
+        assert rec == after
+
+
+def test_every_commit_is_one_complete_swap(spark, xs_transcripts,
+                                           tmp_path, commit_swaps):
+    """On a store with deletes, an append, an update-by-term and a bulk
+    merge each publish ONE commit.json carrying the delete set."""
+    w = IndexWriter.create(spark, str(tmp_path / "ix"),
+                           docs_per_segment=128)
+    docs = xs_transcripts.drop("docid")
+    early = F.col("conv_id") < "conv00000025"
+    w.append_raw(docs.filter(early))
+    w.delete_docids([3, 5, 8])
+    repl = spark.createDataFrame(
+        [("cZ", 0, "user", "replacement text", "", None)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    for op in (lambda: w.append_raw(docs.filter(~early)),
+               lambda: w.update_by_term("error", repl),
+               lambda: w.merge_segments(sorted(w.reader().live_segs)[:2],
+                                        expunge=False)):
+        gen0 = w.commit_state()["generation"]
+        commit_swaps.clear()
+        op()
+        assert len(commit_swaps) == 1
+        _assert_one_complete_swap_per_commit(commit_swaps, gen0,
+                                             ("del_gens",))
+        assert commit_swaps[0][0]["del_gens"]
+
+
+def test_stream_batch_commits_carry_the_stamp(spark, xs_transcripts,
+                                              tmp_path, commit_swaps):
+    """A stream batch that also merges publishes the append and every
+    merge as one complete swap each, all stamped with the batch id."""
+    from lucene_solr_spark.streaming.incremental import StreamingIndexer
+    docs = xs_transcripts.drop("docid")
+    early = F.col("conv_id") < "conv00000025"
+    sink = StreamingIndexer(spark, str(tmp_path / "ix"),
+                            docs_per_segment=128, merge_every=1,
+                            merge_kwargs=dict(segs_per_tier=2,
+                                              floor_bytes=1 << 30))
+    sink.process_batch(docs.filter(early), 0)
+    sink.writer.delete_docids([1, 2])
+    gen0 = sink.writer.commit_state()["generation"]
+    commit_swaps.clear()
+    sink.process_batch(docs.filter(~early), 1)
+    assert len(commit_swaps) >= 2  # the append and at least one merge
+    _assert_one_complete_swap_per_commit(
+        commit_swaps, gen0, ("del_gens", "last_stream_batch"))
+    assert all(rec["last_stream_batch"] == 1 for rec, _ in commit_swaps)

@@ -56,21 +56,32 @@ _EMB_DIM = 64  # embeddings table contract (TESTDATA fixtures)
 # ---------------------------------------------------------------------------
 
 _IX: dict[str, InvertedIndex] = {}
-_SE: dict[str, Searcher] = {}
+_SE: dict[str, tuple] = {}   # sf_dir -> (SparkContext, Searcher)
 
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
+def _cached(cache: dict, spark: SparkSession, sf_dir: str, build):
+    """``cache[sf_dir]``, built by ``build()`` on first use and again
+    when it belongs to another SparkContext than ``spark``'s (a stopped
+    and restarted session): its DataFrames die with their context."""
+    sc = spark.sparkContext
+    hit = cache.get(sf_dir)
+    if hit is None or hit[0] is not sc:
+        hit = cache[sf_dir] = (sc, build())
+    return hit[1]
+
+
 def _searcher(spark: SparkSession, sf_dir: str) -> Searcher:
-    if sf_dir not in _SE:
+    def build():
         _IX[sf_dir] = build_index(_documents(spark, sf_dir))
-        _SE[sf_dir] = Searcher(_IX[sf_dir])
-    return _SE[sf_dir]
+        return Searcher(_IX[sf_dir])
+    return _cached(_SE, spark, sf_dir, build)
 
 
-_SEG: dict[str, SegmentSearcher] = {}
+_SEG: dict[str, tuple] = {}  # sf_dir -> (SparkContext, SegmentSearcher)
 
 
 def _seg_searcher(spark: SparkSession, sf_dir: str) -> SegmentSearcher:
@@ -79,7 +90,7 @@ def _seg_searcher(spark: SparkSession, sf_dir: str) -> SegmentSearcher:
     on-disk store is keyed on the corpus path plus each input file's
     name, size and mtime, so a rewritten documents.parquet gets a fresh
     store, never the stale one."""
-    if sf_dir not in _SEG:
+    def build():
         import hashlib
         import tempfile
 
@@ -102,8 +113,8 @@ def _seg_searcher(spark: SparkSession, sf_dir: str) -> SegmentSearcher:
                          order_cols=["doc_id"],
                          lineage=f"documents@{sf_dir}")
         from lucene_solr_spark.index.segments import open_segments
-        _SEG[sf_dir] = SegmentSearcher(open_segments(spark, out))
-    return _SEG[sf_dir]
+        return SegmentSearcher(open_segments(spark, out))
+    return _cached(_SEG, spark, sf_dir, build)
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Query compiler: AST -> Spark DataFrame plans (double-precision mode).
+"""Query compiler: AST -> Spark DataFrame plans, in double precision.
 
 The Spark realization of Lucene's Weight/Scorer stage
 (SEARCH/IndexSearcher.java:459-505, Boolean2ScorerSupplier):
@@ -13,17 +13,19 @@ The Spark realization of Lucene's Weight/Scorer stage
                         == TakeOrderedAndProject (per-partition heaps +
                         k-way merge = TopScoreDocCollector + TopDocs.merge)
 
-Statistics are frozen at query-compile time exactly like
-IndexSearcher.createWeight: per-term df comes from one tiny lookup on the
-cached term_stats table, idf/avgdl are computed in python doubles and
-inlined as literals (libm == the DuckDB oracle's libm, so engine and
-oracle share the same transcendental bits).
+``TermWeights`` is the createWeight step both searchers share (this
+compiler and search.segment_searcher): term statistics are frozen at
+compile time by one lookup on the term_stats table, idf is computed in
+python doubles and inlined as a literal (libm == the DuckDB oracle's
+libm, so engine and oracle share the same transcendental bits), and
+multi-term queries expand against the term dictionary on the driver.
 
-Scores here are float64 end-to-end — the "oracle-checkable" mode whose
-arithmetic is expressible in ANSI SQL. The Lucene float32 bit-parity
-kernel lives in bm25.score32 and is exercised by the pytest oracle
-(tests/test_lucene_parity.py); rank order agrees between the two modes
-except at float32-rounding ties, which the fixtures pin.
+Scores here are float64 end-to-end: the "oracle-checkable" mode whose
+arithmetic is expressible in ANSI SQL. Lucene's float32 arithmetic has
+one implementation, the f32 mode of the segment kernel
+(search.segment_searcher), which tests/test_lucene_parity.py pins to an
+independent numpy oracle; rank order agrees between the two modes
+except at float32-rounding ties.
 """
 
 from __future__ import annotations
@@ -134,7 +136,80 @@ def term_predicate(q: Query):
     return None
 
 
-class Searcher:
+class TermWeights:
+    """The createWeight step both searchers share (SEARCH/
+    IndexSearcher.java:909-926): per-term (df, ttf) frozen at compile
+    time, idf, and the driver-side term-dictionary rewrites.  ``index``
+    is any index handle with a ``term_stats`` frame (term, df, ttf) and
+    a ``doc_count``: the in-memory InvertedIndex or an on-disk
+    SegmentIndex."""
+
+    def __init__(self, index):
+        self._stats_index = index
+        self._stats_cache: dict[str, tuple[int, int]] = {}
+
+    def _resolve_stats(self, terms) -> dict[str, tuple[int, int]]:
+        """(df, ttf) per term: one term_stats collect for the terms not
+        cached yet; absent terms are (0, 0)."""
+        missing = [t for t in terms if t not in self._stats_cache]
+        if missing:
+            rows = (self._stats_index.term_stats
+                    .filter(F.col("term").isin(missing))
+                    .select("term", "df", "ttf").collect())
+            found = {r["term"]: (int(r["df"]), int(r["ttf"]))
+                     for r in rows}
+            for t in missing:
+                self._stats_cache[t] = found.get(t, (0, 0))
+        return {t: self._stats_cache[t] for t in terms}
+
+    def _resolve_dfs(self, terms) -> dict[str, int]:
+        return {t: st[0] for t, st in self._resolve_stats(terms).items()}
+
+    def idf(self, df: int) -> float:
+        n = self._stats_index.doc_count
+        return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+
+    def expand_terms(self, q: Query) -> tuple:
+        """The dictionary terms a multi-term query matches, sorted
+        (MultiTermQuery.rewrite): one filtered scan of the small
+        term_stats table, capped at maxClauseCount
+        (IndexSearcher.TooManyClauses)."""
+        pred = term_predicate(q)
+        if pred is None:
+            raise TypeError(f"not a multi-term query: {type(q).__name__}")
+        rows = (self._stats_index.term_stats.filter(pred)
+                .select("term").limit(MAX_CLAUSE_COUNT + 1).collect())
+        if len(rows) > MAX_CLAUSE_COUNT:
+            raise TooManyClauses(
+                f"{type(q).__name__} expands past {MAX_CLAUSE_COUNT}")
+        return tuple(sorted(r["term"] for r in rows))
+
+    def scoring_bool_rewrite(self, q: Query) -> Bool:
+        """MultiTermQuery.SCORING_BOOLEAN_REWRITE (ScoringRewrite.java:
+        41): a SHOULD disjunction of TermQueries over the expanded
+        terms, so each matched term contributes its own BM25, unlike
+        the default CONSTANT_SCORE rewrite."""
+        return Bool(should=tuple(Term(t) for t in self.expand_terms(q)))
+
+    def _expand_phrase_wildcard(self, q: PhraseWildcard) -> MultiPhrase:
+        """Expand pattern slots against the term dictionary
+        (PhraseWildcardQuery.java:63 walks a TermsEnum per multi-term
+        slot with a maxMultiTermExpansions cap): one bounded lookup per
+        pattern slot, the first max_expansions terms in term order."""
+        slots = []
+        for s, is_pat in zip(q.slots, q.pattern_slots()):
+            if not is_pat:
+                slots.append((s,))
+                continue
+            rows = (self._stats_index.term_stats
+                    .filter(F.col("term").like(wildcard_to_like(s)))
+                    .select("term").orderBy("term")
+                    .limit(int(q.max_expansions)).collect())
+            slots.append(tuple(r["term"] for r in rows))
+        return MultiPhrase(tuple(slots))
+
+
+class Searcher(TermWeights):
     def __init__(self, ix: InvertedIndex, query_cache=None,
                  similarity=None):
         """``query_cache``: optional search.cache.LRUQueryCache — caches
@@ -147,61 +222,20 @@ class Searcher:
         path; a similarity instance reroutes Term/Synonym/Phrase/
         MultiPhrase clause scoring through its portable-SQL formula
         (the same text the DuckDB oracle evaluates)."""
+        super().__init__(ix)
         self.ix = ix
         self.query_cache = query_cache
         self.sim = similarity
-        self._stats_cache: dict[str, tuple[int, int]] = {}
-
-    # -- statistics (createWeight analogue) --------------------------------
-
-    def _resolve_stats(self, terms: set) -> dict[str, tuple[int, int]]:
-        """(df, ttf) per term, frozen at compile time like
-        IndexSearcher.createWeight's TermStatistics."""
-        missing = [t for t in terms if t not in self._stats_cache]
-        if missing:
-            rows = (self.ix.term_stats
-                    .filter(F.col("term").isin(missing))
-                    .select("term", "df", "ttf").collect())
-            found = {r["term"]: (int(r["df"]), int(r["ttf"]))
-                     for r in rows}
-            for t in missing:
-                self._stats_cache[t] = found.get(t, (0, 0))
-        return {t: self._stats_cache[t] for t in terms}
-
-    def _resolve_dfs(self, terms: set) -> dict[str, int]:
-        return {t: st[0] for t, st in self._resolve_stats(terms).items()}
+        self._field_df_cache: dict[tuple[str, str], int] = {}
 
     def _field_df(self, fld: str, value: str) -> int:
         """docFreq of an exact stored-field value (FieldTerm stats),
         frozen per (field, value) like _resolve_stats."""
         key = (fld, value)
-        cache = self.__dict__.setdefault("_field_df_cache", {})
-        if key not in cache:
-            cache[key] = int(self.ix.source
-                             .filter(F.col(fld) == value).count())
-        return cache[key]
-
-    def scoring_bool_rewrite(self, q: Query) -> Bool:
-        """MultiTermQuery.SCORING_BOOLEAN_REWRITE (SEARCH/
-        MultiTermQuery.java rewrite methods; ScoringRewrite.java:41):
-        expand the multi-term query against the term dictionary and
-        score it as a SHOULD disjunction of TermQueries — each matched
-        term contributes its own BM25, unlike the default
-        CONSTANT_SCORE rewrite the engine's multi-term path uses.
-        Expansion is the same driver-side weight-construction scan as
-        every Lucene rewrite (one filtered pass over the tiny
-        term_stats table), capped at maxClauseCount
-        (IndexSearcher.TooManyClauses)."""
-        pred = term_predicate(q)
-        if pred is None:
-            raise TypeError(f"not a multi-term query: {type(q).__name__}")
-        rows = (self.ix.term_stats.filter(pred)
-                .select("term").limit(MAX_CLAUSE_COUNT + 1).collect())
-        if len(rows) > MAX_CLAUSE_COUNT:
-            raise TooManyClauses(
-                f"{type(q).__name__} expands past {MAX_CLAUSE_COUNT}")
-        terms = tuple(sorted(r["term"] for r in rows))
-        return Bool(should=tuple(Term(t) for t in terms))
+        if key not in self._field_df_cache:
+            self._field_df_cache[key] = int(
+                self.ix.source.filter(F.col(fld) == value).count())
+        return self._field_df_cache[key]
 
     def common_terms(self, terms: tuple, max_term_frequency: float = 0.01,
                      low_msm: int = 0) -> Query:
@@ -232,10 +266,6 @@ class Searcher:
             return low_bool
         return Bool(must=(low_bool,), should=(Bool(should=high),))
 
-    def idf(self, df: int) -> float:
-        n = self.ix.doc_count
-        return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-
     # -- clause scoring -----------------------------------------------------
 
     def _score_expr(self, tf_expr: str, idf_value: float) -> F.Column:
@@ -261,22 +291,27 @@ class Searcher:
     def _with_qdl(self, df: DataFrame) -> DataFrame:
         return df.join(self.ix.docs.select("docid", "qdl"), "docid")
 
+    def _scored_tf(self, freqs: DataFrame, term_stats: list) -> DataFrame:
+        """(docid, score) from a (docid, tf) frame: the clause score
+        over each doc's quantized length."""
+        return self._with_qdl(freqs).select(
+            "docid", self._clause_score("tf", term_stats).alias("score"))
+
     def scored(self, q: Query) -> DataFrame:
         """(docid long, score double) — one row per matching doc.
 
         The tree is canonicalized first (query.rewrite — the
-        BooleanQuery.rewrite / IndexSearcher.rewrite fixpoint)."""
+        BooleanQuery.rewrite / IndexSearcher.rewrite fixpoint), and the
+        stats of all its literal terms are frozen by one lookup."""
         q = rewrite(q)
+        self._resolve_stats(collect_terms(q))
         ix = self.ix
         if isinstance(q, Term):
             st = self._resolve_stats({q.term})
             if st[q.term][0] == 0:
                 return self._empty_scored()
             base = ix.postings.filter(F.col("term") == q.term)
-            return (self._with_qdl(base.select("docid", "tf"))
-                    .select("docid",
-                            self._clause_score("tf", [st[q.term]])
-                            .alias("score")))
+            return self._scored_tf(base.select("docid", "tf"), [st[q.term]])
 
         if isinstance(q, Synonym):
             st = self._resolve_stats(set(q.terms))
@@ -287,16 +322,14 @@ class Searcher:
                 return self._empty_scored()
             base = (ix.postings.filter(F.col("term").isin(list(q.terms)))
                     .groupBy("docid").agg(F.sum("tf").alias("tf")))
-            return (self._with_qdl(base)
-                    .select("docid",
-                            self._clause_score("tf", [(df_max, ttf_sum)])
-                            .alias("score")))
+            return self._scored_tf(base, [(df_max, ttf_sum)])
 
-        if isinstance(q, Phrase):
+        if isinstance(q, Phrase) and q.slop == 0:
+            # an exact phrase is PhrasePositions at offsets 0..n-1
+            q = PhrasePositions(q.terms, tuple(range(len(q.terms))))
+
+        if isinstance(q, (Phrase, PhrasePositions)):
             return self._scored_phrase(q)
-
-        if isinstance(q, PhrasePositions):
-            return self._scored_phrase_positions(q)
 
         if isinstance(q, MultiPhrase):
             return self._scored_multiphrase(q)
@@ -392,10 +425,7 @@ class Searcher:
             base = (self.ix.postings.filter(F.col("term") == q.term)
                     .select("docid", tf2.alias("tf"))
                     .filter(F.col("tf") > 0))
-            return (self._with_qdl(base)
-                    .select("docid",
-                            self._clause_score("tf", [st[q.term]])
-                            .alias("score")))
+            return self._scored_tf(base, [st[q.term]])
 
         raise TypeError(f"unsupported query node {type(q).__name__}")
 
@@ -429,6 +459,31 @@ class Searcher:
 
         return F.pandas_udf(f, "double")
 
+    def _positions(self, terms, optional=frozenset()) -> DataFrame:
+        """docid + pos0..pos{n-1}: the terms' position arrays joined on
+        docid, an inner join except for ``optional`` terms, which
+        left-join (null where absent). Every positional query runs on
+        this frame (TwoPhaseIterator shape: the docid intersection
+        first, positions checked only on the survivors)."""
+        joined = None
+        for i, t in enumerate(terms):
+            p = (self.ix.postings.filter(F.col("term") == t)
+                 .select("docid", F.col("positions").alias(f"pos{i}")))
+            joined = p if joined is None else joined.join(
+                p, "docid", "left" if t in optional else "inner")
+        return joined
+
+    @staticmethod
+    def _exact_freq(offsets) -> F.Column:
+        """Exact-phrase freq over pos0..posN: the pos0 entries x with
+        x + (offsets[i] - offsets[0]) in pos{i} for every i
+        (ExactPhraseMatcher)."""
+        conds = " AND ".join(
+            f"array_contains(pos{i}, x + {o - offsets[0]})"
+            for i, o in enumerate(offsets) if i)
+        freq = f"size(filter(pos0, x -> {conds}))" if conds else "size(pos0)"
+        return F.expr(freq).cast("long")
+
     def _scored_interval(self, q: Interval) -> DataFrame:
         """IntervalQuery: docid intersection over the source's required
         terms pre-filters candidates (TwoPhaseIterator shape); the
@@ -446,16 +501,11 @@ class Searcher:
         # required terms first: the base frame must be a required
         # posting list, optional terms (notContaining's small side)
         # left-join onto it
-        allt = req + sorted(all_terms(q.source) - set(req))
+        opt = all_terms(q.source) - set(req)
+        allt = req + sorted(opt)
         st = self._resolve_stats(set(allt))
         if any(st[t][0] == 0 for t in req):
             return self._empty_scored()
-        joined = None
-        for i, t in enumerate(allt):
-            p = (self.ix.postings.filter(F.col("term") == t)
-                 .select("docid", F.col("positions").alias(f"pos{i}")))
-            how = "inner" if t in req else "left"
-            joined = p if joined is None else joined.join(p, "docid", how)
         src, pivot, boost = q.source, float(q.pivot), float(q.boost)
 
         def f(*cols):
@@ -468,97 +518,34 @@ class Searcher:
             return pd.Series(out, dtype="float64")
 
         udf = F.pandas_udf(f, "double")
-        return (joined.select(
+        return (self._positions(allt, opt).select(
             "docid",
             udf(*[F.col(f"pos{i}") for i in range(len(allt))])
             .alias("score"))
             .filter(F.col("score") > 0.0))
 
-    def _scored_phrase(self, q: Phrase) -> DataFrame:
+    def _scored_phrase(self, q: Phrase | PhrasePositions) -> DataFrame:
+        """PhrasePositions (PhraseQuery.Builder.add(Term, position): term
+        i sits at base + positions[i] - positions[0]; an exact Phrase
+        arrives here with positions 0..n-1) or a sloppy Phrase."""
         terms = list(q.terms)
         st = self._resolve_stats(set(terms))
         if any(st[t][0] == 0 for t in terms):
             return self._empty_scored()
-        # per-term stats combined by the similarity: BM25 sums idfs in
-        # double (BM25Similarity.idfExplain(termStats[])); pluggable
-        # similarities follow MultiSimScorer (one addend per term)
-        stats_list = [st[t] for t in terms]
-        joined = None
-        for i, t in enumerate(terms):
-            p = (self.ix.postings.filter(F.col("term") == t)
-                 .select("docid", F.col("positions").alias(f"pos{i}")))
-            joined = p if joined is None else joined.join(p, "docid")
-        if q.slop > 0:
+        if isinstance(q, PhrasePositions):
+            tf = self._exact_freq(q.positions)
+        else:
             if len(set(terms)) != len(terms):
                 raise TypeError("sloppy phrase requires distinct terms "
                                 "(no-repeats case)")
-            udf = self._sloppy_udf(q.slop)
-            out = (joined.select(
-                "docid",
-                udf(*[F.col(f"pos{i}") for i in range(len(terms))])
-                .alias("tf"))
-                .filter(F.col("tf") > 0))
-        else:
-            conds = " AND ".join(
-                f"array_contains(pos{i}, x + {i})"
-                for i in range(1, len(terms)))
-            freq = (f"size(filter(pos0, x -> {conds}))" if conds
-                    else "size(pos0)")
-            out = (joined.select("docid",
-                                 F.expr(freq).cast("long").alias("tf"))
-                   .filter(F.col("tf") > 0))
-        return (self._with_qdl(out)
-                .select("docid",
-                        self._clause_score("tf", stats_list)
-                        .alias("score")))
-
-    def _scored_phrase_positions(self, q: PhrasePositions) -> DataFrame:
-        """Exact phrase with EXPLICIT positions (PhraseQuery.Builder
-        .add(Term, position)): term i must sit at base + (positions[i]
-        - positions[0]) — the gap-aware variant of _scored_phrase; the
-        consecutive case IS positions=(0,1,2,...)."""
-        terms = list(q.terms)
-        offs = [p - q.positions[0] for p in q.positions]
-        st = self._resolve_stats(set(terms))
-        if any(st[t][0] == 0 for t in terms):
-            return self._empty_scored()
-        stats_list = [st[t] for t in terms]
-        joined = None
-        for i, t in enumerate(terms):
-            p = (self.ix.postings.filter(F.col("term") == t)
-                 .select("docid", F.col("positions").alias(f"pos{i}")))
-            joined = p if joined is None else joined.join(p, "docid")
-        conds = " AND ".join(
-            f"array_contains(pos{i}, x + {offs[i]})"
-            for i in range(1, len(terms)))
-        freq = (f"size(filter(pos0, x -> {conds}))" if conds
-                else "size(pos0)")
-        out = (joined.select("docid",
-                             F.expr(freq).cast("long").alias("tf"))
+            tf = self._sloppy_udf(q.slop)(
+                *[F.col(f"pos{i}") for i in range(len(terms))])
+        out = (self._positions(terms).select("docid", tf.alias("tf"))
                .filter(F.col("tf") > 0))
-        return (self._with_qdl(out)
-                .select("docid",
-                        self._clause_score("tf", stats_list)
-                        .alias("score")))
-
-    def _expand_phrase_wildcard(self, q: PhraseWildcard) -> MultiPhrase:
-        """Expand pattern slots against the term dictionary
-        (PhraseWildcardQuery.java:63 walks a TermsEnum per multi-term
-        slot with a maxMultiTermExpansions cap). One bounded lookup per
-        pattern slot — ≤ max_expansions tiny rows to the driver, the
-        same driver-side rewrite every Lucene multi-term query performs
-        at weight-construction time, independent of corpus size."""
-        slots = []
-        for s, is_pat in zip(q.slots, q.pattern_slots()):
-            if not is_pat:
-                slots.append((s,))
-                continue
-            rows = (self.ix.term_stats
-                    .filter(F.col("term").like(wildcard_to_like(s)))
-                    .select("term").orderBy("term")
-                    .limit(int(q.max_expansions)).collect())
-            slots.append(tuple(r["term"] for r in rows))
-        return MultiPhrase(tuple(slots))
+        # per-term stats combined by the similarity: BM25 sums idfs in
+        # double (BM25Similarity.idfExplain(termStats[])); pluggable
+        # similarities follow MultiSimScorer (one addend per term)
+        return self._scored_tf(out, [st[t] for t in terms])
 
     def _scored_multiphrase(self, q: MultiPhrase) -> DataFrame:
         all_terms = [t for slot in q.slots for t in slot]
@@ -578,41 +565,23 @@ class Searcher:
                      F.flatten(F.collect_list("positions"))))
                      .alias(f"pos{i}")))
             joined = p if joined is None else joined.join(p, "docid")
-        conds = " AND ".join(
-            f"array_contains(pos{i}, x + {i})"
-            for i in range(1, len(q.slots)))
-        freq = f"size(filter(pos0, x -> {conds}))" if conds else "size(pos0)"
-        out = (joined.select("docid", F.expr(freq).cast("long").alias("tf"))
-               .filter(F.col("tf") > 0))
-        return (self._with_qdl(out)
-                .select("docid",
-                        self._clause_score("tf", stats_list)
-                        .alias("score")))
+        out = (joined.select(
+            "docid", self._exact_freq(range(len(q.slots))).alias("tf"))
+            .filter(F.col("tf") > 0))
+        return self._scored_tf(out, stats_list)
 
-    def _span_near_expr(self, q: SpanNear) -> str:
-        """Nested-lambda EXISTS over per-term position arrays pos0..posk:
-        ordered positions, total gap <= slop."""
+    @staticmethod
+    def _span_near_expr(q: SpanNear) -> str:
+        """Predicate on a start position a0 of pos0: nested-lambda
+        EXISTS over pos1..pos{k-1} for ordered positions with total gap
+        <= slop."""
         k = len(q.terms)
         inner = (f"a{k - 1} > a{k - 2} AND "
                  f"a{k - 1} - a0 - {k - 1} <= {q.slop}")
         expr = f"exists(pos{k - 1}, a{k - 1} -> {inner})"
         for i in range(k - 2, 0, -1):
             expr = f"exists(pos{i}, a{i} -> a{i} > a{i - 1} AND {expr})"
-        return f"exists(pos0, a0 -> {expr})"
-
-    def _matching_span(self, q: SpanNear) -> DataFrame:
-        dfs = self._resolve_dfs(set(q.terms))
-        if any(dfs[t] == 0 for t in q.terms):
-            return (self.ix.docs.select("docid").filter(F.lit(False)))
-        joined = None
-        for i, t in enumerate(q.terms):
-            p = (self.ix.postings.filter(F.col("term") == t)
-                 .select("docid", F.col("positions").alias(f"pos{i}")))
-            joined = p if joined is None else joined.join(p, "docid")
-        if len(q.terms) == 1:
-            return joined.select("docid")
-        return (joined.filter(F.expr(self._span_near_expr(q)))
-                .select("docid"))
+        return expr
 
     def _scored_bool(self, q: Bool) -> DataFrame:
         n_clauses = (len(q.must) + len(q.should) + len(q.must_not)
@@ -662,9 +631,6 @@ class Searcher:
 
     # -- non-scoring match sets ---------------------------------------------
 
-    def _term_pred(self, q: Query):
-        return term_predicate(q)
-
     def matching(self, q: Query) -> DataFrame:
         """(docid) distinct — FILTER / MUST_NOT / constant-score contexts."""
         q = rewrite(q)
@@ -674,7 +640,7 @@ class Searcher:
         return self._matching_uncached(q)
 
     def _matching_uncached(self, q: Query) -> DataFrame:
-        pred = self._term_pred(q)
+        pred = term_predicate(q)
         if pred is not None:
             return (self.ix.postings.filter(pred)
                     .select("docid").distinct())
@@ -682,7 +648,8 @@ class Searcher:
             return (self.ix.postings.filter(F.col("term") == q.term)
                     .select("docid"))
         if isinstance(q, SpanNear):
-            return self._matching_span(q)
+            return (self._span_starts(q).filter(F.size("starts") > 0)
+                    .select("docid"))
         if isinstance(q, SpanOr):
             # SpanOrQuery: union of clause match sets
             parts = [self.matching(c) for c in q.clauses]
@@ -713,7 +680,8 @@ class Searcher:
 
     def _span_starts(self, q: Query) -> DataFrame | None:
         """(docid, starts array<long>) of span start positions, or None
-        when the node is not a span primitive. Used by SpanNot."""
+        when the node is not a span primitive. Used by SpanNear
+        matching and SpanNot."""
         if isinstance(q, Term):
             return (self.ix.postings.filter(F.col("term") == q.term)
                     .select("docid", F.col("positions").alias("starts")))
@@ -723,23 +691,10 @@ class Searcher:
                 return (self.ix.docs.select("docid").filter(F.lit(False))
                         .select("docid",
                                 F.expr("array()").alias("starts")))
-            joined = None
-            for i, t in enumerate(q.terms):
-                p = (self.ix.postings.filter(F.col("term") == t)
-                     .select("docid", F.col("positions").alias(f"pos{i}")))
-                joined = p if joined is None else joined.join(p, "docid")
-            k = len(q.terms)
-            if k == 1:
-                return joined.select(
-                    "docid", F.col("pos0").alias("starts"))
-            inner = (f"a{k - 1} > a{k - 2} AND "
-                     f"a{k - 1} - a0 - {k - 1} <= {q.slop}")
-            expr = f"exists(pos{k - 1}, a{k - 1} -> {inner})"
-            for i in range(k - 2, 0, -1):
-                expr = f"exists(pos{i}, a{i} -> a{i} > a{i - 1} AND {expr})"
-            return joined.select(
-                "docid",
-                F.expr(f"filter(pos0, a0 -> {expr})").alias("starts"))
+            starts = ("pos0" if len(q.terms) == 1 else
+                      f"filter(pos0, a0 -> {self._span_near_expr(q)})")
+            return self._positions(q.terms).select(
+                "docid", F.expr(starts).alias("starts"))
         return None
 
     def _matching_span_not(self, q: SpanNot) -> DataFrame:
@@ -757,14 +712,13 @@ class Searcher:
 
     # -- top-k ----------------------------------------------------------------
 
-    def topk(self, q: Query, k: int = 10,
-             round_digits: int = 6) -> DataFrame:
+    def topk(self, q: Query, k: int = 10) -> DataFrame:
         """Top-k by (rounded score DESC, docid ASC) — rounding first makes
         the ordering identical between engine and DuckDB oracle at ulp
         noise levels; ties inside a rounded score break by docid exactly
         like HitQueue.lessThan."""
         s = self.scored(q).select(
-            "docid", F.round(F.col("score"), round_digits).alias("score"))
+            "docid", F.round(F.col("score"), 6).alias("score"))
         return (s.orderBy(F.desc("score"), F.asc("docid"))
                 .limit(k)
                 .select(F.col("docid").alias("doc_id"), "score"))
@@ -812,207 +766,3 @@ class Searcher:
                     for x in q.must_not],
             }
         return node
-
-    # -- Lucene float32 bit-parity mode --------------------------------------
-
-    def _score32_udf(self):
-        """Vectorized pandas UDF evaluating the reference's exact float32
-        BM25 (BM25Similarity.java:222-235): per-row weight column so one
-        UDF serves all terms; the 256-entry normInverse cache is baked
-        from the index's frozen avgdl."""
-        import numpy as np
-        import pandas as pd
-
-        from .bm25 import avgdl32, norm_inverse_cache, score32
-
-        cache = norm_inverse_cache(
-            avgdl32(self.ix.sum_ttf, self.ix.doc_count))
-
-        def _f(tf, nb, w):
-            weights = w.to_numpy(dtype=np.float32)
-            return pd.Series(
-                score32(tf.to_numpy(), nb.to_numpy(), weights, cache))
-
-        return F.pandas_udf(_f, "float")
-
-    def scored32(self, q: Query) -> DataFrame:
-        """(docid, score float32) with Lucene-exact arithmetic.
-
-        Clause sums run in float64 (exact for <=2^29 float32 addends, so
-        order-independent and bit-equal to the reference's double
-        accumulation in ConjunctionScorer/DisjunctionSumScorer) and are
-        narrowed back to float32.
-        """
-        import numpy as np
-
-        from .bm25 import idf32
-
-        q = rewrite(q)
-        udf = self._score32_udf()
-        ix = self.ix
-
-        def term32(term: str, boost: float = 1.0) -> DataFrame:
-            dfs = self._resolve_dfs({term})
-            if dfs[term] == 0:
-                return self._empty_scored32()
-            w = float(np.float32(boost) *
-                      idf32(dfs[term], ix.doc_count))
-            base = (ix.postings.filter(F.col("term") == term)
-                    .select("docid", "tf")
-                    .join(ix.docs.select("docid", "norm_byte"), "docid"))
-            return base.select(
-                "docid",
-                udf(F.col("tf"), F.col("norm_byte"),
-                    F.lit(w).cast("float")).alias("score"))
-
-        if isinstance(q, Term):
-            return term32(q.term)
-        if isinstance(q, Synonym):
-            # pseudo-term: freq = sum of tfs, idf from max df
-            # (SynonymQuery.java:203-219)
-            dfs = self._resolve_dfs(set(q.terms))
-            df_max = max(dfs.values(), default=0)
-            if df_max == 0:
-                return self._empty_scored32()
-            w = float(idf32(df_max, ix.doc_count))
-            base = (ix.postings.filter(F.col("term").isin(list(q.terms)))
-                    .groupBy("docid").agg(F.sum("tf").alias("tf"))
-                    .join(ix.docs.select("docid", "norm_byte"), "docid"))
-            return base.select(
-                "docid",
-                udf(F.col("tf"), F.col("norm_byte"),
-                    F.lit(w).cast("float")).alias("score"))
-        if isinstance(q, Boost):
-            if isinstance(q.query, Term):
-                return term32(q.query.term, q.boost)
-            sub = self.scored32(q.query)
-            return sub.select(
-                "docid",
-                F.expr(f"CAST(CAST(score AS DOUBLE) * "
-                       f"CAST({float(np.float32(q.boost))!r} AS FLOAT) "
-                       f"AS FLOAT)").alias("score"))
-        if isinstance(q, Phrase):
-            # phrase freq via the double-mode plan, then float32 scoring
-            # with idf = (float) double-sum of per-term float32 idfs
-            dfs = self._resolve_dfs(set(q.terms))
-            if any(dfs[t] == 0 for t in q.terms):
-                return self._empty_scored32()
-            idf_d = float(np.float32(sum(
-                float(idf32(dfs[t], ix.doc_count)) for t in q.terms)))
-            joined = None
-            for i, t in enumerate(q.terms):
-                p = (ix.postings.filter(F.col("term") == t)
-                     .select("docid", F.col("positions").alias(f"pos{i}")))
-                joined = p if joined is None else joined.join(p, "docid")
-            if q.slop > 0:
-                import pandas as pd
-
-                from .sloppy import sloppy_freq_f32, sloppy_match_lengths
-                slop = q.slop
-
-                def f32freq(*cols):
-                    return pd.Series(
-                        [float(sloppy_freq_f32(
-                            sloppy_match_lengths(list(row), slop)))
-                         for row in zip(*cols)], dtype="float64")
-
-                out = (joined.select(
-                    "docid",
-                    F.pandas_udf(f32freq, "double")(
-                        *[F.col(f"pos{i}")
-                          for i in range(len(q.terms))]).alias("tf"))
-                    .filter(F.col("tf") > 0)
-                    .join(ix.docs.select("docid", "norm_byte"), "docid"))
-            else:
-                conds = " AND ".join(
-                    f"array_contains(pos{i}, x + {i})"
-                    for i in range(1, len(q.terms)))
-                freq = (f"size(filter(pos0, x -> {conds}))" if conds
-                        else "size(pos0)")
-                out = (joined.select("docid",
-                                     F.expr(freq).cast("long").alias("tf"))
-                       .filter(F.col("tf") > 0)
-                       .join(ix.docs.select("docid", "norm_byte"), "docid"))
-            return out.select(
-                "docid", udf(F.col("tf"), F.col("norm_byte"),
-                             F.lit(idf_d).cast("float")).alias("score"))
-        if isinstance(q, DisMax):
-            # DisjunctionMaxScorer (SEARCH/DisjunctionMaxScorer.java):
-            # float max; the other clauses' float scores sum in DOUBLE;
-            # result = (float)(max + tieBreak * otherSum). f32 clause
-            # values are exact in f64, so MAX/SUM below reproduce the
-            # reference bit-for-bit (tieBreak narrowed to float32 first)
-            parts = [self.scored32(c) for c in q.clauses]
-            u = reduce(DataFrame.unionAll, parts)
-            tb = float(np.float32(q.tiebreak))
-            agg = u.groupBy("docid").agg(
-                F.expr("MAX(CAST(score AS DOUBLE))").alias("mx"),
-                F.expr("SUM(CAST(score AS DOUBLE))").alias("sm"))
-            return agg.select(
-                "docid",
-                F.expr(f"CAST(mx + CAST({tb!r} AS DOUBLE) * (sm - mx) "
-                       f"AS FLOAT)").alias("score"))
-        if isinstance(q, (Prefix, Wildcard, TermRange, TermInSet, Fuzzy,
-                          Regexp, SpanNear, SpanOr, SpanNot, FieldExists)):
-            # constant-score rewrite: every matching doc scores 1.0f
-            return self.matching(q).select(
-                "docid", F.lit(1.0).cast("float").alias("score"))
-        if isinstance(q, ConstantScore):
-            return self.matching(q.query).select(
-                "docid",
-                F.lit(float(np.float32(q.score))).cast("float")
-                .alias("score"))
-        if isinstance(q, Bool):
-            musts = [self.scored32(m) for m in q.must]
-            base = None
-            if musts:
-                base = musts[0].select("docid", F.col("score").alias("s0"))
-                for i, m in enumerate(musts[1:], start=1):
-                    base = base.join(
-                        m.select("docid", F.col("score").alias(f"s{i}")),
-                        "docid")
-                total = " + ".join(
-                    f"CAST(s{i} AS DOUBLE)" for i in range(len(musts)))
-                base = base.select(
-                    "docid", F.expr(f"CAST({total} AS FLOAT)").alias("score"))
-            if q.should:
-                sh = reduce(DataFrame.unionAll,
-                            [self.scored32(s) for s in q.should])
-                sh = sh.groupBy("docid").agg(
-                    F.expr("CAST(SUM(CAST(score AS DOUBLE)) AS FLOAT)")
-                    .alias("opt"), F.count("*").alias("nm"))
-                if base is not None:
-                    base = base.join(sh, "docid", "left")
-                    if q.minimum_should_match > 0:
-                        base = base.filter(
-                            F.coalesce(F.col("nm"), F.lit(0))
-                            >= q.minimum_should_match)
-                    base = base.select(
-                        "docid",
-                        F.expr("CAST(CAST(score AS DOUBLE) + "
-                               "COALESCE(CAST(opt AS DOUBLE), 0D) AS FLOAT)")
-                        .alias("score"))
-                else:
-                    msm = max(q.minimum_should_match, 1)
-                    base = (sh.filter(F.col("nm") >= msm)
-                            .select("docid", F.col("opt").alias("score")))
-            if base is None:
-                raise ValueError("Bool query with no positive clauses")
-            for f in q.filter:
-                base = base.join(self.matching(f), "docid", "left_semi")
-            for x in q.must_not:
-                base = base.join(self.matching(x), "docid", "left_anti")
-            return base
-        raise TypeError(
-            f"float32 mode does not support {type(q).__name__} yet")
-
-    def _empty_scored32(self) -> DataFrame:
-        return (self.ix.docs.select("docid").filter(F.lit(False))
-                .select("docid", F.lit(0.0).cast("float").alias("score")))
-
-    def topk32(self, q: Query, k: int = 10) -> DataFrame:
-        """Lucene-parity top-k: float32 scores, ties broken by docid ASC
-        (HitQueue.lessThan)."""
-        return (self.scored32(q)
-                .orderBy(F.desc("score"), F.asc("docid")).limit(k)
-                .select(F.col("docid").alias("doc_id"), "score"))

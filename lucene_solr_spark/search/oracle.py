@@ -596,18 +596,18 @@ FROM sfreq f JOIN docs dd ON dd.docid = f.docid WHERE f.tf > 0"""
 
     # -- entry points ------------------------------------------------------------
 
-    def topk_sql(self, q: Query, k: int = 10, round_digits: int = 6) -> str:
+    def topk_sql(self, q: Query, k: int = 10) -> str:
         q = rewrite(q)
         return (
             f"WITH {self.base_ctes()} "
-            f"SELECT docid AS doc_id, ROUND(score, {round_digits}) AS score "
+            f"SELECT docid AS doc_id, ROUND(score, 6) AS score "
             f"FROM ({self.scored(q)}) fin "
-            f"ORDER BY ROUND(score, {round_digits}) DESC, docid ASC "
+            f"ORDER BY ROUND(score, 6) DESC, docid ASC "
             f"LIMIT {k}")
 
     def common_terms_topk_sql(self, terms: tuple,
                               max_term_frequency: float = 0.01,
-                              k: int = 10, round_digits: int = 6) -> str:
+                              k: int = 10) -> str:
         """Standalone SQL mirror of Searcher.common_terms + topk
         (CommonTermsQuery.java:158-219).  The df classification runs
         inside SQL (the oracle cannot freeze stats at compile time), so
@@ -648,11 +648,11 @@ cagg AS (
          SUM(s) AS score
   FROM csc GROUP BY docid
 )
-SELECT docid AS doc_id, ROUND(score, {round_digits}) AS score
+SELECT docid AS doc_id, ROUND(score, 6) AS score
 FROM cagg, qstat
 WHERE (qstat.nlowq > 0 AND cagg.nlow >= 1)
    OR (qstat.nlowq = 0 AND cagg.nhigh = qstat.nhighq)
-ORDER BY ROUND(score, {round_digits}) DESC, docid ASC
+ORDER BY ROUND(score, 6) DESC, docid ASC
 LIMIT {k}"""
 
     def count_sql(self, q: Query) -> str:

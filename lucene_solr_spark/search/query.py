@@ -473,11 +473,11 @@ def rewrite(q: Query) -> Query:
 
 
 def collect_terms(q: Query) -> set:
-    """All literal terms referenced by the tree (for stats resolution)."""
+    """All literal terms referenced by the tree (for stats resolution;
+    TermInSet is a multi-term query, resolved by dictionary expansion)."""
     if isinstance(q, Term):
         return {q.term}
-    if isinstance(q, (Phrase, PhrasePositions, Synonym, TermInSet,
-                      SpanNear)):
+    if isinstance(q, (Phrase, PhrasePositions, Synonym, SpanNear)):
         return set(q.terms)
     if isinstance(q, MultiPhrase):
         return {t for slot in q.slots for t in slot}

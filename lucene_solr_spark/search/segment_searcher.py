@@ -26,13 +26,16 @@ reaches the Parquet scan (term-sorted row groups prune), and the
 
 Scores are float64 in the same operation order as the SQL oracle
 (bm25.score_sql), so segment-path results hash-match the DuckDB oracle
-exactly like the naive path.
+exactly like the naive path. The kernel's f32 mode (``topk32``) is the
+repo's one Lucene-exact float32 scorer (BM25Similarity.java:184-235);
+tests/test_lucene_parity.py pins it to an independent numpy oracle.
+The weight step (term stats, idf, multi-term expansion) is
+engine.TermWeights, shared with the naive engine.
 """
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -41,11 +44,11 @@ from pyspark.sql import functions as F
 from .. import B, K1
 from ..codecs import blocks as blk
 from ..index.segments import SegmentIndex
+from .engine import TermWeights, TooManyClauses, term_predicate
 from .query import (
-    Bool, Boost, ConstantScore, DisMax, Fuzzy, MatchAll, MultiPhrase,
-    Phrase, PhraseWildcard, Prefix, Query, Regexp, SpanNear, Synonym,
-    Term, TermInSet,
-    TermRange, Wildcard, rewrite,
+    Bool, Boost, ConstantScore, DisMax, Fuzzy, MultiPhrase, Phrase,
+    PhraseWildcard, Prefix, Query, Regexp, SpanNear, Synonym, Term,
+    TermInSet, TermRange, Wildcard, collect_terms, rewrite,
 )
 
 OUT_SCHEMA = "docid long, score double"
@@ -125,8 +128,6 @@ class SegSpec:
     combine: str = "sum"      # 'sum' (Bool) | 'dismax' (DisjunctionMax)
     tiebreak: float = 0.0     # dismax only
     k: int = 10
-    k1: float = K1
-    b: float = B
     avgdl: float = 1.0
     emit_all: bool = False    # True -> all matches (scored()), no pruning
     prune: bool = True        # False -> exhaustive (CheckHits oracle mode)
@@ -144,12 +145,12 @@ class SegSpec:
         return all(c.kind == "term" for c in self.clauses)
 
 
-def _score_f64(tf: np.ndarray, qdl: np.ndarray, w: float, k1: float,
-               b: float, avgdl: float) -> np.ndarray:
+def _score_f64(tf: np.ndarray, qdl: np.ndarray, w: float,
+               avgdl: float) -> np.ndarray:
     """(w * tf) / (tf + k1*((1-b) + (b*qdl)/avgdl)) in float64, operation
     order identical to bm25.score_sql."""
     tf = tf.astype(np.float64)
-    denom = tf + k1 * ((1.0 - b) + (b * qdl.astype(np.float64)) / avgdl)
+    denom = tf + K1 * ((1.0 - B) + (B * qdl.astype(np.float64)) / avgdl)
     return (w * tf) / denom
 
 
@@ -165,9 +166,9 @@ def _score_dispatch(spec, tf: np.ndarray, qdl: np.ndarray,
     float64-widened float32 so downstream accumulation (float64 sums,
     then narrowed) matches the reference's double accumulation."""
     if not spec.f32:
-        return _score_f64(tf, qdl, w, spec.k1, spec.b, spec.avgdl)
+        return _score_f64(tf, qdl, w, spec.avgdl)
     from ..codecs.smallfloat import int_to_byte4_np
-    cache = _f32_cache(spec)
+    cache = _f32_cache(spec.avgdl)
     nb = int_to_byte4_np(np.asarray(qdl, dtype=np.int64))
     from .bm25 import score32
     return score32(tf, nb, np.float32(w), cache).astype(np.float64)
@@ -176,21 +177,20 @@ def _score_dispatch(spec, tf: np.ndarray, qdl: np.ndarray,
 _F32_CACHE: dict = {}
 
 
-def _f32_cache(spec):
-    key = (spec.k1, spec.b, spec.avgdl)
-    if key not in _F32_CACHE:
+def _f32_cache(avgdl: float):
+    if avgdl not in _F32_CACHE:
         from .bm25 import norm_inverse_cache
-        _F32_CACHE[key] = norm_inverse_cache(np.float32(spec.avgdl))
-    return _F32_CACHE[key]
+        _F32_CACHE[avgdl] = norm_inverse_cache(np.float32(avgdl))
+    return _F32_CACHE[avgdl]
 
 
-def _bound(w: float, max_tf: np.ndarray, min_qdl: np.ndarray, k1: float,
-           b: float, avgdl: float) -> np.ndarray:
+def _bound(w: float, max_tf: np.ndarray, min_qdl: np.ndarray,
+           avgdl: float) -> np.ndarray:
     """Per-block upper bound: score is monotone ↑tf, ↓qdl, so
     score(max_tf, min_qdl) dominates every doc in the block
     (MaxScoreCache.computeMaxScore over competitive impacts)."""
     return _score_f64(np.asarray(max_tf, dtype=np.int64),
-                      np.asarray(min_qdl, dtype=np.int64), w, k1, b, avgdl)
+                      np.asarray(min_qdl, dtype=np.int64), w, avgdl)
 
 
 
@@ -477,6 +477,28 @@ def make_kernel(spec: SegSpec):
         def qdl_of(docids: np.ndarray) -> np.ndarray:
             return qdl_blob[docids - docid_min].astype(np.int64)
 
+        def any_of(tset, pred):
+            """Sorted docids holding a term of ``tset`` or, for a
+            non-enumerated multi-term node ``pred``, any of this
+            segment's (already scan-filtered) terms it matches; None
+            when no such term is here."""
+            if pred is not None:
+                match = py_term_matcher(pred)
+                names = [t for t in tds if match(t)]
+            else:
+                names = [t for t in tset if t in tds]
+            if not names:
+                return None
+            return np.unique(np.concatenate(
+                [tds[t].decode_all()[0] for t in names]))
+
+        # FILTER sets (None: the filter matches nothing here) and
+        # MUST_NOT exclusion sets, decoded once per segment
+        filt = [any_of(tset, pred) for tset, pred in spec.filters]
+        excl = [x for x in [any_of(spec.must_not, None)]
+                + [any_of((), pred) for pred in spec.must_not_preds]
+                if x is not None]
+
         def term_scores(term, w):
             td = tds.get(term)
             if td is None:
@@ -527,19 +549,11 @@ def make_kernel(spec: SegSpec):
             if c.kind == "constant":
                 # multi-term under the constant-score rewrite
                 # (MultiTermQueryConstantScoreWrapper): any-of match,
-                # fixed score c.weight; non-enumerated clauses re-apply
-                # the dictionary predicate python-side over this
-                # segment's (already scan-filtered) terms
-                if c.pred is not None:
-                    match = py_term_matcher(c.pred)
-                    names = [t for t in tds if match(t)]
-                else:
-                    names = [t for t in c.terms if t in tds]
-                parts = [tds[t].decode_all()[0] for t in names]
-                if not parts:
+                # fixed score c.weight
+                uniq = any_of(c.terms, c.pred)
+                if uniq is None:
                     return (np.empty(0, dtype=np.int64),
                             np.empty(0, dtype=np.float64))
-                uniq = np.unique(np.concatenate(parts))
                 return uniq, np.full(uniq.size, c.weight, dtype=np.float64)
             if c.kind == "spannear":
                 if any(t not in tds for t in c.terms):
@@ -563,29 +577,10 @@ def make_kernel(spec: SegSpec):
                 # double (DisjunctionSumScorer/ConjunctionScorer)
                 scores = scores.astype(np.float32).astype(np.float64)
             keep = np.ones(docids.size, dtype=bool)
-            for tset, fpred in spec.filters:
-                # each filter = any-of term set (multi-term FILTER
-                # clauses expand to their matching dictionary terms, or
-                # carry the predicate when past maxClauseCount)
-                if fpred is not None:
-                    match = py_term_matcher(fpred)
-                    names = [t for t in tds if match(t)]
-                else:
-                    names = [t for t in tset if t in tds]
-                parts = [tds[t].decode_all()[0] for t in names]
-                if not parts:
-                    keep[:] = False
-                    break
-                keep &= np.isin(docids, np.concatenate(parts))
-            for t in spec.must_not:
-                td = tds.get(t)
-                if td is not None:
-                    keep &= ~np.isin(docids, td.decode_all()[0])
-            for xpred in spec.must_not_preds:
-                match = py_term_matcher(xpred)
-                for t in tds:
-                    if match(t):
-                        keep &= ~np.isin(docids, tds[t].decode_all()[0])
+            for fs in filt:
+                keep &= False if fs is None else np.isin(docids, fs)
+            for xs in excl:
+                keep &= ~np.isin(docids, xs)
             docids, scores = docids[keep], scores[keep]
             if not spec.emit_all and docids.size > spec.k:
                 # per-segment top-k with the FINAL ordering key:
@@ -651,8 +646,7 @@ def make_kernel(spec: SegSpec):
                             np.empty(0, dtype=np.float64))
         bounds = []
         for c, td in active:
-            b = _bound(c.weight, td.max_tf, td.min_qdl, spec.k1,
-                       spec.b, spec.avgdl)
+            b = _bound(c.weight, td.max_tf, td.min_qdl, spec.avgdl)
             if spec.f32:
                 # float32 rounding can exceed the float64 bound by ulps
                 b = b * (1.0 + 1e-5) + 1e-7
@@ -676,28 +670,13 @@ def make_kernel(spec: SegSpec):
         if n_req:
             ub[req_cover < n_req] = -np.inf
         order = np.argsort(-ub)
-        # decode exclusion / filter sets once: θ must only ever be fed by
-        # docs that survive MUST_NOT / FILTER, otherwise pruning is not
-        # score-safe (a doc excluded later would have inflated θ)
-        excl = [tds[t].decode_all()[0] for t in spec.must_not if t in tds]
-        for xpred in spec.must_not_preds:
-            match = py_term_matcher(xpred)
-            excl.extend(tds[t].decode_all()[0] for t in tds if match(t))
-        if deleted is not None:
-            # live docs: deleted docs must not feed theta either
-            excl.append(deleted)
-        filt = []
-        for tset, fpred in spec.filters:
-            if fpred is not None:
-                match = py_term_matcher(fpred)
-                names = [t for t in tds if match(t)]
-            else:
-                names = [t for t in tset if t in tds]
-            parts = [tds[t].decode_all()[0] for t in names]
-            if not parts:
-                return finalize(np.empty(0, dtype=np.int64),
-                                np.empty(0, dtype=np.float64))
-            filt.append(np.unique(np.concatenate(parts)))
+        # θ must only ever be fed by docs that survive MUST_NOT / FILTER
+        # and live docs, otherwise pruning is not score-safe (a doc
+        # excluded later would have inflated θ)
+        if any(fs is None for fs in filt):
+            return finalize(np.empty(0, dtype=np.int64),
+                            np.empty(0, dtype=np.float64))
+        live_excl = excl if deleted is None else excl + [deleted]
         cand_d: list = []
         cand_s: list = []
         theta = -np.inf
@@ -768,7 +747,7 @@ def make_kernel(spec: SegSpec):
             for fs in filt:
                 sel = np.isin(uniq, fs)
                 uniq, totv = uniq[sel], totv[sel]
-            for xs in excl:
+            for xs in live_excl:
                 sel = ~np.isin(uniq, xs)
                 uniq, totv = uniq[sel], totv[sel]
             if uniq.size == 0:
@@ -800,13 +779,33 @@ def make_kernel(spec: SegSpec):
 # driver-side searcher
 # ---------------------------------------------------------------------------
 
-class SegmentSearcher:
+# store path -> ((session, commit generation), persisted live-docs frame);
+# process-wide like Spark's own cache, because every query may open a
+# fresh reader of the same commit
+_LIVE_DOCS: dict = {}
+
+
+def _live_docs_frame(six: SegmentIndex) -> DataFrame:
+    """The commit's (seg_id, del_ids) frame, persisted once per store:
+    fresh readers of one commit share it, and a newer commit's frame
+    replaces (unpersists) the older one instead of piling up beside it."""
+    key = (six.spark, six.generation)
+    held = _LIVE_DOCS.get(six.path)
+    if held is not None and held[0] == key:
+        return held[1]
+    if held is not None and held[0][0] is six.spark:
+        held[1].unpersist()
+    frame = six.deleted_by_segment().persist()
+    _LIVE_DOCS[six.path] = (key, frame)
+    return frame
+
+
+class SegmentSearcher(TermWeights):
     """Query engine over an on-disk SegmentIndex (WAND path)."""
 
     def __init__(self, six: SegmentIndex):
+        super().__init__(six)
         self.six = six
-        self._df_cache: dict = {}
-        self._del_df = None
 
     def _deleted_df(self):
         """(seg_id, del_ids) live-docs DataFrame, joined into the kernel
@@ -815,57 +814,7 @@ class SegmentSearcher:
         has no deletes."""
         if not self.six.del_gens:
             return None
-        if self._del_df is None:
-            self._del_df = self.six.deleted_by_segment().persist()
-        return self._del_df
-
-    def _resolve_dfs(self, terms) -> dict:
-        missing = [t for t in terms if t not in self._df_cache]
-        if missing:
-            rows = (self.six.term_stats
-                    .filter(F.col("term").isin(missing))
-                    .select("term", "df").collect())
-            found = {r["term"]: int(r["df"]) for r in rows}
-            for t in missing:
-                self._df_cache[t] = found.get(t, 0)
-        return {t: self._df_cache[t] for t in terms}
-
-    def idf(self, df: int) -> float:
-        n = self.six.doc_count
-        return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-
-    def _expand_terms(self, q: Query) -> tuple:
-        """Driver-side term-dictionary expansion for multi-term queries
-        (MultiTermQuery.rewrite / ScoringRewrite): one filtered scan of
-        the tiny term_stats table, capped at maxClauseCount. Returns the
-        matching dictionary terms."""
-        from .engine import MAX_CLAUSE_COUNT, TooManyClauses, term_predicate
-        pred = term_predicate(q)
-        if pred is None:
-            raise TypeError(f"not a multi-term query: {type(q).__name__}")
-        rows = (self.six.term_stats.filter(pred)
-                .select("term").limit(MAX_CLAUSE_COUNT + 1).collect())
-        if len(rows) > MAX_CLAUSE_COUNT:
-            raise TooManyClauses(
-                f"{type(q).__name__} expands past {MAX_CLAUSE_COUNT}")
-        return tuple(sorted(r["term"] for r in rows))
-
-    def _expand_phrase_wildcard(self, q: PhraseWildcard) -> MultiPhrase:
-        """PhraseWildcardQuery.java:63 rewrite against this store's
-        term dictionary — identical cap/order to
-        engine._expand_phrase_wildcard, so naive == pruned."""
-        from .engine import wildcard_to_like
-        slots = []
-        for s, is_pat in zip(q.slots, q.pattern_slots()):
-            if not is_pat:
-                slots.append((s,))
-                continue
-            rows = (self.six.term_stats
-                    .filter(F.col("term").like(wildcard_to_like(s)))
-                    .select("term").orderBy("term")
-                    .limit(int(q.max_expansions)).collect())
-            slots.append(tuple(r["term"] for r in rows))
-        return MultiPhrase(tuple(slots))
+        return _live_docs_frame(self.six)
 
     def _expand_or_pred(self, q: Query) -> tuple:
         """(terms, pred): enumerate the dictionary terms when the set is
@@ -874,9 +823,8 @@ class SegmentSearcher:
         scan pushes the Spark predicate and the kernel re-applies it
         python-side). Fuzzy stays enumerated (its neighborhood is
         edit-bounded; Lucene's TopTermsRewrite caps it the same way)."""
-        from .engine import TooManyClauses
         try:
-            return self._expand_terms(q), None
+            return self.expand_terms(q), None
         except TooManyClauses:
             if py_term_matcher(q) is None:
                 raise
@@ -887,6 +835,7 @@ class SegmentSearcher:
     def compile(self, q: Query, k: int, emit_all: bool = False,
                 prune: bool = True, f32: bool = False) -> SegSpec:
         q = rewrite(q)
+        self._resolve_stats(collect_terms(q))
         clauses: list = []
         must_not: list = []
         filters: list = []
@@ -1074,7 +1023,6 @@ class SegmentSearcher:
         return out
 
     def _segment_frame(self, spec: SegSpec) -> DataFrame:
-        from .engine import term_predicate
         terms = self._all_terms(spec)
         cond = F.col("term").isin(terms)
         for node in self._all_preds(spec):
@@ -1104,10 +1052,9 @@ class SegmentSearcher:
         return df.groupBy("seg_id").applyInPandas(
             make_kernel(spec), OUT_SCHEMA)
 
-    def topk(self, q: Query, k: int = 10, round_digits: int = 6,
-             prune: bool = True) -> DataFrame:
+    def topk(self, q: Query, k: int = 10, prune: bool = True) -> DataFrame:
         s = self.candidates(q, k, prune=prune).select(
-            "docid", F.round(F.col("score"), round_digits).alias("score"))
+            "docid", F.round(F.col("score"), 6).alias("score"))
         return (s.orderBy(F.desc("score"), F.asc("docid")).limit(k)
                 .select(F.col("docid").alias("doc_id"), "score"))
 
@@ -1118,7 +1065,8 @@ class SegmentSearcher:
     def topk32(self, q: Query, k: int = 10, prune: bool = True) -> DataFrame:
         """Lucene-parity top-k over packed segments: float32 BM25 with
         block-max WAND pruning, ties by docid ASC (HitQueue.lessThan).
-        Matches Searcher.topk32 (engine.py) bit for bit."""
+        The repo's only float32 scorer; tests/test_lucene_parity.py
+        checks it bit for bit against an independent numpy oracle."""
         s = self.candidates(q, k, prune=prune, f32=True)
         return (s.orderBy(F.desc("score"), F.asc("docid")).limit(k)
                 .select(F.col("docid").alias("doc_id"),

@@ -35,3 +35,14 @@ def xs_transcripts(spark):
 def xs_index(xs_transcripts):
     from lucene_solr_spark.index.builder import build_index
     return build_index(xs_transcripts, text_col="text", docid_col="docid")
+
+
+@pytest.fixture(scope="session")
+def xs_segments(spark, xs_transcripts, tmp_path_factory):
+    """Packed segment store of the xs corpus; docs_per_segment=128 so
+    queries cross several segments. Read-only: tests that mutate a
+    store build their own."""
+    from lucene_solr_spark.index.writer import IndexWriter
+    out = str(tmp_path_factory.mktemp("xs_segs") / "ix")
+    return IndexWriter.create(spark, out, docs_per_segment=128) \
+        .append_raw(xs_transcripts.drop("docid"), lineage="xs_transcripts")

@@ -276,3 +276,31 @@ def test_delete_docids_empty_commits_nothing(store):
     gen0 = w.commit_state()["generation"]
     w.delete_docids([])
     assert w.commit_state()["generation"] == gen0
+
+
+def test_live_docs_frames_do_not_pile_up(store, spark, monkeypatch):
+    """Each delete commit's cached live-docs frame replaces the previous
+    one: after three delete commits, each queried by a fresh reader, at
+    most one frame of this store stays persisted, and every result
+    equals an uncached run over the same commit."""
+    from lucene_solr_spark.search import segment_searcher as ssm
+    w = store
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    n0 = rdds().size()
+    q = Bool(should=(Term("ok"), Term("retry")))
+    victims = [r.doc_id for r in
+               SegmentSearcher(w.reader()).topk(q, 6).collect()]
+    assert len(victims) == 6
+    readers, got = [], []
+    for i in range(3):
+        six = w.delete_docids(victims[2 * i:2 * i + 2])
+        got.append([(r.doc_id, r.score) for r in
+                    SegmentSearcher(six).topk(q, 10).collect()])
+        readers.append(six)
+    assert rdds().size() <= n0 + 1
+    monkeypatch.setattr(ssm, "_live_docs_frame",
+                        lambda six: six.deleted_by_segment())
+    for six, rows in zip(readers, got):
+        assert [(r.doc_id, r.score) for r in
+                SegmentSearcher(six).topk(q, 10).collect()] == rows
+        assert not {d for d, _ in rows} & set(victims[:2])

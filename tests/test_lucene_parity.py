@@ -1,11 +1,15 @@
-"""Rank-identity gate: engine float32 top-k vs an independent
-brute-force numpy oracle implementing the published Lucene BM25 math.
+"""Rank-identity gate: the segment kernel's float32 top-k
+(SegmentSearcher.topk32, the repo's one float32 scorer) vs an
+independent brute-force numpy oracle implementing the published Lucene
+BM25 math.
 
 This is the in-repo stand-in for Lucene's CheckHits/IndexSearcher
 assertions (CheckHits.java:578-587): the oracle scores EVERY matching
 doc exhaustively with the exact float32 formula and quantized norms;
-the engine must return identical top-k docIDs and identical float32
-score bits under the (score DESC, docid ASC) tie-break.
+the kernel, WAND-pruned and exhaustive alike, must return identical
+top-k docIDs and identical float32 score bits under the (score DESC,
+docid ASC) tie-break. The same oracle is the float32 reference of
+tests/test_segments.py and tests/test_round2_ops.py.
 """
 
 import math
@@ -14,14 +18,20 @@ import re
 import numpy as np
 import pytest
 
-from lucene_solr_spark.search.engine import Searcher
-from lucene_solr_spark.search.query import Bool, Phrase, Term
+from lucene_solr_spark.search.query import (
+    Bool, DisMax, Phrase, Prefix, Synonym, Term,
+)
+from lucene_solr_spark.search.segment_searcher import SegmentSearcher
+from lucene_solr_spark.search.sloppy import (
+    sloppy_freq_f32, sloppy_match_lengths,
+)
 
 K1, B = 1.2, 0.75
 
 
 # --------------------------------------------------------------------------
-# independent oracle (pure numpy/python; no engine imports beyond data)
+# independent oracle (pure numpy/python; no engine imports beyond data
+# and the sloppy-phrase matcher, which has its own tests)
 # --------------------------------------------------------------------------
 
 def _tokenize(text):
@@ -65,68 +75,113 @@ class Oracle:
             (np.float32(1) - np.float32(B))
             + np.float32(B) * table / self.avgdl))).astype(np.float32)
 
-    def idf(self, term):
-        df = len(self.post.get(term, {}))
-        if df == 0:
-            return None
-        return np.float32(
-            math.log(1 + (self.n - df + 0.5) / (df + 0.5)))
+    def _idf(self, df):
+        return np.float32(math.log(1 + (self.n - df + 0.5) / (df + 0.5)))
 
-    def _term_scores(self, term):
-        w = self.idf(term)
-        if w is None:
+    def _bm25(self, w, freq, docid):
+        """weight - weight / (1 + freq * cache[norm]), float32 ops."""
+        inv = self.cache[self.docs[docid]]
+        return np.float32(w - w / (np.float32(1) + np.float32(freq) * inv))
+
+    def _pseudo_term(self, terms):
+        """Term, or Synonym: freq = summed tf, idf from the max df
+        (SynonymQuery.java:203-219)."""
+        df = max(len(self.post.get(t, {})) for t in terms)
+        if df == 0:
             return {}
+        w = self._idf(df)
+        freq = {}
+        for t in terms:
+            for d, ps in self.post.get(t, {}).items():
+                freq[d] = freq.get(d, 0) + len(ps)
+        return {d: self._bm25(w, f, d) for d, f in freq.items()}
+
+    def _phrase(self, q):
+        """Exact phrase: freq = starts p with term i at p + i; sloppy:
+        SloppyPhraseMatcher lengths accumulated in float32
+        (PhraseScorer.java:76-78). idf = (float) double sum of the
+        terms' float idfs."""
+        if any(t not in self.post for t in q.terms):
+            return {}
+        w = np.float32(sum(float(self._idf(len(self.post[t])))
+                           for t in q.terms))
         out = {}
-        for docid, ps in self.post[term].items():
-            nb = self.docs[docid]
-            f = np.float32(len(ps))
-            out[docid] = np.float32(
-                w - w / (np.float32(1) + f * self.cache[nb]))
+        for d in set.intersection(*(set(self.post[t]) for t in q.terms)):
+            pls = [self.post[t][d] for t in q.terms]
+            if q.slop:
+                f = sloppy_freq_f32(sloppy_match_lengths(pls, q.slop))
+            else:
+                f = sum(1 for p in pls[0]
+                        if all(p + i in pls[i] for i in range(1, len(pls))))
+            if f:
+                out[d] = self._bm25(w, f, d)
         return out
 
-    def topk(self, query, k=10):
-        """query: ('term', t) | ('and', [t..]) | ('or', [t..]) |
-        ('phrase', [t..])"""
-        kind, arg = query
-        if kind == "term":
-            scores = self._term_scores(arg)
-        elif kind in ("and", "or"):
-            per = [self._term_scores(t) for t in arg]
-            scores = {}
-            ids = (set.intersection(*(set(p) for p in per))
-                   if kind == "and" else set().union(*per))
-            for d in ids:
-                s = 0.0  # double accumulation, then narrow
-                for p in per:
-                    if d in p:
-                        s += float(p[d])
-                scores[d] = np.float32(s)
-        elif kind == "phrase":
-            w = 0.0
-            for t in arg:
-                i = self.idf(t)
-                if i is None:
-                    return []
-                w += float(i)
-            w = np.float32(w)
-            scores = {}
-            first = self.post[arg[0]]
-            for d, ps in first.items():
-                if any(d not in self.post[t] for t in arg[1:]):
-                    continue
-                freq = sum(
-                    1 for p in ps
-                    if all(p + i in self.post[arg[i]][d]
-                           for i in range(1, len(arg))))
-                if freq:
-                    nb = self.docs[d]
-                    scores[d] = np.float32(
-                        w - w / (np.float32(1)
-                                 + np.float32(freq) * self.cache[nb]))
-        else:
-            raise ValueError(kind)
-        ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))
+    def _bool(self, q):
+        """Each side is a double sum narrowed to float (ConjunctionScorer
+        / DisjunctionSumScorer); required + optional then add in float
+        (ReqOptSumScorer)."""
+        if q.filter or q.minimum_should_match:
+            raise TypeError("oracle Bool: must/should/must_not only")
+        must = [self.scores(c) for c in q.must]
+        should = [self.scores(c) for c in q.should]
+        ids = (set.intersection(*map(set, must)) if must
+               else set().union(*should))
+        for c in q.must_not:
+            ids -= set(self.scores(c))
+        out = {}
+        for d in ids:
+            opt = np.float32(sum(float(p[d]) for p in should if d in p))
+            if must:
+                req = np.float32(sum(float(p[d]) for p in must))
+                out[d] = np.float32(req + opt)
+            else:
+                out[d] = opt
+        return out
+
+    def _dismax(self, q):
+        """DisjunctionMaxScorer: float max, the other clauses summed in
+        double, (float)(max + otherSum * tieBreak) with the tie-break
+        stored as a float."""
+        subs = [self.scores(c) for c in q.clauses]
+        tb = float(np.float32(q.tiebreak))
+        out = {}
+        for d in set().union(*subs):
+            vals = [float(p[d]) for p in subs if d in p]
+            mx = max(vals)
+            out[d] = np.float32(mx + (sum(vals) - mx) * tb)
+        return out
+
+    def scores(self, q):
+        """docid -> float32 score of every doc matching ``q``."""
+        if isinstance(q, Term):
+            return self._pseudo_term([q.term])
+        if isinstance(q, Synonym):
+            return self._pseudo_term(q.terms)
+        if isinstance(q, Phrase):
+            return self._phrase(q)
+        if isinstance(q, Prefix):
+            # constant-score rewrite: every match scores 1.0f
+            return {d: np.float32(1.0) for t, post in self.post.items()
+                    if t.startswith(q.prefix) for d in post}
+        if isinstance(q, Bool):
+            return self._bool(q)
+        if isinstance(q, DisMax):
+            return self._dismax(q)
+        raise TypeError(f"oracle does not score {type(q).__name__}")
+
+    def topk(self, q, k=10):
+        ranked = sorted(self.scores(q).items(),
+                        key=lambda kv: (-kv[1], kv[0]))
         return [(d, np.float32(s)) for d, s in ranked[:k]]
+
+
+def kernel_topk32(ss, q, k):
+    """SegmentSearcher.topk32 WAND-pruned and exhaustive, each as
+    [(docid, float32 score)]."""
+    return [[(r["doc_id"], np.float32(r["score"]))
+             for r in ss.topk32(q, k, prune=prune).collect()]
+            for prune in (True, False)]
 
 
 # --------------------------------------------------------------------------
@@ -144,13 +199,8 @@ def oracle(corpus):
 
 
 @pytest.fixture(scope="module")
-def searcher(xs_index):
-    return Searcher(xs_index)
-
-
-def _engine_topk32(searcher, ast, k):
-    return [(r["doc_id"], np.float32(r["score"]))
-            for r in searcher.topk32(ast, k).collect()]
+def searcher(xs_segments):
+    return SegmentSearcher(xs_segments)
 
 
 def _pick_terms(oracle):
@@ -164,22 +214,17 @@ def _pick_terms(oracle):
 @pytest.mark.parametrize("k", [1, 10])
 def test_term_queries_rank_identical(searcher, oracle, k):
     for t in _pick_terms(oracle):
-        want = oracle.topk(("term", t), k)
-        got = _engine_topk32(searcher, Term(t), k)
-        assert got == want, t
+        want = oracle.topk(Term(t), k)
+        assert kernel_topk32(searcher, Term(t), k) == [want, want], t
 
 
 @pytest.mark.parametrize("k", [1, 10])
 def test_bool_and_or_rank_identical(searcher, oracle, k):
     common, mid, rare = _pick_terms(oracle)
-    want = oracle.topk(("and", [common, mid]), k)
-    got = _engine_topk32(
-        searcher, Bool(must=(Term(common), Term(mid))), k)
-    assert got == want
-    want = oracle.topk(("or", [mid, rare, common]), k)
-    got = _engine_topk32(
-        searcher, Bool(should=(Term(mid), Term(rare), Term(common))), k)
-    assert got == want
+    for q in (Bool(must=(Term(common), Term(mid))),
+              Bool(should=(Term(mid), Term(rare), Term(common)))):
+        want = oracle.topk(q, k)
+        assert kernel_topk32(searcher, q, k) == [want, want], q
 
 
 def test_phrase_rank_identical(searcher, oracle, corpus):
@@ -189,9 +234,9 @@ def test_phrase_rank_identical(searcher, oracle, corpus):
         if len(toks) >= 2:
             big = (toks[0], toks[1])
             break
-    want = oracle.topk(("phrase", list(big)), 10)
-    got = _engine_topk32(searcher, Phrase(big), 10)
-    assert got == want
+    want = oracle.topk(Phrase(big), 10)
+    assert want
+    assert kernel_topk32(searcher, Phrase(big), 10) == [want, want]
 
 
 def test_hot_term_skew_present(oracle):

@@ -1,5 +1,5 @@
 """Round-3i ops: SCORING_BOOLEAN rewrite, explicit-position phrase,
-significantTerms stream."""
+significantTerms stream, positional shapes vs the oracle."""
 
 import math
 
@@ -163,3 +163,54 @@ def test_sigterms_python_twin(spark):
     got = [(r["term"], r["fg"], r["df"], r["score"])
            for r in entry._q_stream_sigterms(spark, SF).collect()]
     assert got == want and got
+
+
+# ---------------------------------------------------------------------------
+# positional shapes vs the DuckDB oracle: the naive engine's intervals,
+# SpanNear start sets (SpanNear matching and SpanNot), exact phrases
+# (routed to PhrasePositions at offsets 0..n-1) and explicit-position
+# phrases share one positions join (Searcher._positions)
+# ---------------------------------------------------------------------------
+
+SHAPES = [
+    "q_interval_ordered", "q_interval_contains", "q_interval_unordered",
+    "q_interval_not_containing", "q_interval_contained_by",
+    "q_span_near", "q_span_not", "q_phrase2", "q_phrase_gap",
+]
+
+
+@pytest.fixture(scope="module")
+def registry():
+    import duckdb
+
+    import __spark_entry__ as entry
+    con = duckdb.connect()
+    con.execute(f"create view documents as select * from "
+                f"'{SF}/documents.parquet'")
+    return entry, con
+
+
+@pytest.mark.parametrize("name", SHAPES)
+def test_positional_shape_matches_oracle(spark, registry, name):
+    entry, con = registry
+    _assert_same(entry.queries()[name](spark, SF),
+                 con.execute(entry.oracle_sql()[name]))
+
+
+@pytest.mark.parametrize("terms", [("big", "order", "scan"),
+                                   ("spark", "window", "window")])
+def test_exact_phrase_matches_oracle(spark, registry, terms):
+    """Three-term exact phrases, one with a repeated term."""
+    from lucene_solr_spark.search.oracle import OracleBuilder
+    from lucene_solr_spark.search.query import Phrase
+    entry, con = registry
+    q = Phrase(terms)
+    _assert_same(entry._searcher(spark, SF).topk(q, 10),
+                 con.execute(OracleBuilder().topk_sql(q, 10)))
+
+
+def _assert_same(frame, cursor):
+    got = [(int(d), round(float(s), 6)) for d, s in frame.collect()]
+    want = [(int(d), round(float(s), 6)) for d, s in cursor.fetchall()]
+    assert got == want
+    assert got, "shape has no hits at this scale"

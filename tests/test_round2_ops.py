@@ -249,27 +249,28 @@ def test_sloppy_phrase_kernel_matches_engine(spark, tmp_path_factory):
 
 
 def test_sloppy_phrase_f32_parity(spark, tmp_path_factory):
-    """float32 mode: engine and kernel agree bit-for-bit on sloppy freq
-    scoring (chain-order float32 accumulation)."""
+    """float32 mode: the kernel, pruned and exhaustive, equals the
+    brute-force numpy float32 oracle of tests/test_lucene_parity bit for
+    bit on sloppy freq scoring (chain-order float32 accumulation),
+    DisMax with float tie-breaks and the constant-score Prefix."""
     from lucene_solr_spark.index.writer import IndexWriter
+    from lucene_solr_spark.search.query import Prefix
     from lucene_solr_spark.search.segment_searcher import SegmentSearcher
+    from test_lucene_parity import Oracle, kernel_topk32
     out = str(tmp_path_factory.mktemp("segs_sloppy32"))
     df = spark.createDataFrame(
         RICH_DOCS, "doc_id long, text string, lang string, source string")
     w = IndexWriter.create(spark, out, docs_per_segment=3)
     w.append_raw(df, order_cols=["doc_id"], lineage="sloppy f32")
     ss = SegmentSearcher(w.reader())
-    se = Searcher(build_index(df))
-    from lucene_solr_spark.search.query import DisMax, Prefix
+    oracle = Oracle([(d, text) for d, text, _, _ in RICH_DOCS])
     for q in (Phrase(("a", "b"), 2),
               DisMax((Term("merge"), Term("skill")), 0.3),
               DisMax((Term("merge"), Term("stack")), 0.0),
               Prefix("st")):
-        eng = [(r.doc_id, float(r.score))
-               for r in se.topk32(q, 10).collect()]
-        ker = [(r.doc_id, float(r.score))
-               for r in ss.topk32(q, 10).collect()]
-        assert eng == ker, (q, eng, ker)
+        want = oracle.topk(q, 10)
+        assert want, q
+        assert kernel_topk32(ss, q, 10) == [want, want], q
 
 
 # ---------------------------------------------------------------------------

@@ -11,14 +11,13 @@ from lucene_solr_spark.index.writer import IndexWriter
 from lucene_solr_spark.search.engine import Searcher
 from lucene_solr_spark.search.query import Bool, Boost, Phrase, Synonym, Term
 from lucene_solr_spark.search.segment_searcher import SegmentSearcher
+from test_lucene_parity import Oracle, kernel_topk32
 
 
 @pytest.fixture(scope="module")
-def seg_index(spark, xs_transcripts, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("segs") / "ix")
-    # small segments so the fixture exercises multi-segment merge paths
-    return IndexWriter.create(spark, out, docs_per_segment=128) \
-        .append_raw(xs_transcripts.drop("docid"), lineage="xs_transcripts")
+def xs_oracle(xs_transcripts):
+    return Oracle([(r.docid, r.text) for r in
+                   xs_transcripts.select("docid", "text").collect()])
 
 
 QUERIES = [
@@ -38,12 +37,12 @@ QUERIES = [
 ]
 
 
-def test_check_index_clean(seg_index):
-    assert check_index(seg_index).count() == 0
+def test_check_index_clean(xs_segments):
+    assert check_index(xs_segments).count() == 0
 
 
-def test_catalog_metrics(seg_index, xs_index):
-    cat = seg_index.catalog.collect()
+def test_catalog_metrics(xs_segments, xs_index):
+    cat = xs_segments.catalog.collect()
     assert len(cat) > 1  # multi-segment fixture
     assert sum(r["n_docs"] for r in cat) == xs_index.doc_count
     assert sum(r["n_tokens"] for r in cat) == xs_index.sum_ttf
@@ -51,21 +50,21 @@ def test_catalog_metrics(seg_index, xs_index):
     assert all(r["lineage"] == "xs_transcripts" for r in cat)
 
 
-def test_open_segments_roundtrip(spark, seg_index):
-    six = open_segments(spark, seg_index.path)
-    assert six.doc_count == seg_index.doc_count
-    assert six.sum_ttf == seg_index.sum_ttf
+def test_open_segments_roundtrip(spark, xs_segments):
+    six = open_segments(spark, xs_segments.path)
+    assert six.doc_count == xs_segments.doc_count
+    assert six.sum_ttf == xs_segments.sum_ttf
 
 
 @pytest.mark.parametrize("qi", range(len(QUERIES)))
 @pytest.mark.parametrize("k", [1, 10])
-def test_pruned_equals_exhaustive_equals_naive(spark, xs_index, seg_index,
+def test_pruned_equals_exhaustive_equals_naive(spark, xs_index, xs_segments,
                                                qi, k):
     """The central invariant (SURVEY.md §5): WAND-pruned top-k ==
     exhaustive segment top-k == naive DataFrame top-k, scores and all."""
     q = QUERIES[qi]
     naive = Searcher(xs_index).topk(q, k).collect()
-    ss = SegmentSearcher(seg_index)
+    ss = SegmentSearcher(xs_segments)
     pruned = ss.topk(q, k).collect()
     exhaustive = ss.topk(q, k, prune=False).collect()
     as_tuples = lambda rows: [(r.doc_id, r.score) for r in rows]  # noqa: E731
@@ -75,53 +74,49 @@ def test_pruned_equals_exhaustive_equals_naive(spark, xs_index, seg_index,
 
 @pytest.mark.parametrize("qi", [0, 3, 4, 6, 9])
 @pytest.mark.parametrize("k", [1, 10])
-def test_float32_wand_matches_naive_float32(xs_index, seg_index, qi, k):
+def test_float32_wand_matches_naive_float32(xs_segments, xs_oracle, qi, k):
     """Lucene-parity mode through the WAND path: float32 scores must be
-    bit-identical to the naive scored32 pipeline (which is itself
-    pinned to BM25Similarity's float math by tests/test_lucene_parity),
-    pruned and exhaustive alike."""
+    bit-identical to the brute-force numpy float32 oracle of
+    tests/test_lucene_parity (BM25Similarity's float math; synonym,
+    conjunction, disjunction and ReqOptSumScorer combinations), pruned
+    and exhaustive alike."""
     q = QUERIES[qi]
-    naive = [(r.doc_id, r.score)
-             for r in Searcher(xs_index).topk32(q, k).collect()]
-    ss = SegmentSearcher(seg_index)
-    pruned = [(r.doc_id, r.score) for r in ss.topk32(q, k).collect()]
-    exhaustive = [(r.doc_id, r.score)
-                  for r in ss.topk32(q, k, prune=False).collect()]
-    assert pruned == exhaustive == naive
+    want = xs_oracle.topk(q, k)
+    assert kernel_topk32(SegmentSearcher(xs_segments), q, k) == [want, want]
 
 
-def test_count_parity(xs_index, seg_index):
+def test_count_parity(xs_index, xs_segments):
     q = Bool(should=(Term("retry"), Term("error")))
     a = Searcher(xs_index).count(q).first()["n_hits"]
-    b = SegmentSearcher(seg_index).count(q).first()["n_hits"]
+    b = SegmentSearcher(xs_segments).count(q).first()["n_hits"]
     assert a == b > 0
 
 
-def test_hot_term_rows_bounded_by_segment_size(seg_index):
+def test_hot_term_rows_bounded_by_segment_size(xs_segments):
     """Skew: the hottest term (df ~30% of docs — 'ok' is injected hot
     by the generator) must never concentrate into a posting row larger
     than one segment's share. Doc-range segmentation IS the salting
     (SURVEY.md §4.2): at 10^12 docs a stopword splits across ~docid/dps
     bounded rows, each independently scoreable."""
-    rows = (seg_index.packed.filter(F.col("term") == "ok")
+    rows = (xs_segments.packed.filter(F.col("term") == "ok")
             .select("seg_id", "df").collect())
     assert len(rows) > 1  # hot term spread across segments
-    assert all(r["df"] <= seg_index.docs_per_segment for r in rows)
+    assert all(r["df"] <= xs_segments.docs_per_segment for r in rows)
 
 
-def test_term_pruning_reads_only_query_terms(seg_index):
+def test_term_pruning_reads_only_query_terms(xs_segments):
     """The packed scan must push the term filter down to Parquet."""
-    plan = (seg_index.packed.filter(F.col("term") == "ok")
+    plan = (xs_segments.packed.filter(F.col("term") == "ok")
             ._jdf.queryExecution().executedPlan().toString())
     assert "PushedFilters: [" in plan
     assert "term" in plan.split("PushedFilters")[1][:120]
 
 
-def test_topk_by_docid_early_termination(seg_index, xs_index):
+def test_topk_by_docid_early_termination(xs_segments, xs_index):
     """Early-terminated index-order collector == full scan's first-k
     matches by docid, for hot, mid, and absent terms and k spanning
     less / more than one segment (docs_per_segment=128)."""
-    ss = SegmentSearcher(seg_index)
+    ss = SegmentSearcher(xs_segments)
     se = Searcher(xs_index)
     for term in ("ok", "w1", "zzzzabsent"):
         full = sorted(r.docid for r in se.matching(Term(term)).collect())

@@ -15,11 +15,11 @@ new ``gen=N`` dirs; merges publish new segments and only ``vacuum``
 removes dead dirs).  Immutability gives the same safety the reference
 gets from write-once segment files:
 
-- a revision = commit.json content + the gen-dirs it references: its
-  segment data, delete and docvalue generations, and the
-  catalog/term_stats snapshots at its ``stats_gen`` (a delete or
-  docvalue update commits no new snapshot, so a re-sync after one
-  copies only the new delete/patch dir);
+- a revision = commit.json content + the gen-dirs it references: the
+  segment data gens its segment records name, its delete and docvalue
+  generations, and the term_stats snapshot at its ``stats_gen`` (a
+  delete or docvalue update commits no new snapshot, so a re-sync after
+  one copies only the new delete/patch dir);
 - replication copies MISSING gen dirs only (incremental by
   construction), then atomically swaps the replica's commit.json last
   — a reader of the replica sees either the old commit or the new
@@ -34,28 +34,24 @@ shutil.  The revision manifest is metadata-sized.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
-from .segments import read_commit, stats_gen
+from .segments import read_commit, write_commit
 
 __all__ = ["revision", "replicate", "snapshot_index"]
 
 
 def _gen_dirs(state: dict) -> list[str]:
     """Relative gen-dir paths referenced by a commit state — the
-    IndexRevision file list (snapshots resolved through ``stats_gen``)."""
-    out = []
-    for g in sorted({int(k) for k in (state.get("data_gens") or {})}):
-        out.append(f"segments/gen={g}")
+    IndexRevision file list."""
+    out = [f"segments/gen={g}"
+           for g in sorted({r["gen"] for r in state["segments"]})]
     for g in state.get("del_gens", ()):
         out.append(f"deletes/gen={int(g)}")
     for g in state.get("dv_gens", ()):
         out.append(f"dv_updates/gen={int(g)}")
-    sg = stats_gen(state)
-    out.append(f"catalog/gen={sg}")
-    out.append(f"term_stats/gen={sg}")
+    out.append(f"term_stats/gen={state['stats_gen']}")
     return out
 
 
@@ -97,10 +93,7 @@ def replicate(src: str, dst: str) -> dict:
         os.replace(tmp, d)
         copied.append(rel)
     # publish LAST — the atomic segments_N swap
-    tmp = os.path.join(dst, "commit.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(rev["state"], f)
-    os.replace(tmp, os.path.join(dst, "commit.json"))
+    write_commit(dst, rev["state"])
     return {"copied": copied, "skipped": skipped,
             "generation": rev["state"]["generation"]}
 

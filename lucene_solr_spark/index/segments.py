@@ -18,9 +18,11 @@ codecs/lucene84/Lucene84PostingsWriter.java:218-375):
   CompetitiveImpactAccumulator.java:71-118).
 - per segment one **norms blob**: uint8 norm bytes indexed by
   ``docid - docid_min`` (Lucene80NormsFormat's forward index).
-- a **catalog** row per segment with lineage + row-count/byte metrics
-  (SegmentInfos analogue; the north rule's "checkpointed per-partition
-  segment state with lineage + metrics").
+- a **segment record** per live segment in ``commit.json`` (data
+  generation, docid range, row-count/byte metrics, lineage) — the
+  SegmentInfos/SegmentInfo analogue and the store's only segment
+  catalog (the north rule's "checkpointed per-partition segment state
+  with lineage + metrics").
 
 Build = one shuffle: groupBy(seg_id) ships each segment's raw text to
 one Arrow kernel (``build_segments_direct``) that tokenizes, inverts
@@ -35,7 +37,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 from dataclasses import dataclass
 
 import numpy as np
@@ -54,7 +55,9 @@ from ..codecs import blocks as blk
 # per-segment norms row (term IS NULL) share one parquet table, so one
 # shuffle + one write produces a whole segment (parquet column pruning
 # keeps the two row kinds' blob columns independent at read time)
-FORMAT_VERSION = 3
+# v4: ``commit.json`` carries one record per live segment (CATALOG_SCHEMA)
+# and is the only segment catalog; no ``catalog/gen=N`` snapshot dirs
+FORMAT_VERSION = 4
 
 PACKED_SCHEMA = StructType([
     StructField("seg_id", IntegerType()),
@@ -81,6 +84,14 @@ SEGDATA_SCHEMA = StructType(
         StructField("norm_blob", BinaryType()),
         StructField("qdl_blob", BinaryType()),
     ])
+
+
+# one segment record of ``commit.json`` (SegmentInfo analogue): its docid
+# range [docid_min, docid_end) — docid_end = docid_min + norm-blob width,
+# which an expunging merge keeps — metrics, data generation and lineage
+CATALOG_SCHEMA = ("seg_id INT, docid_min LONG, docid_end LONG, n_docs LONG, "
+                  "n_tokens LONG, n_terms LONG, n_postings LONG, "
+                  "packed_bytes LONG, gen LONG, lineage STRING, build_ts LONG")
 
 
 def _seg_expr(docs_per_segment: int, base_docid: int = 0,
@@ -469,13 +480,13 @@ def unify_segment_frames(pk: DataFrame, norms: DataFrame) -> DataFrame:
 class SegmentIndex:
     """On-disk segment index handle (IndexReader-over-commit analogue).
 
-    A commit = ``commit.json`` (generation, collection stats, live
-    segment ids, delete/docvalue generations) + the catalog/term_stats
-    snapshots at its ``stats_gen`` (the last append or merge; deletes
-    and docvalue updates keep them) + the per-generation segment data
-    dirs. Readers see only the commit's live segments, so every
-    mutation is atomic at the one commit.json swap — the segments_N
-    model (INDEX/SegmentInfos.java)."""
+    A commit = ``commit.json`` (generation, collection stats, one record
+    per live segment, delete/docvalue generations) + the term_stats
+    snapshot at its ``stats_gen`` (the last append or merge; deletes
+    and docvalue updates keep it) + the per-generation segment data
+    dirs its records name. Readers see only the commit's live
+    segments, so every mutation is atomic at the one commit.json swap —
+    the segments_N model (INDEX/SegmentInfos.java)."""
 
     path: str
     spark: SparkSession
@@ -483,24 +494,23 @@ class SegmentIndex:
     sum_ttf: int
     docs_per_segment: int
     generation: int = 1
-    stats_gen: int = 1      # generation holding catalog/term_stats
-    live_segs: tuple = ()
-    data_gens: dict = None  # gen -> [seg_ids] written under that gen dir
+    stats_gen: int = 1      # generation holding the term_stats snapshot
+    segments: tuple = ()    # live segment records (CATALOG_SCHEMA dicts)
     del_gens: tuple = ()    # generations holding delete sets
     dv_gens: tuple = ()     # generations holding docvalue update patches
 
-    def _live(self, df: DataFrame) -> DataFrame:
-        if not self.live_segs:
-            return df
-        return df.filter(F.col("seg_id").isin(list(self.live_segs)))
+    @property
+    def live_segs(self) -> tuple:
+        return tuple(sorted(r["seg_id"] for r in self.segments))
 
     def _data(self) -> DataFrame:
-        gens = sorted(self.data_gens or {})
+        gens = sorted({r["gen"] for r in self.segments})
         paths = [f"{self.path}/segments/gen={g}" for g in gens
                  if os.path.isdir(f"{self.path}/segments/gen={g}")]
         if not paths:
             return self.spark.createDataFrame([], SEGDATA_SCHEMA)
-        return self._live(self.spark.read.parquet(*paths))
+        return self.spark.read.parquet(*paths) \
+            .filter(F.col("seg_id").isin(list(self.live_segs)))
 
     @property
     def packed(self) -> DataFrame:
@@ -530,20 +540,14 @@ class SegmentIndex:
 
         The scale-safe live-docs shape (Lucene's per-segment bitset,
         codecs/lucene50/Lucene50LiveDocsFormat.java): the delete set is
-        range-joined to the catalog's contiguous docid ranges
+        range-joined to the records' ``[docid_min, docid_end)`` ranges
         executor-side and co-partitions with the postings by seg_id, so
-        no delete ever travels through the driver. The window runs over
-        the catalog (one row per segment — metadata scale)."""
-        from pyspark.sql.window import Window
-        rng = (self.catalog.select("seg_id", "docid_min")
-               .withColumn("docid_hi",
-                           F.lead("docid_min")
-                           .over(Window.orderBy("docid_min"))))
+        no delete ever travels through the driver."""
+        rng = self.catalog.select("seg_id", "docid_min", "docid_end")
         j = self.deleted.join(
             F.broadcast(rng),
             (F.col("docid") >= F.col("docid_min"))
-            & (F.col("docid_hi").isNull()
-               | (F.col("docid") < F.col("docid_hi"))))
+            & (F.col("docid") < F.col("docid_end")))
         return (j.groupBy("seg_id")
                 .agg(F.sort_array(F.collect_list("docid"))
                      .alias("del_ids")))
@@ -587,8 +591,9 @@ class SegmentIndex:
 
     @property
     def catalog(self) -> DataFrame:
-        return self.spark.read.parquet(
-            f"{self.path}/catalog/gen={self.stats_gen}")
+        """The segment records as a DataFrame (CATALOG_SCHEMA)."""
+        return self.spark.createDataFrame(list(self.segments),
+                                          CATALOG_SCHEMA)
 
     @property
     def avgdl(self) -> float:
@@ -599,62 +604,34 @@ class SegmentIndex:
         return f"(CAST({self.sum_ttf} AS DOUBLE) / {self.doc_count})"
 
 
-def catalog_from_packed(pk: DataFrame, norms: DataFrame,
-                        lineage: str) -> DataFrame:
-    """Segment metrics (rows/bytes) + lineage for new packed rows.
-
-    Reads only scalar columns (parquet column pruning — the blob
-    columns never leave disk)."""
-    cat = pk.select("seg_id", "df", "ttf", "packed_bytes") \
-        .groupBy("seg_id").agg(
-            F.count("*").cast("long").alias("n_terms"),
-            F.sum("df").cast("long").alias("n_postings"),
-            F.sum("ttf").cast("long").alias("n_tokens"),
-            F.sum("packed_bytes").cast("long").alias("packed_bytes"))
-    nm = norms.select("seg_id", "docid_min",
-                      F.col("n_docs").alias("n_docs"))
-    # LEFT join FROM norms: every built segment has a norms row, but a
-    # segment whose docs are all token-less emits no postings — it must
-    # still be cataloged (zero-filled term metrics) or doc_count
-    # under-counts and the next append reuses its docid range
-    return (nm.join(cat, "seg_id", "left")
-            .select("seg_id",
-                    F.coalesce("n_terms", F.lit(0)).cast("long")
-                    .alias("n_terms"),
-                    F.coalesce("n_postings", F.lit(0)).cast("long")
-                    .alias("n_postings"),
-                    F.coalesce("n_tokens", F.lit(0)).cast("long")
-                    .alias("n_tokens"),
-                    F.coalesce("packed_bytes", F.lit(0)).cast("long")
-                    .alias("packed_bytes"),
-                    "docid_min", "n_docs")
-            .withColumn("lineage", F.lit(lineage))
-            .withColumn("build_ts", F.lit(int(time.time()))))
-
-
 def write_commit(path: str, state: dict,
                  filename: str = "commit.json") -> None:
     """Atomically publish the complete commit record ``state`` (one
     tmp-file write + rename)."""
-    commit = {**state,
-              "live_segs": sorted(int(s) for s in state["live_segs"]),
-              "data_gens": {str(g): sorted(int(s) for s in segs)
-                            for g, segs in state["data_gens"].items()}}
     tmp = os.path.join(path, filename + ".tmp")
     with open(tmp, "w") as f:
-        json.dump(commit, f)
+        json.dump(state, f)
     os.replace(tmp, os.path.join(path, filename))
 
 
 def read_commit(path: str, filename: str = "commit.json") -> dict:
     with open(os.path.join(path, filename)) as f:
-        return json.load(f)
+        commit = json.load(f)
+    if "segments" not in commit:
+        raise ValueError(
+            f"{os.path.join(path, filename)} has no segment records: the "
+            f"store predates segment-store format {FORMAT_VERSION}; "
+            "rebuild it")
+    return commit
 
 
-def stats_gen(commit: dict) -> int:
-    """Generation whose catalog/term_stats snapshots ``commit`` reads;
-    a commit without the field keeps them at its own generation."""
-    return commit.get("stats_gen", commit["generation"])
+def next_ids(segments) -> tuple:
+    """(next seg id, next docid) after the segment records
+    ``segments``: one past the highest live record. An expunging merge
+    keeps its range's full width, so a docid is never handed out
+    twice."""
+    return (max((r["seg_id"] for r in segments), default=-1) + 1,
+            max((r["docid_end"] for r in segments), default=0))
 
 
 def open_segments(spark: SparkSession, path: str) -> SegmentIndex:
@@ -664,10 +641,8 @@ def open_segments(spark: SparkSession, path: str) -> SegmentIndex:
                         sum_ttf=commit["sum_ttf"],
                         docs_per_segment=commit["docs_per_segment"],
                         generation=commit["generation"],
-                        stats_gen=stats_gen(commit),
-                        live_segs=tuple(commit.get("live_segs", ())),
-                        data_gens={int(g): segs for g, segs in
-                                   commit.get("data_gens", {}).items()},
+                        stats_gen=commit["stats_gen"],
+                        segments=tuple(commit["segments"]),
                         del_gens=tuple(commit.get("del_gens", ())),
                         dv_gens=tuple(commit.get("dv_gens", ())))
 

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 
 from .replicator import replicate
-from .segments import SegmentIndex
+from .segments import SegmentIndex, next_ids
 from .writer import IndexWriter
 
 __all__ = ["expunge_all", "live_docids", "split_by_query",
@@ -50,18 +50,19 @@ __all__ = ["expunge_all", "live_docids", "split_by_query",
 
 def live_docids(six: SegmentIndex):
     """Live docids of a store as a DataFrame (the liveDocs bitset
-    read, MultiBits over per-segment live docs): positions with a
-    nonzero norm byte in each segment's norms blob (expunged docs are
-    zeroed in place — writer._merge_norms keeps blobs full-width),
-    minus the not-yet-expunged delete sets.  One Arrow pass over the
-    norms rows (segment-count bounded), no driver materialization.
+    read, MultiBits over per-segment live docs), minus the
+    not-yet-expunged delete sets. A segment whose record counts every
+    position of its ``[docid_min, docid_end)`` range holds all of them;
+    in a segment with expunged holes (writer._merge_norms zeroes them in
+    place and keeps blobs full-width) the live positions are those with
+    a nonzero norm byte. One Arrow pass over the norms rows
+    (segment-count bounded), no driver materialization.
 
     Caveat mirrored from the encoding: a live but token-less doc has
-    norm byte 0 (SmallFloat(0)) and is indistinguishable from an
-    expunged position here — such docs carry no postings and can
-    never match a query, but a split would mis-place them; this
-    store's writers always index non-empty text rows."""
-    import pandas as pd  # noqa: F401  (imported in the worker below)
+    norm byte 0 (SmallFloat(0)), so inside an expunged segment it is
+    indistinguishable from an expunged position — such docs carry no
+    postings and can never match a query, but a split would mis-place
+    them."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     schema = StructType([StructField("docid", LongType())])
@@ -72,10 +73,12 @@ def live_docids(six: SegmentIndex):
         for pdf in it:
             for r in pdf.itertuples(index=False):
                 nb = np.frombuffer(r.norm_blob, dtype=np.uint8)
-                ids = int(r.docid_min) + np.flatnonzero(nb)
+                pos = np.arange(nb.size) if r.n_docs == nb.size \
+                    else np.flatnonzero(nb)
+                ids = int(r.docid_min) + pos
                 yield pd.DataFrame({"docid": ids.astype(np.int64)})
 
-    ids = (six.norms.select("docid_min", "norm_blob")
+    ids = (six.norms.select("docid_min", "n_docs", "norm_blob")
            .mapInPandas(fn, schema))
     return ids.join(six.deleted, "docid", "left_anti")
 
@@ -136,17 +139,10 @@ def split_round_robin(spark: SparkSession, src: str, dsts: list,
     n = len(dsts)
     if n < 2:
         raise ValueError("need at least 2 destinations")
-    src_reader = IndexWriter.open(spark, src).reader()
-    lo, hi = None, None
-    if sequential:
-        # docid span from the norms blobs (byte-per-doc width)
-        bounds = (src_reader.norms
-                  .select("docid_min",
-                          (F.col("docid_min") + F.length("norm_blob")
-                           - 1).alias("docid_max"))
-                  .agg(F.min("docid_min").alias("lo"),
-                       F.max("docid_max").alias("hi")).collect()[0])
-        lo, hi = int(bounds["lo"]), int(bounds["hi"])
+    # docid span [lo, hi] from the segment records
+    segs = IndexWriter.open(spark, src).commit_state()["segments"]
+    lo = min((r["docid_min"] for r in segs), default=0)
+    hi = next_ids(segs)[1] - 1
     out = []
     for i, dst in enumerate(dsts):
         replicate(src, dst)

@@ -10,12 +10,15 @@ TieredMergePolicy -> commit; INDEX/SegmentInfos.java generations):
   while a ``prepare_commit`` runs), the segments_N write of
   SegmentInfos.commit. Delete sets, docvalue patches and stream stamps
   ride that same swap, so no crash point publishes half a commit.
-  ``stats_gen`` names the generation holding the commit's
-  catalog/term_stats snapshots: appends and merges write new snapshots
-  at their own generation, deletes and docvalue updates change no
-  statistics and keep the previous ``stats_gen``.
+- **the commit record is the segment catalog**: ``segments`` holds one
+  record per live segment (SegmentInfo). A mutation names the records it
+  adds and drops; ``doc_count``, ``sum_ttf`` and the next seg id and
+  docid derive from the records, so no docid is handed out twice.
+  ``stats_gen`` names the generation holding the term_stats snapshot:
+  appends and merges write a new one at their own generation, deletes
+  and docvalue updates change no statistics and keep it.
 - ``append_raw(batch)`` = one "flush" and the only way a segment is
-  built: assign docids continuing from the commit's doc_count
+  built: assign docids continuing from the next docid
   (insertion-ordered like Lucene docIDs), build packed segments +
   norms for the batch with ONE data shuffle, and
   write them into fresh per-generation directories
@@ -29,7 +32,7 @@ TieredMergePolicy -> commit; INDEX/SegmentInfos.java generations):
   from checkpoint with per-partition lineage + metrics").
 - ``maybe_merge()`` = TieredMergePolicy
   (INDEX/TieredMergePolicy.java:312-401,565-625): size-tiered
-  selection over the catalog, restricted to docid-adjacent runs so
+  selection over the segment records, restricted to docid-adjacent runs so
   merged segments stay contiguous ranges. The merge job itself is a
   **bulk merge**: because blocks carry explicit lengths, a merged
   posting row is the docid-ordered concatenation of the source rows'
@@ -41,22 +44,24 @@ TieredMergePolicy -> commit; INDEX/SegmentInfos.java generations):
   postings through one codec writer, as in the reference.
 - every delete (docid list, docid frame, term, query, expiry sweep)
   resolves to a docid frame and ends in ``_commit_delete_set``.
-- ``vacuum()`` deletes generation directories whose segments are all
-  dead (merge inputs), like Lucene deleting merged-away segment files.
+- ``vacuum()`` deletes every segment generation dir that no record of
+  the commit (or of a prepared commit) references — merge inputs and
+  crashed attempts — like Lucene deleting merged-away segment files.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .docids import assign_docids
 from .segments import (
-    SegmentIndex, build_segments_direct, catalog_from_packed, read_commit,
-    stats_gen, unify_segment_frames, write_commit,
+    SegmentIndex, build_segments_direct, next_ids, read_commit,
+    unify_segment_frames, write_commit,
 )
 
 _PENDING_COMMIT = "pending_commit.json"
@@ -74,10 +79,9 @@ class IndexWriter:
     def create(cls, spark: SparkSession, path: str,
                docs_per_segment: int = 65536) -> "IndexWriter":
         os.makedirs(path, exist_ok=True)
-        write_commit(path, dict(generation=0, doc_count=0, sum_ttf=0,
-                                docs_per_segment=docs_per_segment,
-                                next_seg_id=0, live_segs=[], lineage="",
-                                data_gens={}))
+        write_commit(path, dict(generation=0, stats_gen=0, doc_count=0,
+                                sum_ttf=0, docs_per_segment=docs_per_segment,
+                                segments=[], lineage=""))
         return cls(spark, path)
 
     @classmethod
@@ -95,12 +99,18 @@ class IndexWriter:
     def _gen_dir(self, sub: str, gen: int) -> str:
         return f"{self.path}/{sub}/gen={gen}"
 
-    def _commit(self, st: dict, **updates) -> SegmentIndex:
-        """The one commit step: publish ``{**st, **updates}`` as the
-        complete next commit record in ONE atomic swap. ``stats_gen``
-        defaults to the previous commit's snapshot generation."""
+    def _commit(self, st: dict, add: list = (), drop: list = (),
+                **updates) -> SegmentIndex:
+        """The one commit step: publish ``{**st, **updates}`` with the
+        segment records ``add`` in place of the records of the seg ids
+        ``drop`` as the complete next commit record in ONE atomic swap.
+        ``doc_count`` and ``sum_ttf`` are derived from the records."""
+        segs = sorted([r for r in st["segments"] if r["seg_id"] not in drop]
+                      + list(add), key=lambda r: r["docid_min"])
         write_commit(self.path,
-                     {**st, "stats_gen": stats_gen(st), **updates},
+                     {**st, **updates, "segments": segs,
+                      "doc_count": sum(r["n_docs"] for r in segs),
+                      "sum_ttf": sum(r["n_tokens"] for r in segs)},
                      _PENDING_COMMIT if self._pending_mode
                      else "commit.json")
         return self.reader()
@@ -162,7 +172,8 @@ class IndexWriter:
                    order_cols: list | None = None,
                    lineage: str = "",
                    extra_commit: dict | None = None) -> SegmentIndex:
-        """Index a new document batch (docids continue from doc_count):
+        """Index a new document batch (docids continue from the next
+        docid):
         raw docs -> segments with ONE data shuffle.
 
         Raw text ships straight to per-segment builder tasks that
@@ -179,8 +190,7 @@ class IndexWriter:
         (exactly-once; cf. Solr UpdateLog replay, UpdateLog.java:96)."""
         st = self.commit_state()
         dps = st["docs_per_segment"]
-        base = st["doc_count"]
-        seg_base = st["next_seg_id"]
+        seg_base, base = next_ids(st["segments"])
         gen = st["generation"] + 1
         order_cols = order_cols or ["conv_id", "turn_idx"]
 
@@ -206,54 +216,49 @@ class IndexWriter:
         return out
 
     def _publish(self, st: dict, gen: int, lineage: str) -> SegmentIndex:
-        """Catalog/term_stats snapshots + the commit for the segments
+        """Records + term_stats snapshot + the commit for the segments
         just written under gen's data dir (scalar-column jobs only —
         blob columns never leave disk)."""
-        cat_rows, pk_new, _ = self._catalog_new_segments(st, gen, lineage)
-        ts_new = _term_totals(pk_new)
-        if stats_gen(st):
+        new = self._new_records(gen, lineage)
+        ts_new = _term_totals(self._postings(gen))
+        if st["stats_gen"]:
             ts_new = _term_totals(
-                self._snapshot("term_stats", st).unionByName(ts_new))
+                self._term_stats(st).unionByName(ts_new))
         ts_new.write.mode("overwrite").parquet(
             self._gen_dir("term_stats", gen))
+        return self._commit(st, add=new, generation=gen, stats_gen=gen,
+                            lineage=lineage)
 
-        new_segs = [r["seg_id"] for r in cat_rows]
-        live = sorted(set(st.get("live_segs", [])) | set(new_segs))
-        return self._commit(
-            st, generation=gen, stats_gen=gen,
-            doc_count=st["doc_count"] + sum(r["n_docs"] for r in cat_rows),
-            sum_ttf=st["sum_ttf"] + sum(r["n_tokens"] for r in cat_rows),
-            next_seg_id=(max(live) + 1) if live else 0,
-            live_segs=live, lineage=lineage,
-            data_gens={**st.get("data_gens", {}), gen: sorted(new_segs)})
+    def _term_stats(self, st: dict) -> DataFrame:
+        """The term_stats snapshot of commit ``st``."""
+        return self.spark.read.parquet(
+            self._gen_dir("term_stats", st["stats_gen"]))
 
-    def _snapshot(self, sub: str, st: dict) -> DataFrame:
-        """The ``catalog`` or ``term_stats`` snapshot of commit ``st``."""
-        return self.spark.read.parquet(self._gen_dir(sub, stats_gen(st)))
+    def _postings(self, gen: int) -> DataFrame:
+        """Posting rows written to ``segments/gen=gen``."""
+        return self.spark.read.parquet(self._gen_dir("segments", gen)) \
+            .filter(F.col("term").isNotNull())
 
-    def _catalog_new_segments(self, st: dict, gen: int, lineage: str,
-                              replaced: list = ()) -> tuple:
-        """Catalog the segments just written to ``segments/gen=gen``
-        and write the cumulative catalog snapshot at ``gen``: commit
-        ``st``'s catalog without the ``replaced`` segments, plus the
-        new rows. Returns (new catalog rows, new posting rows, new
-        norms rows)."""
-        seg_new = self.spark.read.parquet(self._gen_dir("segments", gen))
-        pk_new = seg_new.filter(F.col("term").isNotNull())
-        nm_new = seg_new.filter(F.col("term").isNull()) \
-            .select("seg_id", "docid_min", "n_docs", "norm_blob",
-                    "qdl_blob")
-        cat_add = catalog_from_packed(pk_new, nm_new, lineage).persist()
-        cat_rows = cat_add.collect()
-        cat = cat_add
-        if stats_gen(st):
-            cat = self._snapshot("catalog", st)
-            if replaced:
-                cat = cat.filter(~F.col("seg_id").isin(list(replaced)))
-            cat = cat.unionByName(cat_add)
-        cat.write.mode("overwrite").parquet(self._gen_dir("catalog", gen))
-        cat_add.unpersist()
-        return cat_rows, pk_new, nm_new
+    def _new_records(self, gen: int, lineage: str) -> list:
+        """Segment records of the segments just written to
+        ``segments/gen=gen``: ONE groupBy(seg_id) over the scalar
+        columns of both row kinds, collected once. A segment whose docs
+        are all token-less has a norms row but no postings; its term
+        counts are zero."""
+        rows = (self.spark.read.parquet(self._gen_dir("segments", gen))
+                .groupBy("seg_id").agg(
+                    F.min("docid_min").alias("docid_min"),
+                    F.max(F.col("docid_min") + F.length("norm_blob"))
+                    .alias("docid_end"),
+                    F.sum("n_docs").alias("n_docs"),
+                    F.sum("ttf").alias("n_tokens"),
+                    F.count("term").alias("n_terms"),
+                    F.sum("df").alias("n_postings"),
+                    F.sum("packed_bytes").alias("packed_bytes"))
+                .collect())
+        extra = dict(gen=gen, lineage=lineage, build_ts=int(time.time()))
+        return [{**{k: int(v or 0) for k, v in r.asDict().items()}, **extra}
+                for r in rows]
 
     # -- tiered merge -------------------------------------------------------
 
@@ -268,8 +273,8 @@ class IndexWriter:
         zero-decode bulk fast path)."""
         n = 0
         while True:
-            cat = [r.asDict() for r in self.reader().catalog.collect()]
-            pick = pick_merge(cat, segs_per_tier, max_merge_at_once,
+            pick = pick_merge(self.commit_state()["segments"],
+                              segs_per_tier, max_merge_at_once,
                               floor_bytes, max_merged_bytes)
             if not pick:
                 return n
@@ -289,7 +294,7 @@ class IndexWriter:
         st = self.commit_state()
         six = self.reader()
         seg_ids = sorted(seg_ids)
-        new_id = st["next_seg_id"]
+        new_id, _ = next_ids(st["segments"])
         gen = st["generation"] + 1
         pk = six.packed.filter(F.col("seg_id").isin(seg_ids))
 
@@ -310,14 +315,9 @@ class IndexWriter:
             pk = _expunge_packed(pk.join(nm_src, "seg_id"), deleted_arr)
         # concatenation order must be docid order; seg_id order diverges
         # from it once merged segments (fresh, higher ids) re-merge, so
-        # sort by the catalog's docid_min
-        src = (six.catalog.filter(F.col("seg_id").isin(seg_ids))
-               .select("seg_id", "docid_min", "n_docs", "n_tokens")
-               .collect())
-        rng_df = self.spark.createDataFrame(
-            [(r["seg_id"], int(r["docid_min"])) for r in src],
-            "seg_id INT, docid_min LONG")
-        pk = pk.join(F.broadcast(rng_df), "seg_id")
+        # sort by the records' docid_min
+        pk = pk.join(F.broadcast(six.catalog.select("seg_id", "docid_min")),
+                     "seg_id")
         merged = (pk.groupBy("term")
                   .agg(F.sort_array(F.collect_list(F.struct(
                       "docid_min", "df", "ttf", "doc_blocks", "tf_blocks",
@@ -384,9 +384,8 @@ class IndexWriter:
 
         lineage = f"merge({','.join(map(str, seg_ids))})" + \
             (" expunge" if deleted_arr is not None else "")
-        cat_rows, pk_new, nm_new = self._catalog_new_segments(
-            st, gen, lineage, replaced=seg_ids)
-        ts = self._snapshot("term_stats", st)
+        new = self._new_records(gen, lineage)
+        ts = self._term_stats(st)
         updates = {}
         if deleted_arr is not None:
             # surviving-corpus stats: subtract the merged range's old
@@ -396,7 +395,7 @@ class IndexWriter:
             delta = (old_range.groupBy("term")
                      .agg(F.sum("df").alias("odf"),
                           F.sum("ttf").alias("ottf")))
-            new_range = (pk_new.select("term", "df", "ttf")
+            new_range = (self._postings(gen).select("term", "df", "ttf")
                          .groupBy("term")
                          .agg(F.sum("df").alias("ndf"),
                               F.sum("ttf").alias("nttf")))
@@ -414,26 +413,17 @@ class IndexWriter:
             # postings); ids outside the merged range stay deleted —
             # computed as a distributed filter, never a driver pass over
             # the global delete set
-            lo = int(cat_rows[0]["docid_min"])
-            hi = lo + nm_new.select(F.length("norm_blob")).first()[0]
+            src = [r for r in st["segments"] if r["seg_id"] in seg_ids]
+            lo = min(r["docid_min"] for r in src)
+            hi = max(r["docid_end"] for r in src)
             remaining = six.deleted.filter(
                 (F.col("docid") < lo) | (F.col("docid") >= hi))
             updates["del_gens"] = \
                 [gen] if self._write_delete_set(remaining, gen) else []
         # a bulk merge changes no statistics — the snapshot carries forward
         ts.write.mode("overwrite").parquet(self._gen_dir("term_stats", gen))
-
-        def gone(k):
-            # docs/tokens the merge expunged (0 for a bulk merge)
-            return sum(r[k] for r in src) - sum(r[k] for r in cat_rows)
-        return self._commit(
-            st, generation=gen, stats_gen=gen, next_seg_id=new_id + 1,
-            live_segs=sorted((set(st["live_segs"]) - set(seg_ids))
-                             | {new_id}),
-            lineage=lineage, doc_count=st["doc_count"] - gone("n_docs"),
-            sum_ttf=st["sum_ttf"] - gone("n_tokens"),
-            data_gens={**st.get("data_gens", {}), gen: [new_id]},
-            **updates)
+        return self._commit(st, add=new, drop=seg_ids, generation=gen,
+                            stats_gen=gen, lineage=lineage, **updates)
 
     # -- deletes (live docs) ------------------------------------------------
 
@@ -582,33 +572,20 @@ class IndexWriter:
         return True
 
     def vacuum(self) -> list:
-        """Delete generation data dirs whose segments are all dead."""
-        st = self.commit_state()
-        live = set(st["live_segs"])
-        data_gens = {int(g): segs
-                     for g, segs in st.get("data_gens", {}).items()}
-        removed = []
-        for g in sorted(data_gens):
-            if not set(data_gens[g]) & live:
-                d = self._gen_dir("segments", g)
-                if os.path.isdir(d):
-                    shutil.rmtree(d)
-                    removed.append(f"segments/gen={g}")
-                del data_gens[g]
-        # also drop stale uncommitted gen dirs (crashed attempts); a
-        # prepared commit's generations count as referenced, like a
-        # pending segments_N in Lucene's IndexFileDeleter
-        keep = set(data_gens)
+        """Delete every ``segments/gen=N`` dir that no record of the
+        commit references — merge inputs and crashed attempts. A
+        prepared commit's records count as references, like a pending
+        segments_N in Lucene's IndexFileDeleter."""
+        keep = {r["gen"] for r in self.commit_state()["segments"]}
         if os.path.exists(os.path.join(self.path, _PENDING_COMMIT)):
-            keep |= {int(g) for g in
-                     read_commit(self.path, _PENDING_COMMIT)["data_gens"]}
+            keep |= {r["gen"] for r in
+                     read_commit(self.path, _PENDING_COMMIT)["segments"]}
         root = os.path.join(self.path, "segments")
-        for d in os.listdir(root) if os.path.isdir(root) else ():
-            if d.startswith("gen=") and int(d.split("=")[1]) not in keep:
-                shutil.rmtree(os.path.join(root, d))
-                removed.append(f"segments/{d}")
-        if removed:
-            self._commit(st, data_gens=data_gens)
+        removed = [f"segments/{d}" for d in sorted(
+            os.listdir(root) if os.path.isdir(root) else ())
+            if d.startswith("gen=") and int(d[4:]) not in keep]
+        for rel in removed:
+            shutil.rmtree(os.path.join(self.path, rel))
         return removed
 
 

@@ -1080,7 +1080,7 @@ class SegmentSearcher(TermWeights):
         """Early-terminated index-order top-k (TopFieldCollector's
         canEarlyTerminate path when the query Sort equals the index
         sort, TopFieldCollector.java:200): segments hold contiguous
-        docid ranges in index order (catalog ``docid_min``), so the
+        docid ranges in index order (record ``docid_min``), so the
         first k matches by docid need only a PREFIX of segments.
         Segments are probed in docid order with geometric widening
         (1, 2, 4, ... segments per probe — <= log2(S) probes even when
@@ -1096,11 +1096,8 @@ class SegmentSearcher(TermWeights):
         out_schema = "doc_id long"
         if not spec.clauses:
             return spark.createDataFrame([], out_schema)
-        cat = sorted(
-            (r.docid_min, r.seg_id)
-            for r in self.six.catalog.select("seg_id", "docid_min")
-            .collect()
-            if r.seg_id in self.six.live_segs)
+        cat = sorted((r["docid_min"], r["seg_id"])
+                     for r in self.six.segments)
         frame = self._segment_frame(spec)
         taken: list = []
         i, width = 0, 1

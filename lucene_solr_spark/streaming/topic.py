@@ -7,21 +7,22 @@ per-shard checkpoint map, and the checkpoints are persisted to a
 checkpoint collection so a subscriber resumes where it left off
 (initialCheckpoint -1 = from the beginning, :88).
 
-The Spark analogue subscribes to an ``IndexWriter`` store: the
-generation number plays ``_version_`` (it is the store's monotonic
-publish clock — every committed append is one generation), and the
-checkpoint is a JSON file swapped atomically (the checkpoint
-collection's role).  ``pull()`` returns the docids that became
-visible since the last pull, excluding docs already deleted at pull
-time (TopicStream emits only docs that still match at read time).
+The Spark analogue subscribes to an ``IndexWriter`` store: the docid
+plays ``_version_`` — docids are handed out in insertion order and
+never reused (an expunging merge keeps its range's width), so the
+checkpoint is a docid high-water mark, persisted in a JSON file
+swapped atomically (the checkpoint collection's role).  ``pull()``
+returns the live docids in [checkpoint, next docid), so documents a
+merge rewrites under a new generation are not delivered again, and
+docs already deleted at pull time are excluded (TopicStream emits
+only docs that still match at read time).
 
-Scale shape: a pull reads ONLY the catalog rows of new generations
-(docid ranges — tiny) and explodes them into ids; no segment data is
-touched.  The usual composition is ``fetch()`` over the pulled ids
-(exactly Solr's topic + fetch pattern), which is one equi-join.
-The catalog and the delete set are the reader's (``open_segments``),
-so the pull resolves them exactly as a searcher of that commit does;
-deletes are excluded by one anti-join.
+Scale shape: the segment records of the reader's commit
+(``open_segments``) say which segments reach past the checkpoint;
+only their norms rows are read, and the delete set is excluded by one
+anti-join — exactly as a searcher of that commit resolves it.  The
+usual composition is ``fetch()`` over the pulled ids (exactly Solr's
+topic + fetch pattern), which is one equi-join.
 """
 
 from __future__ import annotations
@@ -50,12 +51,12 @@ class Topic:
         with open(self.checkpoint_path) as f:
             return json.load(f).get(self.topic_id, self.initial)
 
-    def _write_ckpt(self, gen: int) -> None:
+    def _write_ckpt(self, docid: int) -> None:
         state = {}
         if os.path.exists(self.checkpoint_path):
             with open(self.checkpoint_path) as f:
                 state = json.load(f)
-        state[self.topic_id] = gen
+        state[self.topic_id] = docid
         tmp = self.checkpoint_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(state, f)
@@ -64,21 +65,17 @@ class Topic:
     # -- pull ------------------------------------------------------------
 
     def pull(self) -> DataFrame:
-        """Docids committed since the last checkpoint; advances the
-        checkpoint to the store's current generation (checkpointEvery
-        batching collapses to per-pull persistence here — each pull is
-        one micro-batch)."""
-        from ..index.segments import open_segments
+        """Live docids added since the last checkpoint; advances the
+        checkpoint to the store's next docid (checkpointEvery batching
+        collapses to per-pull persistence here — each pull is one
+        micro-batch)."""
+        from dataclasses import replace
+
+        from ..index.segments import next_ids, open_segments
+        from ..index.splitter import live_docids
         six = open_segments(self.spark, self.writer_path)
-        ckpt = self._read_ckpt()
-        cur = six.generation
-        new_segs = [s for g, segs in six.data_gens.items()
-                    if ckpt < g <= cur for s in segs]
-        self._write_ckpt(cur)
-        if not new_segs:
-            return self.spark.createDataFrame([], "docid long")
-        ids = (six.catalog.filter(F.col("seg_id").isin(new_segs))
-               .select(F.explode(F.expr(
-                   "sequence(docid_min, docid_min + n_docs - 1)"))
-                   .alias("docid")))
-        return ids.join(six.deleted, "docid", "left_anti")
+        lo = max(self._read_ckpt(), 0)
+        self._write_ckpt(next_ids(six.segments)[1])
+        new = replace(six, segments=tuple(
+            r for r in six.segments if r["docid_end"] > lo))
+        return live_docids(new).filter(F.col("docid") >= lo)

@@ -238,15 +238,14 @@ def test_update_numeric_docvalue_newest_generation_wins(store, spark):
 
 def _snapshot_dirs(path):
     import os
-    return {(sub, d) for sub in ("catalog", "term_stats")
-            for d in os.listdir(os.path.join(path, sub))}
+    return set(os.listdir(os.path.join(path, "term_stats")))
 
 
 @pytest.mark.parametrize("how", ["docids", "docids_df", "term", "query"])
 def test_delete_family_is_one_path(store, spark, how):
     """Every delete entry point removing the 'error' docs yields the
     same delete set and results, commits exactly one generation and
-    writes no catalog/term_stats snapshot."""
+    writes no term_stats snapshot."""
     w = store
     ss = SegmentSearcher(w.reader())
     victims = {r.docid for r in ss.scored(Term("error"))

@@ -29,17 +29,32 @@ from pyspark.sql import functions as F
 PROBES = ("ok", "retry", "error", "the")
 
 
-@pytest.fixture()
+# corpus and store are read-only: every split writes to its own
+# destinations, so one store (and one PK split of it) serves the module
+
+
+@pytest.fixture(scope="module")
 def corpus(spark, xs_transcripts):
     return xs_transcripts.limit(400).drop("docid").persist()
 
 
-@pytest.fixture()
-def store(spark, corpus, tmp_path):
-    w = IndexWriter.create(spark, str(tmp_path / "ix"),
-                           docs_per_segment=128)
+@pytest.fixture(scope="module")
+def store(spark, corpus, tmp_path_factory):
+    w = IndexWriter.create(spark, str(tmp_path_factory.mktemp("split")
+                                      / "ix"), docs_per_segment=128)
     w.append_raw(corpus)
     return w
+
+
+@pytest.fixture(scope="module")
+def pk_split(spark, store, tmp_path_factory):
+    """``split_by_query(store, Term("error"))``: (pass reader, fail
+    reader, pass path, fail path)."""
+    root = tmp_path_factory.mktemp("pk")
+    dst_pass, dst_fail = str(root / "pass"), str(root / "fail")
+    a, b = split_by_query(spark, store.path, dst_pass, dst_fail,
+                          Term("error"))
+    return a, b, dst_pass, dst_fail
 
 
 def _hits(spark, path, term):
@@ -54,10 +69,8 @@ def _score_multiset(spark, path, term, k=10_000):
                   for r in ss.topk(Term(term), k).collect())
 
 
-def test_pk_split_partitions_exactly(spark, store, corpus, tmp_path):
-    q = Term("error")
-    a, b = split_by_query(spark, store.path, str(tmp_path / "pass"),
-                          str(tmp_path / "fail"), q)
+def test_pk_split_partitions_exactly(spark, store, corpus, pk_split):
+    a, b, dst_pass, dst_fail = pk_split
     n = corpus.count()
     assert a.doc_count + b.doc_count == n
     src_hits = _hits(spark, store.path, "error")
@@ -67,24 +80,22 @@ def test_pk_split_partitions_exactly(spark, store, corpus, tmp_path):
     # every probe's hit set splits exactly (docids preserved)
     for t in PROBES:
         src = _hits(spark, store.path, t)
-        ha = _hits(spark, str(tmp_path / "pass"), t)
-        hb = _hits(spark, str(tmp_path / "fail"), t)
+        ha = _hits(spark, dst_pass, t)
+        hb = _hits(spark, dst_fail, t)
         assert not (ha & hb)
         assert (ha | hb) == src
         assert ha == src & src_hits
     # the pass side is exactly the query's hit set
-    assert _hits(spark, str(tmp_path / "pass"), "error") == src_hits
-    assert _hits(spark, str(tmp_path / "fail"), "error") == set()
+    assert _hits(spark, dst_pass, "error") == src_hits
+    assert _hits(spark, dst_fail, "error") == set()
 
 
 def test_pk_split_matches_fresh_index_on_filtered_corpus(
-        spark, store, corpus, tmp_path):
+        spark, store, corpus, pk_split, tmp_path):
     """The fail half scores like an index built directly from the
     filtered corpus: identical round-6 BM25 score multisets (both
     paths shrink df/avgdl/sum_ttf to the survivors)."""
-    q = Term("error")
-    split_by_query(spark, store.path, str(tmp_path / "pass"),
-                   str(tmp_path / "fail"), q)
+    dst_fail = pk_split[3]
     hit_ids = _hits(spark, store.path, "error")
     # rebuild the fail-side corpus by key: xs docids were assigned on
     # the same (conv_id, turn_idx) order the store indexed
@@ -98,10 +109,10 @@ def test_pk_split_matches_fresh_index_on_filtered_corpus(
                             docs_per_segment=128)
     w2.append_raw(keep)
     for t in PROBES:
-        got = _score_multiset(spark, str(tmp_path / "fail"), t)
+        got = _score_multiset(spark, dst_fail, t)
         exp = _score_multiset(spark, str(tmp_path / "fresh"), t)
         assert got == exp
-    assert open_segments(spark, str(tmp_path / "fail")).doc_count == \
+    assert open_segments(spark, dst_fail).doc_count == \
         open_segments(spark, str(tmp_path / "fresh")).doc_count
 
 

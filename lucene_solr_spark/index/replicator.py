@@ -42,7 +42,7 @@ from .segments import read_commit, write_commit
 __all__ = ["revision", "replicate", "snapshot_index"]
 
 
-def _gen_dirs(state: dict) -> list[str]:
+def commit_dirs(state: dict) -> list[str]:
     """Relative gen-dir paths referenced by a commit state — the
     IndexRevision file list."""
     out = [f"segments/gen={g}"
@@ -59,7 +59,7 @@ def revision(path: str) -> dict:
     """The current commit's revision manifest: the commit state plus
     the gen-dirs it references (IndexRevision.getSourceFiles)."""
     st = read_commit(path)
-    return {"state": st, "dirs": _gen_dirs(st)}
+    return {"state": st, "dirs": commit_dirs(st)}
 
 
 def replicate(src: str, dst: str) -> dict:

@@ -17,7 +17,8 @@ codecs/lucene84/Lucene84PostingsWriter.java:218-375):
   columns (MultiLevelSkipListWriter.java:69-85,
   CompetitiveImpactAccumulator.java:71-118).
 - per segment one **norms blob**: uint8 norm bytes indexed by
-  ``docid - docid_min`` (Lucene80NormsFormat's forward index).
+  ``docid - docid_min`` (Lucene80NormsFormat's forward index), and a
+  same-width int32 qdl blob, ``EXPUNGED_QDL`` at expunged docids.
 - a **segment record** per live segment in ``commit.json`` (data
   generation, docid range, row-count/byte metrics, lineage) — the
   SegmentInfos/SegmentInfo analogue and the store's only segment
@@ -28,9 +29,10 @@ Build = one shuffle: groupBy(seg_id) ships each segment's raw text to
 one Arrow kernel (``build_segments_direct``) that tokenizes, inverts
 and packs all of the segment's posting rows plus its norms row. Every
 posting row is encoded by ``blocks.encode_postings_batch`` — at build
-and when an expunging merge re-encodes (the one codec writer of the
-reference's flush and merge). No global sort anywhere (docids were
-already assigned by the 2-pass offset pattern in index/docids.py).
+and when ``IndexWriter.expunge_deletes`` re-encodes (the one codec
+writer of the reference's flush and merge). No global sort anywhere
+(docids were already assigned by the 2-pass offset pattern in
+index/docids.py).
 """
 
 from __future__ import annotations
@@ -85,10 +87,15 @@ SEGDATA_SCHEMA = StructType(
         StructField("qdl_blob", BinaryType()),
     ])
 
+# qdl_blob value at an expunged docid: an expunge keeps the norms blobs
+# full-width, and a live token-less doc has norm byte 0 and qdl 0, so
+# only this value tells a hole from a live doc
+EXPUNGED_QDL = -1
+
 
 # one segment record of ``commit.json`` (SegmentInfo analogue): its docid
 # range [docid_min, docid_end) — docid_end = docid_min + norm-blob width,
-# which an expunging merge keeps — metrics, data generation and lineage
+# which an expunge keeps — metrics, data generation and lineage
 CATALOG_SCHEMA = ("seg_id INT, docid_min LONG, docid_end LONG, n_docs LONG, "
                   "n_tokens LONG, n_terms LONG, n_postings LONG, "
                   "packed_bytes LONG, gen LONG, lineage STRING, build_ts LONG")
@@ -482,8 +489,8 @@ class SegmentIndex:
 
     A commit = ``commit.json`` (generation, collection stats, one record
     per live segment, delete/docvalue generations) + the term_stats
-    snapshot at its ``stats_gen`` (the last append or merge; deletes
-    and docvalue updates keep it) + the per-generation segment data
+    snapshot at its ``stats_gen`` (the last append or expunge; merges,
+    deletes and docvalue updates keep it) + the per-generation segment data
     dirs its records name. Readers see only the commit's live
     segments, so every mutation is atomic at the one commit.json swap —
     the segments_N model (INDEX/SegmentInfos.java)."""
@@ -627,9 +634,8 @@ def read_commit(path: str, filename: str = "commit.json") -> dict:
 
 def next_ids(segments) -> tuple:
     """(next seg id, next docid) after the segment records
-    ``segments``: one past the highest live record. An expunging merge
-    keeps its range's full width, so a docid is never handed out
-    twice."""
+    ``segments``: one past the highest live record. An expunge keeps
+    its segment's full width, so a docid is never handed out twice."""
     return (max((r["seg_id"] for r in segments), default=-1) + 1,
             max((r["docid_end"] for r in segments), default=0))
 

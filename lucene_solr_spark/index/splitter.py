@@ -15,8 +15,8 @@ index minus the other side's documents":
   FakeDeleteIndexReader before copying.
 
 This store expresses both the same way the reference does — replicate
-the commit point, mark the complement deleted, then expunge-merge so
-the survivors are physically rewritten and the collection/term
+the commit point, mark the complement deleted, then expunge the deletes
+so the survivors are physically rewritten and the collection/term
 statistics shrink to the split (the role of the reference's
 addIndexes copy):
 
@@ -24,16 +24,17 @@ addIndexes copy):
    commit swap (index/replicator.py);
 2. ``delete_by_query`` / ``delete_docids_df`` — distributed hit
    resolution, the delete set never passes through the driver;
-3. per-segment ``merge_segments([seg], expunge=True)`` — each segment
-   rewritten in place of its deleted docs (expungeDeletes shape;
-   Lucene renumbers docids on its copy, this store keeps the original
-   docids — a representation difference, the document sets and every
-   per-doc posting/norm are identical), then ``vacuum`` drops the
-   dead generations.
+3. ``IndexWriter.expunge_deletes`` — every segment with deletes
+   rewritten without its deleted docs in ONE commit (forceMergeDeletes
+   shape; Lucene renumbers docids on its copy, this store keeps the
+   original docids — a representation difference, the document sets
+   and every per-doc posting/norm are identical), then ``vacuum`` drops
+   the dead generations.
 
 At 100 TB each step is metadata- or scan-bounded: the replica copy is
 a distributed FS copy of immutable directories, the delete set is one
-pushed parquet write, and each expunge touches one segment's rows.
+pushed parquet write, and the expunge touches only the rows of the
+segments that hold deletes.
 """
 
 from __future__ import annotations
@@ -41,28 +42,23 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 
 from .replicator import replicate
-from .segments import SegmentIndex, next_ids
+from .segments import EXPUNGED_QDL, SegmentIndex, next_ids
 from .writer import IndexWriter
 
-__all__ = ["expunge_all", "live_docids", "split_by_query",
-           "split_round_robin"]
+__all__ = ["live_docids", "split_by_query", "split_round_robin"]
 
 
 def live_docids(six: SegmentIndex):
     """Live docids of a store as a DataFrame (the liveDocs bitset
     read, MultiBits over per-segment live docs), minus the
-    not-yet-expunged delete sets. A segment whose record counts every
-    position of its ``[docid_min, docid_end)`` range holds all of them;
-    in a segment with expunged holes (writer._merge_norms zeroes them in
-    place and keeps blobs full-width) the live positions are those with
-    a nonzero norm byte. One Arrow pass over the norms rows
-    (segment-count bounded), no driver materialization.
-
-    Caveat mirrored from the encoding: a live but token-less doc has
-    norm byte 0 (SmallFloat(0)), so inside an expunged segment it is
-    indistinguishable from an expunged position — such docs carry no
-    postings and can never match a query, but a split would mis-place
-    them."""
+    not-yet-expunged delete sets. ``IndexWriter.expunge_deletes``
+    keeps norms blobs full-width and marks each expunged position with
+    qdl ``EXPUNGED_QDL``; every other position is live, token-less docs
+    included. Stores expunged before that marker wrote qdl 0 at holes,
+    so where the marked positions do not account for the record's
+    ``n_docs`` the live positions are those with a nonzero norm byte.
+    One Arrow pass over the norms rows (segment-count bounded), no
+    driver materialization."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     schema = StructType([StructField("docid", LongType())])
@@ -72,32 +68,17 @@ def live_docids(six: SegmentIndex):
         import pandas as pd
         for pdf in it:
             for r in pdf.itertuples(index=False):
-                nb = np.frombuffer(r.norm_blob, dtype=np.uint8)
-                pos = np.arange(nb.size) if r.n_docs == nb.size \
-                    else np.flatnonzero(nb)
+                qb = np.frombuffer(r.qdl_blob, dtype=np.int32)
+                pos = np.flatnonzero(qb != EXPUNGED_QDL)
+                if pos.size != r.n_docs:
+                    pos = np.flatnonzero(
+                        np.frombuffer(r.norm_blob, dtype=np.uint8))
                 ids = int(r.docid_min) + pos
                 yield pd.DataFrame({"docid": ids.astype(np.int64)})
 
-    ids = (six.norms.select("docid_min", "n_docs", "norm_blob")
+    ids = (six.norms.select("docid_min", "n_docs", "norm_blob", "qdl_blob")
            .mapInPandas(fn, schema))
     return ids.join(six.deleted, "docid", "left_anti")
-
-
-def expunge_all(w: IndexWriter) -> SegmentIndex:
-    """expungeDeletes over every live segment that carries deletes
-    (IndexWriter.forceMergeDeletes — MergePolicy.findForcedDeletesMerges
-    selects exactly the segments with deletions): each is rewritten
-    singly, keeping the store's segment granularity (no forceMerge(1)
-    collapse), then dead generations are vacuumed."""
-    six = w.reader()
-    if six.del_gens:
-        with_dels = sorted(
-            r["seg_id"]
-            for r in six.deleted_by_segment().select("seg_id").collect())
-        for seg in with_dels:
-            w.merge_segments([seg], expunge=True)
-    w.vacuum()
-    return w.reader()
 
 
 def split_by_query(spark: SparkSession, src: str, dst_pass: str,
@@ -124,7 +105,8 @@ def split_by_query(spark: SparkSession, src: str, dst_pass: str,
             w.delete_docids_df(drop, lineage=f"pk-split keep={query!r}")
         else:
             w.delete_by_query(query, lineage=f"pk-split drop={query!r}")
-        out.append(expunge_all(w))
+        out.append(w.expunge_deletes())
+        w.vacuum()
     return tuple(out)
 
 
@@ -163,5 +145,6 @@ def split_round_robin(spark: SparkSession, src: str, dsts: list,
         else:
             drop = docs.filter(F.col("docid") % n != i)
         w.delete_docids_df(drop, lineage=f"rr-split part {i}/{n}")
-        out.append(expunge_all(w))
+        out.append(w.expunge_deletes())
+        w.vacuum()
     return out

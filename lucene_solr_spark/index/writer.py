@@ -15,8 +15,8 @@ TieredMergePolicy -> commit; INDEX/SegmentInfos.java generations):
   adds and drops; ``doc_count``, ``sum_ttf`` and the next seg id and
   docid derive from the records, so no docid is handed out twice.
   ``stats_gen`` names the generation holding the term_stats snapshot:
-  appends and merges write a new one at their own generation, deletes
-  and docvalue updates change no statistics and keep it.
+  appends and expunges write a new one at their own generation; merges,
+  deletes and docvalue updates change no statistics and keep it.
 - ``append_raw(batch)`` = one "flush" and the only way a segment is
   built: assign docids continuing from the next docid
   (insertion-ordered like Lucene docIDs), build packed segments +
@@ -38,19 +38,24 @@ TieredMergePolicy -> commit; INDEX/SegmentInfos.java generations):
   posting row is the docid-ordered concatenation of the source rows'
   block arrays — pure JVM (sort_array+flatten, no decode), exactly
   Lucene's bulk-merge fast path (codecs/FieldsConsumer.merge:86).
-  An expunging merge re-encodes only the rows that hold deleted docs,
-  with the flush's batch encoder
-  (``blocks.encode_postings_batch``), so a flush and a merge write
-  postings through one codec writer, as in the reference.
+  A merge only concatenates: deleted docs stay deleted in it.
 - every delete (docid list, docid frame, term, query, expiry sweep)
   resolves to a docid frame and ends in ``_commit_delete_set``.
-- ``vacuum()`` deletes every segment generation dir that no record of
-  the commit (or of a prepared commit) references — merge inputs and
-  crashed attempts — like Lucene deleting merged-away segment files.
+- ``expunge_deletes()`` = IndexWriter.forceMergeDeletes: every segment
+  holding deletes is rewritten without them in ONE commit, which moves
+  the statistics to the surviving corpus and empties the delete set.
+  Only the rows that hold deleted docs are re-encoded, with the flush's
+  batch encoder (``blocks.encode_postings_batch``), so a flush and an
+  expunge write postings through one codec writer, as in the reference.
+- ``vacuum()`` deletes every segment, term_stats and delete-set
+  generation dir that the commit (or a prepared commit) does not
+  reference — merge and expunge inputs, superseded snapshots and delete
+  sets, crashed attempts — like Lucene deleting merged-away files.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import time
@@ -59,9 +64,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .docids import assign_docids
+from .replicator import commit_dirs
 from .segments import (
-    SegmentIndex, build_segments_direct, next_ids, read_commit,
-    unify_segment_frames, write_commit,
+    EXPUNGED_QDL, PACKED_SCHEMA, SegmentIndex, build_segments_direct,
+    next_ids, read_commit, unify_segment_frames, write_commit,
 )
 
 _PENDING_COMMIT = "pending_commit.json"
@@ -265,12 +271,10 @@ class IndexWriter:
     def maybe_merge(self, segs_per_tier: int = 10,
                     max_merge_at_once: int = 10,
                     floor_bytes: int = 2 << 20,
-                    max_merged_bytes: int = 5 << 30,
-                    expunge: bool = False) -> int:
+                    max_merged_bytes: int = 5 << 30) -> int:
         """Run the tiered policy until no merge qualifies; returns the
-        number of merges executed. ``expunge=True`` drops deleted docs
-        in every merge (Lucene merges always do; the default keeps the
-        zero-decode bulk fast path)."""
+        number of bulk merges executed. Deleted docs stay in the merged
+        segments until ``expunge_deletes``."""
         n = 0
         while True:
             pick = pick_merge(self.commit_state()["segments"],
@@ -278,152 +282,142 @@ class IndexWriter:
                               floor_bytes, max_merged_bytes)
             if not pick:
                 return n
-            self.merge_segments(pick, expunge=expunge)
+            self.merge_segments(pick)
             n += 1
 
-    def merge_segments(self, seg_ids: list,
-                       expunge: bool = False) -> SegmentIndex:
+    def merge_segments(self, seg_ids: list) -> SegmentIndex:
         """Bulk-merge docid-adjacent segments into one new segment.
 
-        ``expunge=True`` drops deleted documents while merging (Lucene
-        merges always do; SegmentMerger skips non-live docs —
-        INDEX/SegmentMerger.java:97-180): postings are decoded,
-        filtered, and re-encoded; collection statistics and the global
-        term-stats snapshot are updated to the surviving corpus; the
-        expunged docids leave the delete set."""
+        The merge only concatenates (SegmentMerger.merge, INDEX/
+        SegmentMerger.java:97-180, minus the live-docs filter that
+        ``expunge_deletes`` owns): no posting is decoded, deleted docs
+        stay deleted, and no statistic changes, so the commit keeps its
+        ``stats_gen``. Raises ``ValueError`` before any Spark job unless
+        every id names a live segment and their docid ranges tile one
+        range: a merged record's range must not span a segment it did
+        not merge, and the merged norms blobs are the concatenation of
+        the inputs' blobs."""
         st = self.commit_state()
+        seg_ids = sorted(set(seg_ids))
+        recs = sorted((r for r in st["segments"] if r["seg_id"] in seg_ids),
+                      key=lambda r: r["docid_min"])
+        if not recs or len(recs) != len(seg_ids) or any(
+                a["docid_end"] != b["docid_min"]
+                for a, b in zip(recs, recs[1:])):
+            raise ValueError(f"merge_segments needs live, docid-adjacent "
+                             f"segments, got {seg_ids}")
         six = self.reader()
-        seg_ids = sorted(seg_ids)
         new_id, _ = next_ids(st["segments"])
         gen = st["generation"] + 1
         pk = six.packed.filter(F.col("seg_id").isin(seg_ids))
-
-        deleted_arr = None
-        if expunge and six.del_gens:
-            import numpy as np
-            # only the merged segments' deletes are needed — bounded by
-            # the merge's own size cap, never the global delete set
-            rows = (six.deleted_by_segment()
-                    .filter(F.col("seg_id").isin(seg_ids)).collect())
-            ids = sorted(d for r in rows for d in r["del_ids"])
-            if ids:
-                deleted_arr = np.array(ids, dtype=np.int64)
-        if deleted_arr is not None:
-            nm_src = six.norms.filter(F.col("seg_id").isin(seg_ids)) \
-                .select("seg_id", F.col("docid_min").alias("nlo"),
-                        F.col("qdl_blob").alias("qblob"))
-            pk = _expunge_packed(pk.join(nm_src, "seg_id"), deleted_arr)
         # concatenation order must be docid order; seg_id order diverges
         # from it once merged segments (fresh, higher ids) re-merge, so
         # sort by the records' docid_min
         pk = pk.join(F.broadcast(six.catalog.select("seg_id", "docid_min")),
                      "seg_id")
+        cols = [f.name for f in PACKED_SCHEMA.fields][2:]
         merged = (pk.groupBy("term")
                   .agg(F.sort_array(F.collect_list(F.struct(
-                      "docid_min", "df", "ttf", "doc_blocks", "tf_blocks",
-                      "pos_blocks", "skip_last_docid", "skip_n_docs",
-                      "skip_max_tf", "skip_min_qdl",
-                      "packed_bytes"))).alias("pl"))
+                      "docid_min", *cols))).alias("pl"))
                   .select(
-                      F.lit(new_id).cast("int").alias("seg_id"),
-                      "term",
-                      F.aggregate("pl.df", F.lit(0).cast("long"),
-                                  lambda a, x: a + x).alias("df"),
-                      F.aggregate("pl.ttf", F.lit(0).cast("long"),
-                                  lambda a, x: a + x).alias("ttf"),
-                      F.flatten("pl.doc_blocks").alias("doc_blocks"),
-                      F.flatten("pl.tf_blocks").alias("tf_blocks"),
-                      F.flatten("pl.pos_blocks").alias("pos_blocks"),
-                      F.flatten("pl.skip_last_docid").alias("skip_last_docid"),
-                      F.flatten("pl.skip_n_docs").alias("skip_n_docs"),
-                      F.flatten("pl.skip_max_tf").alias("skip_max_tf"),
-                      F.flatten("pl.skip_min_qdl").alias("skip_min_qdl"),
-                      F.aggregate("pl.packed_bytes", F.lit(0).cast("long"),
-                                  lambda a, x: a + x).alias("packed_bytes")))
+                      F.lit(new_id).cast("int").alias("seg_id"), "term",
+                      *[F.aggregate(f"pl.{c}", F.lit(0).cast("long"),
+                                    lambda a, x: a + x).alias(c)
+                        if c in ("df", "ttf", "packed_bytes")
+                        else F.flatten(f"pl.{c}").alias(c) for c in cols]))
         nm = six.norms.filter(F.col("seg_id").isin(seg_ids))
-        _del_for_norms = deleted_arr
 
         def _merge_norms(it):
-            import numpy as np
             import pandas as pd
-            rows = []
-            for pdf in it:
-                rows.extend(pdf.to_dict("records"))
-            if not rows:
-                return
-            rows.sort(key=lambda r: r["docid_min"])
-            lo = int(rows[0]["docid_min"])
-            spans = [(int(r["docid_min"]),
-                      np.frombuffer(r["norm_blob"], dtype=np.uint8),
-                      np.frombuffer(r["qdl_blob"], dtype=np.int32))
-                     for r in rows]
-            hi = max(s[0] + s[1].size for s in spans)
-            nb = np.zeros(hi - lo, dtype=np.uint8)
-            qb = np.zeros(hi - lo, dtype=np.int32)
-            for s0, b, q in spans:
-                nb[s0 - lo:s0 - lo + b.size] = b
-                qb[s0 - lo:s0 - lo + q.size] = q
-            n_docs = int(sum(r["n_docs"] for r in rows))
-            if _del_for_norms is not None:
-                sel = _del_for_norms[(_del_for_norms >= lo)
-                                     & (_del_for_norms < hi)]
-                was_live = nb[sel - lo] != 0
-                nb[sel - lo] = 0
-                qb[sel - lo] = 0
-                n_docs -= int(was_live.sum())
-            yield pd.DataFrame({
-                "seg_id": [new_id], "docid_min": [lo],
-                "n_docs": [n_docs],
-                "norm_blob": [nb.tobytes()], "qdl_blob": [qb.tobytes()]})
+            rows = sorted((r for pdf in it for r in pdf.to_dict("records")),
+                          key=lambda r: r["docid_min"])
+            if rows:
+                yield pd.DataFrame({
+                    "seg_id": [new_id], "docid_min": [rows[0]["docid_min"]],
+                    "n_docs": [sum(r["n_docs"] for r in rows)],
+                    **{c: [b"".join(r[c] for r in rows)]
+                       for c in ("norm_blob", "qdl_blob")}})
 
         merged_norms = nm.repartition(1).mapInPandas(_merge_norms, nm.schema)
         unify_segment_frames(merged.sortWithinPartitions("term"),
                              merged_norms) \
             .write.mode("overwrite").option("compression", "zstd") \
             .parquet(self._gen_dir("segments", gen))
+        lineage = f"merge({','.join(map(str, seg_ids))})"
+        return self._commit(st, add=self._new_records(gen, lineage),
+                            drop=seg_ids, generation=gen, lineage=lineage)
 
-        lineage = f"merge({','.join(map(str, seg_ids))})" + \
-            (" expunge" if deleted_arr is not None else "")
-        new = self._new_records(gen, lineage)
-        ts = self._term_stats(st)
-        updates = {}
-        if deleted_arr is not None:
-            # surviving-corpus stats: subtract the merged range's old
-            # per-term contributions, add the expunged ones back
-            old_range = (six.packed.filter(F.col("seg_id").isin(seg_ids))
-                         .select("term", "df", "ttf"))
-            delta = (old_range.groupBy("term")
-                     .agg(F.sum("df").alias("odf"),
-                          F.sum("ttf").alias("ottf")))
-            new_range = (self._postings(gen).select("term", "df", "ttf")
-                         .groupBy("term")
-                         .agg(F.sum("df").alias("ndf"),
-                              F.sum("ttf").alias("nttf")))
-            ts = (ts.join(delta, "term", "left")
-                  .join(new_range, "term", "left")
-                  .select("term",
-                          (F.col("df") - F.coalesce("odf", F.lit(0))
-                           + F.coalesce("ndf", F.lit(0)))
-                          .cast("long").alias("df"),
-                          (F.col("ttf") - F.coalesce("ottf", F.lit(0))
-                           + F.coalesce("nttf", F.lit(0)))
-                          .cast("long").alias("ttf"))
-                  .filter(F.col("df") > 0))
-            # expunged ids leave the delete set (they are gone from the
-            # postings); ids outside the merged range stay deleted —
-            # computed as a distributed filter, never a driver pass over
-            # the global delete set
-            src = [r for r in st["segments"] if r["seg_id"] in seg_ids]
-            lo = min(r["docid_min"] for r in src)
-            hi = max(r["docid_end"] for r in src)
-            remaining = six.deleted.filter(
-                (F.col("docid") < lo) | (F.col("docid") >= hi))
-            updates["del_gens"] = \
-                [gen] if self._write_delete_set(remaining, gen) else []
-        # a bulk merge changes no statistics — the snapshot carries forward
-        ts.write.mode("overwrite").parquet(self._gen_dir("term_stats", gen))
-        return self._commit(st, add=new, drop=seg_ids, generation=gen,
-                            stats_gen=gen, lineage=lineage, **updates)
+    def expunge_deletes(self) -> SegmentIndex:
+        """IndexWriter.forceMergeDeletes analogue: every live segment
+        that holds deleted docs (MergePolicy.findForcedDeletesMerges
+        selects exactly those) is rewritten without them into its own
+        new segment, all in ONE commit. Posting rows holding a deleted
+        doc are decoded, filtered and re-encoded by ``_expunge_packed``;
+        each norms row keeps its docid range, with norm byte 0 and qdl
+        ``EXPUNGED_QDL`` at the deleted positions, so no docid is handed
+        out twice and a docid deleted again after an earlier expunge
+        leaves ``n_docs`` only once. Term and collection
+        statistics move to the surviving corpus and the delete set
+        empties. A store without deletes runs no Spark job and commits
+        nothing."""
+        import numpy as np
+
+        st = self.commit_state()
+        if not st.get("del_gens"):
+            return self.reader()
+        six = self.reader()
+        dels = {r["seg_id"]: np.array(r["del_ids"], dtype=np.int64)
+                for r in six.deleted_by_segment().collect()}
+        if not dels:
+            return six
+        old_ids = sorted(dels)
+        seg_base, _ = next_ids(st["segments"])
+        ids = {s: seg_base + i for i, s in enumerate(old_ids)}
+        gen = st["generation"] + 1
+
+        nm = six.norms.filter(F.col("seg_id").isin(old_ids))
+        pk = _expunge_packed(
+            six.packed.filter(F.col("seg_id").isin(old_ids)).join(
+                nm.select("seg_id", F.col("docid_min").alias("nlo"),
+                          F.col("qdl_blob").alias("qblob")), "seg_id"),
+            dels)
+        new_id = F.create_map(*[F.lit(x) for kv in ids.items() for x in kv])
+        pk = pk.withColumn("seg_id",
+                           F.element_at(new_id, F.col("seg_id")).cast("int"))
+
+        def _zero_deleted(it):
+            import pandas as pd
+            for pdf in it:
+                rows = []
+                for r in pdf.itertuples(index=False):
+                    nb = np.frombuffer(r.norm_blob, dtype=np.uint8).copy()
+                    qb = np.frombuffer(r.qdl_blob, dtype=np.int32).copy()
+                    pos = dels[r.seg_id] - r.docid_min
+                    pos = pos[qb[pos] != EXPUNGED_QDL]
+                    nb[pos] = 0
+                    qb[pos] = EXPUNGED_QDL
+                    rows.append((ids[r.seg_id], r.docid_min,
+                                 r.n_docs - pos.size, nb.tobytes(),
+                                 qb.tobytes()))
+                if rows:
+                    yield pd.DataFrame(rows, columns=pdf.columns)
+
+        unify_segment_frames(pk.sortWithinPartitions("seg_id", "term"),
+                             nm.mapInPandas(_zero_deleted, nm.schema)) \
+            .write.mode("overwrite").option("compression", "zstd") \
+            .parquet(self._gen_dir("segments", gen))
+
+        lineage = f"expunge({','.join(map(str, old_ids))})"
+        # surviving-corpus stats: the snapshot plus the rewritten rows
+        # minus the rows they replace
+        gone = six.packed.filter(F.col("seg_id").isin(old_ids)).select(
+            "term", (-F.col("df")).alias("df"), (-F.col("ttf")).alias("ttf"))
+        _term_totals(self._term_stats(st), self._postings(gen), gone) \
+            .filter(F.col("df") > 0) \
+            .write.mode("overwrite").parquet(self._gen_dir("term_stats", gen))
+        return self._commit(st, add=self._new_records(gen, lineage),
+                            drop=old_ids, generation=gen, stats_gen=gen,
+                            lineage=lineage, del_gens=[])
 
     # -- deletes (live docs) ------------------------------------------------
 
@@ -572,33 +566,40 @@ class IndexWriter:
         return True
 
     def vacuum(self) -> list:
-        """Delete every ``segments/gen=N`` dir that no record of the
-        commit references — merge inputs and crashed attempts. A
-        prepared commit's records count as references, like a pending
-        segments_N in Lucene's IndexFileDeleter."""
-        keep = {r["gen"] for r in self.commit_state()["segments"]}
+        """Delete every generation dir under ``segments/``,
+        ``term_stats/`` and ``deletes/`` that the commit does not
+        reference — merge and expunge inputs, superseded snapshots and
+        delete sets, crashed attempts. A prepared commit's references
+        count too, like a pending segments_N in Lucene's
+        IndexFileDeleter."""
+        keep = set(commit_dirs(self.commit_state()))
         if os.path.exists(os.path.join(self.path, _PENDING_COMMIT)):
-            keep |= {r["gen"] for r in
-                     read_commit(self.path, _PENDING_COMMIT)["segments"]}
-        root = os.path.join(self.path, "segments")
-        removed = [f"segments/{d}" for d in sorted(
-            os.listdir(root) if os.path.isdir(root) else ())
-            if d.startswith("gen=") and int(d[4:]) not in keep]
+            keep |= set(commit_dirs(read_commit(self.path, _PENDING_COMMIT)))
+        removed = []
+        for sub in ("segments", "term_stats", "deletes"):
+            root = os.path.join(self.path, sub)
+            for d in sorted(os.listdir(root) if os.path.isdir(root) else ()):
+                if d.startswith("gen=") and f"{sub}/{d}" not in keep:
+                    removed.append(f"{sub}/{d}")
         for rel in removed:
             shutil.rmtree(os.path.join(self.path, rel))
         return removed
 
 
-def _term_totals(rows: DataFrame) -> DataFrame:
-    """Per-term (df, ttf) totals of posting or term-stats rows."""
-    return (rows.select("term", "df", "ttf").groupBy("term")
+def _term_totals(*frames: DataFrame) -> DataFrame:
+    """Per-term (df, ttf) totals over posting or term-stats rows."""
+    rows = functools.reduce(DataFrame.unionByName, [
+        f.select("term", "df", "ttf") for f in frames])
+    return (rows.groupBy("term")
             .agg(F.sum("df").cast("long").alias("df"),
                  F.sum("ttf").cast("long").alias("ttf")))
 
 
-def _expunge_packed(pk_with_norms: DataFrame, deleted_arr) -> DataFrame:
+def _expunge_packed(pk_with_norms: DataFrame, dels: dict) -> DataFrame:
     """Decode-filter-reencode packed posting rows, dropping deleted
-    docids (the live-docs filter of SegmentMerger's mergeTerms). Input
+    docids (the live-docs filter of SegmentMerger's mergeTerms). ``dels``
+    maps each seg_id to its sorted deleted docids, so a row is tested
+    only against its own segment's deletes. Input
     rows carry their segment's ``nlo`` (docid_min) and ``qblob``
     (qdl forward blob) so surviving docs keep exact impact metadata.
     Untouched rows pass through byte-identical and fully deleted rows
@@ -626,7 +627,8 @@ def _expunge_packed(pk_with_norms: DataFrame, deleted_arr) -> DataFrame:
             for i, nd in enumerate(col["skip_n_docs"]):
                 d, t = blk.decode_all(col["doc_blocks"][i],
                                       col["tf_blocks"][i], nd)
-                keep = ~np.isin(d, deleted_arr)
+                dd = dels[col["seg_id"][i]]
+                keep = dd[np.searchsorted(dd, d).clip(max=dd.size - 1)] != d
                 if keep.all():
                     continue
                 touched[i] = True

@@ -9,7 +9,7 @@ checkpoint collection so a subscriber resumes where it left off
 
 The Spark analogue subscribes to an ``IndexWriter`` store: the docid
 plays ``_version_`` — docids are handed out in insertion order and
-never reused (an expunging merge keeps its range's width), so the
+never reused (an expunge keeps its segment's width), so the
 checkpoint is a docid high-water mark, persisted in a JSON file
 swapped atomically (the checkpoint collection's role).  ``pull()``
 returns the live docids in [checkpoint, next docid), so documents a

@@ -46,3 +46,28 @@ def xs_segments(spark, xs_transcripts, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("xs_segs") / "ix")
     return IndexWriter.create(spark, out, docs_per_segment=128) \
         .append_raw(xs_transcripts.drop("docid"), lineage="xs_transcripts")
+
+
+@pytest.fixture()
+def commit_swaps(monkeypatch):
+    """Record every swap onto commit.json: the record swapped in (read
+    from the source file before the rename) and ``commit_state()``
+    read right after it."""
+    import json
+    import os
+
+    from lucene_solr_spark.index.segments import read_commit
+    swaps = []
+    real = os.replace
+
+    def replace(src, dst, *a, **kw):
+        rec = None
+        if os.path.basename(str(dst)) == "commit.json":
+            with open(src) as f:
+                rec = json.load(f)
+        real(src, dst, *a, **kw)
+        if rec is not None:
+            swaps.append((rec, read_commit(os.path.dirname(str(dst)))))
+
+    monkeypatch.setattr(os, "replace", replace)
+    return swaps

@@ -21,9 +21,10 @@ def store(spark, xs_transcripts, tmp_path):
 
 
 def test_expunge_drops_fully_deleted_rows(spark, tmp_path):
-    """An expunging merge drops a posting row whose every doc is
-    deleted (also when a whole input batch holds only such rows),
-    re-encodes a touched row and passes untouched rows through."""
+    """An expunge drops a posting row whose every doc is deleted (also
+    when a whole input batch holds only such rows), re-encodes a
+    touched row and passes untouched rows through; a bulk merge then
+    concatenates the rewritten segment with the untouched one."""
     import numpy as np
 
     from lucene_solr_spark.index.writer import _expunge_packed
@@ -36,9 +37,10 @@ def test_expunge_drops_fully_deleted_rows(spark, tmp_path):
                           F.col("qdl_blob").alias("qblob"))
     only_doc1 = six.packed.filter(F.col("term").isin("c", "d")) \
         .join(nm, "seg_id").coalesce(1)
-    assert _expunge_packed(only_doc1, np.array([1])).count() == 0
+    assert _expunge_packed(only_doc1, {0: np.array([1])}).count() == 0
     w.delete_docids([1])
-    six2 = w.merge_segments([0, 1], expunge=True)
+    w.expunge_deletes()
+    six2 = w.merge_segments(list(w.reader().live_segs))
     assert sorted((r.term, r.df, r.ttf) for r in six2.packed.collect()) \
         == [("a", 2, 2), ("b", 1, 1), ("e", 1, 1)]
     assert six2.doc_count == 2 and check_index(six2).count() == 0
@@ -96,10 +98,10 @@ def test_deletes_survive_merge_and_commit_roundtrip(store, spark):
 
 def test_expunge_merge_drops_docs_and_updates_stats(store, spark,
                                                     xs_transcripts):
-    """expunge=True merges like Lucene's SegmentMerger: deleted docs
-    leave the postings, collection/term statistics move to the
-    surviving corpus, and results equal a fresh index of the survivors
-    (same docids)."""
+    """expunge_deletes drops deleted docs like Lucene's
+    forceMergeDeletes: deleted docs leave the postings, collection/term
+    statistics move to the surviving corpus, and results equal a fresh
+    index of the survivors (same docids)."""
     from lucene_solr_spark.index.builder import build_index
     from lucene_solr_spark.search.engine import Searcher
     w = store
@@ -107,7 +109,7 @@ def test_expunge_merge_drops_docs_and_updates_stats(store, spark,
     ss = SegmentSearcher(six)
     victims = [r.doc_id for r in ss.topk(Term("ok"), 4).collect()]
     w.delete_docids(victims)
-    six2 = w.merge_segments(list(w.reader().live_segs), expunge=True)
+    six2 = w.expunge_deletes()
     assert six2.doc_count == six.doc_count - len(victims)
     assert not six2.del_gens  # all deletions expunged
     assert check_index(six2).count() == 0

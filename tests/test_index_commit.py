@@ -3,9 +3,9 @@
 ``commit.json`` holds one record per live segment; ``doc_count``,
 ``sum_ttf`` and the next seg id and docid are derived from the records.
 These tests pin the records to the rows they describe through every
-kind of mutation, the docid high-water mark an expunging merge must
-keep, the topic checkpoint built on it, and the catalog reads that no
-longer run Spark jobs."""
+kind of mutation, the docid high-water mark an expunge must keep, the
+topic checkpoint built on it, the catalog reads that no longer run
+Spark jobs, and the one commit of ``expunge_deletes``."""
 
 import os
 from contextlib import contextmanager
@@ -76,8 +76,9 @@ def _assert_records_match_rows(spark, six):
 def test_records_track_rows_through_every_mutation(spark, xs_transcripts,
                                                    tmp_path):
     """Append (with a token-less segment), delete, bulk merge,
-    expunging merge and vacuum: after each, every record equals the
-    aggregate of its rows and the counters equal the records' sums."""
+    expunge and vacuum: after each, every record equals the aggregate
+    of its rows and the counters equal the records' sums; vacuum leaves
+    only the generation dirs the commit references."""
     w = IndexWriter.create(spark, str(tmp_path / "ix"), docs_per_segment=64)
     docs = xs_transcripts.filter(F.col("docid") < 150).drop("docid")
     w.append_raw(docs.select("conv_id", "turn_idx", "text"), lineage="a")
@@ -99,7 +100,10 @@ def test_records_track_rows_through_every_mutation(spark, xs_transcripts,
     assert any(r["lineage"].startswith("merge(") for r in six.segments)
     _assert_records_match_rows(spark, six)
 
-    six = w.merge_segments(list(six.live_segs), expunge=True)
+    six = w.expunge_deletes()
+    assert six.doc_count == 157 and not six.del_gens
+    _assert_records_match_rows(spark, six)
+    six = w.merge_segments(list(six.live_segs))
     assert len(six.segments) == 1 and six.doc_count == 157
     assert six.segments[0]["docid_end"] == 160
     _assert_records_match_rows(spark, six)
@@ -110,6 +114,12 @@ def test_records_track_rows_through_every_mutation(spark, xs_transcripts,
     assert os.listdir(f"{w.path}/segments") == \
         [f"gen={six.segments[0]['gen']}"]
     assert not os.path.exists(f"{w.path}/catalog")
+    st = w.commit_state()
+    on_disk = {f"{sub}/{d}" for sub in ("segments", "term_stats", "deletes")
+               for d in os.listdir(f"{w.path}/{sub}")}
+    assert on_disk == {f"segments/gen={six.segments[0]['gen']}",
+                       f"term_stats/gen={st['stats_gen']}"}
+    assert st["del_gens"] == []
     _assert_records_match_rows(spark, w.reader())
 
 
@@ -137,14 +147,15 @@ def test_idle_maybe_merge_runs_no_spark_job(spark, xs_transcripts,
 def test_append_after_expunging_merge_reuses_no_docid(spark,
                                                       xs_transcripts,
                                                       tmp_path):
-    """An expunging merge lowers doc_count but keeps its range's width:
-    the next append starts past the range, not at doc_count."""
+    """An expunge lowers doc_count but keeps its segment's width: the
+    next append starts past the range, not at doc_count."""
     docs = xs_transcripts
     w = IndexWriter.create(spark, str(tmp_path / "ix"),
                            docs_per_segment=128)
     w.append_raw(docs.filter(F.col("docid") < 460).drop("docid"))
     w.delete_docids(range(5))
-    w.merge_segments(list(w.reader().live_segs), expunge=True)
+    w.expunge_deletes()
+    w.merge_segments(list(w.reader().live_segs))
     six = w.append_raw(docs.filter((F.col("docid") >= 460)
                                    & (F.col("docid") < 588)).drop("docid"))
     hits = [r.docid for r in SegmentSearcher(six).scored(Term("the"))
@@ -184,9 +195,79 @@ def test_topic_pull_skips_merged_and_expunged_docs(spark, xs_transcripts,
     assert pull(t) == set(range(241, 460))
     w.append_raw(batch(460, 520))
     w.delete_docids([10, 250, 470])
-    six = w.merge_segments(list(w.reader().live_segs), expunge=True)
+    six = w.expunge_deletes()
     assert not six.del_gens                 # every delete was expunged
     assert pull(t) == set(range(460, 520)) - {470}
     assert pull(t) == set()
     assert pull(Topic(spark, w.path, ck, "fresh")) == \
         set(range(520)) - {10, 250, 470}
+
+
+def _tiny_store(spark, path, blank=()):
+    """30 one-token docs, 10 per segment; docids in ``blank`` have
+    empty text."""
+    docs = spark.createDataFrame(
+        [(f"c{i:02d}", 0, "" if i in blank else f"w{i} common")
+         for i in range(30)],
+        "conv_id STRING, turn_idx INT, text STRING")
+    w = IndexWriter.create(spark, path, docs_per_segment=10)
+    w.append_raw(docs)
+    return w
+
+
+def test_merge_rejects_non_adjacent_or_unknown_segments(spark, tmp_path):
+    """A merge of segments 0 and 2 would give one record spanning
+    segment 1's docids; it is refused before anything is written, and
+    the delete set is untouched."""
+    w = _tiny_store(spark, str(tmp_path / "ix"))
+    w.delete_docids([15, 25])
+    before = w.commit_state()
+    for bad in ([0, 2], [0, 1, 7], []):
+        with pytest.raises(ValueError, match="docid-adjacent"):
+            w.merge_segments(bad)
+        assert w.commit_state() == before
+    assert {r.docid for r in w.reader().deleted.collect()} == {15, 25}
+    assert 15 not in {r.docid for r in live_docids(w.reader()).collect()}
+
+
+def test_expunge_counts_deleted_token_less_docs(spark, tmp_path):
+    """An expunged token-less doc (norm byte 0) leaves doc_count like
+    any other deleted doc, and a live token-less doc in the expunged
+    segment stays live. A docid deleted again after its expunge is
+    already a hole: the next expunge leaves doc_count and the live docs
+    as they were."""
+    w = _tiny_store(spark, str(tmp_path / "ix"), blank={4, 5})
+    w.delete_docids([5, 6])
+    six = w.expunge_deletes()
+    assert six.doc_count == 28 and not six.del_gens
+    live = {r.docid for r in live_docids(six).collect()}
+    assert live == set(range(30)) - {5, 6}
+    _assert_records_match_rows(spark, six)
+    w.delete_docids([5])
+    six = w.expunge_deletes()
+    assert six.doc_count == 28 and not six.del_gens
+    assert {r.docid for r in live_docids(six).collect()} == live
+    _assert_records_match_rows(spark, six)
+
+
+def test_expunge_deletes_is_one_commit(spark, tmp_path, commit_swaps):
+    """Deletes in three segments are expunged by ONE commit.json swap
+    that rewrites exactly those segments; with no deletes left, a
+    second expunge runs no Spark job and commits nothing."""
+    w = _tiny_store(spark, str(tmp_path / "ix"))
+    w.delete_docids([3, 14, 15, 27])
+    before = w.commit_state()
+    commit_swaps.clear()
+    six = w.expunge_deletes()
+    assert len(commit_swaps) == 1
+    rec = commit_swaps[0][0]
+    assert rec["generation"] == before["generation"] + 1
+    assert rec["del_gens"] == [] and rec["doc_count"] == 26
+    assert [(r["seg_id"], r["docid_min"], r["n_docs"])
+            for r in rec["segments"]] == [(3, 0, 9), (4, 10, 8), (5, 20, 9)]
+    assert check_index(six).count() == 0
+    _assert_records_match_rows(spark, six)
+    commit_swaps.clear()
+    with _spark_jobs(spark, "idle-expunge") as jobs:
+        w.expunge_deletes()
+    assert jobs == [] and commit_swaps == []

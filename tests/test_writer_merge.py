@@ -158,31 +158,6 @@ def test_streaming_replay_is_exactly_once(spark, xs_transcripts, tmp_path):
     assert sink.writer.reader().doc_count == n1
 
 
-@pytest.fixture()
-def commit_swaps(monkeypatch):
-    """Record every swap onto commit.json: the record swapped in (read
-    from the source file before the rename) and ``commit_state()``
-    read right after it."""
-    import json
-    import os
-
-    from lucene_solr_spark.index.segments import read_commit
-    swaps = []
-    real = os.replace
-
-    def replace(src, dst, *a, **kw):
-        rec = None
-        if os.path.basename(str(dst)) == "commit.json":
-            with open(src) as f:
-                rec = json.load(f)
-        real(src, dst, *a, **kw)
-        if rec is not None:
-            swaps.append((rec, read_commit(os.path.dirname(str(dst)))))
-
-    monkeypatch.setattr(os, "replace", replace)
-    return swaps
-
-
 def _assert_one_complete_swap_per_commit(swaps, gen0, keys):
     """Consecutive generations, one swap each, every record complete
     and equal to the state read back after its swap."""
@@ -209,8 +184,7 @@ def test_every_commit_is_one_complete_swap(spark, xs_transcripts,
         "tool string, ts timestamp")
     for op in (lambda: w.append_raw(docs.filter(~early)),
                lambda: w.update_by_term("error", repl),
-               lambda: w.merge_segments(sorted(w.reader().live_segs)[:2],
-                                        expunge=False)):
+               lambda: w.merge_segments(sorted(w.reader().live_segs)[:2])):
         gen0 = w.commit_state()["generation"]
         commit_swaps.clear()
         op()

@@ -327,7 +327,7 @@ WAND_SPECS = (
     "q_regexp",
     # round-3: exact-OSA maxEdits=2 expansion and the RegExp
     # predicate-algebra tree through the kernel's expansion /
-    # python-matcher fallback paths
+    # scan-tagged predicate fallback paths
     "q_fuzzy2", "q_regexp_algebra",
     # round-4: mid-pattern automaton algebra through the same paths
     "q_regexp_midalgebra",

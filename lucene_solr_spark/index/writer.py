@@ -547,10 +547,14 @@ class IndexWriter:
                            lineage: str) -> SegmentIndex:
         """The one delete commit every delete ends in: write the docid
         frame ``hits`` as the next generation's delete set and commit
-        it; nothing is committed when it is empty. Deletes change no
-        statistics, so the commit keeps the previous ``stats_gen``."""
+        it; nothing is committed when it is empty. Ids outside
+        ``[0, next docid)`` name no doc and are dropped, so a later
+        append is never born deleted. Deletes change no statistics, so
+        the commit keeps the previous ``stats_gen``."""
         st = self.commit_state()
         gen = st["generation"] + 1
+        hits = hits.filter(F.col("docid").between(
+            0, next_ids(st["segments"])[1] - 1))
         if not self._write_delete_set(hits, gen):
             return self.reader()
         return self._commit(st, generation=gen, lineage=lineage,

@@ -16,6 +16,12 @@ MaxScoreCache.java:61-124, BlockMaxConjunctionScorer.java:101-140):
   current k-th best true score θ — score-safe pruning, identical
   result set to exhaustive evaluation (CheckHits.checkTopScores is the
   test contract);
+- pruning is a mode of one scorer, not a second one: the exhaustive
+  path and every WAND cell score through the same ``combine``
+  (required/optional/msm, ReqOptSumScorer / DisjunctionSumScorer) and
+  ``admit`` (FILTER, MUST_NOT, live docs) steps; exact phrases and
+  multi-phrases share one matcher (ExactPhraseMatcher over
+  UnionPostingsEnum slots);
 - per-segment candidates (≤k each) are reduced by one narrow
   ``orderBy(score DESC, docid ASC).limit(k)`` = TopDocs.merge
   (SEARCH/TopDocs.java:70-115) with the HitQueue tie-break.
@@ -23,6 +29,9 @@ MaxScoreCache.java:61-124, BlockMaxConjunctionScorer.java:101-140):
 Only the query terms' packed rows are read: the filter on ``term``
 reaches the Parquet scan (term-sorted row groups prune), and the
 ``seg_id`` partitioning keeps the shuffle to one tiny candidate union.
+A multi-term query past maxClauseCount is not enumerated: the scan
+tags each row with the ``engine.term_predicate`` columns it matches,
+so Spark's predicate is the only multi-term matcher.
 
 Scores are float64 in the same operation order as the SQL oracle
 (bm25.score_sql), so segment-path results hash-match the DuckDB oracle
@@ -52,6 +61,7 @@ from .query import (
 )
 
 OUT_SCHEMA = "docid long, score double"
+EMPTY = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
 
 
 # ---------------------------------------------------------------------------
@@ -69,53 +79,10 @@ class Clause:
     slop: int = 0             # phrase/spannear: proximity budget
     pred: object = None       # constant only: multi-term query NODE when
     # the dictionary expansion passes maxClauseCount — the scan pushes
-    # the Spark predicate, the kernel re-applies it python-side (the
-    # constant-score rewrite never enumerates;
-    # MultiTermQueryConstantScoreWrapper builds the bitset directly)
-
-
-def py_term_matcher(q):
-    """Python-side term predicate mirroring engine.term_predicate — used
-    by the kernel for non-enumerated multi-term clauses."""
-    import re as _re
-
-    from .query import (
-        Prefix as _P, Regexp as _R, TermInSet as _S, TermRange as _TR,
-        Wildcard as _W,
-    )
-    if isinstance(q, _P):
-        p = q.prefix
-        return lambda t: t.startswith(p)
-    if isinstance(q, _W):
-        rx = "".join(".*" if c == "*" else "." if c == "?"
-                     else _re.escape(c) for c in q.pattern)
-        cre = _re.compile(f"(?:{rx})\\Z")
-        return lambda t: cre.match(t) is not None
-    if isinstance(q, _R):
-        from .regexp import lucene_regexp_to_tree
-
-        def _build(node):
-            kind = node[0]
-            if kind == "re":
-                cre = _re.compile(f"(?:{node[1]})\\Z")
-                return lambda t: cre.match(t) is not None
-            if kind == "and":
-                fs = [_build(x) for x in node[1]]
-                return lambda t: all(f(t) for f in fs)
-            if kind == "or":
-                fs = [_build(x) for x in node[1]]
-                return lambda t: any(f(t) for f in fs)
-            f = _build(node[1])
-            return lambda t: not f(t)
-        return _build(lucene_regexp_to_tree(q.pattern))
-    if isinstance(q, _TR):
-        lo, hi, il, iu = q.lower, q.upper, q.include_lower, q.include_upper
-        return lambda t: ((t >= lo if il else t > lo)
-                          and (t <= hi if iu else t < hi))
-    if isinstance(q, _S):
-        s = set(q.terms)
-        return lambda t: t in s
-    return None
+    # engine.term_predicate and tags each row with the predicates it
+    # matches, which the kernel reads (the constant-score rewrite never
+    # enumerates; MultiTermQueryConstantScoreWrapper builds the bitset
+    # directly)
 
 
 @dataclass
@@ -132,8 +99,6 @@ class SegSpec:
     emit_all: bool = False    # True -> all matches (scored()), no pruning
     prune: bool = True        # False -> exhaustive (CheckHits oracle mode)
     f32: bool = False         # True -> Lucene-exact float32 arithmetic
-    has_deletes: bool = False  # commit carries live-docs; kernel reads the
-    # per-segment del_ids column of its input frame (never a driver array)
 
     @property
     def wand_ok(self) -> bool:
@@ -306,30 +271,6 @@ def _flat_positions(view, common: np.ndarray):
     return rep, pos[gidx]
 
 
-def _phrase_freq(tds: list, terms: list) -> tuple:
-    """Exact phrase matcher (SEARCH/ExactPhraseMatcher.java:36): docids
-    common to all terms, freq = #positions p in term0 with p+i in termi.
-    Vectorized: per-term (doc, position) pairs become composite int64
-    keys (doc-index * M + position); slot i's check is one np.isin of
-    key0 + i against slot i's keys — no per-doc python loop."""
-    views = [tds[t].all_positions() for t in terms]
-    common = _common_docs(views)
-    if common.size == 0:
-        return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
-    flat = [_flat_positions(v, common) for v in views]
-    m = np.int64(max(int(f[1].max(initial=0)) for f in flat)
-                 + len(terms) + 2)
-    rep0, pos0 = flat[0]
-    key0 = rep0 * m + pos0
-    keep = np.ones(key0.size, dtype=bool)
-    for i in range(1, len(terms)):
-        repi, posi = flat[i]
-        keep &= np.isin(key0 + i, repi * m + posi)
-    freq = np.bincount(rep0[keep], minlength=common.size)
-    sel = freq > 0
-    return common[sel], freq[sel].astype(np.int64)
-
-
 def _sloppy_phrase_freq(tds: list, terms: list, slop: int,
                         f32: bool) -> tuple:
     """Sloppy phrase freq per doc: exact SloppyPhraseMatcher traversal
@@ -340,10 +281,12 @@ def _sloppy_phrase_freq(tds: list, terms: list, slop: int,
         chain_freqs_2_vec, sloppy_freq_f32, sloppy_freq_f64,
         sloppy_match_lengths,
     )
+    if any(t not in tds for t in terms):
+        return EMPTY
     views = [tds[t].all_positions() for t in terms]
     common = _common_docs(views)
     if common.size == 0:
-        return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
+        return EMPTY
     idxs = [np.searchsorted(v[0], common) for v in views]
     if len(terms) == 2 and not f32:
         # 2-term double-mode hot path: lockstep-vectorized chain
@@ -397,23 +340,25 @@ def _flat_union(views: list, common: np.ndarray, m: np.int64) -> np.ndarray:
 
 
 def _multiphrase_freq(tds: dict, slots: tuple) -> tuple:
-    """MultiPhraseQuery freq (SEARCH/MultiPhraseQuery.java:56): per doc,
-    the number of start positions p with SOME alternative of slot i at
-    p+i for every i. Slot postings are term-unions; same composite-key
-    vectorization as _phrase_freq."""
+    """The one exact phrase matcher (ExactPhraseMatcher.java:36 over
+    MultiPhraseQuery's UnionPostingsEnum slots, MultiPhraseQuery.java:56):
+    per doc, the number of start positions p with SOME alternative of
+    slot i at p+i for every i; a plain phrase is one term per slot.
+    Vectorized: slot (doc, position) pairs become composite int64 keys
+    (doc-index * M + position); slot i's check is one np.isin of key0 + i
+    against slot i's keys — no per-doc python loop."""
     slot_views = []
     for slot in slots:
         vs = [tds[t].all_positions() for t in slot if t in tds]
         if not vs:
-            return (np.empty(0, dtype=np.int64),
-                    np.empty(0, dtype=np.int64))
+            return EMPTY
         slot_views.append(vs)
     common = None
     for vs in slot_views:
         docs = np.unique(np.concatenate([v[0] for v in vs]))
         common = docs if common is None else common[np.isin(common, docs)]
     if common.size == 0:
-        return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
+        return EMPTY
     maxpos = max(int(v[3].max(initial=0)) for vs in slot_views for v in vs)
     m = np.int64(maxpos + len(slots) + 2)
     key0 = _flat_union(slot_views[0], common, m)
@@ -453,8 +398,18 @@ def _spannear_docs(tds: dict, terms: tuple, slop: int) -> np.ndarray:
     return common[np.unique(rep0[match])]
 
 
+def _all_preds(spec: SegSpec) -> list:
+    """Non-enumerated multi-term query nodes riding the spec, in the one
+    order the scan's ``_pm`` tags and the kernel's lookups share."""
+    return ([c.pred for c in spec.clauses
+             if c.kind == "constant" and c.pred is not None]
+            + [pr for _, pr in spec.filters if pr is not None]
+            + list(spec.must_not_preds))
+
+
 def make_kernel(spec: SegSpec):
     """Build the applyInPandas function for one query."""
+    preds = _all_preds(spec)
 
     def kernel(pdf):
         import pandas as pd
@@ -463,125 +418,126 @@ def make_kernel(spec: SegSpec):
         _tune_allocator()
         qdl_blob = np.frombuffer(pdf["qdl_blob"].iloc[0], dtype=np.int32)
         docid_min = int(pdf["docid_min"].iloc[0])
-        # per-segment live docs: the delete set arrives co-partitioned
-        # in the input frame (seg-local array), never via the driver
-        deleted = None
-        if spec.has_deletes and "del_ids" in pdf.columns:
-            dv = pdf["del_ids"].iloc[0]
-            if dv is not None and len(dv):
-                deleted = np.asarray(dv, dtype=np.int64)
         tds = {row.term: _TermData(row)
                for row in pdf.itertuples(index=False)
                if row.term is not None}
+        # terms the scan tagged with each fallback predicate's index
+        tagged: dict = {}
+        if preds:
+            for term, tags in zip(pdf["term"], pdf["_pm"]):
+                for i in tags:
+                    tagged.setdefault(int(i), []).append(term)
 
         def qdl_of(docids: np.ndarray) -> np.ndarray:
             return qdl_blob[docids - docid_min].astype(np.int64)
 
         def any_of(tset, pred):
             """Sorted docids holding a term of ``tset`` or, for a
-            non-enumerated multi-term node ``pred``, any of this
-            segment's (already scan-filtered) terms it matches; None
-            when no such term is here."""
-            if pred is not None:
-                match = py_term_matcher(pred)
-                names = [t for t in tds if match(t)]
-            else:
-                names = [t for t in tset if t in tds]
+            non-enumerated multi-term node ``pred``, a term the scan
+            tagged with it; None when no such term is here."""
+            names = (tagged.get(preds.index(pred), ()) if pred is not None
+                     else [t for t in tset if t in tds])
             if not names:
                 return None
             return np.unique(np.concatenate(
                 [tds[t].decode_all()[0] for t in names]))
 
-        # FILTER sets (None: the filter matches nothing here) and
-        # MUST_NOT exclusion sets, decoded once per segment
+        # FILTER sets (None: the filter matches nothing here) and the
+        # MUST_NOT + live-docs exclusion sets, decoded once per segment;
+        # the delete set arrives co-partitioned in the input frame
+        # (seg-local array), never via the driver
         filt = [any_of(tset, pred) for tset, pred in spec.filters]
         excl = [x for x in [any_of(spec.must_not, None)]
                 + [any_of((), pred) for pred in spec.must_not_preds]
                 if x is not None]
+        dv = pdf["del_ids"].iloc[0] if "del_ids" in pdf.columns else None
+        if dv is not None and len(dv):
+            excl.append(np.asarray(dv, dtype=np.int64))
 
-        def term_scores(term, w):
-            td = tds.get(term)
-            if td is None:
-                return (np.empty(0, dtype=np.int64),
-                        np.empty(0, dtype=np.float64))
-            d, t = td.decode_all()
-            return d, _score_dispatch(spec, t, qdl_of(d), w)
+        def scored(d, tf, w):
+            return d, _score_dispatch(spec, tf, qdl_of(d), w)
 
         def clause_scores(c: Clause):
-            if c.kind == "term":
-                return term_scores(c.terms[0], c.weight)
-            if c.kind == "synonym":
-                parts = []
-                for t in c.terms:
-                    td = tds.get(t)
-                    if td is not None:
-                        parts.append(td.decode_all())
+            if c.kind in ("term", "synonym"):
+                # a term is a one-term synonym (summed tf per doc)
+                parts = [tds[t].decode_all() for t in c.terms if t in tds]
                 if not parts:
-                    return (np.empty(0, dtype=np.int64),
-                            np.empty(0, dtype=np.float64))
+                    return EMPTY
                 d = np.concatenate([p[0] for p in parts])
                 t = np.concatenate([p[1] for p in parts])
                 uniq, inv = np.unique(d, return_inverse=True)
                 tf = np.zeros(uniq.size, dtype=np.int64)
                 np.add.at(tf, inv, t)
-                return uniq, _score_dispatch(spec, tf, qdl_of(uniq),
-                                             c.weight)
+                return scored(uniq, tf, c.weight)
+            if c.kind == "phrase" and c.slop > 0:
+                return scored(*_sloppy_phrase_freq(
+                    tds, list(c.terms), c.slop, spec.f32), c.weight)
             if c.kind == "phrase":
-                if any(t not in tds for t in c.terms):
-                    return (np.empty(0, dtype=np.int64),
-                            np.empty(0, dtype=np.float64))
-                if c.slop > 0:
-                    d, f = _sloppy_phrase_freq(tds, list(c.terms),
-                                               c.slop, spec.f32)
-                else:
-                    d, f = _phrase_freq(tds, list(c.terms))
-                if d.size == 0:
-                    return d, np.empty(0, dtype=np.float64)
-                return d, _score_dispatch(spec, f, qdl_of(d), c.weight)
+                return scored(*_multiphrase_freq(
+                    tds, tuple((t,) for t in c.terms)), c.weight)
             if c.kind == "multiphrase":
-                if any(all(t not in tds for t in slot) for slot in c.terms):
-                    return (np.empty(0, dtype=np.int64),
-                            np.empty(0, dtype=np.float64))
-                d, f = _multiphrase_freq(tds, c.terms)
-                if d.size == 0:
-                    return d, np.empty(0, dtype=np.float64)
-                return d, _score_dispatch(spec, f, qdl_of(d), c.weight)
+                return scored(*_multiphrase_freq(tds, c.terms), c.weight)
             if c.kind == "constant":
                 # multi-term under the constant-score rewrite
                 # (MultiTermQueryConstantScoreWrapper): any-of match,
                 # fixed score c.weight
                 uniq = any_of(c.terms, c.pred)
                 if uniq is None:
-                    return (np.empty(0, dtype=np.int64),
-                            np.empty(0, dtype=np.float64))
+                    return EMPTY
                 return uniq, np.full(uniq.size, c.weight, dtype=np.float64)
             if c.kind == "spannear":
                 if any(t not in tds for t in c.terms):
-                    return (np.empty(0, dtype=np.int64),
-                            np.empty(0, dtype=np.float64))
+                    return EMPTY
                 d = _spannear_docs(tds, c.terms, c.slop)
                 return d, np.full(d.size, c.weight, dtype=np.float64)
             raise ValueError(c.kind)
 
-        req = [c for c in spec.clauses if c.required]
-        opt = [c for c in spec.clauses if not c.required]
+        def combine(parts):
+            """[(docids, scores, required)] -> (docids, scores): the
+            required sets intersected, their scores summed in clause
+            order, then the optional scores added (ReqOptSumScorer) and
+            msm applied; without required parts, the disjunction
+            (DisjunctionSum/DisjunctionMax) of the non-empty parts
+            matching at least max(msm, 1) clauses."""
+            req = [(d, s) for d, s, r in parts if r]
+            opt = [(d, s) for d, s, r in parts if not r and d.size]
+            if not req:
+                if not opt:
+                    return EMPTY
+                uniq, tot, cnt = _combine_disjunction(spec, opt)
+                sel = cnt >= max(spec.msm, 1)
+                return uniq[sel], tot[sel]
+            base = req[0][0]
+            for d, _ in req[1:]:
+                base = base[np.isin(base, d)]
+            tot = np.zeros(base.size, dtype=np.float64)
+            for d, s in req:
+                tot += s[np.searchsorted(d, base)]
+            opt_acc = np.zeros(base.size, dtype=np.float64)
+            nm = np.zeros(base.size, dtype=np.int64)
+            for d, s in opt:
+                pos = np.clip(np.searchsorted(d, base), 0, d.size - 1)
+                hit = d[pos] == base
+                opt_acc[hit] += s[pos[hit]]
+                nm[hit] += 1
+            sel = nm >= spec.msm
+            return base[sel], _req_opt_combine(spec, tot, opt_acc)[sel]
+
+        def admit(docids, scores):
+            """FILTER, MUST_NOT and live docs."""
+            keep = np.ones(docids.size, dtype=bool)
+            for fs in filt:
+                keep &= np.isin(docids, fs)
+            for xs in excl:
+                keep &= ~np.isin(docids, xs)
+            return docids[keep], scores[keep]
 
         def finalize(docids, scores):
-            """filters / exclusions / live-docs, then emit."""
-            if deleted is not None and docids.size:
-                keep0 = ~np.isin(docids, deleted)
-                docids, scores = docids[keep0], scores[keep0]
             if spec.f32 and scores.size:
                 # clause sums ran in float64 (exact for float32 addends);
                 # narrow like the reference's (float) cast on the summed
                 # double (DisjunctionSumScorer/ConjunctionScorer)
                 scores = scores.astype(np.float32).astype(np.float64)
-            keep = np.ones(docids.size, dtype=bool)
-            for fs in filt:
-                keep &= False if fs is None else np.isin(docids, fs)
-            for xs in excl:
-                keep &= ~np.isin(docids, xs)
-            docids, scores = docids[keep], scores[keep]
             if not spec.emit_all and docids.size > spec.k:
                 # per-segment top-k with the FINAL ordering key:
                 # round(score, 6) DESC, docid ASC (HitQueue.lessThan +
@@ -592,170 +548,64 @@ def make_kernel(spec: SegSpec):
                 docids, scores = docids[order], scores[order]
             return pd.DataFrame({"docid": docids, "score": scores})
 
-        # ---------------- exhaustive path --------------------------------
-        def exhaustive():
-            req_parts = [clause_scores(c) for c in req]
-            if req and any(p[0].size == 0 for p in req_parts):
-                return finalize(np.empty(0, dtype=np.int64),
-                                np.empty(0, dtype=np.float64))
-            opt_parts = [clause_scores(c) for c in opt]
-            if req:
-                base = req_parts[0][0]
-                for p in req_parts[1:]:
-                    base = base[np.isin(base, p[0])]
-                if base.size == 0:
-                    return finalize(base, np.empty(0, dtype=np.float64))
-                tot = np.zeros(base.size, dtype=np.float64)
-                for p in req_parts:
-                    tot += p[1][np.searchsorted(p[0], base)]
-                nm = np.zeros(base.size, dtype=np.int64)
-                opt_acc = np.zeros(base.size, dtype=np.float64)
-                for d, s in opt_parts:
-                    if d.size == 0:
-                        continue
-                    pos = np.searchsorted(d, base)
-                    pos = np.clip(pos, 0, d.size - 1)
-                    hit = d[pos] == base
-                    opt_acc[hit] += s[pos[hit]]
-                    nm[hit] += 1
-                tot = _req_opt_combine(spec, tot, opt_acc)
-                if spec.msm > 0:
-                    sel = nm >= spec.msm
-                    base, tot = base[sel], tot[sel]
-                return finalize(base, tot)
-            # pure disjunction
-            parts = [p for p in opt_parts if p[0].size]
-            if not parts:
-                return finalize(np.empty(0, dtype=np.int64),
-                                np.empty(0, dtype=np.float64))
-            uniq, tot, cnt = _combine_disjunction(spec, parts)
-            msm = max(spec.msm, 1)
-            sel = cnt >= msm
-            return finalize(uniq[sel], tot[sel])
-
+        if any(fs is None for fs in filt):
+            return finalize(*EMPTY)
         if spec.emit_all or not spec.prune or not spec.wand_ok:
-            return exhaustive()
+            return finalize(*admit(*combine(
+                [(*clause_scores(c), c.required) for c in spec.clauses])))
 
         # ---------------- block-max WAND path ----------------------------
         # cells = merged block boundaries; UB(cell) = Σ clause block bounds
         active = [(c, tds[c.terms[0]]) for c in spec.clauses
                   if c.terms[0] in tds]
-        if not active or (req and len([1 for c in req
-                                       if c.terms[0] in tds]) < len(req)):
-            return finalize(np.empty(0, dtype=np.int64),
-                            np.empty(0, dtype=np.float64))
-        bounds = []
-        for c, td in active:
-            b = _bound(c.weight, td.max_tf, td.min_qdl, spec.avgdl)
-            if spec.f32:
-                # float32 rounding can exceed the float64 bound by ulps
-                b = b * (1.0 + 1e-5) + 1e-7
-            bounds.append((b, td))
+        n_req = sum(c.required for c in spec.clauses)
+        if not active or sum(c.required for c, _ in active) < n_req:
+            return finalize(*EMPTY)
         edges = np.unique(np.concatenate(
-            [td.last for _, td in bounds]))  # cell i covers (edges[i-1], edges[i]]
+            [td.last for _, td in active]))  # cell i covers (edges[i-1], edges[i]]
         ub = np.zeros(edges.size, dtype=np.float64)
         req_cover = np.zeros(edges.size, dtype=np.int64)
-        n_req = len(req)
-        for (bnd, td), (c, _) in zip(bounds, active):
+        for c, td in active:
+            bnd = _bound(c.weight, td.max_tf, td.min_qdl, spec.avgdl)
+            if spec.f32:
+                # float32 rounding can exceed the float64 bound by ulps
+                bnd = bnd * (1.0 + 1e-5) + 1e-7
             # block j covers (starts[j], last[j]]; for each cell find the
             # covering block (the first block whose last >= cell edge and
             # whose start < cell edge)
             j = np.searchsorted(td.last, edges)
-            valid = j < td.last.size
             jj = np.clip(j, 0, td.last.size - 1)
-            covers = valid & (td.starts[jj] < edges)
+            covers = (j < td.last.size) & (td.starts[jj] < edges)
             ub[covers] += bnd[jj[covers]]
             if c.required:
                 req_cover[covers] += 1
-        if n_req:
-            ub[req_cover < n_req] = -np.inf
-        order = np.argsort(-ub)
-        # θ must only ever be fed by docs that survive MUST_NOT / FILTER
-        # and live docs, otherwise pruning is not score-safe (a doc
+        ub[req_cover < n_req] = -np.inf
+        # θ must only ever be fed by admitted docs (FILTER, MUST_NOT and
+        # live docs), otherwise pruning is not score-safe (a doc
         # excluded later would have inflated θ)
-        if any(fs is None for fs in filt):
-            return finalize(np.empty(0, dtype=np.int64),
-                            np.empty(0, dtype=np.float64))
-        live_excl = excl if deleted is None else excl + [deleted]
-        cand_d: list = []
-        cand_s: list = []
+        cand_d, cand_s = [EMPTY[0]], [EMPTY[1]]
         theta = -np.inf
-        kth_pool_d = np.empty(0, dtype=np.int64)
-        kth_pool_s = np.empty(0, dtype=np.float64)
-
-        def cell_range(ci):
+        pool_d, pool_s = EMPTY
+        for ci in np.argsort(-ub):
+            if ub[ci] == -np.inf or ub[ci] < theta:
+                break
             lo = np.int64(-1) if ci == 0 else edges[ci - 1]
-            return lo, edges[ci]
-
-        for ci in order:
-            if ub[ci] == -np.inf:
-                break
-            if ub[ci] < theta:
-                break
-            lo, hi = cell_range(ci)
+            hi = edges[ci]
             parts = []
-            req_sets = []
-            for (bnd, td), (c, _) in zip(bounds, active):
+            for c, td in active:
                 j = int(np.searchsorted(td.last, hi))
-                if j >= td.last.size or td.starts[j] >= hi or td.last[j] < hi:
-                    if c.required:
-                        parts = None
-                        break
+                if j == td.last.size or td.starts[j] >= hi:
                     continue
                 d, t = td.block(j)
                 sel = (d > lo) & (d <= hi)
-                d, t = d[sel], t[sel]
-                if c.required and d.size == 0:
-                    parts = None
-                    break
-                if d.size:
-                    s = _score_dispatch(spec, t, qdl_of(d), c.weight)
-                    parts.append((d, s, c.required))
-                    if c.required:
-                        req_sets.append(d)
-            if parts is None or not parts:
-                continue
-            if n_req:
-                base = req_sets[0]
-                for rs in req_sets[1:]:
-                    base = base[np.isin(base, rs)]
-                if base.size == 0:
-                    continue
-                tot = np.zeros(base.size, dtype=np.float64)
-                opt_acc = np.zeros(base.size, dtype=np.float64)
-                nm = np.zeros(base.size, dtype=np.int64)
-                for d, s, is_req in parts:
-                    pos = np.searchsorted(d, base)
-                    pos = np.clip(pos, 0, max(d.size - 1, 0))
-                    hit = (d.size > 0) & (d[pos] == base)
-                    if is_req:
-                        tot[hit] += s[pos[hit]]
-                    else:
-                        opt_acc[hit] += s[pos[hit]]
-                        nm[hit] += 1
-                tot = _req_opt_combine(spec, tot, opt_acc)
-                if spec.msm > 0:
-                    selm = nm >= spec.msm
-                    base, tot = base[selm], tot[selm]
-                uniq, totv = base, tot
-            else:
-                uniq, totv, cnt = _combine_disjunction(
-                    spec, [(d, s) for d, s, _ in parts])
-                msm = max(spec.msm, 1)
-                selm = cnt >= msm
-                uniq, totv = uniq[selm], totv[selm]
-            for fs in filt:
-                sel = np.isin(uniq, fs)
-                uniq, totv = uniq[sel], totv[sel]
-            for xs in live_excl:
-                sel = ~np.isin(uniq, xs)
-                uniq, totv = uniq[sel], totv[sel]
+                parts.append((*scored(d[sel], t[sel], c.weight), c.required))
+            uniq, totv = admit(*combine(parts))
             if uniq.size == 0:
                 continue
             cand_d.append(uniq)
             cand_s.append(totv)
-            pool_s = np.concatenate([kth_pool_s, totv])
-            pool_d = np.concatenate([kth_pool_d, uniq])
+            pool_s = np.concatenate([pool_s, totv])
+            pool_d = np.concatenate([pool_d, uniq])
             if pool_s.size > spec.k:
                 # selection key = round(score, 6) / docid ASC, matching
                 # the final ordering; θ backs off by the max rounding
@@ -764,13 +614,7 @@ def make_kernel(spec: SegSpec):
                 keep = np.lexsort((pool_d, -np.round(pool_s, 6)))[:spec.k]
                 pool_s, pool_d = pool_s[keep], pool_d[keep]
                 theta = float(np.round(pool_s, 6).min()) - 5.0000001e-07
-            kth_pool_s, kth_pool_d = pool_s, pool_d
-        if not cand_d:
-            return finalize(np.empty(0, dtype=np.int64),
-                            np.empty(0, dtype=np.float64))
-        alld = np.concatenate(cand_d)
-        alls = np.concatenate(cand_s)
-        return finalize(alld, alls)
+        return finalize(np.concatenate(cand_d), np.concatenate(cand_s))
 
     return kernel
 
@@ -807,26 +651,17 @@ class SegmentSearcher(TermWeights):
         super().__init__(six)
         self.six = six
 
-    def _deleted_df(self):
-        """(seg_id, del_ids) live-docs DataFrame, joined into the kernel
-        input frame by seg_id (Lucene's per-segment liveDocs bitset) —
-        deletes never travel through the driver. None when the commit
-        has no deletes."""
-        if not self.six.del_gens:
-            return None
-        return _live_docs_frame(self.six)
-
     def _expand_or_pred(self, q: Query) -> tuple:
         """(terms, pred): enumerate the dictionary terms when the set is
         small; past maxClauseCount fall back to shipping the predicate
-        itself (the constant-score rewrite never enumerates — the
-        scan pushes the Spark predicate and the kernel re-applies it
-        python-side). Fuzzy stays enumerated (its neighborhood is
+        itself (the constant-score rewrite never enumerates — the scan
+        pushes engine.term_predicate and tags the rows it matches, see
+        _segment_frame). Fuzzy stays enumerated (its neighborhood is
         edit-bounded; Lucene's TopTermsRewrite caps it the same way)."""
         try:
             return self.expand_terms(q), None
         except TooManyClauses:
-            if py_term_matcher(q) is None:
+            if isinstance(q, Fuzzy):
                 raise
             return (), q
 
@@ -999,8 +834,7 @@ class SegmentSearcher(TermWeights):
                        combine=combine, tiebreak=tiebreak, k=k,
                        avgdl=self.six.doc_count and
                        (self.six.sum_ttf / float(self.six.doc_count)),
-                       emit_all=emit_all, prune=prune, f32=f32,
-                       has_deletes=bool(self.six.del_gens))
+                       emit_all=emit_all, prune=prune, f32=f32)
 
     def _all_terms(self, spec: SegSpec):
         ts = set(spec.must_not)
@@ -1014,31 +848,32 @@ class SegmentSearcher(TermWeights):
                 ts |= set(c.terms)
         return sorted(ts)
 
-    def _all_preds(self, spec: SegSpec):
-        """Non-enumerated multi-term query nodes riding the spec."""
-        out = [c.pred for c in spec.clauses
-               if c.kind == "constant" and c.pred is not None]
-        out += [pr for _, pr in spec.filters if pr is not None]
-        out += list(spec.must_not_preds)
-        return out
-
     def _segment_frame(self, spec: SegSpec) -> DataFrame:
         terms = self._all_terms(spec)
+        preds = _all_preds(spec)
         cond = F.col("term").isin(terms)
-        for node in self._all_preds(spec):
+        for node in preds:
             # the dictionary predicate pushes into the parquet scan
             # (LIKE/range prune on term-sorted row groups)
             cond = cond | term_predicate(node)
         pk = self.six.packed.filter(cond)
+        if preds:
+            # _pm: the indexes (into _all_preds) of the fallback
+            # predicates each row's term matches — the kernel's
+            # any_of reads them instead of matching terms itself
+            pk = pk.withColumn("_pm", F.filter(F.array(*[
+                F.when(term_predicate(p), F.lit(i))
+                for i, p in enumerate(preds)]), lambda x: x.isNotNull()))
         nm = self.six.norms.select("seg_id", "docid_min", "qdl_blob")
         # no broadcast hint: at bench scale AQE broadcasts this anyway;
         # at 10^12 docs the norms table is terabytes and must co-locate
         # by seg_id through a shuffle join instead
         out = pk.join(nm, "seg_id")
-        if spec.has_deletes:
-            # live docs co-partitioned by seg_id (left: most segments
-            # have no deletes)
-            out = out.join(self._deleted_df(), "seg_id", "left")
+        if self.six.del_gens:
+            # live docs (Lucene's per-segment liveDocs bitset)
+            # co-partitioned by seg_id, never through the driver (left:
+            # most segments have no deletes)
+            out = out.join(_live_docs_frame(self.six), "seg_id", "left")
         return out
 
     def candidates(self, q: Query, k: int, emit_all: bool = False,

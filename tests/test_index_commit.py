@@ -271,3 +271,20 @@ def test_expunge_deletes_is_one_commit(spark, tmp_path, commit_swaps):
     with _spark_jobs(spark, "idle-expunge") as jobs:
         w.expunge_deletes()
     assert jobs == [] and commit_swaps == []
+
+
+def test_out_of_range_deletes_are_dropped(spark, tmp_path):
+    """A delete names only docids the store has handed out: ids past the
+    next docid (or negative) are dropped, so the docs a later append
+    gets under those ids are born live."""
+    w = _tiny_store(spark, str(tmp_path / "ix"))
+    before = w.commit_state()["generation"]
+    six = w.delete_docids([35, -1])
+    assert six.generation == before and not six.del_gens
+    six = w.append_raw(spark.createDataFrame(
+        [(f"d{i:02d}", 0, f"w{30 + i} common") for i in range(10)],
+        "conv_id STRING, turn_idx INT, text STRING"))
+    live = {r.docid for r in live_docids(six).collect()}
+    assert six.doc_count == 40 and len(live) == 40 and 35 in live
+    six = w.delete_docids_df(spark.createDataFrame([(5,), (99,)], "d LONG"))
+    assert {r.docid for r in six.deleted.collect()} == {5}

@@ -430,39 +430,6 @@ def test_rich_vocab_multi_term_oracle_sweep(zipf):
         _cmp(se, con, q)
 
 
-def test_kernel_predicate_fallback_past_max_clause(spark, tmp_path_factory):
-    """A prefix expanding past maxClauseCount (>1024 dictionary terms)
-    must NOT raise on the segment path: the constant-score rewrite
-    ships the predicate itself (scoring, FILTER and MUST_NOT
-    positions), matching the non-enumerating
-    MultiTermQueryConstantScoreWrapper."""
-    from lucene_solr_spark.datagen.transcripts import gen_transcripts
-    from lucene_solr_spark.index.docids import assign_docids
-    from lucene_solr_spark.index.writer import IndexWriter
-    from lucene_solr_spark.search.query import Prefix
-    from lucene_solr_spark.search.segment_searcher import SegmentSearcher
-    df = assign_docids(gen_transcripts(spark, 40, seed=5),
-                       ["conv_id", "turn_idx"]).persist()
-    df.count()
-    se = Searcher(build_index(df, docid_col="docid"))
-    out = str(tmp_path_factory.mktemp("bigpfx"))
-    w = IndexWriter.create(spark, out, docs_per_segment=200)
-    w.append_raw(df.withColumnRenamed("docid", "doc_id"),
-                 order_cols=["doc_id"], lineage="bigpfx")
-    ss = SegmentSearcher(w.reader())
-    big = Prefix("w1")          # >1024 matching terms in the 10k vocab
-    n_terms = se.ix.term_stats.filter(
-        F.col("term").like("w1%")).count()
-    assert n_terms > 1024
-    for q in (big,
-              Bool(must=(Term("ok"),), filter=(big,)),
-              Bool(must=(Term("ok"),), must_not=(big,))):
-        eng = [(r.doc_id, r.score) for r in se.topk(q, 10).collect()]
-        ker = [(r.doc_id, r.score) for r in ss.topk(q, 10).collect()]
-        assert eng == ker, (q, eng[:3], ker[:3])
-    df.unpersist()
-
-
 def test_rich_vocab_phrase_and_bool_oracle(zipf):
     se, con = zipf
     for q in (

@@ -8,8 +8,12 @@ from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.segments import check_index, open_segments
 from lucene_solr_spark.index.writer import IndexWriter
-from lucene_solr_spark.search.engine import Searcher
-from lucene_solr_spark.search.query import Bool, Boost, Phrase, Synonym, Term
+from lucene_solr_spark.search import engine
+from lucene_solr_spark.search.engine import Searcher, TooManyClauses
+from lucene_solr_spark.search.query import (
+    Bool, Boost, Fuzzy, Phrase, Prefix, Regexp, ReversedWildcard, Synonym,
+    Term, TermInSet, TermRange, Wildcard,
+)
 from lucene_solr_spark.search.segment_searcher import SegmentSearcher
 from test_lucene_parity import Oracle, kernel_topk32
 
@@ -140,3 +144,45 @@ def test_topk_by_docid_respects_deletes(spark, tmp_path):
              .topk_by_docid(Term("the"), 5).collect()]
     assert after[0] not in first[:2]
     assert after[:3] == first[2:5]
+
+
+# one multi-term query per type that expands past maxClauseCount (1024)
+# on the xs dictionary (1,110 ``w1*`` terms)
+BIG_MULTI_TERM = [
+    Prefix("w1"),
+    Wildcard("w1*"),
+    ReversedWildcard("w1*"),
+    Regexp("w1[0-9]*"),
+    TermRange("w1", "w2", include_upper=False),
+    TermInSet(tuple(f"w1{s}" for s in ["", *(f"{n:0{w}d}"
+                                           for w in (1, 2, 3)
+                                           for n in range(10 ** w))])),
+]
+
+
+@pytest.mark.parametrize("big", BIG_MULTI_TERM,
+                         ids=lambda q: type(q).__name__)
+def test_kernel_predicate_fallback_past_max_clause(xs_index, xs_segments,
+                                                   big):
+    """A multi-term query expanding past maxClauseCount must NOT raise
+    on the segment path: the constant-score rewrite ships the predicate
+    itself (scoring, FILTER and MUST_NOT positions), matching the
+    non-enumerating MultiTermQueryConstantScoreWrapper."""
+    se = Searcher(xs_index)
+    ss = SegmentSearcher(xs_segments)
+    n_terms = xs_index.term_stats.filter(engine.term_predicate(big)).count()
+    assert n_terms > 1024
+    for q in (big,
+              Bool(must=(Term("ok"),), filter=(big,)),
+              Bool(must=(Term("ok"),), must_not=(big,))):
+        eng = [(r.doc_id, r.score) for r in se.topk(q, 10).collect()]
+        ker = [(r.doc_id, r.score) for r in ss.topk(q, 10).collect()]
+        assert eng == ker, (q, eng[:3], ker[:3])
+
+
+def test_fuzzy_past_max_clause_still_raises(xs_segments, monkeypatch):
+    """Fuzzy stays enumerated on the segment path (its neighborhood is
+    edit-bounded), so past the cap it raises instead of falling back."""
+    monkeypatch.setattr(engine, "MAX_CLAUSE_COUNT", 3)
+    with pytest.raises(TooManyClauses):
+        SegmentSearcher(xs_segments).topk(Fuzzy("w12"), 10)

@@ -93,6 +93,14 @@ SEGDATA_SCHEMA = StructType(
 EXPUNGED_QDL = -1
 
 
+# the other store tables, as their writers write them; every store read
+# passes its table's schema, so Spark infers none (a footer read is one
+# Spark job per read)
+TERM_STATS_SCHEMA = "term STRING, df LONG, ttf LONG"
+DELETES_SCHEMA = "docid LONG"
+DV_UPDATES_SCHEMA = "docid LONG, field STRING, value LONG, upd_gen INT"
+
+
 # one segment record of ``commit.json`` (SegmentInfo analogue): its docid
 # range [docid_min, docid_end) — docid_end = docid_min + norm-blob width,
 # which an expunge keeps — metrics, data generation and lineage
@@ -516,7 +524,7 @@ class SegmentIndex:
                  if os.path.isdir(f"{self.path}/segments/gen={g}")]
         if not paths:
             return self.spark.createDataFrame([], SEGDATA_SCHEMA)
-        return self.spark.read.parquet(*paths) \
+        return self.spark.read.schema(SEGDATA_SCHEMA).parquet(*paths) \
             .filter(F.col("seg_id").isin(list(self.live_segs)))
 
     @property
@@ -533,14 +541,19 @@ class SegmentIndex:
             .select("seg_id", "docid_min", "n_docs", "norm_blob",
                     "qdl_blob")
 
-    @property
-    def deleted(self) -> DataFrame:
-        """Deleted docids (live-docs complement); empty if none."""
+    def _delete_sets(self) -> DataFrame:
+        """Every delete generation's docids; a docid deleted in two
+        generations appears twice."""
         paths = [f"{self.path}/deletes/gen={g}" for g in self.del_gens
                  if os.path.isdir(f"{self.path}/deletes/gen={g}")]
         if not paths:
-            return self.spark.createDataFrame([], "docid LONG")
-        return self.spark.read.parquet(*paths).distinct()
+            return self.spark.createDataFrame([], DELETES_SCHEMA)
+        return self.spark.read.schema(DELETES_SCHEMA).parquet(*paths)
+
+    @property
+    def deleted(self) -> DataFrame:
+        """Deleted docids (live-docs complement); empty if none."""
+        return self._delete_sets().distinct()
 
     def deleted_by_segment(self) -> DataFrame:
         """(seg_id, del_ids array<long>) — each segment's deleted docids.
@@ -551,12 +564,13 @@ class SegmentIndex:
         executor-side and co-partitions with the postings by seg_id, so
         no delete ever travels through the driver."""
         rng = self.catalog.select("seg_id", "docid_min", "docid_end")
-        j = self.deleted.join(
+        j = self._delete_sets().join(
             F.broadcast(rng),
             (F.col("docid") >= F.col("docid_min"))
             & (F.col("docid") < F.col("docid_end")))
+        # one shuffle: the per-segment set drops repeated deletes
         return (j.groupBy("seg_id")
-                .agg(F.sort_array(F.collect_list("docid"))
+                .agg(F.sort_array(F.collect_set("docid"))
                      .alias("del_ids")))
 
     def dv_updates(self, field: str) -> DataFrame:
@@ -573,7 +587,7 @@ class SegmentIndex:
         if not paths:
             return self.spark.createDataFrame(
                 [], "docid LONG, value LONG")
-        u = (self.spark.read.parquet(*paths)
+        u = (self.spark.read.schema(DV_UPDATES_SCHEMA).parquet(*paths)
              .filter(F.col("field") == field))
         w = Window.partitionBy("docid").orderBy(F.desc("upd_gen"))
         return (u.withColumn("_rn", F.row_number().over(w))
@@ -593,7 +607,7 @@ class SegmentIndex:
 
     @property
     def term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(
+        return self.spark.read.schema(TERM_STATS_SCHEMA).parquet(
             f"{self.path}/term_stats/gen={self.stats_gen}")
 
     @property

@@ -56,6 +56,7 @@ TieredMergePolicy -> commit; INDEX/SegmentInfos.java generations):
 from __future__ import annotations
 
 import functools
+import glob
 import os
 import shutil
 import time
@@ -66,8 +67,9 @@ from pyspark.sql import functions as F
 from .docids import assign_docids
 from .replicator import commit_dirs
 from .segments import (
-    EXPUNGED_QDL, PACKED_SCHEMA, SegmentIndex, build_segments_direct,
-    next_ids, read_commit, unify_segment_frames, write_commit,
+    DELETES_SCHEMA, EXPUNGED_QDL, PACKED_SCHEMA, SEGDATA_SCHEMA,
+    TERM_STATS_SCHEMA, SegmentIndex, build_segments_direct, next_ids,
+    read_commit, unify_segment_frames, write_commit,
 )
 
 _PENDING_COMMIT = "pending_commit.json"
@@ -237,13 +239,17 @@ class IndexWriter:
 
     def _term_stats(self, st: dict) -> DataFrame:
         """The term_stats snapshot of commit ``st``."""
-        return self.spark.read.parquet(
+        return self.spark.read.schema(TERM_STATS_SCHEMA).parquet(
             self._gen_dir("term_stats", st["stats_gen"]))
+
+    def _segdata(self, gen: int) -> DataFrame:
+        """The rows written to ``segments/gen=gen``."""
+        return self.spark.read.schema(SEGDATA_SCHEMA).parquet(
+            self._gen_dir("segments", gen))
 
     def _postings(self, gen: int) -> DataFrame:
         """Posting rows written to ``segments/gen=gen``."""
-        return self.spark.read.parquet(self._gen_dir("segments", gen)) \
-            .filter(F.col("term").isNotNull())
+        return self._segdata(gen).filter(F.col("term").isNotNull())
 
     def _new_records(self, gen: int, lineage: str) -> list:
         """Segment records of the segments just written to
@@ -251,7 +257,7 @@ class IndexWriter:
         columns of both row kinds, collected once. A segment whose docs
         are all token-less has a norms row but no postings; its term
         counts are zero."""
-        rows = (self.spark.read.parquet(self._gen_dir("segments", gen))
+        rows = (self._segdata(gen)
                 .groupBy("seg_id").agg(
                     F.min("docid_min").alias("docid_min"),
                     F.max(F.col("docid_min") + F.length("norm_blob"))
@@ -432,7 +438,7 @@ class IndexWriter:
         Terms.getDocCount). An empty list commits nothing."""
         ids = sorted({int(d) for d in docids})
         return self._commit_delete_set(
-            self.spark.createDataFrame([(d,) for d in ids], "docid LONG"),
+            self.spark.createDataFrame([(d,) for d in ids], DELETES_SCHEMA),
             lineage or f"delete {len(ids)} docs")
 
     def update_by_term(self, term: str, batch, text_col: str = "text",
@@ -561,13 +567,17 @@ class IndexWriter:
                             del_gens=list(st.get("del_gens", [])) + [gen])
 
     def _write_delete_set(self, hits: DataFrame, gen: int) -> bool:
-        """Write ``hits`` as ``deletes/gen=gen``; False (nothing
-        written) when it is empty."""
-        if not hits.limit(1).count():
-            return False
-        hits.coalesce(1).write.mode("overwrite").parquet(
-            self._gen_dir("deletes", gen))
-        return True
+        """Write ``hits`` as ``deletes/gen=gen``; False (the dir
+        removed again) when it is empty. The query behind ``hits`` runs
+        once: emptiness is read from the written files' footers."""
+        import pyarrow.parquet as pq
+        out = self._gen_dir("deletes", gen)
+        hits.coalesce(1).write.mode("overwrite").parquet(out)
+        if sum(pq.read_metadata(f).num_rows
+               for f in glob.glob(f"{out}/*.parquet")):
+            return True
+        shutil.rmtree(out)
+        return False
 
     def vacuum(self) -> list:
         """Delete every generation dir under ``segments/``,

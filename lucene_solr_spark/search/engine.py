@@ -147,6 +147,7 @@ class TermWeights:
     def __init__(self, index):
         self._stats_index = index
         self._stats_cache: dict[str, tuple[int, int]] = {}
+        self._expand_cache: dict = {}
 
     def _resolve_stats(self, terms) -> dict[str, tuple[int, int]]:
         """(df, ttf) per term: one term_stats collect for the terms not
@@ -173,16 +174,23 @@ class TermWeights:
         """The dictionary terms a multi-term query matches, sorted
         (MultiTermQuery.rewrite): one filtered scan of the small
         term_stats table, capped at maxClauseCount
-        (IndexSearcher.TooManyClauses)."""
-        pred = term_predicate(q)
-        if pred is None:
-            raise TypeError(f"not a multi-term query: {type(q).__name__}")
-        rows = (self._stats_index.term_stats.filter(pred)
-                .select("term").limit(MAX_CLAUSE_COUNT + 1).collect())
-        if len(rows) > MAX_CLAUSE_COUNT:
+        (IndexSearcher.TooManyClauses). Frozen per query node and cap
+        like the term stats, so a reused searcher scans once."""
+        key = (q, MAX_CLAUSE_COUNT)
+        if key not in self._expand_cache:
+            pred = term_predicate(q)
+            if pred is None:
+                raise TypeError(
+                    f"not a multi-term query: {type(q).__name__}")
+            rows = (self._stats_index.term_stats.filter(pred)
+                    .select("term").limit(MAX_CLAUSE_COUNT + 1).collect())
+            self._expand_cache[key] = (
+                None if len(rows) > MAX_CLAUSE_COUNT
+                else tuple(sorted(r["term"] for r in rows)))
+        if self._expand_cache[key] is None:
             raise TooManyClauses(
                 f"{type(q).__name__} expands past {MAX_CLAUSE_COUNT}")
-        return tuple(sorted(r["term"] for r in rows))
+        return self._expand_cache[key]
 
     def scoring_bool_rewrite(self, q: Query) -> Bool:
         """MultiTermQuery.SCORING_BOOLEAN_REWRITE (ScoringRewrite.java:

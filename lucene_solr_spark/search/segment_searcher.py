@@ -26,9 +26,13 @@ MaxScoreCache.java:61-124, BlockMaxConjunctionScorer.java:101-140):
   ``orderBy(score DESC, docid ASC).limit(k)`` = TopDocs.merge
   (SEARCH/TopDocs.java:70-115) with the HitQueue tie-break.
 
-Only the query terms' packed rows are read: the filter on ``term``
-reaches the Parquet scan (term-sorted row groups prune), and the
-``seg_id`` partitioning keeps the shuffle to one tiny candidate union.
+One pushed scan feeds the kernel: the query terms' packed rows plus
+each segment's norms row (``term IS NULL``); the filter on ``term``
+reaches the Parquet scan (term-sorted row groups prune). The commit's
+per-segment live docs are a union onto that scan, so no join runs and
+the one ``groupBy(seg_id)`` shuffle brings a segment's postings, norms
+and deletes to its kernel call. A fresh reader's top-k is 3 Spark jobs
+(term stats, scan + kernel stage, final take), a warm one's 2.
 A multi-term query past maxClauseCount is not enumerated: the scan
 tags each row with the ``engine.term_predicate`` columns it matches,
 so Spark's predicate is the only multi-term matcher.
@@ -52,7 +56,7 @@ from pyspark.sql import functions as F
 
 from .. import B, K1
 from ..codecs import blocks as blk
-from ..index.segments import SegmentIndex
+from ..index.segments import PACKED_SCHEMA, SegmentIndex
 from .engine import TermWeights, TooManyClauses, term_predicate
 from .query import (
     Bool, Boost, ConstantScore, DisMax, Fuzzy, MultiPhrase, Phrase,
@@ -416,15 +420,19 @@ def make_kernel(spec: SegSpec):
 
         from ..index.segments import _tune_allocator
         _tune_allocator()
-        qdl_blob = np.frombuffer(pdf["qdl_blob"].iloc[0], dtype=np.int32)
-        docid_min = int(pdf["docid_min"].iloc[0])
+        # the segment's norms row (the one with a qdl blob) and, with
+        # deletes, its live-docs row (the one with del_ids) ride in the
+        # group beside its posting rows; both have a NULL term
+        norms = pdf[pdf["qdl_blob"].notna()].iloc[0]
+        qdl_blob = np.frombuffer(norms["qdl_blob"], dtype=np.int32)
+        docid_min = int(norms["docid_min"])
+        postings = pdf[pdf["term"].notna()]
         tds = {row.term: _TermData(row)
-               for row in pdf.itertuples(index=False)
-               if row.term is not None}
+               for row in postings.itertuples(index=False)}
         # terms the scan tagged with each fallback predicate's index
         tagged: dict = {}
         if preds:
-            for term, tags in zip(pdf["term"], pdf["_pm"]):
+            for term, tags in zip(postings["term"], postings["_pm"]):
                 for i in tags:
                     tagged.setdefault(int(i), []).append(term)
 
@@ -444,15 +452,15 @@ def make_kernel(spec: SegSpec):
 
         # FILTER sets (None: the filter matches nothing here) and the
         # MUST_NOT + live-docs exclusion sets, decoded once per segment;
-        # the delete set arrives co-partitioned in the input frame
-        # (seg-local array), never via the driver
+        # the delete set arrives in the segment's group (seg-local
+        # array), never via the driver
         filt = [any_of(tset, pred) for tset, pred in spec.filters]
         excl = [x for x in [any_of(spec.must_not, None)]
                 + [any_of((), pred) for pred in spec.must_not_preds]
                 if x is not None]
-        dv = pdf["del_ids"].iloc[0] if "del_ids" in pdf.columns else None
-        if dv is not None and len(dv):
-            excl.append(np.asarray(dv, dtype=np.int64))
+        if "del_ids" in pdf.columns:
+            excl += [np.asarray(dv, dtype=np.int64)
+                     for dv in pdf["del_ids"] if dv is not None]
 
         def scored(d, tf, w):
             return d, _score_dispatch(spec, tf, qdl_of(d), w)
@@ -654,15 +662,12 @@ class SegmentSearcher(TermWeights):
     def _expand_or_pred(self, q: Query) -> tuple:
         """(terms, pred): enumerate the dictionary terms when the set is
         small; past maxClauseCount fall back to shipping the predicate
-        itself (the constant-score rewrite never enumerates — the scan
-        pushes engine.term_predicate and tags the rows it matches, see
-        _segment_frame). Fuzzy stays enumerated (its neighborhood is
-        edit-bounded; Lucene's TopTermsRewrite caps it the same way)."""
+        itself, for every multi-term type (the constant-score rewrite
+        never enumerates — the scan pushes engine.term_predicate and
+        tags the rows it matches, see _segment_frame)."""
         try:
             return self.expand_terms(q), None
         except TooManyClauses:
-            if isinstance(q, Fuzzy):
-                raise
             return (), q
 
     MULTI_TERM = (Prefix, Wildcard, TermRange, TermInSet, Fuzzy, Regexp)
@@ -849,40 +854,41 @@ class SegmentSearcher(TermWeights):
         return sorted(ts)
 
     def _segment_frame(self, spec: SegSpec) -> DataFrame:
-        terms = self._all_terms(spec)
+        """One pushed scan of the commit's segment data: the query's
+        posting rows plus each segment's norms row (``term IS NULL``),
+        so a segment's docid_min and qdl blob reach its kernel call
+        with its postings and no join runs; the ``groupBy(seg_id)`` of
+        ``candidates`` co-locates them."""
         preds = _all_preds(spec)
-        cond = F.col("term").isin(terms)
+        cond = F.col("term").isin(self._all_terms(spec))
         for node in preds:
             # the dictionary predicate pushes into the parquet scan
             # (LIKE/range prune on term-sorted row groups)
             cond = cond | term_predicate(node)
-        pk = self.six.packed.filter(cond)
+        out = self.six._data().filter(cond | F.col("term").isNull()) \
+            .select(*[f.name for f in PACKED_SCHEMA.fields],
+                    "docid_min", "qdl_blob")
         if preds:
             # _pm: the indexes (into _all_preds) of the fallback
             # predicates each row's term matches — the kernel's
             # any_of reads them instead of matching terms itself
-            pk = pk.withColumn("_pm", F.filter(F.array(*[
+            out = out.withColumn("_pm", F.filter(F.array(*[
                 F.when(term_predicate(p), F.lit(i))
                 for i, p in enumerate(preds)]), lambda x: x.isNotNull()))
-        nm = self.six.norms.select("seg_id", "docid_min", "qdl_blob")
-        # no broadcast hint: at bench scale AQE broadcasts this anyway;
-        # at 10^12 docs the norms table is terabytes and must co-locate
-        # by seg_id through a shuffle join instead
-        out = pk.join(nm, "seg_id")
         if self.six.del_gens:
-            # live docs (Lucene's per-segment liveDocs bitset)
-            # co-partitioned by seg_id, never through the driver (left:
-            # most segments have no deletes)
-            out = out.join(_live_docs_frame(self.six), "seg_id", "left")
+            # live docs (Lucene's per-segment liveDocs bitset): one
+            # (seg_id, del_ids) row per segment with deletes, grouped
+            # with the segment's rows by seg_id, never via the driver
+            out = out.unionByName(_live_docs_frame(self.six),
+                                  allowMissingColumns=True)
         return out
 
     def candidates(self, q: Query, k: int, emit_all: bool = False,
                    prune: bool = True, f32: bool = False) -> DataFrame:
         spec = self.compile(q, k, emit_all=emit_all, prune=prune, f32=f32)
         if not spec.clauses:
-            return (self.six.norms.sparkSession
-                    .range(0).select(F.col("id").alias("docid"),
-                                     F.lit(0.0).alias("score")))
+            return self.six.spark.range(0).select(
+                F.col("id").alias("docid"), F.lit(0.0).alias("score"))
         df = self._segment_frame(spec)
         return df.groupBy("seg_id").applyInPandas(
             make_kernel(spec), OUT_SCHEMA)
@@ -927,7 +933,7 @@ class SegmentSearcher(TermWeights):
         not computed (trackScores=false shape): the kernel runs in
         emit-all mode and the docid column alone is kept."""
         spec = self.compile(q, k, emit_all=True, prune=False)
-        spark = self.six.norms.sparkSession
+        spark = self.six.spark
         out_schema = "doc_id long"
         if not spec.clauses:
             return spark.createDataFrame([], out_schema)

@@ -279,6 +279,19 @@ def test_delete_docids_empty_commits_nothing(store):
     assert w.commit_state()["generation"] == gen0
 
 
+def test_empty_delete_by_query_leaves_no_delete_set(store):
+    """A delete query without hits commits nothing and leaves no
+    ``deletes/gen=N`` dir: the delete set is written once and its
+    emptiness read from the written files."""
+    import os
+    w = store
+    st0 = w.commit_state()
+    w.delete_by_query(Term("zzzzabsent"))
+    assert w.commit_state() == st0
+    assert not os.path.exists(
+        os.path.join(w.path, "deletes", f"gen={st0['generation'] + 1}"))
+
+
 def test_live_docs_frames_do_not_pile_up(store, spark, monkeypatch):
     """Each delete commit's cached live-docs frame replaces the previous
     one: after three delete commits, each queried by a fresh reader, at

@@ -123,6 +123,63 @@ def test_records_track_rows_through_every_mutation(spark, xs_transcripts,
     _assert_records_match_rows(spark, w.reader())
 
 
+def test_store_files_match_pinned_schemas(spark, xs_transcripts, tmp_path):
+    """Store reads pass the writer's schema instead of inferring one
+    from a file footer, so every file of every writer path (append,
+    each delete kind, update_by_term, docvalue update, bulk merge,
+    expunge) and of a replicated copy must carry that schema: the same
+    column names and Arrow types."""
+    import glob
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from lucene_solr_spark.index.replicator import replicate
+    from lucene_solr_spark.index.segments import (
+        DELETES_SCHEMA, DV_UPDATES_SCHEMA, SEGDATA_SCHEMA, TERM_STATS_SCHEMA,
+    )
+
+    def fields(schema):
+        return [(f.name, f.type) for f in schema]
+
+    pinned = {sub: fields(to_arrow_schema(
+        spark.createDataFrame([], sch).schema if isinstance(sch, str)
+        else sch))
+        for sub, sch in (("segments", SEGDATA_SCHEMA),
+                         ("term_stats", TERM_STATS_SCHEMA),
+                         ("deletes", DELETES_SCHEMA),
+                         ("dv_updates", DV_UPDATES_SCHEMA))}
+    w = IndexWriter.create(spark, str(tmp_path / "ix"), docs_per_segment=64)
+    cols = ("conv_id", "turn_idx", "text")
+    w.append_raw(xs_transcripts.filter(F.col("docid") < 150).select(*cols))
+    w.delete_docids([3, 70])
+    w.delete_docids_df(spark.createDataFrame([(5,)], "d LONG"))
+    w.delete_by_term("error")
+    w.delete_by_query(Term("retry"))
+    w.expire_docs(spark.createDataFrame([(7, 10), (8, 99)],
+                                        "docid LONG, ttl LONG"), "ttl", 50)
+    w.update_by_term("ok", xs_transcripts.filter(
+        F.col("docid").between(150, 199)).select(*cols))
+    w.update_numeric_docvalue("w1", "rank", 7)
+    replica = str(tmp_path / "replica")
+    replicate(w.path, replica)
+    segs = sorted(w.commit_state()["segments"], key=lambda r: r["docid_min"])
+    w.merge_segments([r["seg_id"] for r in segs[:2]])
+    w.expunge_deletes()
+    want = {"segments": 4, "term_stats": 3, "deletes": 6, "dv_updates": 1}
+    for root in (w.path, replica):
+        for sub, cols in pinned.items():
+            gen_dirs = glob.glob(f"{root}/{sub}/gen=*")
+            if root == w.path:
+                assert len(gen_dirs) == want[sub], (sub, gen_dirs)
+            assert gen_dirs, (root, sub)
+            for d in gen_dirs:
+                files = glob.glob(f"{d}/*.parquet")
+                assert files, d
+                for f in files:
+                    assert fields(pq.read_schema(f)) == cols, f
+
+
 def test_store_without_segment_records_is_rejected(spark, tmp_path):
     """A commit of an older store format (no ``segments`` list) is
     refused with a clear error instead of reading as an empty store."""

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from lucene_solr_spark.index.segments import check_index, open_segments
 from lucene_solr_spark.index.writer import IndexWriter
 from lucene_solr_spark.search import engine
-from lucene_solr_spark.search.engine import Searcher, TooManyClauses
+from lucene_solr_spark.search.engine import Searcher
 from lucene_solr_spark.search.query import (
     Bool, Boost, Fuzzy, Phrase, Prefix, Regexp, ReversedWildcard, Synonym,
     Term, TermInSet, TermRange, Wildcard,
@@ -180,9 +180,50 @@ def test_kernel_predicate_fallback_past_max_clause(xs_index, xs_segments,
         assert eng == ker, (q, eng[:3], ker[:3])
 
 
-def test_fuzzy_past_max_clause_still_raises(xs_segments, monkeypatch):
-    """Fuzzy stays enumerated on the segment path (its neighborhood is
-    edit-bounded), so past the cap it raises instead of falling back."""
+def test_fuzzy_past_max_clause_matches_naive(xs_index, xs_segments,
+                                             monkeypatch):
+    """A Fuzzy past maxClauseCount takes the same predicate fallback as
+    the other multi-term types, in scoring, FILTER and MUST_NOT
+    positions, and answers as the naive engine does."""
     monkeypatch.setattr(engine, "MAX_CLAUSE_COUNT", 3)
-    with pytest.raises(TooManyClauses):
-        SegmentSearcher(xs_segments).topk(Fuzzy("w12"), 10)
+    fz = Fuzzy("w123", 1)
+    assert xs_index.term_stats.filter(engine.term_predicate(fz)).count() > 3
+    se = Searcher(xs_index)
+    ss = SegmentSearcher(xs_segments)
+    for q in (fz,
+              Bool(must=(Term("ok"),), filter=(fz,)),
+              Bool(must=(Term("ok"),), must_not=(fz,))):
+        eng = [(r.doc_id, r.score) for r in se.topk(q, 10).collect()]
+        ker = [(r.doc_id, r.score) for r in ss.topk(q, 10).collect()]
+        assert eng and eng == ker, (q, eng[:3], ker[:3])
+
+
+def test_topk_job_budget(spark, tmp_path, monkeypatch):
+    """A fresh reader's top-k runs at most 3 Spark jobs (the term-stats
+    lookup, the scan + kernel stage, the final take) and a second top-k
+    on the same searcher at most 2: the store reads infer no schema,
+    norms come through the posting scan and live docs join nothing.
+    The commit's live-docs frame is built by its first query and
+    shared by every later reader, so that query runs first."""
+    from lucene_solr_spark.datagen.transcripts import gen_transcripts
+    from test_index_commit import _spark_jobs
+    w = IndexWriter.create(spark, str(tmp_path / "ix"), docs_per_segment=128)
+    w.append_raw(gen_transcripts(spark, 20))
+    w.delete_docids([3, 70, 140])
+    SegmentSearcher(w.reader()).topk(Term("ok"), 10).collect()
+    monkeypatch.setattr(engine, "MAX_CLAUSE_COUNT", 3)
+    assert w.reader().term_stats.filter(
+        engine.term_predicate(Prefix("w1"))).count() > 3
+    for i, q in enumerate((
+            Term("error"),
+            Bool(must=(Term("ok"),), filter=(Term("the"),),
+                 must_not=(Term("retry"),)),
+            Prefix("w1"))):
+        ss = SegmentSearcher(open_segments(spark, w.path))
+        with _spark_jobs(spark, f"budget-fresh-{i}") as fresh:
+            first = ss.topk(q, 10).collect()
+        with _spark_jobs(spark, f"budget-warm-{i}") as warm:
+            again = ss.topk(q, 10).collect()
+        assert first and first == again, q
+        assert len(fresh) <= 3, (q, fresh)
+        assert len(warm) <= 2, (q, warm)

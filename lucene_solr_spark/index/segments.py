@@ -37,9 +37,11 @@ index/docids.py).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -491,6 +493,23 @@ def unify_segment_frames(pk: DataFrame, norms: DataFrame) -> DataFrame:
     return pk_u.unionByName(nm_u)
 
 
+def delete_set_footers(*dirs: str) -> tuple:
+    """(rows, largest docid) of the delete sets written under ``dirs``,
+    read from their parquet footers, so no Spark job runs: a docid
+    deleted in two sets counts twice; the docid is -1 without rows and
+    None when a footer carries no column statistics."""
+    import pyarrow.parquet as pq
+    rows, top = 0, -1
+    for f in (f for d in dirs for f in glob.glob(f"{d}/*.parquet")):
+        md = pq.read_metadata(f)
+        rows += md.num_rows
+        for i in range(md.num_row_groups):
+            st = md.row_group(i).column(0).statistics
+            top = (None if top is None or st is None or not st.has_min_max
+                   else max(top, int(st.max)))
+    return rows, top
+
+
 @dataclass
 class SegmentIndex:
     """On-disk segment index handle (IndexReader-over-commit analogue).
@@ -549,6 +568,12 @@ class SegmentIndex:
         if not paths:
             return self.spark.createDataFrame([], DELETES_SCHEMA)
         return self.spark.read.schema(DELETES_SCHEMA).parquet(*paths)
+
+    @cached_property
+    def delete_footers(self) -> tuple:
+        """``delete_set_footers`` over the commit's delete sets."""
+        return delete_set_footers(*[f"{self.path}/deletes/gen={g}"
+                                    for g in self.del_gens])
 
     @property
     def deleted(self) -> DataFrame:

@@ -56,7 +56,6 @@ TieredMergePolicy -> commit; INDEX/SegmentInfos.java generations):
 from __future__ import annotations
 
 import functools
-import glob
 import os
 import shutil
 import time
@@ -68,8 +67,9 @@ from .docids import assign_docids
 from .replicator import commit_dirs
 from .segments import (
     DELETES_SCHEMA, EXPUNGED_QDL, PACKED_SCHEMA, SEGDATA_SCHEMA,
-    TERM_STATS_SCHEMA, SegmentIndex, build_segments_direct, next_ids,
-    read_commit, unify_segment_frames, write_commit,
+    TERM_STATS_SCHEMA, SegmentIndex, build_segments_direct,
+    delete_set_footers, next_ids, read_commit, unify_segment_frames,
+    write_commit,
 )
 
 _PENDING_COMMIT = "pending_commit.json"
@@ -570,11 +570,9 @@ class IndexWriter:
         """Write ``hits`` as ``deletes/gen=gen``; False (the dir
         removed again) when it is empty. The query behind ``hits`` runs
         once: emptiness is read from the written files' footers."""
-        import pyarrow.parquet as pq
         out = self._gen_dir("deletes", gen)
         hits.coalesce(1).write.mode("overwrite").parquet(out)
-        if sum(pq.read_metadata(f).num_rows
-               for f in glob.glob(f"{out}/*.parquet")):
+        if delete_set_footers(out)[0]:
             return True
         shutil.rmtree(out)
         return False

@@ -175,7 +175,8 @@ class TermWeights:
         (MultiTermQuery.rewrite): one filtered scan of the small
         term_stats table, capped at maxClauseCount
         (IndexSearcher.TooManyClauses). Frozen per query node and cap
-        like the term stats, so a reused searcher scans once."""
+        like the term stats, so a reused searcher scans once; the
+        matched terms' (df, ttf) are frozen from the same scan."""
         key = (q, MAX_CLAUSE_COUNT)
         if key not in self._expand_cache:
             pred = term_predicate(q)
@@ -183,10 +184,14 @@ class TermWeights:
                 raise TypeError(
                     f"not a multi-term query: {type(q).__name__}")
             rows = (self._stats_index.term_stats.filter(pred)
-                    .select("term").limit(MAX_CLAUSE_COUNT + 1).collect())
+                    .select("term", "df", "ttf")
+                    .limit(MAX_CLAUSE_COUNT + 1).collect())
             self._expand_cache[key] = (
                 None if len(rows) > MAX_CLAUSE_COUNT
                 else tuple(sorted(r["term"] for r in rows)))
+            for r in rows:
+                self._stats_cache.setdefault(
+                    r["term"], (int(r["df"]), int(r["ttf"])))
         if self._expand_cache[key] is None:
             raise TooManyClauses(
                 f"{type(q).__name__} expands past {MAX_CLAUSE_COUNT}")

@@ -1,4 +1,4 @@
-"""Segment-native BM25 top-k: block-max WAND inside applyInPandas.
+"""Segment-native BM25 top-k: block-max WAND, one kernel call per segment.
 
 The Spark realization of the reference's pruned search path
 (SEARCH/WANDScorer.java:29-447, ImpactsDISI.java:95-127,
@@ -8,8 +8,7 @@ MaxScoreCache.java:61-124, BlockMaxConjunctionScorer.java:101-140):
   **global** term stats once (IndexSearcher.createWeight freezing
   CollectionStatistics — SEARCH/IndexSearcher.java:909-926) and bakes
   idf weights into the spec;
-- executors run one kernel invocation per segment
-  (``groupBy(seg_id).applyInPandas``): per-term skip arrays give a
+- one kernel invocation per segment: per-term skip arrays give a
   piecewise-constant score upper bound over docid space; cells (merged
   block intervals) are processed in descending upper-bound order and
   the kernel stops as soon as the next cell's bound is below the
@@ -22,20 +21,25 @@ MaxScoreCache.java:61-124, BlockMaxConjunctionScorer.java:101-140):
   ``admit`` (FILTER, MUST_NOT, live docs) steps; exact phrases and
   multi-phrases share one matcher (ExactPhraseMatcher over
   UnionPostingsEnum slots);
-- per-segment candidates (≤k each) are reduced by one narrow
-  ``orderBy(score DESC, docid ASC).limit(k)`` = TopDocs.merge
-  (SEARCH/TopDocs.java:70-115) with the HitQueue tie-break.
+- per-segment candidates (≤k each) are reduced on the driver by
+  TopDocs.merge (SEARCH/TopDocs.java:70-115) with the HitQueue
+  tie-break; ``topk`` materializes its ≤k rows when called, like
+  IndexSearcher.search returning TopDocs.
 
 One pushed scan feeds the kernel: the query terms' packed rows plus
 each segment's norms row (``term IS NULL``); the filter on ``term``
-reaches the Parquet scan (term-sorted row groups prune). The commit's
-per-segment live docs are a union onto that scan, so no join runs and
-the one ``groupBy(seg_id)`` shuffle brings a segment's postings, norms
-and deletes to its kernel call. A fresh reader's top-k is 3 Spark jobs
-(term stats, scan + kernel stage, final take), a warm one's 2.
-A multi-term query past maxClauseCount is not enumerated: the scan
-tags each row with the ``engine.term_predicate`` columns it matches,
-so Spark's predicate is the only multi-term matcher.
+reaches the Parquet scan (term-sorted row groups prune). The per-segment
+live docs are a union onto that scan, so no join runs. Where the kernel
+runs depends on an estimate of the scan's bytes, made from the term
+stats and segment records the reader already holds: at or below
+``spark.sql.autoBroadcastJoinThreshold`` the scan is one Arrow collect
+and the kernel runs on the driver once per segment (no shuffle, no
+Python worker); above it, or with the threshold at -1, one
+``groupBy(seg_id).applyInPandas`` stage runs it on the executors. A
+fresh reader's local top-k is 2 Spark jobs (term stats, the collect), a
+warm one's 1. A multi-term query past maxClauseCount is not enumerated:
+the scan tags each row with the ``engine.term_predicate`` columns it
+matches, so Spark's predicate is the only multi-term matcher.
 
 Scores are float64 in the same operation order as the SQL oracle
 (bm25.score_sql), so segment-path results hash-match the DuckDB oracle
@@ -412,14 +416,13 @@ def _all_preds(spec: SegSpec) -> list:
 
 
 def make_kernel(spec: SegSpec):
-    """Build the applyInPandas function for one query."""
+    """The per-segment kernel of one query: one segment's rows of the
+    pushed scan (a pandas frame) -> its hits (docid, score)."""
     preds = _all_preds(spec)
 
     def kernel(pdf):
         import pandas as pd
 
-        from ..index.segments import _tune_allocator
-        _tune_allocator()
         # the segment's norms row (the one with a qdl blob) and, with
         # deletes, its live-docs row (the one with del_ids) ride in the
         # group beside its posting rows; both have a NULL term
@@ -627,21 +630,65 @@ def make_kernel(spec: SegSpec):
     return kernel
 
 
+def _on_executor(spec: SegSpec):
+    """``make_kernel(spec)`` as an applyInPandas function. Executor
+    Python workers are reused across tasks, so each tunes its allocator
+    (segments._tune_allocator) first; the driver's own kernel calls
+    leave the driver process alone."""
+    kernel = make_kernel(spec)
+
+    def run(pdf):
+        from ..index.segments import _tune_allocator
+        _tune_allocator()
+        return kernel(pdf)
+    return run
+
+
+def _on_driver(spec: SegSpec, frame: DataFrame, order=None):
+    """The local step: ONE Arrow collect of the pushed scan ``frame``,
+    then the kernel once per segment on the driver, with no shuffle and
+    no Python worker. Yields each segment's hits (a pandas frame), in
+    the seg id ``order`` when one is given."""
+    kernel = make_kernel(spec)
+    groups = dict(tuple(frame.toArrow().to_pandas()
+                        .groupby("seg_id", sort=False)))
+    for seg in (groups if order is None else order):
+        if seg in groups:
+            yield kernel(groups[seg])
+
+
+def _arrow_frame(spark, **cols) -> DataFrame:
+    """A local DataFrame over numpy columns. Built from an Arrow table it
+    is a LocalRelation, so projecting and collecting it runs no Spark
+    job (one built from a Python list runs one)."""
+    import pyarrow as pa
+    return spark.createDataFrame(
+        pa.table({name: pa.array(v) for name, v in cols.items()}))
+
+
 # ---------------------------------------------------------------------------
 # driver-side searcher
 # ---------------------------------------------------------------------------
 
-# store path -> ((session, commit generation), persisted live-docs frame);
-# process-wide like Spark's own cache, because every query may open a
-# fresh reader of the same commit
+# store path -> (key, persisted live-docs frame); process-wide like
+# Spark's own cache, because every query may open a fresh reader
 _LIVE_DOCS: dict = {}
 
 
 def _live_docs_frame(six: SegmentIndex) -> DataFrame:
-    """The commit's (seg_id, del_ids) frame, persisted once per store:
-    fresh readers of one commit share it, and a newer commit's frame
-    replaces (unpersists) the older one instead of piling up beside it."""
-    key = (six.spark, six.generation)
+    """The (seg_id, del_ids) frame, persisted once per store and shared
+    by every reader whose frame would hold the same rows. It is keyed on
+    what those rows depend on: the delete generations and the records of
+    the segments that can hold a deleted docid (docid_min at or below
+    the largest one, read from the delete sets' footers). An append, or
+    a merge of later segments, reuses it; a delete, or a merge or
+    expunge of those segments, builds a new one and unpersists the old
+    instead of piling it up beside it."""
+    top = six.delete_footers[1]
+    key = (six.spark, tuple(six.del_gens),
+           tuple(sorted((r["seg_id"], r["docid_min"], r["docid_end"])
+                        for r in six.segments
+                        if top is None or r["docid_min"] <= top)))
     held = _LIVE_DOCS.get(six.path)
     if held is not None and held[0] == key:
         return held[1]
@@ -857,8 +904,8 @@ class SegmentSearcher(TermWeights):
         """One pushed scan of the commit's segment data: the query's
         posting rows plus each segment's norms row (``term IS NULL``),
         so a segment's docid_min and qdl blob reach its kernel call
-        with its postings and no join runs; the ``groupBy(seg_id)`` of
-        ``candidates`` co-locates them."""
+        with its postings and no join runs; a kernel call takes one
+        seg_id's rows."""
         preds = _all_preds(spec)
         cond = F.col("term").isin(self._all_terms(spec))
         for node in preds:
@@ -883,21 +930,87 @@ class SegmentSearcher(TermWeights):
                                   allowMissingColumns=True)
         return out
 
+    def _scan_estimate(self, spec: SegSpec) -> float:
+        """Bytes the pushed scan of ``spec`` returns, from what the
+        reader already holds: the query terms' df times the records'
+        packed bytes per posting, 4 B per docid of each qdl blob and
+        8 B per deleted docid. A non-enumerated multi-term predicate has
+        no df, and may match every term: its spec counts every posting
+        row of the commit."""
+        segs = self.six.segments
+        packed = sum(r["packed_bytes"] for r in segs)
+        if _all_preds(spec):
+            postings = packed
+        else:
+            n_postings = sum(r["n_postings"] for r in segs)
+            df = sum(self._resolve_dfs(self._all_terms(spec)).values())
+            postings = df * packed / n_postings if n_postings else 0.0
+        return (postings
+                + 4 * sum(r["docid_end"] - r["docid_min"] for r in segs)
+                + 8 * self.six.delete_footers[0])
+
+    def _fits_driver(self, spec: SegSpec) -> bool:
+        """Whether the local step runs: the scan estimate is at or below
+        ``spark.sql.autoBroadcastJoinThreshold``, Spark's own bound on
+        what it pulls to the driver; -1 turns the local step off."""
+        limit = self.six.spark._jsparkSession.sessionState().conf() \
+            .autoBroadcastJoinThreshold()
+        return 0 <= self._scan_estimate(spec) <= limit
+
     def candidates(self, q: Query, k: int, emit_all: bool = False,
                    prune: bool = True, f32: bool = False) -> DataFrame:
+        """Each segment's hits (docid, score): its top k by
+        (round(score, 6) DESC, docid ASC), or every match with
+        ``emit_all``. A top-k whose pushed scan fits on the driver
+        (``_fits_driver``) runs the local step now and returns its hits
+        as a local Arrow-backed frame; anything else is one lazy
+        ``groupBy(seg_id).applyInPandas`` stage on the executors."""
         spec = self.compile(q, k, emit_all=emit_all, prune=prune, f32=f32)
+        spark = self.six.spark
         if not spec.clauses:
-            return self.six.spark.range(0).select(
-                F.col("id").alias("docid"), F.lit(0.0).alias("score"))
-        df = self._segment_frame(spec)
-        return df.groupBy("seg_id").applyInPandas(
-            make_kernel(spec), OUT_SCHEMA)
+            return _arrow_frame(spark, docid=EMPTY[0], score=EMPTY[1])
+        frame = self._segment_frame(spec)
+        if not emit_all and self._fits_driver(spec):
+            hits = list(_on_driver(spec, frame))
+            return _arrow_frame(
+                spark,
+                docid=np.concatenate([EMPTY[0]] + [h["docid"].to_numpy()
+                                                   for h in hits]),
+                score=np.concatenate([EMPTY[1]] + [h["score"].to_numpy()
+                                                   for h in hits]))
+        return frame.groupBy("seg_id").applyInPandas(
+            _on_executor(spec), OUT_SCHEMA)
+
+    def _top_docs(self, hits: DataFrame, k: int, f32: bool) -> DataFrame:
+        """TopDocs.merge (SEARCH/TopDocs.java:70-115) on the driver: the
+        per-segment hits are collected, ordered by score DESC then docid
+        ASC (the HitQueue tie-break), cut to k, and returned as a local
+        frame whose ``collect()`` runs no job. Double scores are first
+        rounded to 6 places by Spark's HALF_UP ``round``. Local hits
+        collect without a job; executor hits pass Spark's per-partition
+        TakeOrdered inside the stage that collects them (no extra job),
+        so the driver receives <= k rows per partition, not per
+        segment."""
+        local = hits.isLocal()
+        if not f32:
+            hits = hits.select("docid",
+                               F.round(F.col("score"), 6).alias("score"))
+        if not local:
+            hits = hits.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+        rows = sorted((-r.score, r.docid) for r in hits.collect())[:k]
+        return _arrow_frame(
+            self.six.spark,
+            doc_id=np.array([d for _, d in rows], dtype=np.int64),
+            score=np.array([-s for s, _ in rows],
+                           dtype=np.float32 if f32 else np.float64))
 
     def topk(self, q: Query, k: int = 10, prune: bool = True) -> DataFrame:
-        s = self.candidates(q, k, prune=prune).select(
-            "docid", F.round(F.col("score"), 6).alias("score"))
-        return (s.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-                .select(F.col("docid").alias("doc_id"), "score"))
+        """The top k (doc_id, score) of ``q``, scores rounded to 6
+        places. Like IndexSearcher.search returning TopDocs, the hits
+        are materialized when this is called: the per-segment kernel
+        runs (on the driver when the scan is small, see
+        ``candidates``) and ``_top_docs`` merges."""
+        return self._top_docs(self.candidates(q, k, prune=prune), k, False)
 
     def scored(self, q: Query) -> DataFrame:
         """All matches with scores (no pruning) — grouping/paging feed."""
@@ -905,13 +1018,12 @@ class SegmentSearcher(TermWeights):
 
     def topk32(self, q: Query, k: int = 10, prune: bool = True) -> DataFrame:
         """Lucene-parity top-k over packed segments: float32 BM25 with
-        block-max WAND pruning, ties by docid ASC (HitQueue.lessThan).
-        The repo's only float32 scorer; tests/test_lucene_parity.py
-        checks it bit for bit against an independent numpy oracle."""
-        s = self.candidates(q, k, prune=prune, f32=True)
-        return (s.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-                .select(F.col("docid").alias("doc_id"),
-                        F.col("score").cast("float").alias("score")))
+        block-max WAND pruning, ties by docid ASC (HitQueue.lessThan),
+        materialized when called like ``topk``. The repo's only float32
+        scorer; tests/test_lucene_parity.py checks it bit for bit
+        against an independent numpy oracle."""
+        return self._top_docs(self.candidates(q, k, prune=prune, f32=True),
+                              k, True)
 
     def count(self, q: Query) -> DataFrame:
         return (self.scored(q)
@@ -922,35 +1034,41 @@ class SegmentSearcher(TermWeights):
         canEarlyTerminate path when the query Sort equals the index
         sort, TopFieldCollector.java:200): segments hold contiguous
         docid ranges in index order (record ``docid_min``), so the
-        first k matches by docid need only a PREFIX of segments.
-        Segments are probed in docid order with geometric widening
-        (1, 2, 4, ... segments per probe — <= log2(S) probes even when
-        the query is sparse); every unvisited segment's docids are all
-        larger than the visited ones, so collection stops the moment k
-        hits exist. Each probe is a pushed-filter scan of only the
-        probed seg_ids; per probe at most k rows reach the driver (the
+        first k matches by docid need only a PREFIX of segments, and
+        every unvisited segment's docids are all larger than the
+        visited ones, so collection stops the moment k hits exist.
+        When the pushed scan fits on the driver, it is one Arrow
+        collect and the kernel runs segment by segment in docid order.
+        Otherwise segments are probed with geometric widening (1, 2,
+        4, ... segments per probe — <= log2(S) probes even when the
+        query is sparse), each probe a pushed-filter scan of only the
+        probed seg_ids of which at most k rows reach the driver (the
         same k-row materialization TopDocs itself implies). Scores are
         not computed (trackScores=false shape): the kernel runs in
         emit-all mode and the docid column alone is kept."""
         spec = self.compile(q, k, emit_all=True, prune=False)
-        spark = self.six.spark
-        out_schema = "doc_id long"
-        if not spec.clauses:
-            return spark.createDataFrame([], out_schema)
-        cat = sorted((r["docid_min"], r["seg_id"])
-                     for r in self.six.segments)
-        frame = self._segment_frame(spec)
         taken: list = []
-        i, width = 0, 1
-        while i < len(cat) and len(taken) < k:
-            batch = [seg for _, seg in cat[i:i + width]]
-            i += width
-            width *= 2
-            hits = (frame.filter(F.col("seg_id").isin(batch))
-                    .groupBy("seg_id")
-                    .applyInPandas(make_kernel(spec), OUT_SCHEMA)
-                    .orderBy("docid").limit(k - len(taken))
-                    .collect())
-            taken.extend(int(r.docid) for r in hits)
-        rows = [(d,) for d in sorted(taken)[:k]]
-        return spark.createDataFrame(rows, out_schema)
+        if spec.clauses:
+            order = [seg for _, seg in sorted(
+                (r["docid_min"], r["seg_id"]) for r in self.six.segments)]
+            frame = self._segment_frame(spec)
+            if self._fits_driver(spec):
+                for hits in _on_driver(spec, frame, order):
+                    taken.extend(hits["docid"].tolist())
+                    if len(taken) >= k:
+                        break
+            else:
+                i, width = 0, 1
+                while i < len(order) and len(taken) < k:
+                    batch = order[i:i + width]
+                    i += width
+                    width *= 2
+                    hits = (frame.filter(F.col("seg_id").isin(batch))
+                            .groupBy("seg_id")
+                            .applyInPandas(_on_executor(spec), OUT_SCHEMA)
+                            .orderBy("docid").limit(k - len(taken))
+                            .collect())
+                    taken.extend(int(r.docid) for r in hits)
+        return _arrow_frame(
+            self.six.spark,
+            doc_id=np.sort(np.array(taken, dtype=np.int64))[:k])

@@ -199,12 +199,13 @@ def test_fuzzy_past_max_clause_matches_naive(xs_index, xs_segments,
 
 
 def test_topk_job_budget(spark, tmp_path, monkeypatch):
-    """A fresh reader's top-k runs at most 3 Spark jobs (the term-stats
-    lookup, the scan + kernel stage, the final take) and a second top-k
-    on the same searcher at most 2: the store reads infer no schema,
-    norms come through the posting scan and live docs join nothing.
-    The commit's live-docs frame is built by its first query and
-    shared by every later reader, so that query runs first."""
+    """A fresh reader's top-k runs at most 2 Spark jobs (the term-stats
+    lookup, then one Arrow collect of the pushed scan that the kernel
+    and the TopDocs merge run over on the driver) and a second top-k on
+    the same searcher 1: the store reads infer no schema, norms come
+    through the posting scan and live docs join nothing. The commit's
+    live-docs frame is built by its first query and shared by every
+    later reader, so that query runs first."""
     from lucene_solr_spark.datagen.transcripts import gen_transcripts
     from test_index_commit import _spark_jobs
     w = IndexWriter.create(spark, str(tmp_path / "ix"), docs_per_segment=128)
@@ -225,5 +226,124 @@ def test_topk_job_budget(spark, tmp_path, monkeypatch):
         with _spark_jobs(spark, f"budget-warm-{i}") as warm:
             again = ss.topk(q, 10).collect()
         assert first and first == again, q
-        assert len(fresh) <= 3, (q, fresh)
-        assert len(warm) <= 2, (q, warm)
+        assert len(fresh) <= 2, (q, fresh)
+        assert len(warm) <= 1, (q, warm)
+
+
+def test_live_docs_frame_follows_its_segments(spark, tmp_path):
+    """The shared live-docs frame is keyed on the delete generations and
+    the segments that can hold a deleted docid: an append, or a merge of
+    segments appended after the delete, reuses it (the first top-k after
+    the append stays within the fresh-reader budget), and a merge of a
+    segment holding deletes builds a new one. Results equal a reader's
+    whose frame was built from scratch."""
+    from lucene_solr_spark.datagen.transcripts import gen_transcripts
+    from lucene_solr_spark.search import segment_searcher as ssm
+    from test_index_commit import _spark_jobs
+    w = IndexWriter.create(spark, str(tmp_path / "ix"), docs_per_segment=128)
+    w.append_raw(gen_transcripts(spark, 20))
+    w.delete_docids([3, 70, 140, 200])
+    q = Bool(should=(Term("ok"), Term("error"), Term("the")))
+    SegmentSearcher(w.reader()).topk(q, 10).collect()
+    built = ssm._LIVE_DOCS[w.path][1]
+    old = [r["seg_id"] for r in w.reader().segments]
+    six = w.append_raw(gen_transcripts(spark, 20, seed=7))
+    with _spark_jobs(spark, "live-docs-after-append") as jobs:
+        SegmentSearcher(six).topk(q, 10).collect()
+    assert len(jobs) <= 2, jobs
+    assert ssm._LIVE_DOCS[w.path][1] is built
+
+    def fresh_rows(clear: bool) -> list:
+        if clear:
+            ssm._LIVE_DOCS.clear()
+        ss = SegmentSearcher(w.reader())
+        return ([tuple(r) for r in ss.topk(q, 50).collect()],
+                [r.doc_id for r in ss.topk_by_docid(q, 600).collect()])
+
+    new = sorted((r["docid_min"], r["seg_id"]) for r in six.segments
+                 if r["seg_id"] not in old)
+    assert len(new) >= 2
+    deleted = {3, 70, 140, 200}
+    w.merge_segments([s for _, s in new[:2]])
+    got = fresh_rows(False)
+    assert ssm._LIVE_DOCS[w.path][1] is built
+    assert got == fresh_rows(True)
+    assert got[0] and not deleted & ({d for d, _ in got[0]} | set(got[1]))
+    held = ssm._LIVE_DOCS[w.path][1]
+    w.merge_segments(old[:2])
+    got = fresh_rows(False)
+    assert ssm._LIVE_DOCS[w.path][1] is not held
+    assert got == fresh_rows(True)
+    assert got[0] and not deleted & ({d for d, _ in got[0]} | set(got[1]))
+
+
+def _path_pair(spark, run):
+    """``run()`` on the local path (default threshold) and on the
+    executor path (``autoBroadcastJoinThreshold=-1``), conf restored."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    local = run()
+    spark.conf.set(key, "-1")
+    try:
+        executor = run()
+    finally:
+        spark.conf.set(key, saved)
+    return local, executor
+
+
+def test_local_and_executor_paths_agree(spark, xs_segments, tmp_path,
+                                        monkeypatch):
+    """The driver-side local step and the groupBy(seg_id) executor stage
+    give identical rows for topk, topk32 and topk_by_docid: with
+    deletes, a multi-term predicate past MAX_CLAUSE_COUNT (scoring,
+    FILTER, MUST_NOT), a zero-df term, k past the hit count and a score
+    tie at the k boundary. The xs store is copied, so deleting from it
+    builds no index."""
+    import shutil
+
+    from lucene_solr_spark.search import segment_searcher as ssm
+    path = str(tmp_path / "ix")
+    shutil.copytree(xs_segments.path, path)
+    deleted = {0, 5, 127, 128, 300, 511, 700}
+    six = IndexWriter.open(spark, path).delete_docids(sorted(deleted))
+    monkeypatch.setattr(engine, "MAX_CLAUSE_COUNT", 3)
+    big = Prefix("w1")
+    assert six.term_stats.filter(engine.term_predicate(big)).count() > 3
+    cases = [
+        (Term("ok"), 10),
+        (Bool(must=(Term("ok"),), should=(Term("retry"),),
+              must_not=(Term("error"),)), 10),
+        (big, 10),
+        (Bool(must=(Term("ok"),), filter=(big,)), 10),
+        (Bool(must=(Term("ok"),), must_not=(big,)), 10),
+        (Term("zzzzabsent"), 10),
+        (Bool(should=(Term("retry"), Term("zzzzabsent"))), 10),
+        (Term("retry"), 5000),
+    ]
+    on_driver = ssm._on_driver
+    calls: list = []
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return on_driver(*a, **kw)
+    monkeypatch.setattr(ssm, "_on_driver", counted)
+    for q, k in cases:
+        def run(q=q, k=k):
+            calls.clear()
+            ss = SegmentSearcher(open_segments(spark, path))
+            rows = ([tuple(r) for r in ss.topk(q, k).collect()],
+                    [tuple(r) for r in ss.topk32(q, k).collect()],
+                    [r.doc_id for r in ss.topk_by_docid(q, k).collect()])
+            return rows, len(calls)
+        (local, n_local), (executor, n_executor) = _path_pair(spark, run)
+        assert local == executor, (q, k)
+        # every query with a clause took the local step by default and
+        # the executor stage with the threshold at -1
+        assert n_executor == 0 and n_local in (0, 3), (q, n_local)
+        assert n_local or q == Term("zzzzabsent"), q
+        assert not deleted & {d for d, _ in local[0]}, q
+    ss = SegmentSearcher(six)
+    tied = [r.score for r in ss.topk(big, 11).collect()]
+    assert len(tied) == 11 and tied[9] == tied[10]
+    assert 0 < len(ss.topk(Term("retry"), 5000).collect()) < 5000
+    assert ss.topk(Term("zzzzabsent"), 10).collect() == []

@@ -32,9 +32,9 @@ reaches the Parquet scan (term-sorted row groups prune). The per-segment
 live docs are a union onto that scan, so no join runs. Where the kernel
 runs depends on an estimate of the scan's bytes, made from the term
 stats and segment records the reader already holds: at or below
-``spark.sql.autoBroadcastJoinThreshold`` the scan is one Arrow collect
-and the kernel runs on the driver once per segment (no shuffle, no
-Python worker); above it, or with the threshold at -1, one
+``LOCAL_SCAN_BYTES`` (a measured crossover, see its comment) the scan
+is one Arrow collect and the kernel runs on the driver once per segment
+(no shuffle, no Python worker); above it one
 ``groupBy(seg_id).applyInPandas`` stage runs it on the executors. A
 fresh reader's local top-k is 2 Spark jobs (term stats, the collect), a
 warm one's 1. A multi-term query past maxClauseCount is not enumerated:
@@ -70,6 +70,27 @@ from .query import (
 
 OUT_SCHEMA = "docid long, score double"
 EMPTY = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
+
+# Arrow bytes of the pushed scan beside the packed posting bytes
+# (SegmentSearcher._scan_estimate): a posting row's fixed columns, list
+# offsets and last, partial block; each block's skip entries and value
+# offsets. tools/local_crossover.py compares the estimate with
+# toArrow().nbytes.
+ROW_BYTES = 130
+BLOCK_SKIP_BYTES = 40
+
+# the largest estimated pushed scan whose top-k runs the kernel on the
+# driver; larger scans run it in one applyInPandas stage. Measured with
+# tools/local_crossover.py on 4 cores (local[4], 1 GB driver): the local
+# step decodes serially at ~0.17 s/MB after ~0.25 s of fixed cost, the
+# executor stage costs ~0.6 s fixed and gains only with more segments
+# than about 2 to run in parallel. On stores of 7 and 13 segments the
+# paths tie at ~3 MB of collected scan and the local step is >= 0.15 s
+# faster at every measured size up to 2.4 MB; on 2 segments it is
+# faster up to the largest one measured, 5.4 MB. The cut-off also
+# bounds, up to the estimate's error, what one query pulls to the
+# driver (the Arrow table and its pandas copy).
+LOCAL_SCAN_BYTES = 2 << 20
 
 
 # ---------------------------------------------------------------------------
@@ -931,38 +952,39 @@ class SegmentSearcher(TermWeights):
         return out
 
     def _scan_estimate(self, spec: SegSpec) -> float:
-        """Bytes the pushed scan of ``spec`` returns, from what the
-        reader already holds: the query terms' df times the records'
-        packed bytes per posting, 4 B per docid of each qdl blob and
-        8 B per deleted docid. A non-enumerated multi-term predicate has
-        no df, and may match every term: its spec counts every posting
-        row of the commit."""
+        """Estimated bytes of the pushed scan of ``spec`` as ``toArrow``
+        returns it, from what the reader already holds. Postings take
+        the records' packed bytes per posting plus ``BLOCK_SKIP_BYTES``
+        per block; each posting row ``ROW_BYTES``; each segment's norms
+        row 5 B per docid; each deleted docid 8 B. An enumerated term
+        counts its df and one row per segment. A non-enumerated
+        multi-term predicate has no df and may match every term: it
+        counts every posting row of the commit. An estimate, not a
+        bound: the scan of a term whose postings pack larger than the
+        commit's average can exceed it."""
         segs = self.six.segments
-        packed = sum(r["packed_bytes"] for r in segs)
+        n_postings = sum(r["n_postings"] for r in segs)
+        if not n_postings:
+            return 0.0
         if _all_preds(spec):
-            postings = packed
+            postings = n_postings
+            rows = sum(r["n_terms"] for r in segs)
         else:
-            n_postings = sum(r["n_postings"] for r in segs)
-            df = sum(self._resolve_dfs(self._all_terms(spec)).values())
-            postings = df * packed / n_postings if n_postings else 0.0
-        return (postings
-                + 4 * sum(r["docid_end"] - r["docid_min"] for r in segs)
+            terms = self._all_terms(spec)
+            postings = sum(self._resolve_dfs(terms).values())
+            rows = len(terms) * len(segs)
+        per_posting = (sum(r["packed_bytes"] for r in segs) / n_postings
+                       + BLOCK_SKIP_BYTES / blk.BLOCK_SIZE)
+        return (postings * per_posting + rows * ROW_BYTES
+                + 5 * sum(r["docid_end"] - r["docid_min"] for r in segs)
                 + 8 * self.six.delete_footers[0])
-
-    def _fits_driver(self, spec: SegSpec) -> bool:
-        """Whether the local step runs: the scan estimate is at or below
-        ``spark.sql.autoBroadcastJoinThreshold``, Spark's own bound on
-        what it pulls to the driver; -1 turns the local step off."""
-        limit = self.six.spark._jsparkSession.sessionState().conf() \
-            .autoBroadcastJoinThreshold()
-        return 0 <= self._scan_estimate(spec) <= limit
 
     def candidates(self, q: Query, k: int, emit_all: bool = False,
                    prune: bool = True, f32: bool = False) -> DataFrame:
         """Each segment's hits (docid, score): its top k by
         (round(score, 6) DESC, docid ASC), or every match with
-        ``emit_all``. A top-k whose pushed scan fits on the driver
-        (``_fits_driver``) runs the local step now and returns its hits
+        ``emit_all``. A top-k whose scan estimate is at most
+        ``LOCAL_SCAN_BYTES`` runs the local step now and returns its hits
         as a local Arrow-backed frame; anything else is one lazy
         ``groupBy(seg_id).applyInPandas`` stage on the executors."""
         spec = self.compile(q, k, emit_all=emit_all, prune=prune, f32=f32)
@@ -970,7 +992,7 @@ class SegmentSearcher(TermWeights):
         if not spec.clauses:
             return _arrow_frame(spark, docid=EMPTY[0], score=EMPTY[1])
         frame = self._segment_frame(spec)
-        if not emit_all and self._fits_driver(spec):
+        if not emit_all and self._scan_estimate(spec) <= LOCAL_SCAN_BYTES:
             hits = list(_on_driver(spec, frame))
             return _arrow_frame(
                 spark,
@@ -1052,7 +1074,7 @@ class SegmentSearcher(TermWeights):
             order = [seg for _, seg in sorted(
                 (r["docid_min"], r["seg_id"]) for r in self.six.segments)]
             frame = self._segment_frame(spec)
-            if self._fits_driver(spec):
+            if self._scan_estimate(spec) <= LOCAL_SCAN_BYTES:
                 for hits in _on_driver(spec, frame, order):
                     taken.extend(hits["docid"].tolist())
                     if len(taken) >= k:

@@ -277,17 +277,37 @@ def test_live_docs_frame_follows_its_segments(spark, tmp_path):
     assert got[0] and not deleted & ({d for d, _ in got[0]} | set(got[1]))
 
 
-def _path_pair(spark, run):
-    """``run()`` on the local path (default threshold) and on the
-    executor path (``autoBroadcastJoinThreshold=-1``), conf restored."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    saved = spark.conf.get(key)
-    local = run()
-    spark.conf.set(key, "-1")
+def test_scan_estimate_tracks_collected_bytes(xs_segments, monkeypatch):
+    """LOCAL_SCAN_BYTES was measured against the bytes the scan's
+    toArrow() returns, so the estimate that is compared with it stays
+    near them: within 0.9x to 1.6x for enumerated terms and a predicate
+    that matches every term, and above them for one that matches some
+    (it counts every posting row of the commit)."""
+    monkeypatch.setattr(engine, "MAX_CLAUSE_COUNT", 3)
+    ss = SegmentSearcher(xs_segments)
+
+    def ratio(q):
+        spec = ss.compile(q, 10)
+        return (ss._scan_estimate(spec)
+                / ss._segment_frame(spec).toArrow().nbytes)
+    for q in (Term("ok"), Term("zzzzabsent"), Prefix("w"),
+              Bool(should=(Term("ok"), Term("the"), Term("error")))):
+        assert 0.9 <= ratio(q) <= 1.6, q
+    assert ratio(Prefix("w1")) > 1
+
+
+def _path_pair(run):
+    """``run()`` on the local path and on the executor path, each forced
+    through ``LOCAL_SCAN_BYTES``, which is restored."""
+    from lucene_solr_spark.search import segment_searcher as ssm
+    saved = ssm.LOCAL_SCAN_BYTES
     try:
+        ssm.LOCAL_SCAN_BYTES = float("inf")
+        local = run()
+        ssm.LOCAL_SCAN_BYTES = -1
         executor = run()
     finally:
-        spark.conf.set(key, saved)
+        ssm.LOCAL_SCAN_BYTES = saved
     return local, executor
 
 
@@ -335,10 +355,10 @@ def test_local_and_executor_paths_agree(spark, xs_segments, tmp_path,
                     [tuple(r) for r in ss.topk32(q, k).collect()],
                     [r.doc_id for r in ss.topk_by_docid(q, k).collect()])
             return rows, len(calls)
-        (local, n_local), (executor, n_executor) = _path_pair(spark, run)
+        (local, n_local), (executor, n_executor) = _path_pair(run)
         assert local == executor, (q, k)
-        # every query with a clause took the local step by default and
-        # the executor stage with the threshold at -1
+        # every query with a clause took the local step when forced to
+        # and the executor stage when the cut-off is -1
         assert n_executor == 0 and n_local in (0, 3), (q, n_local)
         assert n_local or q == Term("zzzzabsent"), q
         assert not deleted & {d for d, _ in local[0]}, q
